@@ -71,9 +71,15 @@ def write_meta(store_path: str, meta: dict) -> None:
     tmp = os.path.join(
         store_path, f"{META}.tmp-{os.getpid()}-{threading.get_ident()}"
     )
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, os.path.join(store_path, META))
+    try:
+        with open(tmp, "w") as fh:
+            json.dump(meta, fh)
+        os.replace(tmp, os.path.join(store_path, META))
+    finally:
+        # after a successful replace the tmp name no longer exists; on
+        # a failed dump or replace it is this writer's own leftover
+        if os.path.exists(tmp):
+            os.remove(tmp)
     if CHECK_CONVERGENT_META:
         committed = read_meta(store_path)
         assert committed == json.loads(json.dumps(meta)), (
