@@ -1496,10 +1496,8 @@ _CLUSTER_DOC = (
 def incremental_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
-    from ..streaming.backfill import run_concurrently
     from ..streaming.cluster_store import (
-        cluster_store_commit_condensed,
-        cluster_store_condense_batch,
+        cluster_store_update_batch,
         dedup_verdicts_from_store,
     )
     from ..streaming.lsh_store import (
@@ -1521,22 +1519,11 @@ def incremental_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         # scoring and the ingest (checkpoint: both consume it)
         rows = _doc_rows(batch, "doc_id", "text").localCheckpoint(eager=True)
         pairs = neardup_pairs_against_store(batch, lsh, doc_rows=rows)
-        # condense-then-fork (r15, guide §2.6): the condense step is
-        # the one eager execution of the scoring plan — it must see
-        # the PRE-ingest store, and an LSH compaction sweeping delta
-        # dirs mid-plan was the r14 hazard. After it, the fold commit
-        # (cluster dir only) and the signature ingest (lsh dir only)
-        # are independent and overlap; the loop joins both before the
-        # next batch scores. State parity with the sequential fold is
-        # pinned by test_forked_fold_state_equals_sequential.
-        pending = cluster_store_condense_batch(
-            pairs, clusters, batch_id=k, compact_every=3
-        )
-        run_concurrently(
-            lambda p=pending: cluster_store_commit_condensed(p),
-            lambda b=batch, r=rows, i=k: lsh_store_update_batch(
-                b, lsh, batch_id=i, compact_every=2, doc_rows=r
-            ),
+        # the fold consumes the scoring plan before the signature
+        # ingest (and its compaction) touches the lsh store
+        cluster_store_update_batch(pairs, clusters, batch_id=k, compact_every=3)
+        lsh_store_update_batch(
+            batch, lsh, batch_id=k, compact_every=2, doc_rows=rows
         )
     return dedup_verdicts_from_store(docs, clusters)
 
@@ -1571,10 +1558,8 @@ def incremental_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def incremental_dup_clusters_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
-    from ..streaming.backfill import run_concurrently
     from ..streaming.cluster_store import (
-        cluster_store_commit_condensed,
-        cluster_store_condense_batch,
+        cluster_store_update_batch,
         dedup_verdicts_from_store,
     )
     from ..streaming.lsh_store import (
@@ -1603,17 +1588,10 @@ def incremental_dup_clusters_slice(spark: SparkSession, sf_dir: str) -> DataFram
         # cluster compaction fires on the LAST fold, so the final
         # verdict read resolves the compacted base (pinned); the lsh
         # store stays delta-only here — ITS compaction is sf10-pinned
-        # by incremental_neardup_pairs_slice (see registration doc).
-        # condense-then-fork as in the full flagship (r15, §2.6): the
-        # fold commit and the signature ingest touch disjoint dirs.
-        pending = cluster_store_condense_batch(
-            pairs, clusters, batch_id=k, compact_every=2
-        )
-        run_concurrently(
-            lambda p=pending: cluster_store_commit_condensed(p),
-            lambda b=batch, r=rows, i=k: lsh_store_update_batch(
-                b, lsh, batch_id=i, compact_every=3, doc_rows=r
-            ),
+        # by incremental_neardup_pairs_slice (see registration doc)
+        cluster_store_update_batch(pairs, clusters, batch_id=k, compact_every=2)
+        lsh_store_update_batch(
+            batch, lsh, batch_id=k, compact_every=3, doc_rows=rows
         )
     return dedup_verdicts_from_store(docs, clusters)
 

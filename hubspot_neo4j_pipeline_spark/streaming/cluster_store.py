@@ -63,9 +63,8 @@ pairs) condensed edges, and one O(batch + touched members) atomic
 delta — never O(corpus). The expensive upstream (the LSH scoring
 plan feeding ``pairs``) is executed exactly ONCE per batch: the
 condensation consumes it a single time and everything downstream
-works off the collected/condensed map. Compactions are bucket-partial
-with r11 adaptive bucket growth (segments.py contract, shared with
-the five sibling stores).
+works off the collected/condensed map. Lifecycle and the min-owner
+merge rule: streaming/segments.py.
 
 Reference parity: the reference has no streaming surface; this is the
 streaming closure of its dedup step's cluster form (SURVEY §2 D1/D3),
@@ -76,129 +75,33 @@ model.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import segments
+from . import segments, tombstones
 
 CLUSTER_STORE_BUCKETS = 32
 COMPACT_EVERY = 8
 
 
-def _bucket_expr(n_buckets: int):
-    return F.pmod(F.xxhash64(F.col("doc_id").cast("string")), F.lit(n_buckets)).cast(
-        "int"
-    )
-
-
-def _assign_frames(
-    spark: SparkSession,
-    store_path: str,
-    meta: dict,
-    deltas: dict[int, str],
-    buckets: list[int] | None = None,
-) -> list[tuple[int, DataFrame]]:
-    """Raw (sequence, frame) pairs — base at its compaction's
-    ``consumed_through``, each live delta at its dir id — the
-    provenance sequence tombstone resolution orders by (the hash
-    store's `_hash_frames` rule; streaming/tombstones.py)."""
-    frames: list[tuple[int, DataFrame]] = []
-    if meta["base"]:
-        f = spark.read.parquet(os.path.join(store_path, meta["base"]))
-        if buckets is not None:
-            f = f.where(F.col("_bucket").isin(buckets))
-        frames.append((meta["consumed_through"], f))
-    for bid, path in sorted(deltas.items()):
-        frames.append((bid, spark.read.parquet(path)))
-    return frames
-
-
-def _merged_assignments(frames: list[tuple[int, DataFrame]]) -> DataFrame | None:
-    """(doc_id, comp) visible state: plain min-merge when no live
-    delta carries tombstones (exact pre-r13 plan), the sequence-aware
-    merge otherwise. None when only tombstone deltas exist."""
-    from . import tombstones
-
-    raw = [f for _seq, f in frames]
-    if not any("comp" in f.columns for f in raw):
-        return None
-    if not tombstones.has_tombstones(raw):
-        cols = [f.select("doc_id", "comp") for f in raw]
-        if len(cols) == 1:
-            return cols[0]
-        out = cols[0]
-        for f in cols[1:]:
-            out = out.unionByName(f)
-        return out.groupBy("doc_id").agg(F.min("comp").alias("comp"))
-    seqd = []
-    for seq, f in frames:
-        keep = [c for c in ("doc_id", "comp", tombstones.TOMB_COL)
-                if c in f.columns]
-        seqd.append(tombstones.with_seq(f.select(*keep), seq))
-    out = seqd[0]
-    for f in seqd[1:]:
-        out = out.unionByName(f, allowMissingColumns=True)
-    return tombstones.min_merge_with_tombstones(out, ["doc_id"], "comp")
+SPEC = segments.StoreSpec(
+    name="cluster",
+    key=("doc_id",),
+    values=("comp",),
+    merge=segments.min_owner,
+    bucket_expr=lambda n: F.pmod(
+        F.xxhash64(F.col("doc_id").cast("string")), F.lit(n)
+    ).cast("int"),
+)
 
 
 def read_cluster_assignments(spark: SparkSession, store_path: str) -> DataFrame:
     """(doc_id, comp = min doc id reachable over every pair ever
     ingested). Merge-on-read is min(comp) per doc_id — idempotent and
-    order-free because labels only decrease (see module docstring) —
-    switching to the sequence-aware rule while tombstone deltas are
-    pending (``cluster_store_delete_batch``). Only PAIRED docs have
-    rows; singletons are their own cluster by definition and never
-    need storage."""
-    meta = segments.read_meta(store_path)
-    frames = _assign_frames(
-        spark, store_path, meta, segments.live_deltas(store_path, meta)
-    )
-    merged = _merged_assignments(frames) if frames else None
-    if merged is None:
-        raise FileNotFoundError(f"empty cluster store at {store_path}")
-    return merged
-
-
-def _driver_union_find(edge_rows: list) -> dict:
-    """Min-label union-find over a bounded, collected condensed edge
-    list — deterministic (root = minimum node id, matching hash-min CC
-    and the recursive-CTE oracle). Implementation shared with the
-    one-shot ``operators/graph.components_min_label`` since r15."""
-    from ..operators.graph import min_label_union_find
-
-    return min_label_union_find(edge_rows)
-
-
-class PendingFold:
-    """Handle between ``cluster_store_condense_batch`` and
-    ``cluster_store_commit_condensed`` (r15, guide §2.6): after the
-    condense step the batch's upstream ``pairs`` plan has been fully
-    EXECUTED into an eager localCheckpoint, so nothing the commit step
-    does still references the pair source's files. A caller may
-    therefore overlap the commit with work that mutates OTHER stores —
-    in particular the LSH ingest/compaction of the same micro-batch,
-    the hazard that blocked whole-step overlap in r14 (an LSH
-    compaction sweeping delta dirs a mid-flight pairs plan still
-    read). The commit touches only ``store_path``."""
-
-    __slots__ = (
-        "spark",
-        "store_path",
-        "batch_id",
-        "compact_every",
-        "n_buckets",
-        "id_type",
-        "assign",
-        "cond",
-        "driver_cc_max_edges",
-        "noop",
-    )
-
-    def __init__(self, **kw):
-        for k in self.__slots__:
-            setattr(self, k, kw.get(k))
+    order-free because labels only decrease (see module docstring).
+    Only PAIRED docs have rows; singletons are their own cluster by
+    definition and never need storage."""
+    return segments.read_store(SPEC, spark, store_path)
 
 
 def cluster_store_update_batch(
@@ -218,60 +121,37 @@ def cluster_store_update_batch(
     ``driver_cc_max_edges``), and commit the relabeled rows as one
     atomic delta. O(touched members + batch) — untouched components'
     rows are never rewritten (pinned by test), and the expensive
-    upstream plan feeding ``pairs`` executes exactly once. Same
-    replay / crash / compaction contract as the sibling stores
-    (segments.py); min-merge additionally makes even a replay-guard
-    bypass harmless.
+    upstream plan feeding ``pairs`` executes exactly once. min-merge
+    makes even a replay-guard bypass harmless."""
 
-    Implemented as condense-then-commit (r15): this convenience
-    wrapper is exactly ``cluster_store_commit_condensed(
-    cluster_store_condense_batch(...))`` — callers that want to
-    overlap the commit with independent other-store work call the two
-    phases themselves (state parity pinned by
-    ``test_forked_fold_state_equals_sequential``)."""
-    cluster_store_commit_condensed(
-        cluster_store_condense_batch(
-            pairs,
-            store_path,
-            batch_id=batch_id,
-            id_a=id_a,
-            id_b=id_b,
-            compact_every=compact_every,
-            n_buckets=n_buckets,
-            driver_cc_max_edges=driver_cc_max_edges,
-        )
+    def build(meta: dict, n: int, _bid: int) -> DataFrame:
+        # ids must stay one orderable type store-wide: min(comp) is
+        # numeric for numeric ids, lexicographic for strings — mixed
+        # ingest would unionByName-coerce and silently flip the order
+        id_type = dict(pairs.dtypes)[id_a]
+        segments.pin_value(store_path, meta, "id_type", id_type)
+        return _relabel_delta(
+            pairs, store_path, id_a, id_b, id_type, driver_cc_max_edges
+        ).withColumn(SPEC.bucket_col, SPEC.bucket_expr(n))
+
+    segments.ingest(
+        SPEC, store_path, batch_id, n_buckets, compact_every, build,
+        cluster_store_compact,
     )
 
 
-def cluster_store_condense_batch(
+def _relabel_delta(
     pairs: DataFrame,
     store_path: str,
-    batch_id: int | None = None,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    compact_every: int = COMPACT_EVERY,
-    n_buckets: int = CLUSTER_STORE_BUCKETS,
-    driver_cc_max_edges: int = 200_000,
-) -> PendingFold:
-    """Phase 1 of the fold: replay guard, meta pins, endpoint
-    condensation against the current assignments, and the ONE eager
-    execution of the upstream ``pairs`` plan into a localCheckpoint.
-    Returns the handle ``cluster_store_commit_condensed`` finishes;
-    see ``PendingFold`` for what may safely overlap the commit."""
+    id_a: str,
+    id_b: str,
+    id_type: str,
+    driver_cc_max_edges: int,
+) -> DataFrame:
+    """The (doc_id, comp) delta rows for one batch of pairs."""
+    from ..operators.graph import min_label_union_find
+
     spark = pairs.sparkSession
-    os.makedirs(store_path, exist_ok=True)
-    if batch_id is None:
-        batch_id = segments.next_batch_id(store_path)
-    elif segments.already_ingested(store_path, batch_id):
-        return PendingFold(noop=True)  # replayed micro-batch
-    meta = segments.read_meta(store_path)
-    n_buckets = segments.pin_n_buckets(store_path, meta, n_buckets)
-    # ids must stay one orderable type store-wide: min(comp) is numeric
-    # for numeric ids, lexicographic for strings — mixed ingest would
-    # unionByName-coerce and silently flip the order (hash_store's r10
-    # ADVICE fix, same rule here)
-    segments.pin_value(store_path, meta, "id_type", dict(pairs.dtypes)[id_a])
-    id_type = dict(pairs.dtypes)[id_a]
     edges = pairs.select(
         F.col(id_a).alias("src"), F.col(id_b).alias("dst")
     ).where(F.col("src") != F.col("dst"))
@@ -307,53 +187,21 @@ def cluster_store_condense_batch(
             "src", "dst", F.lit(False).alias("sa"), F.lit(False).alias("sb")
         )
     # the ONE execution of the upstream pairs plan: an eager local
-    # checkpoint of the condensed edges (r12, ADVICE fix — checkpoint
-    # BEFORE the bounding collect, so the distributed fallback reuses
-    # the materialized blocks instead of re-running the expensive LSH
-    # plan a second time; the collect below then reads checkpointed
-    # blocks, never recomputes). limit(N+1) caps driver memory; an
-    # overflowing batch re-plans distributed over the same checkpoint.
+    # checkpoint of the condensed edges (checkpoint BEFORE the
+    # bounding collect, so the distributed fallback reuses the
+    # materialized blocks instead of re-running the expensive LSH plan
+    # a second time). limit(N+1) caps driver memory; an overflowing
+    # batch re-plans distributed over the same checkpoint.
     cond = edges.distinct().localCheckpoint(eager=True)
-    return PendingFold(
-        spark=spark,
-        store_path=store_path,
-        batch_id=batch_id,
-        compact_every=compact_every,
-        n_buckets=n_buckets,
-        id_type=id_type,
-        assign=assign,
-        cond=cond,
-        driver_cc_max_edges=driver_cc_max_edges,
-        noop=False,
-    )
-
-
-def cluster_store_commit_condensed(pending: PendingFold) -> None:
-    """Phase 2 of the fold: connectivity solve over the checkpointed
-    condensed edges (driver union-find under the bound, distributed
-    hash-min CC past it), the relabel join, the atomic delta commit,
-    and the compaction trigger. Touches only the cluster store."""
-    if pending.noop:
-        return
-    spark = pending.spark
-    store_path = pending.store_path
-    batch_id = pending.batch_id
-    compact_every = pending.compact_every
-    n_buckets = pending.n_buckets
-    id_type = pending.id_type
-    assign = pending.assign
-    cond = pending.cond
-    driver_cc_max_edges = pending.driver_cc_max_edges
     head = cond.limit(driver_cc_max_edges + 1).collect()
     relabel_changed = None  # (node, new_comp) for old labels that moved
     fresh_delta = None  # (doc_id, comp) rows needing no store join
     if not head:
         # nothing to relabel, but the batch id must still commit so
-        # replay accounting stays exact (empty delta, like the sibling
-        # stores' empty-batch path)
+        # replay accounting stays exact (empty delta)
         pass
     elif len(head) <= driver_cc_max_edges:
-        mapping = _driver_union_find([(r["src"], r["dst"]) for r in head])
+        mapping = min_label_union_find([(r["src"], r["dst"]) for r in head])
         was_assigned: set = set()
         for r in head:
             if r["sa"]:
@@ -372,14 +220,11 @@ def cluster_store_commit_condensed(pending: PendingFold) -> None:
         # PYTHON-RDD slices, so the downstream delta write pays one
         # task + one Python-worker round-trip + one parquet commit PER
         # SLICE (~0.5-2 s of pure overhead for a 52-row delta at 32
-        # cores — r14 flagship profile; coalescing THOSE slices is
-        # worse still, one task walking 32 Python partitions
-        # sequentially). The pandas path ships the rows as Arrow
-        # batches the JVM owns outright — no Python worker at task
-        # time — and coalesce(1) then makes the write a single fast
-        # task (~0.2 s measured). These frames are driver-bounded by
-        # construction (<= driver_cc_max_edges mapping entries, a few
-        # MB at the bound), so one slice is safe at any corpus scale.
+        # cores). The pandas path ships the rows as Arrow batches the
+        # JVM owns outright and coalesce(1) makes the write a single
+        # fast task. These frames are driver-bounded by construction
+        # (<= driver_cc_max_edges mapping entries), so one slice is
+        # safe at any corpus scale.
         import pandas as pd
 
         cols = ["node", "new_comp"]
@@ -411,18 +256,12 @@ def cluster_store_commit_condensed(pending: PendingFold) -> None:
             F.col("id").alias("node"), F.col("comp").alias("new_comp")
         )
         relabel_changed = labels.where(F.col("node") != F.col("new_comp"))
+        fresh = labels
         if assign is not None:
-            fresh_delta = labels.join(
-                assign, labels.node == assign.doc_id, "left_anti"
-            ).select(
-                F.col("node").alias("doc_id"),
-                F.col("new_comp").alias("comp"),
-            )
-        else:
-            fresh_delta = labels.select(
-                F.col("node").alias("doc_id"),
-                F.col("new_comp").alias("comp"),
-            )
+            fresh = labels.join(assign, labels.node == assign.doc_id, "left_anti")
+        fresh_delta = fresh.select(
+            F.col("node").alias("doc_id"), F.col("new_comp").alias("comp")
+        )
     # members of components whose label CHANGED relabel via one
     # equi-join on comp — minimal: unchanged components write nothing
     parts = []
@@ -434,18 +273,14 @@ def cluster_store_commit_condensed(pending: PendingFold) -> None:
         )
     if fresh_delta is not None:
         parts.append(fresh_delta)
-    if parts:
-        delta = parts[0]
-        for p in parts[1:]:
-            delta = delta.unionByName(p)
-        delta = delta.withColumn("_bucket", _bucket_expr(n_buckets))
-    else:
-        delta = spark.createDataFrame(
-            [], f"doc_id {id_type}, comp {id_type}, _bucket int"
+    if not parts:
+        return spark.createDataFrame(
+            [], f"doc_id {id_type}, comp {id_type}"
         ).coalesce(1)
-    segments.commit_delta(delta, store_path, batch_id, bucket_col="_bucket")
-    if len(segments.live_deltas(store_path)) >= compact_every:
-        cluster_store_compact(spark, store_path, n_buckets)
+    delta = parts[0]
+    for p in parts[1:]:
+        delta = delta.unionByName(p)
+    return delta
 
 
 def cluster_store_compact(
@@ -454,79 +289,10 @@ def cluster_store_compact(
     n_buckets: int = CLUSTER_STORE_BUCKETS,
     rows_per_bucket: int = segments.ROWS_PER_BUCKET,
 ) -> None:
-    """Fold live deltas into a fresh doc-bucketed base via one atomic
-    meta replace — bucket-PARTIAL (only delta-touched ``_bucket=K``
-    partitions are min-merged; the rest hard-link into the new base)
-    with r11 adaptive bucket growth, exactly the hash store's
-    contract. The merge rule is min(comp) per doc_id, so compaction
-    order and replayed deltas cannot corrupt assignments."""
-    meta = segments.read_meta(store_path)
-    segments.sweep(store_path, meta)
-    deltas = segments.live_deltas(store_path, meta)
-    if not deltas:
-        return
-    n_buckets = segments.pin_n_buckets(store_path, meta, n_buckets)
-    grown = segments.grown_n_buckets(meta, deltas, n_buckets, rows_per_bucket)
-    new_base = segments.next_base_name(meta)
-    touched = (
-        segments.touched_buckets(deltas, "_bucket")
-        if grown == n_buckets
-        and meta["base"]
-        and meta.get("base_n_buckets") == n_buckets
-        else None
-    )
-    n_buckets = grown
-    wrote = True
-    if touched == []:  # only empty deltas live: carry the base verbatim
-        merged_tmp = os.path.join(store_path, f"_tmp-merge-{new_base}")
-        os.makedirs(merged_tmp, exist_ok=True)
-        segments.assemble_partial_base(
-            store_path, meta["base"], merged_tmp, new_base, "_bucket", touched
-        )
-    elif touched is not None and len(touched) < n_buckets:
-        # tombstone-aware merge (r13): applies pending deletes and
-        # drops the tombstones, so the new partitions physically
-        # reclaim erased docs (a tombstone lives in its key's bucket,
-        # so the touched set covers it)
-        merged = _merged_assignments(
-            _assign_frames(spark, store_path, meta, deltas, buckets=touched)
-        )
-        merged = merged.withColumn("_bucket", _bucket_expr(n_buckets))
-        merged_tmp = os.path.join(store_path, f"_tmp-merge-{new_base}")
-        merged.repartition("_bucket").write.partitionBy("_bucket").mode(
-            "overwrite"
-        ).parquet(merged_tmp)
-        segments.assemble_partial_base(
-            store_path, meta["base"], merged_tmp, new_base, "_bucket", touched
-        )
-    else:
-        merged = _merged_assignments(
-            _assign_frames(spark, store_path, meta, deltas)
-        )
-        # an all-empty history commits base=None (segments.write_base);
-        # a tombstones-only history (merged is None) is the same case
-        wrote = merged is not None and segments.write_base(
-            merged.withColumn("_bucket", _bucket_expr(n_buckets)),
-            store_path,
-            new_base,
-            "_bucket",
-        )
-    segments.write_meta(
-        store_path,
-        {
-            **meta,  # preserve pinned properties (id_type, ...)
-            "base": new_base if wrote else None,
-            "consumed_through": max(deltas),
-            "n_buckets": n_buckets,
-            "base_n_buckets": n_buckets,
-            "base_rows": (
-                segments.base_row_count(spark, store_path, new_base)
-                if wrote
-                else 0
-            ),
-        },
-    )
-    segments.sweep(store_path, segments.read_meta(store_path))
+    """Fold live deltas into a new doc-bucketed base
+    (``segments.compact``). The merge rule is min(comp) per doc_id, so
+    compaction order and replayed deltas cannot corrupt assignments."""
+    segments.compact(SPEC, spark, store_path, n_buckets, rows_per_bucket)
 
 
 def cluster_store_delete_batch(
@@ -536,38 +302,29 @@ def cluster_store_delete_batch(
     id_col: str = "doc_id",
     compact_every: int = COMPACT_EVERY,
 ) -> None:
-    """Retract documents from the assignment table (r13, r12 VERDICT
-    task 6): one atomic tombstone delta keyed by doc_id. Deleted docs
-    disappear from ``read_cluster_assignments`` and score as
-    singletons in ``dedup_verdicts_from_store``; a doc RE-paired by a
-    later batch gets a fresh assignment that outranks the tombstone.
-    Other members' labels are untouched — a component label is an
-    opaque cluster id, not a liveness claim (see the module
-    docstring's retraction note); erasing a canonical member does not
-    rewrite stored labels. Consumers that need a keeper among the
+    """Retract documents from the assignment table: one atomic
+    tombstone delta keyed by doc_id. Deleted docs disappear from
+    ``read_cluster_assignments`` and score as singletons in
+    ``dedup_verdicts_from_store``; a doc RE-paired by a later batch
+    gets a fresh assignment that outranks the tombstone. Other
+    members' labels are untouched — a component label is an opaque
+    cluster id, not a liveness claim (see the module docstring's
+    retraction note); consumers that need a keeper among the
     SURVIVORS re-elect read-side via
-    ``dedup_verdicts_from_store(..., reelect_keepers=True)`` (r14).
-    The next compaction physically drops dead rows
-    + tombstones. Same batch-id sequence / replay guard / crash
-    contract as ingest."""
-    from . import tombstones
+    ``dedup_verdicts_from_store(..., reelect_keepers=True)``."""
 
-    os.makedirs(store_path, exist_ok=True)
-    if batch_id is None:
-        batch_id = segments.next_batch_id(store_path)
-    elif segments.already_ingested(store_path, batch_id):
-        return  # replayed delete batch
-    meta = segments.read_meta(store_path)
-    n_buckets = segments.pin_n_buckets(store_path, meta, CLUSTER_STORE_BUCKETS)
-    rows = (
-        ids.select(F.col(id_col).alias("doc_id"))
-        .distinct()
-        .withColumn(tombstones.TOMB_COL, F.lit(True))
-        .withColumn("_bucket", _bucket_expr(n_buckets))
+    def build(_meta: dict, n: int, _bid: int) -> DataFrame:
+        return (
+            ids.select(F.col(id_col).alias("doc_id"))
+            .distinct()
+            .withColumn(tombstones.TOMB_COL, F.lit(True))
+            .withColumn(SPEC.bucket_col, SPEC.bucket_expr(n))
+        )
+
+    segments.ingest(
+        SPEC, store_path, batch_id, CLUSTER_STORE_BUCKETS, compact_every, build,
+        cluster_store_compact,
     )
-    segments.commit_delta(rows, store_path, batch_id, bucket_col="_bucket")
-    if len(segments.live_deltas(store_path)) >= compact_every:
-        cluster_store_compact(ids.sparkSession, store_path, n_buckets)
 
 
 def dedup_verdicts_from_store(
@@ -700,8 +457,8 @@ def cluster_store_bootstrap(
         pairs.select(F.col(id_b).alias(id_a))
     ).distinct().count()
     n_buckets = segments.sized_n_buckets(n_rows)
-    rows = labels.withColumn("_bucket", _bucket_expr(n_buckets))
+    rows = labels.withColumn(SPEC.bucket_col, SPEC.bucket_expr(n_buckets))
     segments.bootstrap_base(
-        rows, store_path, "_bucket", n_buckets,
+        rows, store_path, SPEC.bucket_col, n_buckets,
         extra_meta={"id_type": id_type},
     )

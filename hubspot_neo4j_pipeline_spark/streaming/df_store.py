@@ -40,8 +40,6 @@ TF-IDF operator as ground truth.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -84,62 +82,42 @@ def _partial_df(batch: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return terms.unionByName(n)
 
 
-def _bucket_expr(n_buckets: int):
-    return F.pmod(F.xxhash64(F.col("term")), F.lit(n_buckets)).cast("int")
+SPEC = segments.StoreSpec(
+    name="df",
+    key=("term",),
+    values=("df",),
+    merge=segments.additive,
+    sum_types=("long",),
+    bucket_expr=lambda n: F.pmod(F.xxhash64(F.col("term")), F.lit(n)).cast("int"),
+)
 
 
-def _merged_rows(
-    spark: SparkSession, store_path: str, terms_filter: DataFrame | None = None
-) -> DataFrame:
-    """Raw (term, df) partial rows across base + live deltas,
-    optionally semi-join-pruned to a term set BEFORE the sum-merge
-    (sound: a term's total never needs other terms' rows)."""
-    meta = segments.read_meta(store_path)
-    frames = []
-    if meta["base"]:
-        frames.append(
-            spark.read.parquet(os.path.join(store_path, meta["base"])).select(
-                "term", "df"
-            )
-        )
-    for _bid, path in sorted(segments.live_deltas(store_path, meta).items()):
-        frames.append(spark.read.parquet(path).select("term", "df"))
-    if not frames:
+def _visible(spark: SparkSession, store_path: str) -> list[segments.Segment]:
+    segs = segments.visible_frames(SPEC, spark, store_path)
+    if not segs:
         raise FileNotFoundError(f"empty df store at {store_path}")
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    if terms_filter is not None:
-        out = out.join(F.broadcast(terms_filter), "term", "left_semi")
-    return out
+    return segs
 
 
 def read_df_store(
     spark: SparkSession, store_path: str, terms_filter: DataFrame | None = None
 ) -> DataFrame:
     """The store's current (term, df) view, sum-merged; the reserved
-    doc-count row is excluded (use ``corpus_doc_count``). A
-    compacted-base-only store (no live deltas) skips the merge shuffle
-    — it is already one row per term and never stores non-positive
-    counts. With live deltas the merge hides terms netted to 0 by
-    negative delete partials (``df_store_delete_batch``)."""
-    meta = segments.read_meta(store_path)
-    n_deltas = len(segments.live_deltas(store_path, meta))
-    rows = _merged_rows(spark, store_path, terms_filter).where(
-        F.col("term") != DOC_COUNT_KEY
-    )
-    if n_deltas == 0:
-        return rows
-    return (
-        rows.groupBy("term")
-        .agg(F.sum("df").cast("long").alias("df"))
-        .where(F.col("df") > 0)
-    )
+    doc-count row is excluded (use ``corpus_doc_count``). Terms netted
+    to 0 by negative delete partials are hidden. ``terms_filter``
+    semi-join-prunes the rows to a term set BEFORE the sum-merge."""
+
+    def prune(rows: DataFrame) -> DataFrame:
+        if terms_filter is not None:
+            rows = rows.join(F.broadcast(terms_filter), "term", "left_semi")
+        return rows.where(F.col("term") != DOC_COUNT_KEY)
+
+    return segments.additive(SPEC, _visible(spark, store_path), prune)
 
 
 def corpus_doc_count(spark: SparkSession, store_path: str) -> DataFrame:
     """1-row (n_docs): how many documents the store has ingested."""
-    rows = _merged_rows(spark, store_path).where(
+    rows = segments.union_rows(SPEC, _visible(spark, store_path)).where(
         F.col("term") == DOC_COUNT_KEY
     )
     # negative delete partials decrement; coalesce covers the fully
@@ -160,21 +138,17 @@ def df_store_update_batch(
     n_buckets: int = DF_STORE_BUCKETS,
 ) -> None:
     """Ingest one micro-batch's (term, df) partials + doc count as an
-    atomic delta — O(batch), the existing state is NOT read. Same
-    replay / crash / compaction contract as the sibling stores."""
-    os.makedirs(store_path, exist_ok=True)
-    if batch_id is None:
-        batch_id = segments.next_batch_id(store_path)
-    elif segments.already_ingested(store_path, batch_id):
-        return  # replayed micro-batch
-    meta = segments.read_meta(store_path)
-    n_buckets = segments.pin_n_buckets(store_path, meta, n_buckets)
-    partial = _partial_df(batch, id_col, text_col).withColumn(
-        "_bucket", _bucket_expr(n_buckets)
+    atomic delta — O(batch), the existing state is NOT read."""
+
+    def build(_meta: dict, n: int, _bid: int) -> DataFrame:
+        return _partial_df(batch, id_col, text_col).withColumn(
+            SPEC.bucket_col, SPEC.bucket_expr(n)
+        )
+
+    segments.ingest(
+        SPEC, store_path, batch_id, n_buckets, compact_every, build,
+        df_store_compact,
     )
-    segments.commit_delta(partial, store_path, batch_id, bucket_col="_bucket")
-    if len(segments.live_deltas(store_path)) >= compact_every:
-        df_store_compact(batch.sparkSession, store_path, n_buckets)
 
 
 def df_store_compact(
@@ -183,86 +157,10 @@ def df_store_compact(
     n_buckets: int = DF_STORE_BUCKETS,
     rows_per_bucket: int = segments.ROWS_PER_BUCKET,
 ) -> None:
-    """Fold live deltas into a fresh term-bucketed base via one atomic
-    meta replace — bucket-PARTIAL (sum-merge only delta-touched
-    ``_bucket=K`` partitions, hard-link the rest) with r11 adaptive
-    bucket growth; the window store's contract on (term, df) rows.
-    The reserved doc-count row sum-merges like any term."""
-    meta = segments.read_meta(store_path)
-    segments.sweep(store_path, meta)
-    deltas = segments.live_deltas(store_path, meta)
-    if not deltas:
-        return
-    n_buckets = segments.pin_n_buckets(store_path, meta, n_buckets)
-    grown = segments.grown_n_buckets(meta, deltas, n_buckets, rows_per_bucket)
-    new_base = segments.next_base_name(meta)
-    touched = (
-        segments.touched_buckets(deltas, "_bucket")
-        if grown == n_buckets
-        and meta["base"]
-        and meta.get("base_n_buckets") == n_buckets
-        else None
-    )
-    n_buckets = grown
-    wrote = True
-    if touched == []:  # only empty deltas live: carry the base verbatim
-        merged_tmp = os.path.join(store_path, f"_tmp-merge-{new_base}")
-        os.makedirs(merged_tmp, exist_ok=True)
-        segments.assemble_partial_base(
-            store_path, meta["base"], merged_tmp, new_base, "_bucket", touched
-        )
-    elif touched is not None and len(touched) < n_buckets:
-        merged = (
-            spark.read.parquet(os.path.join(store_path, meta["base"]))
-            .where(F.col("_bucket").isin(touched))  # partition-pruned
-            .select("term", "df")
-        )
-        for _b, p in sorted(deltas.items()):
-            merged = merged.unionByName(
-                spark.read.parquet(p).select("term", "df")
-            )
-        merged = (
-            merged.groupBy("term")
-            .agg(F.sum("df").cast("long").alias("df"))
-            # terms netted to 0 by delete partials reclaim here (the
-            # reserved doc-count row only nets to 0 when every doc was
-            # retracted — the empty store)
-            .where(F.col("df") > 0)
-            .withColumn("_bucket", _bucket_expr(n_buckets))
-        )
-        merged_tmp = os.path.join(store_path, f"_tmp-merge-{new_base}")
-        merged.repartition("_bucket").write.partitionBy("_bucket").mode(
-            "overwrite"
-        ).parquet(merged_tmp)
-        segments.assemble_partial_base(
-            store_path, meta["base"], merged_tmp, new_base, "_bucket", touched
-        )
-    else:
-        merged = (
-            _merged_rows(spark, store_path)
-            .groupBy("term")
-            .agg(F.sum("df").cast("long").alias("df"))
-            .where(F.col("df") > 0)  # reclaim netted-out terms
-            .withColumn("_bucket", _bucket_expr(n_buckets))
-        )
-        # an all-empty history commits base=None (segments.write_base)
-        wrote = segments.write_base(merged, store_path, new_base, "_bucket")
-    segments.write_meta(
-        store_path,
-        {
-            **meta,  # preserve pinned properties
-            "base": new_base if wrote else None,
-            "consumed_through": max(deltas),
-            "n_buckets": n_buckets,
-            "base_n_buckets": n_buckets,
-            "base_rows": (
-                segments.base_row_count(spark, store_path, new_base)
-                if wrote
-                else 0
-            ),
-        },
-    )
-    segments.sweep(store_path, segments.read_meta(store_path))
+    """Fold live deltas into a new term-bucketed base
+    (``segments.compact``). The reserved doc-count row sum-merges like
+    any term; it only nets to 0 when every doc was retracted."""
+    segments.compact(SPEC, spark, store_path, n_buckets, rows_per_bucket)
 
 
 def df_store_delete_batch(
@@ -273,36 +171,27 @@ def df_store_delete_batch(
     text_col: str = "text",
     compact_every: int = COMPACT_EVERY,
 ) -> None:
-    """Retract documents from the vocabulary statistics (r14 — the
-    additive half of right-to-erasure: until now an erased doc's terms
-    kept inflating df and ``corpus_doc_count``, skewing every TF-IDF
-    score computed after the erasure). Retraction is a NEGATIVE
-    partial: one atomic delta carrying the deleted docs' own (term,
-    df) partials AND the reserved doc-count row, all negated — both
-    decrement in the SAME rename, so df and n_docs can never be torn
-    by a crash (the exact invariant ingest has). A term contained only
-    in deleted docs nets to 0 and vanishes from every read
-    (``read_df_store``'s ``df > 0`` rule); shared terms just
-    decrement; the next compaction physically drops netted-out rows.
-    The erasure request carries the documents (their text) — partials
-    recompute from the supplied frame under the same token rule as
-    ingest. Contract: delete only previously-ingested docs, each at
-    most once."""
-    os.makedirs(store_path, exist_ok=True)
-    if batch_id is None:
-        batch_id = segments.next_batch_id(store_path)
-    elif segments.already_ingested(store_path, batch_id):
-        return  # replayed delete batch
-    meta = segments.read_meta(store_path)
-    n_buckets = segments.pin_n_buckets(store_path, meta, DF_STORE_BUCKETS)
-    partial = (
-        _partial_df(deleted_docs, id_col, text_col)
-        .select("term", (-F.col("df")).cast("long").alias("df"))
-        .withColumn("_bucket", _bucket_expr(n_buckets))
+    """Retract documents from the vocabulary statistics (the additive
+    half of right-to-erasure): one atomic delta carrying the deleted
+    docs' own (term, df) partials AND the reserved doc-count row, all
+    negated — both decrement in the SAME rename, so df and n_docs can
+    never be torn by a crash. A term contained only in deleted docs
+    nets to 0 and vanishes from every read; shared terms decrement.
+    Partials recompute from the supplied documents under the ingest
+    token rule. Contract: delete only previously-ingested docs, each
+    at most once."""
+
+    def build(_meta: dict, n: int, _bid: int) -> DataFrame:
+        return (
+            _partial_df(deleted_docs, id_col, text_col)
+            .select("term", (-F.col("df")).cast("long").alias("df"))
+            .withColumn(SPEC.bucket_col, SPEC.bucket_expr(n))
+        )
+
+    segments.ingest(
+        SPEC, store_path, batch_id, DF_STORE_BUCKETS, compact_every, build,
+        df_store_compact,
     )
-    segments.commit_delta(partial, store_path, batch_id, bucket_col="_bucket")
-    if len(segments.live_deltas(store_path)) >= compact_every:
-        df_store_compact(deleted_docs.sparkSession, store_path, n_buckets)
 
 
 def tfidf_batch_against_store(
@@ -413,6 +302,6 @@ def df_store_bootstrap(
     by test."""
     n_buckets = segments.sized_n_buckets(corpus.count())
     rows = _partial_df(corpus, id_col, text_col).withColumn(
-        "_bucket", _bucket_expr(n_buckets)
+        SPEC.bucket_col, SPEC.bucket_expr(n_buckets)
     )
-    segments.bootstrap_base(rows, store_path, "_bucket", n_buckets)
+    segments.bootstrap_base(rows, store_path, SPEC.bucket_col, n_buckets)

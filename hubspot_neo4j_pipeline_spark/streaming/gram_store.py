@@ -1,57 +1,13 @@
 """Incremental EXACT-substring gram-count store (Lee et al. 2022
 dedup state), maintained by streaming micro-batches.
 
-r8 shipped this as a single parquet table rewritten in full every
-micro-batch — O(corpus grams) I/O per batch, the one scale-killer the
-r8 judge found. This module replaces it with an LSM-style layout so a
-micro-batch costs O(batch), not O(store):
-
-    store/
-      meta.json            atomic commit pointer (tmp + os.replace):
-                           {"base": "base-<n>"|null,
-                            "consumed_through": <max batch id folded
-                                                 into the base>}
-      base-<n>/bucket=K/   compacted (h, n) counts, hive-partitioned
-                           by bucket = pmod(h, n_buckets) so each
-                           partition's files stay bounded and the
-                           compaction shuffle is range-parallel
-      deltas/b<id>/        ONE directory per ingested micro-batch:
-                           that batch's partial (h, n) counts.
-                           Written to a _tmp dir first, then
-                           os.rename'd into place — the rename IS the
-                           commit, so a half-written delta is never
-                           visible and ingest is atomic.
-
-Per-batch cost: write the batch's own partial counts (O(batch) rows,
-no read of existing state). Every ``compact_every`` committed deltas,
-one compaction merges base + deltas into ``base-<n+1>`` and commits by
-atomically replacing meta.json. Since r10 the compaction is
-bucket-PARTIAL: each delta's manifest records the buckets it touches,
-the merge reads only those base partitions (partition-pruned scan) and
-hard-links every untouched ``bucket=K`` dir into the new base — so a
-compaction costs O(touched buckets + deltas), not O(store). At 100 TB
-the base is billions of (h, n) rows; a stream of small batches
-touches a bounded bucket set per compaction window, and the
-carried-over fraction is pure metadata (links share inodes).
-
-Replay / crash safety (foreachBatch is at-least-once):
-  * a batch id is ingested iff ``deltas/b<id>`` exists or
-    id <= consumed_through — replaying either is a no-op. This is an
-    exact per-batch guard (safe even under out-of-order redelivery),
-    stronger than the r8 max-watermark column.
-  * crash before the delta rename: only an orphan ``_tmp-b<id>`` dir
-    remains, invisible to readers, cleared on the next attempt.
-  * crash after writing ``base-<n+1>`` but before the meta replace:
-    the new base is an orphan directory no reader resolves; the next
-    compaction deletes any ``base-*`` that meta does not point to and
-    redoes the merge.
-  * crash after the meta replace but before cleanup: stale delta dirs
-    (id <= consumed_through) and the old base linger; readers EXCLUDE
-    consumed deltas by id and resolve only meta's base, so reads stay
-    exact; the next update/compaction sweeps the leftovers.
-The same lifecycle contract as the CMS grid applies (streaming/
-sketches.py): batch ids are scoped to one streaming checkpoint, so the
-store and its checkpoint_dir live and die together.
+Rows are (h, n): a gram hash and its occurrence count, summed across
+batches (the additive rule of streaming/segments.py, which owns the
+layout, replay guard, crash contract and bucket-partial compaction).
+The bucket column is ``bucket`` = pmod(h, n_buckets) — the one store
+whose on-disk bucket column is not ``_bucket``. A micro-batch costs
+O(batch): its partial counts become one delta, and the existing state
+is never read.
 
 Scoring: ``read_gram_store`` returns the (h, n) frame
 ``operators.dedup.duplicated_spans(batch, gram_counts=...)`` consumes.
@@ -62,12 +18,9 @@ counts into the store view first, because a gram duplicated only
 ADVICE: the bare store matches one-shot semantics only AFTER the
 batch is merged).
 
-Deletion (r14): the store is additive, so retraction is a NEGATIVE
-partial — ``gram_store_delete_batch`` commits the deleted docs' own
-(h, n) counts negated as a normal atomic delta; reads hide netted-out
-grams (n <= 0) and compaction physically drops them. See the function
-docstring for the contract (the additive counterpart of the tombstone
-path in streaming/tombstones.py).
+Deletion: ``gram_store_delete_batch`` commits the deleted docs' own
+(h, n) counts negated; reads hide netted-out grams and compaction
+drops them.
 
 Reference parity: the reference has no streaming surface (its
 pipeline re-extracts full snapshots per run — main.py); this family is
@@ -77,26 +30,10 @@ one-shot batch operator (operators/dedup.py:202) as its oracle.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# Generic LSM segment primitives (meta pointer / atomic delta commit /
-# replay guard / sweep) live in streaming/segments.py since r9 so the
-# SCD2 upsert store shares the identical contract; aliased under the
-# original private names for the tests that poke the internals.
-from .segments import assemble_partial_base as _assemble_partial_base
-from .segments import commit_delta as _commit_delta
-from .segments import committed_deltas as _committed_deltas
-from .segments import live_deltas as _live_deltas
-from .segments import next_base_name as _next_base_name
-from .segments import pin_n_buckets as _pin_n_buckets
-from .segments import read_meta as _read_meta
-from .segments import sweep as _sweep
-from .segments import touched_buckets as _touched_buckets
-from .segments import write_meta as _write_meta
-from . import segments as _segments
+from . import segments
 
 GRAM_STORE_BUCKETS = 32
 COMPACT_EVERY = 8
@@ -114,50 +51,37 @@ def _partial_counts(
     )
 
 
+SPEC = segments.StoreSpec(
+    name="gram",
+    key=("h",),
+    values=("n",),
+    merge=segments.additive,
+    sum_types=("long",),
+    bucket_expr=lambda n: F.pmod(F.col("h"), F.lit(n)).cast("int"),
+    bucket_col="bucket",
+)
+
+
 def gram_store_last_batch_id(store_path: str) -> int:
     """Highest batch id the store has ingested (-1 if empty)."""
-    meta = _read_meta(store_path) if os.path.isdir(store_path) else {
-        "consumed_through": -1
-    }
-    ids = [meta["consumed_through"], *_committed_deltas(store_path)]
-    return max(ids)
+    return segments.next_batch_id(store_path) - 1
 
 
 def read_gram_store(spark: SparkSession, store_path: str) -> DataFrame:
     """The store's current (h BIGINT, n BIGINT) view: meta's base plus
-    every committed-but-uncompacted delta, aggregated. Consumed deltas
-    (id <= consumed_through) are excluded even if a crash stranded
-    their directories — the meta pointer is the source of truth.
-    After a compaction with no new deltas this is a plain scan of the
-    base, no aggregation.
+    every live delta, sum-merged; grams netted to 0 by delete partials
+    are hidden. After a compaction with no new deltas this is a plain
+    scan of the base."""
+    return segments.read_store(SPEC, spark, store_path)
 
-    Deletion (r14): delete deltas carry NEGATIVE partial counts
-    (``gram_store_delete_batch``), so the sum-merge subtracts them and
-    a gram whose occurrences were all erased nets to 0 — the ``n > 0``
-    filter below hides it. The filter only runs when live deltas
-    exist; the base never stores non-positive rows (compaction drops
-    them), so the no-delta read stays the exact plain base scan."""
-    meta = _read_meta(store_path)
-    deltas = sorted(_live_deltas(store_path, meta).items())
-    frames = []
-    if meta["base"]:
-        frames.append(
-            spark.read.parquet(os.path.join(store_path, meta["base"])).select("h", "n")
-        )
-    for _bid, path in deltas:
-        frames.append(spark.read.parquet(path).select("h", "n"))
-    if not frames:
-        raise FileNotFoundError(f"empty gram store at {store_path}")
-    if not deltas:
-        return frames[0]  # compacted base only: plain scan
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return (
-        out.groupBy("h")
-        .agg(F.sum("n").cast("long").alias("n"))
-        .where(F.col("n") > 0)
-    )
+
+def _gram_k_pin(store_path: str, meta: dict, k: int | None) -> None:
+    # the gram size is part of the store's identity: counts from
+    # different k are meaningless to merge, so a mismatched ingest
+    # must fail loudly, not blend
+    from ..operators.dedup import DEFAULT_SHINGLE
+
+    segments.pin_value(store_path, meta, "gram_k", k or DEFAULT_SHINGLE)
 
 
 def gram_store_update_batch(
@@ -173,38 +97,19 @@ def gram_store_update_batch(
     """Ingest one micro-batch's sliding-gram counts: write the batch's
     partial (h, n) counts as a new delta segment (O(batch) — the
     existing state is NOT read), then compact if ``compact_every``
-    deltas have accumulated. See the module docstring for the layout,
-    atomicity, and replay contracts.
+    deltas have accumulated. Without a ``batch_id`` the next free id
+    is assigned."""
 
-    Without a ``batch_id`` (direct batch-driven maintenance) the next
-    free id is assigned, preserving the r8 call signature.
-    """
-    os.makedirs(store_path, exist_ok=True)
-    meta = _read_meta(store_path)
-    committed = _committed_deltas(store_path)
-    if batch_id is None:
-        batch_id = max([meta["consumed_through"], *committed]) + 1
-    elif batch_id <= meta["consumed_through"] or batch_id in committed:
-        return  # replayed micro-batch — already ingested
-    # the store's bucket count is pinned at first ingest (meta field):
-    # partial compaction carries untouched base partitions over
-    # verbatim, which is only sound when every delta and base share
-    # one bucketing — a caller passing a different n_buckets later
-    # gets the pinned one
-    n_buckets = _pin_n_buckets(store_path, meta, n_buckets)
-    # the gram size is part of the store's identity: counts from
-    # different k are meaningless to merge, so a mismatched ingest
-    # must fail loudly, not blend (r11 — same provenance class as the
-    # hash store's id_type pin)
-    from ..operators.dedup import DEFAULT_SHINGLE
+    def build(meta: dict, n: int, _bid: int) -> DataFrame:
+        _gram_k_pin(store_path, meta, k)
+        return _partial_counts(batch_docs, id_col, text_col, k).withColumn(
+            SPEC.bucket_col, SPEC.bucket_expr(n)
+        )
 
-    _segments.pin_value(store_path, meta, "gram_k", k or DEFAULT_SHINGLE)
-    partial = _partial_counts(batch_docs, id_col, text_col, k).withColumn(
-        "bucket", F.pmod(F.col("h"), F.lit(n_buckets)).cast("int")
+    segments.ingest(
+        SPEC, store_path, batch_id, n_buckets, compact_every, build,
+        gram_store_compact,
     )
-    _commit_delta(partial, store_path, batch_id, bucket_col="bucket")
-    if len(_live_deltas(store_path, meta)) >= compact_every:
-        gram_store_compact(batch_docs.sparkSession, store_path, n_buckets)
 
 
 def gram_store_compact(
@@ -212,106 +117,17 @@ def gram_store_compact(
     store_path: str,
     n_buckets: int = GRAM_STORE_BUCKETS,
     _crash_before_commit: bool = False,
-    rows_per_bucket: int = _segments.ROWS_PER_BUCKET,
+    rows_per_bucket: int = segments.ROWS_PER_BUCKET,
 ) -> None:
-    """Fold every committed delta into a fresh bucket-partitioned base
-    and commit it with one atomic meta replace. ``_crash_before_commit``
-    is a test hook: do all the work but skip the commit, simulating a
-    crash after the new base is written — recovery must leave reads
-    exact and the next compaction must converge to the same state.
-
-    Bucket-PARTIAL compaction (r10, the r9 VERDICT design note): each
-    delta's manifest records which buckets its grams touch, so the
-    merge reads only the base partitions the live deltas actually hit
-    (partition-pruned scan) and carries every untouched ``bucket=K``
-    dir into ``base-<n+1>`` by hard-link — O(touched + deltas) I/O
-    instead of O(store). At genuine 100 TB-corpus gram counts a small
-    batch touches a few buckets of billions of rows; the previous
-    full-base rewrite paid the whole store every ``compact_every``
-    batches. Falls back to the full rewrite when any live delta lacks
-    a manifest (pre-r10 layout) or there is no base yet; correctness
-    never depends on the manifests."""
-    if not os.path.isdir(store_path):
-        return
-    meta = _read_meta(store_path)
-    _sweep(store_path, meta)  # clear strandings from any earlier crash
-    deltas = _live_deltas(store_path, meta)
-    if not deltas:
-        return
-    n_buckets = _pin_n_buckets(store_path, meta, n_buckets)
-    grown = _segments.grown_n_buckets(meta, deltas, n_buckets, rows_per_bucket)
-    new_base = _next_base_name(meta)
-    # partial carry-over is sound only when the live base was itself
-    # written under the pinned bucketing (meta records base_n_buckets
-    # at every compaction; a pre-r10 base lacks it → one full rewrite)
-    # AND no bucket growth is pending (r11: the count doubles via a
-    # full rewrite when the store outgrows ~rows_per_bucket per bucket
-    # — see segments.grown_n_buckets)
-    touched = (
-        _touched_buckets(deltas, "bucket")
-        if grown == n_buckets
-        and meta["base"]
-        and meta.get("base_n_buckets") == n_buckets
-        else None
+    """Fold every live delta into a new bucket-partitioned base
+    (``segments.compact``); netted-out grams are reclaimed.
+    ``_crash_before_commit`` is a test hook: do all the work but skip
+    the commit, simulating a crash after the new base is written —
+    recovery must leave reads exact and the next compaction must
+    converge to the same state."""
+    segments.compact(
+        SPEC, spark, store_path, n_buckets, rows_per_bucket, _crash_before_commit
     )
-    n_buckets = grown
-    wrote = True
-    if touched == []:  # only empty deltas live: carry the base verbatim
-        merged_tmp = os.path.join(store_path, f"_tmp-merge-{new_base}")
-        os.makedirs(merged_tmp, exist_ok=True)
-        _assemble_partial_base(
-            store_path, meta["base"], merged_tmp, new_base, "bucket", touched
-        )
-    elif touched is not None and len(touched) < n_buckets:
-        base_touched = (
-            spark.read.parquet(os.path.join(store_path, meta["base"]))
-            .where(F.col("bucket").isin(touched))  # partition-pruned
-            .select("h", "n")
-        )
-        frames = [base_touched] + [
-            spark.read.parquet(p).select("h", "n")
-            for _b, p in sorted(deltas.items())
-        ]
-        merged = frames[0]
-        for f in frames[1:]:
-            merged = merged.unionByName(f)
-        merged = (
-            merged.groupBy("h")
-            .agg(F.sum("n").cast("long").alias("n"))
-            # negative delete partials cancel erased grams to 0 — drop
-            # them here so the new base physically reclaims the rows
-            .where(F.col("n") > 0)
-            .withColumn("bucket", F.pmod(F.col("h"), F.lit(n_buckets)).cast("int"))
-        )
-        merged_tmp = os.path.join(store_path, f"_tmp-merge-{new_base}")
-        merged.repartition("bucket").write.partitionBy("bucket").mode(
-            "overwrite"
-        ).parquet(merged_tmp)
-        _assemble_partial_base(
-            store_path, meta["base"], merged_tmp, new_base, "bucket", touched
-        )
-    else:
-        merged = read_gram_store(spark, store_path).withColumn(
-            "bucket", F.pmod(F.col("h"), F.lit(n_buckets)).cast("int")
-        )
-        # an all-empty history commits base=None (segments.write_base)
-        wrote = _segments.write_base(merged, store_path, new_base, "bucket")
-    if _crash_before_commit:
-        return
-    new_meta = {
-        **meta,  # preserve pinned properties
-        "base": new_base if wrote else None,
-        "consumed_through": max(deltas),
-        "n_buckets": n_buckets,
-        "base_n_buckets": n_buckets,
-        "base_rows": (
-            _segments.base_row_count(spark, store_path, new_base)
-            if wrote
-            else 0
-        ),
-    }
-    _write_meta(store_path, new_meta)
-    _sweep(store_path, new_meta)
 
 
 def gram_store_delete_batch(
@@ -323,45 +139,29 @@ def gram_store_delete_batch(
     k: int | None = None,
     compact_every: int = COMPACT_EVERY,
 ) -> None:
-    """Retract documents from the gram-count memory (r14, r13 VERDICT
-    task 1 — the additive half of right-to-erasure: until now an
-    erased doc's n-grams stayed in this store, so eval-set refresh
-    kept flagging content the corpus no longer contains). The store is
-    ADDITIVE, so retraction is a NEGATIVE partial: one atomic delta
-    whose rows are the deleted docs' own (h, n) counts negated. The
-    sum-merge subtracts them — a gram all of whose occurrences came
-    from deleted docs nets to 0 and vanishes from every read
-    (``read_gram_store``'s ``n > 0`` rule), while a gram shared with
-    surviving docs just decrements. No sequencing machinery is needed:
-    sums commute, so the delete lands correctly wherever the merge
-    order puts it, under the same per-batch-id replay guard as ingest.
+    """Retract documents from the gram-count memory (the additive half
+    of right-to-erasure): one atomic delta whose rows are the deleted
+    docs' own (h, n) counts negated. A gram all of whose occurrences
+    came from deleted docs nets to 0 and vanishes from every read,
+    while a gram shared with surviving docs just decrements. Sums
+    commute, so no sequencing is needed beyond the per-batch-id replay
+    guard. The erasure request carries the documents (their text) —
+    partials are recomputed, never looked up. Contract: delete only
+    documents previously ingested, each at most once; the gram size
+    pin guarantees the negated counts use the store's own k."""
 
-    The erasure request carries the documents (their text) — partials
-    are recomputed from the supplied frame, never looked up, exactly
-    like ingest. Contract: delete only documents previously ingested,
-    each at most once (the same partition-of-the-stream contract
-    ingest has); the gram size pin guarantees the negated counts are
-    computed under the store's own k. The next compaction physically
-    drops netted-out rows."""
-    os.makedirs(store_path, exist_ok=True)
-    meta = _read_meta(store_path)
-    committed = _committed_deltas(store_path)
-    if batch_id is None:
-        batch_id = max([meta["consumed_through"], *committed]) + 1
-    elif batch_id <= meta["consumed_through"] or batch_id in committed:
-        return  # replayed delete batch
-    n_buckets = _pin_n_buckets(store_path, meta, GRAM_STORE_BUCKETS)
-    from ..operators.dedup import DEFAULT_SHINGLE
+    def build(meta: dict, n: int, _bid: int) -> DataFrame:
+        _gram_k_pin(store_path, meta, k)
+        return (
+            _partial_counts(deleted_docs, id_col, text_col, k)
+            .select("h", (-F.col("n")).cast("long").alias("n"))
+            .withColumn(SPEC.bucket_col, SPEC.bucket_expr(n))
+        )
 
-    _segments.pin_value(store_path, meta, "gram_k", k or DEFAULT_SHINGLE)
-    partial = (
-        _partial_counts(deleted_docs, id_col, text_col, k)
-        .select("h", (-F.col("n")).cast("long").alias("n"))
-        .withColumn("bucket", F.pmod(F.col("h"), F.lit(n_buckets)).cast("int"))
+    segments.ingest(
+        SPEC, store_path, batch_id, GRAM_STORE_BUCKETS, compact_every, build,
+        gram_store_compact,
     )
-    _commit_delta(partial, store_path, batch_id, bucket_col="bucket")
-    if len(_live_deltas(store_path, meta)) >= compact_every:
-        gram_store_compact(deleted_docs.sparkSession, store_path, n_buckets)
 
 
 def score_batch_against_store(
@@ -448,12 +248,10 @@ def gram_store_bootstrap(
     partial = _partial_counts(corpus, id_col, text_col, k).localCheckpoint(
         eager=True
     )
-    n_buckets = _segments.sized_n_buckets(partial.count())
-    rows = partial.withColumn(
-        "bucket", F.pmod(F.col("h"), F.lit(n_buckets)).cast("int")
-    )
-    _segments.bootstrap_base(
-        rows, store_path, "bucket", n_buckets,
+    n_buckets = segments.sized_n_buckets(partial.count())
+    rows = partial.withColumn(SPEC.bucket_col, SPEC.bucket_expr(n_buckets))
+    segments.bootstrap_base(
+        rows, store_path, SPEC.bucket_col, n_buckets,
         extra_meta={"gram_k": k or DEFAULT_SHINGLE},
     )
 

@@ -18,9 +18,8 @@ out-of-order batches cannot corrupt it), and
 ``dedup_batch_against_store`` marks an incoming row a duplicate iff
 the store holds the same hash with a SMALLER owner id — giving the
 same verdicts a one-shot ``exact_dedup`` over (history ∪ batch) gives
-for the batch's rows (pinned by test). Compactions are bucket-partial
-since r10 (delta manifests + hard-linked untouched partitions — see
-gram_store.py's layout notes): O(touched + deltas), not O(store).
+for the batch's rows (pinned by test). Lifecycle and the min-owner
+merge rule: streaming/segments.py.
 
 Reference parity: the reference has no streaming surface; this is the
 streaming closure of its URL/content dedup step
@@ -30,12 +29,10 @@ batch ``exact_dedup`` operator is its oracle.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import segments
+from . import segments, tombstones
 
 HASH_STORE_BUCKETS = 32
 COMPACT_EVERY = 8
@@ -56,75 +53,19 @@ def _partial_hashes(batch: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def _hash_frames(
-    spark: SparkSession,
-    store_path: str,
-    meta: dict,
-    deltas: dict[int, str],
-    buckets: list[int] | None = None,
-) -> list[tuple[int, DataFrame]]:
-    """Raw (sequence, frame) pairs for the visible state: the base at
-    its compaction's ``consumed_through`` plus each live delta at its
-    dir id — the provenance sequence tombstone resolution orders by
-    (streaming/tombstones.py). ``buckets`` partition-prunes the base
-    for partial compaction."""
-    frames: list[tuple[int, DataFrame]] = []
-    if meta["base"]:
-        f = spark.read.parquet(os.path.join(store_path, meta["base"]))
-        if buckets is not None:
-            f = f.where(F.col("_bucket").isin(buckets))
-        frames.append((meta["consumed_through"], f))
-    for bid, path in sorted(deltas.items()):
-        frames.append((bid, spark.read.parquet(path)))
-    return frames
-
-
-def _merged_hashes(frames: list[tuple[int, DataFrame]]) -> DataFrame | None:
-    """(content_hash, owner_id) visible state from raw frames: the
-    plain min-merge when no live delta carries tombstones (the exact
-    pre-r13 plan — zero deletion overhead on stores nobody deletes
-    from), the sequence-aware merge otherwise. None when no frame
-    carries data (tombstones-only store = empty visible state)."""
-    from . import tombstones
-
-    raw = [f for _seq, f in frames]
-    if not any("owner_id" in f.columns for f in raw):
-        # only tombstone deltas exist: nothing was ever ingested, so
-        # the visible state is the empty store
-        return None
-    if not tombstones.has_tombstones(raw):
-        cols = [f.select("content_hash", "owner_id") for f in raw]
-        if len(cols) == 1:
-            return cols[0]
-        out = cols[0]
-        for f in cols[1:]:
-            out = out.unionByName(f)
-        return out.groupBy("content_hash").agg(F.min("owner_id").alias("owner_id"))
-    seqd = []
-    for seq, f in frames:
-        keep = [c for c in ("content_hash", "owner_id", tombstones.TOMB_COL)
-                if c in f.columns]
-        seqd.append(tombstones.with_seq(f.select(*keep), seq))
-    out = seqd[0]
-    for f in seqd[1:]:
-        out = out.unionByName(f, allowMissingColumns=True)
-    return tombstones.min_merge_with_tombstones(
-        out, ["content_hash"], "owner_id"
-    )
+SPEC = segments.StoreSpec(
+    name="hash",
+    key=("content_hash",),
+    values=("owner_id",),
+    merge=segments.min_owner,
+    bucket_expr=lambda n: F.pmod(F.xxhash64("content_hash"), F.lit(n)).cast("int"),
+)
 
 
 def read_hash_store(spark: SparkSession, store_path: str) -> DataFrame:
     """(content_hash, owner_id = min doc id ever seen with it and not
-    deleted since). Plain base scan when no deltas are live; pending
-    tombstone deltas switch the merge to the sequence-aware rule."""
-    meta = segments.read_meta(store_path)
-    frames = _hash_frames(
-        spark, store_path, meta, segments.live_deltas(store_path, meta)
-    )
-    merged = _merged_hashes(frames) if frames else None
-    if merged is None:
-        raise FileNotFoundError(f"empty hash store at {store_path}")
-    return merged
+    deleted since)."""
+    return segments.read_store(SPEC, spark, store_path)
 
 
 def hash_store_update_batch(
@@ -137,39 +78,33 @@ def hash_store_update_batch(
     n_buckets: int = HASH_STORE_BUCKETS,
 ) -> None:
     """Ingest one micro-batch's (hash, min id) rows as an atomic delta
-    segment — O(batch), the existing state is NOT read. Same replay /
-    crash contract as the gram and SCD2 stores (segments.py); min is
-    additionally idempotent, so even a guard bypass cannot corrupt
-    owners."""
-    os.makedirs(store_path, exist_ok=True)
-    if batch_id is None:
-        batch_id = segments.next_batch_id(store_path)
-    elif segments.already_ingested(store_path, batch_id):
-        return  # replayed micro-batch
-    meta = segments.read_meta(store_path)
-    n_buckets = segments.pin_n_buckets(store_path, meta, n_buckets)
-    # the owner id keeps its NATIVE type (see _partial_hashes), so the
-    # store's min() is numeric for numeric ids and lexicographic for
-    # string ids — sound per store, corrupt if MIXED: a long-keyed
-    # store ingesting string ids later would unionByName-coerce to
-    # string and silently flip min's order ('10' < '9'). Pin the dtype
-    # at first ingest and raise on mismatch (r10 ADVICE). A pre-r11
-    # store carries no pin yet: backfill it from the STORED schema
-    # (parquet-footer read, no data scan) before checking the batch,
-    # so the upgrade path can't self-pin a mismatched type.
-    if meta.get("id_type") is None:
-        try:
-            stored = dict(read_hash_store(batch.sparkSession, store_path).dtypes)
-            segments.pin_value(store_path, meta, "id_type", stored["owner_id"])
-        except FileNotFoundError:
-            pass  # empty store: the batch's type becomes the pin below
-    segments.pin_value(store_path, meta, "id_type", dict(batch.dtypes)[id_col])
-    partial = _partial_hashes(batch, id_col, text_col).withColumn(
-        "_bucket", F.pmod(F.xxhash64("content_hash"), F.lit(n_buckets)).cast("int")
+    segment — O(batch), the existing state is NOT read. min is
+    idempotent, so even a replay-guard bypass cannot corrupt owners."""
+
+    def build(meta: dict, n: int, _bid: int) -> DataFrame:
+        # the owner id keeps its NATIVE type (see _partial_hashes), so
+        # the store's min() is numeric for numeric ids and
+        # lexicographic for string ids — sound per store, corrupt if
+        # MIXED ('10' < '9' after a unionByName coercion). Pin the
+        # dtype at first ingest and raise on mismatch. A store without
+        # the pin yet is backfilled from the STORED schema
+        # (parquet-footer read, no data scan) before checking the
+        # batch, so an upgrade can't self-pin a mismatched type.
+        if meta.get("id_type") is None:
+            try:
+                stored = dict(read_hash_store(batch.sparkSession, store_path).dtypes)
+                segments.pin_value(store_path, meta, "id_type", stored["owner_id"])
+            except FileNotFoundError:
+                pass  # empty store: the batch's type becomes the pin below
+        segments.pin_value(store_path, meta, "id_type", dict(batch.dtypes)[id_col])
+        return _partial_hashes(batch, id_col, text_col).withColumn(
+            SPEC.bucket_col, SPEC.bucket_expr(n)
+        )
+
+    segments.ingest(
+        SPEC, store_path, batch_id, n_buckets, compact_every, build,
+        hash_store_compact,
     )
-    segments.commit_delta(partial, store_path, batch_id, bucket_col="_bucket")
-    if len(segments.live_deltas(store_path)) >= compact_every:
-        hash_store_compact(batch.sparkSession, store_path, n_buckets)
 
 
 def hash_store_compact(
@@ -178,90 +113,9 @@ def hash_store_compact(
     n_buckets: int = HASH_STORE_BUCKETS,
     rows_per_bucket: int = segments.ROWS_PER_BUCKET,
 ) -> None:
-    """Fold live deltas into a fresh hash-bucketed base, committed by
-    one atomic meta replace (gram_store_compact's contract — including
-    the r10 bucket-PARTIAL path: the delta manifests say which
-    ``_bucket=K`` partitions the batches touch, so the min-owner merge
-    reads only those base partitions and hard-links the rest into the
-    new base; O(touched + deltas) instead of O(store). Falls back to
-    the full rewrite for manifest-less pre-r10 deltas or a first
-    compaction). r11: the bucket count GROWS (power-of-2) when the
-    store outgrows ~rows_per_bucket rows per bucket — growth rewrites
-    fully and commits the new count atomically with the new base, so
-    partial compaction keeps working at production scale instead of
-    degrading to an every-bucket-touched full rewrite
-    (segments.grown_n_buckets)."""
-    meta = segments.read_meta(store_path)
-    segments.sweep(store_path, meta)
-    deltas = segments.live_deltas(store_path, meta)
-    if not deltas:
-        return
-    n_buckets = segments.pin_n_buckets(store_path, meta, n_buckets)
-    grown = segments.grown_n_buckets(meta, deltas, n_buckets, rows_per_bucket)
-    new_base = segments.next_base_name(meta)
-    # partial carry-over requires the live base to share the pinned
-    # bucketing (recorded as base_n_buckets at every compaction) AND
-    # no pending growth (a grown modulus re-buckets everything)
-    touched = (
-        segments.touched_buckets(deltas, "_bucket")
-        if grown == n_buckets
-        and meta["base"]
-        and meta.get("base_n_buckets") == n_buckets
-        else None
-    )
-    n_buckets = grown
-    wrote = True
-    bucket_expr = F.pmod(F.xxhash64("content_hash"), F.lit(n_buckets)).cast("int")
-    if touched == []:  # only empty deltas live: carry the base verbatim
-        merged_tmp = os.path.join(store_path, f"_tmp-merge-{new_base}")
-        os.makedirs(merged_tmp, exist_ok=True)
-        segments.assemble_partial_base(
-            store_path, meta["base"], merged_tmp, new_base, "_bucket", touched
-        )
-    elif touched is not None and len(touched) < n_buckets:
-        # tombstone-aware merge over base-touched + delta rows: the
-        # sequence rule applies tombstones and DROPS them, so the new
-        # partitions physically reclaim deleted hashes (tombstones
-        # live in their key's bucket, so the touched set covers them)
-        merged = _merged_hashes(
-            _hash_frames(spark, store_path, meta, deltas, buckets=touched)
-        )
-        merged = merged.withColumn("_bucket", bucket_expr)
-        merged_tmp = os.path.join(store_path, f"_tmp-merge-{new_base}")
-        merged.repartition("_bucket").write.partitionBy("_bucket").mode(
-            "overwrite"
-        ).parquet(merged_tmp)
-        segments.assemble_partial_base(
-            store_path, meta["base"], merged_tmp, new_base, "_bucket", touched
-        )
-    else:
-        merged = _merged_hashes(
-            _hash_frames(spark, store_path, meta, deltas)
-        )
-        # an all-empty history commits base=None (segments.write_base);
-        # a tombstones-only history (merged is None) is the same case
-        wrote = merged is not None and segments.write_base(
-            merged.withColumn("_bucket", bucket_expr),
-            store_path,
-            new_base,
-            "_bucket",
-        )
-    segments.write_meta(
-        store_path,
-        {
-            **meta,  # preserve pinned properties (id_type, ...)
-            "base": new_base if wrote else None,
-            "consumed_through": max(deltas),
-            "n_buckets": n_buckets,
-            "base_n_buckets": n_buckets,
-            "base_rows": (
-                segments.base_row_count(spark, store_path, new_base)
-                if wrote
-                else 0
-            ),
-        },
-    )
-    segments.sweep(store_path, segments.read_meta(store_path))
+    """Fold live deltas into a new hash-bucketed base
+    (``segments.compact``); tombstoned hashes are reclaimed."""
+    segments.compact(SPEC, spark, store_path, n_buckets, rows_per_bucket)
 
 
 def hash_store_delete_batch(
@@ -271,39 +125,28 @@ def hash_store_delete_batch(
     text_col: str = "text",
     compact_every: int = COMPACT_EVERY,
 ) -> None:
-    """Retract CONTENT from the dedup memory (r13, r12 VERDICT task 6
-    — right-to-erasure / eval-refresh without a rebuild): commit one
-    atomic tombstone delta keyed by the batch's content hashes. From
-    this batch on, reads and scoring forget those hashes — content
-    known only through deleted documents stops marking future arrivals
-    as duplicates — until/unless the same content is RE-ingested by a
-    later batch (the sequence rule in streaming/tombstones.py). The
-    next compaction physically drops both the dead rows and the
-    tombstones. Same batch-id sequence, replay guard, and crash
-    contract as ingest; the erasure request carries the documents
-    (their text), so the tombstone keys are computed, never looked up.
-    """
-    from . import tombstones
+    """Retract CONTENT from the dedup memory (right-to-erasure /
+    eval-refresh without a rebuild): one atomic tombstone delta keyed
+    by the batch's content hashes. From this batch on, reads and
+    scoring forget those hashes — content known only through deleted
+    documents stops marking future arrivals as duplicates — until the
+    same content is RE-ingested by a later batch (the sequence rule in
+    streaming/tombstones.py). The erasure request carries the
+    documents (their text), so the tombstone keys are computed, never
+    looked up."""
 
-    os.makedirs(store_path, exist_ok=True)
-    if batch_id is None:
-        batch_id = segments.next_batch_id(store_path)
-    elif segments.already_ingested(store_path, batch_id):
-        return  # replayed delete batch
-    meta = segments.read_meta(store_path)
-    n_buckets = segments.pin_n_buckets(store_path, meta, HASH_STORE_BUCKETS)
-    rows = (
-        batch.select(F.sha2(F.col(text_col), 256).alias("content_hash"))
-        .distinct()
-        .withColumn(tombstones.TOMB_COL, F.lit(True))
-        .withColumn(
-            "_bucket",
-            F.pmod(F.xxhash64("content_hash"), F.lit(n_buckets)).cast("int"),
+    def build(_meta: dict, n: int, _bid: int) -> DataFrame:
+        return (
+            batch.select(F.sha2(F.col(text_col), 256).alias("content_hash"))
+            .distinct()
+            .withColumn(tombstones.TOMB_COL, F.lit(True))
+            .withColumn(SPEC.bucket_col, SPEC.bucket_expr(n))
         )
+
+    segments.ingest(
+        SPEC, store_path, batch_id, HASH_STORE_BUCKETS, compact_every, build,
+        hash_store_compact,
     )
-    segments.commit_delta(rows, store_path, batch_id, bucket_col="_bucket")
-    if len(segments.live_deltas(store_path)) >= compact_every:
-        hash_store_compact(batch.sparkSession, store_path, n_buckets)
 
 
 def dedup_batch_against_store(
@@ -383,10 +226,10 @@ def hash_store_bootstrap(
     pinned by test."""
     n_buckets = segments.sized_n_buckets(corpus.count())
     rows = _partial_hashes(corpus, id_col, text_col).withColumn(
-        "_bucket", F.pmod(F.xxhash64("content_hash"), F.lit(n_buckets)).cast("int")
+        SPEC.bucket_col, SPEC.bucket_expr(n_buckets)
     )
     segments.bootstrap_base(
-        rows, store_path, "_bucket", n_buckets,
+        rows, store_path, SPEC.bucket_col, n_buckets,
         extra_meta={"id_type": dict(corpus.dtypes)[id_col]},
     )
 

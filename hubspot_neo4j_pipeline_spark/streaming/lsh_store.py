@@ -18,13 +18,9 @@ one-shot operator over (history ∪ batch) restricted to pairs touching
 the batch (pinned by test AND by the registered oracle
 ``incremental_neardup_pairs``).
 
-Layout / crash / replay contract: streaming/segments.py — one atomic
-delta dir per batch id, meta.json commit pointer, exact per-batch-id
-replay guard, bucket-partial compaction (delta manifests + hard-linked
-untouched ``_bucket=K`` partitions; see gram_store.py's notes).
-Within-store doc identity: latest writer per doc_id wins
-(re-ingesting a doc with edited text replaces its signature —
-read-side window on the delta id, exactly the SCD2 store's rule).
+Lifecycle: streaming/segments.py. Within-store doc identity is its
+latest-writer rule: re-ingesting a doc with edited text replaces its
+signature.
 
 Scale: the store holds one row per document — its 16-long signature
 plus its distinct shingle hashes-as-strings. That is linear in the
@@ -44,12 +40,10 @@ its DuckDB oracle) as the ground truth.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import segments
+from . import segments, tombstones
 
 LSH_STORE_BUCKETS = 32
 COMPACT_EVERY = 8
@@ -89,45 +83,22 @@ def _doc_rows(batch: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def _bucket_expr(n_buckets: int):
-    return F.pmod(F.xxhash64(F.col("doc_id").cast("string")), F.lit(n_buckets)).cast(
-        "int"
-    )
+SPEC = segments.StoreSpec(
+    name="lsh",
+    key=("doc_id",),
+    values=("shingles", "sig"),
+    merge=segments.latest_writer,
+    bucket_expr=lambda n: F.pmod(
+        F.xxhash64(F.col("doc_id").cast("string")), F.lit(n)
+    ).cast("int"),
+)
 
 
 def read_lsh_store(spark: SparkSession, store_path: str) -> DataFrame:
-    """(doc_id, shingles, sig): meta's base plus live deltas, latest
-    writer per doc_id wins (same merge-on-read rule as the SCD2
-    store's current view). A doc whose newest row is a tombstone
-    (``lsh_store_delete_batch``) is hidden — and resurrected by any
-    later re-ingest, since that row outranks the tombstone in the same
-    window (streaming/tombstones.py)."""
-    from . import tombstones
-
-    meta = segments.read_meta(store_path)
-    frames = []
-    frame_rows: list[int | None] = []
-    if meta["base"]:
-        frames.append(spark.read.parquet(os.path.join(store_path, meta["base"])))
-        frame_rows.append(meta.get("base_rows"))
-    for _bid, path in sorted(segments.live_deltas(store_path, meta).items()):
-        frames.append(spark.read.parquet(path))
-        m = segments.delta_manifest(path)
-        frame_rows.append(None if m is None else m.get("rows"))
-    if not frames:
-        raise FileNotFoundError(f"empty lsh store at {store_path}")
-    # latest-writer WITHOUT a store shuffle (r13): frames are unique
-    # per doc_id by construction and frame order IS batch order, so
-    # the merge is broadcast anti-joins against the (micro-batch-
-    # sized) newer key sets instead of a window over the whole store
-    # — see tombstones.latest_writer_union. A lone tombstone delta
-    # still filters (every key deleted). r14: manifest row counts
-    # gate the broadcast — a bulk-sized delta falls back to the
-    # window merge instead of materializing its key set everywhere.
-    merged = tombstones.latest_writer_union(frames, "doc_id", frame_rows)
-    return tombstones.drop_tombstoned_latest(merged).select(
-        "doc_id", "shingles", "sig"
-    )
+    """(doc_id, shingles, sig): latest writer per doc_id wins. A doc
+    whose newest row is a tombstone (``lsh_store_delete_batch``) is
+    hidden, and resurrected by any later re-ingest."""
+    return segments.read_store(SPEC, spark, store_path)
 
 
 def lsh_store_update_batch(
@@ -141,25 +112,18 @@ def lsh_store_update_batch(
     doc_rows: DataFrame | None = None,
 ) -> None:
     """Ingest one micro-batch's (doc_id, shingles, sig) rows as an
-    atomic delta — O(batch), the existing state is NOT read. Same
-    replay / crash / compaction contract as the sibling stores."""
-    os.makedirs(store_path, exist_ok=True)
-    if batch_id is None:
-        batch_id = segments.next_batch_id(store_path)
-    elif segments.already_ingested(store_path, batch_id):
-        return  # replayed micro-batch
-    meta = segments.read_meta(store_path)
-    n_buckets = segments.pin_n_buckets(store_path, meta, n_buckets)
-    if doc_rows is None:
-        doc_rows = _doc_rows(batch, id_col, text_col)
-    delta = (
-        doc_rows
-        .withColumn("_ubid", F.lit(batch_id).cast("long"))
-        .withColumn("_bucket", _bucket_expr(n_buckets))
+    atomic delta — O(batch), the existing state is NOT read."""
+
+    def build(_meta: dict, n: int, bid: int) -> DataFrame:
+        rows = doc_rows if doc_rows is not None else _doc_rows(batch, id_col, text_col)
+        return rows.withColumn("_ubid", F.lit(bid).cast("long")).withColumn(
+            SPEC.bucket_col, SPEC.bucket_expr(n)
+        )
+
+    segments.ingest(
+        SPEC, store_path, batch_id, n_buckets, compact_every, build,
+        lsh_store_compact,
     )
-    segments.commit_delta(delta, store_path, batch_id, bucket_col="_bucket")
-    if len(segments.live_deltas(store_path)) >= compact_every:
-        lsh_store_compact(batch.sparkSession, store_path, n_buckets)
 
 
 def lsh_store_compact(
@@ -168,96 +132,9 @@ def lsh_store_compact(
     n_buckets: int = LSH_STORE_BUCKETS,
     rows_per_bucket: int = segments.ROWS_PER_BUCKET,
 ) -> None:
-    """Fold live deltas into a fresh doc-bucketed base, committed by
-    one atomic meta replace; bucket-PARTIAL like the sibling stores
-    (only buckets the live deltas touch are merged — latest-writer
-    window — and untouched partitions hard-link into the new base).
-    r11: the bucket count grows (power-of-2, full rewrite) when the
-    store outgrows ~rows_per_bucket rows per bucket
-    (segments.grown_n_buckets)."""
-    meta = segments.read_meta(store_path)
-    segments.sweep(store_path, meta)
-    deltas = segments.live_deltas(store_path, meta)
-    if not deltas:
-        return
-    hi = max(deltas)
-    n_buckets = segments.pin_n_buckets(store_path, meta, n_buckets)
-    grown = segments.grown_n_buckets(meta, deltas, n_buckets, rows_per_bucket)
-    new_base = segments.next_base_name(meta)
-    touched = (
-        segments.touched_buckets(deltas, "_bucket")
-        if grown == n_buckets
-        and meta["base"]
-        and meta.get("base_n_buckets") == n_buckets
-        else None
-    )
-    n_buckets = grown
-    wrote = True
-    if touched == []:  # only empty deltas live: carry the base verbatim
-        merged_tmp = os.path.join(store_path, f"_tmp-merge-{new_base}")
-        os.makedirs(merged_tmp, exist_ok=True)
-        segments.assemble_partial_base(
-            store_path, meta["base"], merged_tmp, new_base, "_bucket", touched
-        )
-    elif touched is not None and len(touched) < n_buckets:
-        frames = [
-            spark.read.parquet(os.path.join(store_path, meta["base"])).where(
-                F.col("_bucket").isin(touched)  # partition-pruned
-            )
-        ]
-        for _bid, path in sorted(deltas.items()):
-            frames.append(spark.read.parquet(path))
-        allrows = frames[0]
-        for f in frames[1:]:
-            allrows = allrows.unionByName(f, allowMissingColumns=True)
-        from . import tombstones
-
-        w = Window.partitionBy("doc_id").orderBy(F.col("_ubid").desc())
-        merged = (
-            allrows.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        # physical reclaim: a key whose newest row is a tombstone is
-        # dropped from the new partitions, and the tombstone column
-        # itself never reaches the base (r13, streaming/tombstones.py)
-        merged = (
-            tombstones.drop_tombstoned_latest(merged)
-            .drop(tombstones.TOMB_COL)
-            .withColumn("_ubid", F.lit(hi).cast("long"))
-            .withColumn("_bucket", _bucket_expr(n_buckets))
-        )
-        merged_tmp = os.path.join(store_path, f"_tmp-merge-{new_base}")
-        merged.repartition("_bucket").write.partitionBy("_bucket").mode(
-            "overwrite"
-        ).parquet(merged_tmp)
-        segments.assemble_partial_base(
-            store_path, meta["base"], merged_tmp, new_base, "_bucket", touched
-        )
-    else:
-        merged = (
-            read_lsh_store(spark, store_path)
-            .withColumn("_ubid", F.lit(hi).cast("long"))
-            .withColumn("_bucket", _bucket_expr(n_buckets))
-        )
-        # an all-empty history commits base=None (segments.write_base)
-        wrote = segments.write_base(merged, store_path, new_base, "_bucket")
-    segments.write_meta(
-        store_path,
-        {
-            **meta,  # preserve pinned properties
-            "base": new_base if wrote else None,
-            "consumed_through": hi,
-            "n_buckets": n_buckets,
-            "base_n_buckets": n_buckets,
-            "base_rows": (
-                segments.base_row_count(spark, store_path, new_base)
-                if wrote
-                else 0
-            ),
-        },
-    )
-    segments.sweep(store_path, segments.read_meta(store_path))
+    """Fold live deltas into a new doc-bucketed base
+    (``segments.compact``); tombstoned docs are reclaimed."""
+    segments.compact(SPEC, spark, store_path, n_buckets, rows_per_bucket)
 
 
 def lsh_store_delete_batch(
@@ -267,36 +144,28 @@ def lsh_store_delete_batch(
     id_col: str = "doc_id",
     compact_every: int = COMPACT_EVERY,
 ) -> None:
-    """Retract documents from the near-dup index (r13, r12 VERDICT
-    task 6): one atomic tombstone delta keyed by doc_id. The read-side
-    latest-writer window hides deleted docs from every scoring path
-    (``neardup_pairs_against_store`` candidates them against the store
-    view, so erased docs stop pairing), a later re-ingest resurrects,
-    and the next compaction physically drops both the dead signature
-    rows and the tombstones. Same batch-id sequence / replay guard /
-    crash contract as ingest. Payload columns ride as typed nulls so
-    every reader sees one schema."""
-    from . import tombstones
+    """Retract documents from the near-dup index: one atomic tombstone
+    delta keyed by doc_id. The latest-writer read hides deleted docs
+    from every scoring path (``neardup_pairs_against_store``
+    candidates them against the store view, so erased docs stop
+    pairing) and a later re-ingest resurrects. Payload columns ride as
+    typed nulls so every reader sees one schema."""
 
-    os.makedirs(store_path, exist_ok=True)
-    if batch_id is None:
-        batch_id = segments.next_batch_id(store_path)
-    elif segments.already_ingested(store_path, batch_id):
-        return  # replayed delete batch
-    meta = segments.read_meta(store_path)
-    n_buckets = segments.pin_n_buckets(store_path, meta, LSH_STORE_BUCKETS)
-    rows = (
-        ids.select(F.col(id_col).alias("doc_id"))
-        .distinct()
-        .withColumn("shingles", F.lit(None).cast("array<string>"))
-        .withColumn("sig", F.lit(None).cast("array<bigint>"))
-        .withColumn(tombstones.TOMB_COL, F.lit(True))
-        .withColumn("_ubid", F.lit(batch_id).cast("long"))
-        .withColumn("_bucket", _bucket_expr(n_buckets))
+    def build(_meta: dict, n: int, bid: int) -> DataFrame:
+        return (
+            ids.select(F.col(id_col).alias("doc_id"))
+            .distinct()
+            .withColumn("shingles", F.lit(None).cast("array<string>"))
+            .withColumn("sig", F.lit(None).cast("array<bigint>"))
+            .withColumn(tombstones.TOMB_COL, F.lit(True))
+            .withColumn("_ubid", F.lit(bid).cast("long"))
+            .withColumn(SPEC.bucket_col, SPEC.bucket_expr(n))
+        )
+
+    segments.ingest(
+        SPEC, store_path, batch_id, LSH_STORE_BUCKETS, compact_every, build,
+        lsh_store_compact,
     )
-    segments.commit_delta(rows, store_path, batch_id, bucket_col="_bucket")
-    if len(segments.live_deltas(store_path)) >= compact_every:
-        lsh_store_compact(ids.sparkSession, store_path, n_buckets)
 
 
 def neardup_pairs_against_store(
@@ -442,6 +311,6 @@ def lsh_store_bootstrap(
     rows = (
         _doc_rows(corpus, id_col, text_col)
         .withColumn("_ubid", F.lit(-1).cast("long"))
-        .withColumn("_bucket", _bucket_expr(n_buckets))
+        .withColumn(SPEC.bucket_col, SPEC.bucket_expr(n_buckets))
     )
-    segments.bootstrap_base(rows, store_path, "_bucket", n_buckets)
+    segments.bootstrap_base(rows, store_path, SPEC.bucket_col, n_buckets)

@@ -1,39 +1,91 @@
-"""Shared LSM-style segment-store primitives for streaming state kept
-on plain parquet (no table-format jar available offline).
+"""The LSM segment-store kernel: one ingest / delete / compact / read
+lifecycle on plain parquet (no table-format jar available offline),
+shared by the seven streaming stores. Each store module supplies a
+``StoreSpec`` plus its own row builders and scoring functions.
 
-Extracted from the r9 gram store so the OTHER O(store)-per-batch
-maintainer (the streaming SCD2 upsert) can reuse the identical
-commit/replay/crash contract instead of re-deriving it:
+Layout::
 
     store/
-      meta.json        atomic commit pointer (tmp + os.replace):
-                       {"base": "base-<n>"|null, "consumed_through": k}
-      base-<n>/        the compacted view (layout is the domain
-                       store's business — bucket- or key-partitioned)
-      deltas/b<id>/    ONE directory per ingested micro-batch,
-                       written to a _tmp dir then os.rename'd into
-                       place: the rename IS the commit, so a
-                       half-written delta is never visible
+      meta.json        atomic commit pointer (per-writer tmp + os.replace):
+                       {"base": "base-<n>"|null, "consumed_through": k,
+                        "n_buckets", "base_n_buckets", "base_rows",
+                        plus the store's pinned properties}
+      base-<n>/<bucket_col>=K/
+                       the compacted view, hive-partitioned by the
+                       spec's bucket expression
+      deltas/b<id>/    one directory per ingested batch, written to a
+                       _tmp dir and os.rename'd into place (the rename
+                       IS the commit), with a _delta_manifest.json of
+                       the buckets it touches and its row count
 
-Contracts (see streaming/gram_store.py's docstring for the full
-crash-point walk-through):
-  * a batch id is ingested iff ``deltas/b<id>`` exists or
-    id <= consumed_through — exact per-batch replay guard, safe under
+Replay guard and crash contract:
+  * a batch id is applied iff ``deltas/b<id>`` exists or
+    id <= consumed_through, so a replayed id is a no-op, also under
     out-of-order redelivery;
   * every mutation before the meta.json os.replace is invisible to
-    readers and garbage-collectable (``sweep``);
+    readers and garbage-collectable (``sweep``): an orphan ``_tmp-``
+    dir, a ``base-<n+1>`` meta does not point to, consumed deltas a
+    crash left behind;
   * readers resolve ONLY meta's base plus deltas with
-    id > consumed_through.
+    id > consumed_through;
+  * batch ids are scoped to one streaming checkpoint, so a store and
+    its checkpoint_dir live and die together.
+
+Lifecycle:
+  * ``ingest`` runs the replay guard, ``pin_n_buckets``, the store's
+    row builder, ``commit_delta`` and the compaction trigger (every
+    ``compact_every`` live deltas). A delete is an ingest whose builder
+    emits tombstones or negated partials.
+  * ``visible_frames`` / ``read_store`` merge the base and the live
+    deltas under the spec's rule.
+  * ``compact`` sweeps, grows the bucket count when the store has
+    outgrown it (power-of-2, ROWS_PER_BUCKET rows per bucket, always a
+    full rewrite), picks the touched buckets from the delta manifests,
+    and then carries the base over (only empty deltas live), merges
+    the touched partitions and hard-links the rest (partial), or
+    rewrites the whole base (full). One meta replace commits it; a
+    final sweep removes what it superseded. Compaction reclaims:
+    tombstones and netted-out rows never reach the new base.
+
+Merge rules (``StoreSpec.merge``):
+  * ``min_owner`` — min(value) per key, order-free. Deletes are
+    ``_del`` tombstone rows; a tombstone kills the key's rows of older
+    provenance sequence (``tombstones.min_merge_with_tombstones``).
+    hash (content_hash -> owner_id), cluster (doc_id -> comp).
+  * ``latest_writer`` — the newest frame's row wins per key and a key
+    whose newest row is a tombstone is hidden
+    (``tombstones.latest_writer_union`` + ``drop_tombstoned_latest``);
+    rows carry the writing batch id ``_ubid``. lsh (doc_id), vector
+    (vec_id).
+  * ``additive`` — sum per key; a key whose first value nets to <= 0 is
+    hidden and reclaimed, and deletes commit negated partials. gram
+    (h -> n, bucket column ``bucket``), df (term -> df), window
+    ((day, user_id) -> n, total_value).
+
+The SCD2 store (streaming/incremental.py) uses the primitives here
+(meta, ``commit_delta``, manifests, ``sweep``) but keeps its own
+compaction: it folds current and history segments with SCD2 row
+semantics, which none of the three rules express.
 """
 
 from __future__ import annotations
 
 import json
+import logging
 import os
 import shutil
+from dataclasses import dataclass
+from typing import Callable, NamedTuple
+
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from . import tombstones
 
 META = "meta.json"
 DELTAS = "deltas"
+
+_log = logging.getLogger("hubspot_neo4j_pipeline_spark")
 
 
 def read_meta(store_path: str) -> dict:
@@ -263,7 +315,8 @@ def _try_driver_table(df, est_bytes: int | None = None):
     """The delta as a pyarrow table IF the planner (or the caller's
     ``est_bytes`` override) thinks it is small, else None. Any failure
     (stats API drift, Arrow conversion of an exotic type, result-size
-    cap) falls back to the Spark write."""
+    cap) falls back to the Spark write and logs one WARNING naming the
+    exception class."""
     try:
         est = est_bytes if est_bytes is not None else plan_size_estimate(df)
         if est is None or est > DRIVER_COMMIT_MAX_EST:
@@ -282,8 +335,16 @@ def _try_driver_table(df, est_bytes: int | None = None):
         if tbl.nbytes > DRIVER_COMMIT_MAX_ACTUAL:
             return None
         return tbl
-    except Exception:
+    except Exception as exc:
+        _log_driver_fallback(exc)
         return None
+
+
+def _log_driver_fallback(exc: Exception) -> None:
+    _log.warning(
+        "driver delta commit failed (%s); falling back to the Spark write",
+        type(exc).__name__,
+    )
 
 
 def commit_delta(
@@ -346,7 +407,8 @@ def commit_delta(
                     tbl.num_rows,
                 )
             wrote_driver = True
-        except Exception:
+        except Exception as exc:
+            _log_driver_fallback(exc)
             shutil.rmtree(tmp, ignore_errors=True)
             manifest = None
     if not wrote_driver:
@@ -672,3 +734,256 @@ def sized_n_buckets(n_rows: int, floor: int = 32) -> int:
     while n_rows > n * ROWS_PER_BUCKET:
         n *= 2
     return n
+
+
+# ---------------------------------------------------------------------------
+# The lifecycle kernel: store specs, visible-frame reads, ingest, compact.
+
+
+@dataclass(frozen=True)
+class StoreSpec:
+    """What makes one segment store differ from another: its merge key
+    and payload columns, its merge rule — one of ``min_owner``,
+    ``latest_writer``, ``additive`` (module docstring) — and its bucket
+    layout. ``sum_types`` gives an additive store's per-value cast
+    after summing; the first value is the one whose ``> 0`` decides
+    visibility."""
+
+    name: str
+    key: tuple[str, ...]
+    values: tuple[str, ...]
+    merge: Callable[["StoreSpec", list["Segment"]], DataFrame | None]
+    bucket_expr: Callable[[int], Column]
+    bucket_col: str = "_bucket"
+    sum_types: tuple[str, ...] = ()
+
+    @property
+    def columns(self) -> list[str]:
+        return [*self.key, *self.values]
+
+
+class Segment(NamedTuple):
+    """One visible frame: the base at its compaction's
+    ``consumed_through`` or a live delta at its dir id (the provenance
+    sequence tombstones order by), with its known row count."""
+
+    seq: int
+    frame: DataFrame
+    rows: int | None
+    is_base: bool
+
+
+def visible_frames(
+    spec: StoreSpec,
+    spark: SparkSession,
+    store_path: str,
+    meta: dict | None = None,
+    deltas: dict[int, str] | None = None,
+    buckets: list[int] | None = None,
+) -> list[Segment]:
+    """The base plus every live delta, oldest first. ``buckets``
+    partition-prunes the base for partial compaction."""
+    meta = meta or read_meta(store_path)
+    if deltas is None:
+        deltas = live_deltas(store_path, meta)
+    segs: list[Segment] = []
+    if meta["base"]:
+        f = spark.read.parquet(os.path.join(store_path, meta["base"]))
+        if buckets is not None:
+            f = f.where(F.col(spec.bucket_col).isin(buckets))
+        segs.append(Segment(meta["consumed_through"], f, meta.get("base_rows"), True))
+    for bid, path in sorted(deltas.items()):
+        m = delta_manifest(path)
+        rows = None if m is None else m.get("rows")
+        segs.append(Segment(bid, spark.read.parquet(path), rows, False))
+    return segs
+
+
+def _union(frames: list[DataFrame], allow_missing: bool = False) -> DataFrame:
+    out = frames[0]
+    for f in frames[1:]:
+        out = out.unionByName(f, allowMissingColumns=allow_missing)
+    return out
+
+
+def union_rows(spec: StoreSpec, segs: list[Segment]) -> DataFrame:
+    """The segments' raw (key, values) rows, unmerged."""
+    return _union([s.frame.select(*spec.columns) for s in segs])
+
+
+def min_owner(spec: StoreSpec, segs: list[Segment]) -> DataFrame | None:
+    """min(value) per key: the plain min-merge when no live delta
+    carries tombstones (zero deletion overhead on stores nobody deletes
+    from), the sequence-aware merge otherwise. None when only
+    tombstone deltas exist (the empty store)."""
+    raw = [s.frame for s in segs]
+    value = spec.values[0]
+    if not any(value in f.columns for f in raw):
+        return None
+    if not tombstones.has_tombstones(raw):
+        out = union_rows(spec, segs)
+        if len(raw) == 1:
+            return out
+        return out.groupBy(*spec.key).agg(F.min(value).alias(value))
+    keep = [*spec.columns, tombstones.TOMB_COL]
+    seqd = [
+        tombstones.with_seq(
+            s.frame.select(*[c for c in keep if c in s.frame.columns]), s.seq
+        )
+        for s in segs
+    ]
+    return tombstones.min_merge_with_tombstones(
+        _union(seqd, allow_missing=True), list(spec.key), value
+    )
+
+
+def latest_writer(spec: StoreSpec, segs: list[Segment]) -> DataFrame:
+    """The newest frame's row per key, keys whose newest row is a
+    tombstone hidden. Frames are unique per key and ordered by batch,
+    so the merge is broadcast anti-joins, not a shuffle of the store
+    (``tombstones.latest_writer_union``)."""
+    merged = tombstones.latest_writer_union(
+        [s.frame for s in segs], spec.key[0], [s.rows for s in segs]
+    )
+    return tombstones.drop_tombstoned_latest(merged).select(*spec.columns)
+
+
+def additive(
+    spec: StoreSpec,
+    segs: list[Segment],
+    prune: Callable[[DataFrame], DataFrame] | None = None,
+) -> DataFrame:
+    """Sum per key, keys whose first value nets to <= 0 hidden. A
+    compacted base alone is already merged and reads as a plain scan.
+    ``prune`` filters the raw rows before the sum (sound: a key's total
+    never needs other keys' rows)."""
+    rows = union_rows(spec, segs)
+    if prune is not None:
+        rows = prune(rows)
+    if len(segs) == 1 and segs[0].is_base:
+        return rows
+    sums = [
+        F.sum(c).cast(t).alias(c) for c, t in zip(spec.values, spec.sum_types)
+    ]
+    return rows.groupBy(*spec.key).agg(*sums).where(F.col(spec.values[0]) > 0)
+
+
+def read_store(spec: StoreSpec, spark: SparkSession, store_path: str) -> DataFrame:
+    """The store's visible (key, values) frame. Raises
+    FileNotFoundError on an empty store."""
+    segs = visible_frames(spec, spark, store_path)
+    merged = spec.merge(spec, segs) if segs else None
+    if merged is None:
+        raise FileNotFoundError(f"empty {spec.name} store at {store_path}")
+    return merged
+
+
+def ingest(
+    spec: StoreSpec,
+    store_path: str,
+    batch_id: int | None,
+    n_buckets: int,
+    compact_every: int,
+    build: Callable[[dict, int, int], DataFrame],
+    compact: Callable[[SparkSession, str, int], None],
+    est_bytes: int | None = None,
+) -> None:
+    """Commit one batch as an atomic delta: the replay guard (a
+    replayed id returns), the bucket-count pin, ``build(meta,
+    n_buckets, batch_id)`` for the delta rows (already carrying the
+    bucket column; store-specific pins go in there), ``commit_delta``,
+    and ``compact(spark, store_path, n_buckets)`` once
+    ``compact_every`` deltas are live. Without ``batch_id`` the next
+    free id is used. ``est_bytes`` is passed to commit_delta."""
+    os.makedirs(store_path, exist_ok=True)
+    if batch_id is None:
+        batch_id = next_batch_id(store_path)
+    elif already_ingested(store_path, batch_id):
+        return  # replayed batch
+    meta = read_meta(store_path)
+    n_buckets = pin_n_buckets(store_path, meta, n_buckets)
+    delta = build(meta, n_buckets, batch_id)
+    commit_delta(
+        delta, store_path, batch_id, bucket_col=spec.bucket_col,
+        est_bytes=est_bytes,
+    )
+    if len(live_deltas(store_path)) >= compact_every:
+        compact(delta.sparkSession, store_path, n_buckets)
+
+
+def _folded(
+    spec: StoreSpec, segs: list[Segment], hi: int, n_buckets: int
+) -> DataFrame | None:
+    merged = spec.merge(spec, segs)
+    if merged is None:
+        return None
+    if spec.merge is latest_writer:  # rows carry the batch that wrote them
+        merged = merged.withColumn("_ubid", F.lit(hi).cast("long"))
+    return merged.withColumn(spec.bucket_col, spec.bucket_expr(n_buckets))
+
+
+def compact(
+    spec: StoreSpec,
+    spark: SparkSession,
+    store_path: str,
+    n_buckets: int,
+    rows_per_bucket: int = ROWS_PER_BUCKET,
+    crash_before_commit: bool = False,
+) -> None:
+    """Fold every live delta into a new base generation and commit it
+    with one meta replace (module docstring: growth, carry, partial,
+    full). Partial carry-over needs the live base written under the
+    pinned bucketing (``base_n_buckets``) and no pending growth;
+    manifest-less deltas or a first compaction take the full rewrite,
+    so correctness never depends on the manifests. An all-empty history
+    commits ``base: None`` (``write_base``). ``crash_before_commit``
+    (tests) does all the work but skips the commit, as a crash after
+    the new base is written would."""
+    if not os.path.isdir(store_path):
+        return
+    meta = read_meta(store_path)
+    sweep(store_path, meta)  # clear strandings from any earlier crash
+    deltas = live_deltas(store_path, meta)
+    if not deltas:
+        return
+    hi = max(deltas)
+    n_buckets = pin_n_buckets(store_path, meta, n_buckets)
+    grown = grown_n_buckets(meta, deltas, n_buckets, rows_per_bucket)
+    new_base = next_base_name(meta)
+    bcol = spec.bucket_col
+    touched = (
+        touched_buckets(deltas, bcol)
+        if grown == n_buckets
+        and meta["base"]
+        and meta.get("base_n_buckets") == n_buckets
+        else None
+    )
+    wrote = True
+    if touched is not None and len(touched) < grown:
+        merged_tmp = os.path.join(store_path, f"_tmp-merge-{new_base}")
+        if touched:
+            segs = visible_frames(spec, spark, store_path, meta, deltas, touched)
+            _folded(spec, segs, hi, grown).repartition(bcol).write.partitionBy(
+                bcol
+            ).mode("overwrite").parquet(merged_tmp)
+        else:  # only empty deltas live: carry the base verbatim
+            os.makedirs(merged_tmp, exist_ok=True)
+        assemble_partial_base(
+            store_path, meta["base"], merged_tmp, new_base, bcol, touched
+        )
+    else:
+        segs = visible_frames(spec, spark, store_path, meta, deltas)
+        merged = _folded(spec, segs, hi, grown)
+        wrote = merged is not None and write_base(merged, store_path, new_base, bcol)
+    if crash_before_commit:
+        return
+    new_meta = {
+        **meta,  # preserve pinned properties
+        "base": new_base if wrote else None,
+        "consumed_through": hi,
+        "n_buckets": grown,
+        "base_n_buckets": grown,
+        "base_rows": base_row_count(spark, store_path, new_base) if wrote else 0,
+    }
+    write_meta(store_path, new_meta)
+    sweep(store_path, new_meta)

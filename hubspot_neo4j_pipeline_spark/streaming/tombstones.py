@@ -146,10 +146,10 @@ def latest_writer_union(
     """The latest-writer merge computed WITHOUT shuffling the store
     (r13): every frame of a latest-writer store is unique per key BY
     CONSTRUCTION (_doc_rows/_vec_rows dedup within a batch, compaction
-    windows the base, delete deltas are distinct), and all rows of a
-    frame share one batch id, so the per-ROW window the read used to
-    run is exactly a per-FRAME rule: a newer frame's row shades any
-    older frame's row with the same key. That is one broadcast
+    writes this merge's one row per key, delete deltas are distinct),
+    and all rows of a frame share one batch id, so the per-ROW window
+    the read used to run is exactly a per-FRAME rule: a newer frame's
+    row shades any older frame's row with the same key. That is one broadcast
     anti-join per older frame against the union of newer frames' key
     sets — delta key sets are micro-batch-sized by the store contract,
     and the base (oldest, arbitrarily large) only ever sits on the
@@ -168,10 +168,11 @@ def latest_writer_union(
     BEFORE intra-batch vec_id dedup existed could carry duplicate ids
     inside one frame, and this merge would return both rows where the
     old window picked one. Scratch stores rebuilt per run are
-    unaffected; a long-lived legacy store should be compacted once
-    (compaction rewrites the base through the windowed fold) before
-    switching reads over. test_latest_writer_store_frames_unique_per_key
-    pins the invariant on freshly-written stores.
+    unaffected. Compaction folds through this same merge, so it does
+    not repair such a store: rebuild it (``vector_store_bootstrap``
+    dedups ids through ``_vec_rows``).
+    test_latest_writer_store_frames_unique_per_key pins the invariant
+    on freshly-written stores.
 
     ``frame_rows`` (r14, r13 VERDICT task 6): per-frame row counts in
     the same order as ``frames_old_to_new`` (None for unknown),

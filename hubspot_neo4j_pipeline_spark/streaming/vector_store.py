@@ -23,11 +23,9 @@ the identical planes or candidates silently diverge. The same
 pin-and-raise rule as the hash store's id_type and the gram store's
 gram_k.
 
-Layout / crash / replay: streaming/segments.py — one atomic delta per
-batch id, meta commit pointer, bucket-partial compaction with r11
-adaptive growth (the ``_bucket`` layout column is pmod(xxhash64(id));
-the LSH buckets are payload). Within-store identity: latest writer
-per vec_id wins (the LSH store's rule).
+Lifecycle: streaming/segments.py, latest-writer rule per vec_id. The
+``_bucket`` layout column is pmod(xxhash64(id)); the LSH buckets are
+payload.
 
 Scale note (documented, like the batch operators): planes pinned at
 first ingest mean bucket population grows ~N/2^p as the store grows;
@@ -46,12 +44,10 @@ cross-engine ground truth (registered query ``incremental_ann_topk``).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from . import segments
+from . import segments, tombstones
 
 VECTOR_STORE_BUCKETS = 32
 COMPACT_EVERY = 8
@@ -133,6 +129,17 @@ def _with_buckets(
     )
 
 
+SPEC = segments.StoreSpec(
+    name="vector",
+    key=("vec_id",),
+    values=("e", "_n", "buckets"),
+    merge=segments.latest_writer,
+    bucket_expr=lambda n: F.pmod(
+        F.xxhash64(F.col("vec_id").cast("string")), F.lit(n)
+    ).cast("int"),
+)
+
+
 def vector_store_update_batch(
     batch: DataFrame,
     store_path: str,
@@ -150,82 +157,51 @@ def vector_store_update_batch(
     the candidate space)."""
     from ..operators.similarity import as_double, auto_planes_per_table
 
-    os.makedirs(store_path, exist_ok=True)
-    if batch_id is None:
-        batch_id = segments.next_batch_id(store_path)
-    elif segments.already_ingested(store_path, batch_id):
-        return  # replayed micro-batch
-    meta = segments.read_meta(store_path)
-    n_buckets = segments.pin_n_buckets(store_path, meta, n_buckets)
     v = _vec_rows(
         batch.select(F.col(id_col).alias("vec_id"), as_double(vec_col).alias("e"))
     )
-    # r14 round-2: the delta plan joins the pinned-planes driver frame,
-    # which hides the plan's size from the planner (LogicalRDD reports
-    # unknown), so the small-delta driver commit would never fire.
-    # Estimate on the parquet-rooted subplan BEFORE that join instead;
-    # x4 covers the added buckets/norm/meta columns (the vector payload
+    # the delta plan joins the pinned-planes driver frame, which hides
+    # the plan's size from the planner (LogicalRDD reports unknown),
+    # so the small-delta driver commit would never fire. Estimate on
+    # the parquet-rooted subplan BEFORE that join instead; x4 covers
+    # the added buckets/norm/meta columns (the vector payload
     # dominates a row, so the margin is generous).
     v_est = segments.plan_size_estimate(v)
-    planes, ppt = _pinned_planes(meta)
-    if planes is None:
-        # r14 (guide §1.2): the plane-derivation path consumes v THREE
-        # times (count, plane collect, delta write) — materialize it
-        # once so the second and third pass read checkpointed blocks
-        # instead of re-running the dedup aggregate. Later batches
-        # (planes pinned) execute v exactly once and skip this — the
-        # hot micro-batch path pays nothing. Same pattern as
-        # vector_store_bootstrap.
-        v = v.localCheckpoint(eager=True)
-        ppt = auto_planes_per_table(v.count())
-        rows = v.orderBy("vec_id").limit(n_tables * ppt).collect()
-        planes = [list(r["e"]) for r in rows]  # bounded: n_planes x dim
-        segments.pin_value(store_path, meta, "planes_per_table", ppt)
-        segments.pin_value(store_path, meta, "planes", planes)
-    delta = _with_buckets(v, planes, ppt, n_tables).withColumn(
-        "_ubid", F.lit(batch_id).cast("long")
-    ).withColumn(
-        "_bucket",
-        F.pmod(F.xxhash64(F.col("vec_id").cast("string")), F.lit(n_buckets)).cast(
-            "int"
-        ),
-    )
-    segments.commit_delta(
-        delta, store_path, batch_id, bucket_col="_bucket",
+
+    def build(meta: dict, n: int, bid: int) -> DataFrame:
+        rows_v = v
+        planes, ppt = _pinned_planes(meta)
+        if planes is None:
+            # the plane-derivation path consumes v THREE times (count,
+            # plane collect, delta write) — materialize it once so the
+            # second and third pass read checkpointed blocks instead of
+            # re-running the dedup aggregate. Later batches (planes
+            # pinned) execute v exactly once and skip this. Same
+            # pattern as vector_store_bootstrap.
+            rows_v = v.localCheckpoint(eager=True)
+            ppt = auto_planes_per_table(rows_v.count())
+            rows = rows_v.orderBy("vec_id").limit(n_tables * ppt).collect()
+            planes = [list(r["e"]) for r in rows]  # bounded: n_planes x dim
+            segments.pin_value(store_path, meta, "planes_per_table", ppt)
+            segments.pin_value(store_path, meta, "planes", planes)
+        return (
+            _with_buckets(rows_v, planes, ppt, n_tables)
+            .withColumn("_ubid", F.lit(bid).cast("long"))
+            .withColumn(SPEC.bucket_col, SPEC.bucket_expr(n))
+        )
+
+    segments.ingest(
+        SPEC, store_path, batch_id, n_buckets, compact_every, build,
+        vector_store_compact,
         est_bytes=None if v_est is None else v_est * 4,
     )
-    if len(segments.live_deltas(store_path)) >= compact_every:
-        vector_store_compact(batch.sparkSession, store_path, n_buckets)
 
 
 def read_vector_store(spark: SparkSession, store_path: str) -> DataFrame:
-    """(vec_id, e, _n, buckets): base + live deltas, latest writer per
-    vec_id wins. A vec whose newest row is a tombstone
-    (``vector_store_delete_batch``) is hidden from every read/ANN path;
-    a later re-ingest resurrects it (streaming/tombstones.py)."""
-    from . import tombstones
-
-    meta = segments.read_meta(store_path)
-    frames = []
-    frame_rows: list[int | None] = []
-    if meta["base"]:
-        frames.append(spark.read.parquet(os.path.join(store_path, meta["base"])))
-        frame_rows.append(meta.get("base_rows"))
-    for _bid, path in sorted(segments.live_deltas(store_path, meta).items()):
-        frames.append(spark.read.parquet(path))
-        m = segments.delta_manifest(path)
-        frame_rows.append(None if m is None else m.get("rows"))
-    if not frames:
-        raise FileNotFoundError(f"empty vector store at {store_path}")
-    # latest-writer WITHOUT a store shuffle (r13): broadcast anti-joins
-    # against the newer frames' (micro-batch-sized) key sets replace
-    # the per-row window — see tombstones.latest_writer_union. r14:
-    # manifest row counts gate the broadcast (bulk delta → window
-    # merge fallback).
-    merged = tombstones.latest_writer_union(frames, "vec_id", frame_rows)
-    return tombstones.drop_tombstoned_latest(merged).select(
-        "vec_id", "e", "_n", "buckets"
-    )
+    """(vec_id, e, _n, buckets): latest writer per vec_id wins. A vec
+    whose newest row is a tombstone (``vector_store_delete_batch``) is
+    hidden from every read/ANN path; a later re-ingest resurrects it."""
+    return segments.read_store(SPEC, spark, store_path)
 
 
 def vector_store_compact(
@@ -234,94 +210,11 @@ def vector_store_compact(
     n_buckets: int = VECTOR_STORE_BUCKETS,
     rows_per_bucket: int = segments.ROWS_PER_BUCKET,
 ) -> None:
-    """Fold live deltas into a fresh id-bucketed base — bucket-PARTIAL
-    with adaptive growth, the sibling stores' contract. LSH buckets
-    are payload and carry over verbatim (they depend only on the
-    pinned planes, never on the layout)."""
-    meta = segments.read_meta(store_path)
-    segments.sweep(store_path, meta)
-    deltas = segments.live_deltas(store_path, meta)
-    if not deltas:
-        return
-    hi = max(deltas)
-    n_buckets = segments.pin_n_buckets(store_path, meta, n_buckets)
-    grown = segments.grown_n_buckets(meta, deltas, n_buckets, rows_per_bucket)
-    new_base = segments.next_base_name(meta)
-    touched = (
-        segments.touched_buckets(deltas, "_bucket")
-        if grown == n_buckets
-        and meta["base"]
-        and meta.get("base_n_buckets") == n_buckets
-        else None
-    )
-    n_buckets = grown
-    wrote = True
-    layout_bucket = F.pmod(
-        F.xxhash64(F.col("vec_id").cast("string")), F.lit(n_buckets)
-    ).cast("int")
-    if touched == []:  # only empty deltas live: carry the base verbatim
-        merged_tmp = os.path.join(store_path, f"_tmp-merge-{new_base}")
-        os.makedirs(merged_tmp, exist_ok=True)
-        segments.assemble_partial_base(
-            store_path, meta["base"], merged_tmp, new_base, "_bucket", touched
-        )
-    elif touched is not None and len(touched) < n_buckets:
-        frames = [
-            spark.read.parquet(os.path.join(store_path, meta["base"])).where(
-                F.col("_bucket").isin(touched)  # partition-pruned
-            )
-        ]
-        for _bid, path in sorted(deltas.items()):
-            frames.append(spark.read.parquet(path))
-        allrows = frames[0]
-        for f in frames[1:]:
-            allrows = allrows.unionByName(f, allowMissingColumns=True)
-        from . import tombstones
-
-        w = Window.partitionBy("vec_id").orderBy(F.col("_ubid").desc())
-        merged = (
-            allrows.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        # physical reclaim of tombstoned vectors (r13; see lsh store)
-        merged = (
-            tombstones.drop_tombstoned_latest(merged)
-            .drop(tombstones.TOMB_COL)
-            .withColumn("_ubid", F.lit(hi).cast("long"))
-            .withColumn("_bucket", layout_bucket)
-        )
-        merged_tmp = os.path.join(store_path, f"_tmp-merge-{new_base}")
-        merged.repartition("_bucket").write.partitionBy("_bucket").mode(
-            "overwrite"
-        ).parquet(merged_tmp)
-        segments.assemble_partial_base(
-            store_path, meta["base"], merged_tmp, new_base, "_bucket", touched
-        )
-    else:
-        merged = (
-            read_vector_store(spark, store_path)
-            .withColumn("_ubid", F.lit(hi).cast("long"))
-            .withColumn("_bucket", layout_bucket)
-        )
-        # an all-empty history commits base=None (segments.write_base)
-        wrote = segments.write_base(merged, store_path, new_base, "_bucket")
-    segments.write_meta(
-        store_path,
-        {
-            **meta,  # preserve pinned planes / planes_per_table
-            "base": new_base if wrote else None,
-            "consumed_through": hi,
-            "n_buckets": n_buckets,
-            "base_n_buckets": n_buckets,
-            "base_rows": (
-                segments.base_row_count(spark, store_path, new_base)
-                if wrote
-                else 0
-            ),
-        },
-    )
-    segments.sweep(store_path, segments.read_meta(store_path))
+    """Fold live deltas into a new id-bucketed base
+    (``segments.compact``). LSH buckets are payload and carry over
+    verbatim (they depend only on the pinned planes, never on the
+    layout)."""
+    segments.compact(SPEC, spark, store_path, n_buckets, rows_per_bucket)
 
 
 def vector_store_delete_batch(
@@ -331,39 +224,27 @@ def vector_store_delete_batch(
     id_col: str = "vec_id",
     compact_every: int = COMPACT_EVERY,
 ) -> None:
-    """Retract vectors from the ANN index (r13, r12 VERDICT task 6):
-    one atomic tombstone delta keyed by vec_id. Deleted vectors stop
-    appearing as neighbors in ``ann_topk_against_store`` (it reads the
-    tombstone-filtered store view), a later re-ingest resurrects, and
-    the next compaction physically drops dead rows + tombstones. Same
-    batch-id sequence / replay guard / crash contract as ingest."""
-    from . import tombstones
+    """Retract vectors from the ANN index: one atomic tombstone delta
+    keyed by vec_id. Deleted vectors stop appearing as neighbors in
+    ``ann_topk_against_store`` (it reads the tombstone-filtered store
+    view) and a later re-ingest resurrects."""
 
-    os.makedirs(store_path, exist_ok=True)
-    if batch_id is None:
-        batch_id = segments.next_batch_id(store_path)
-    elif segments.already_ingested(store_path, batch_id):
-        return  # replayed delete batch
-    meta = segments.read_meta(store_path)
-    n_buckets = segments.pin_n_buckets(store_path, meta, VECTOR_STORE_BUCKETS)
-    rows = (
-        ids.select(F.col(id_col).alias("vec_id"))
-        .distinct()
-        .withColumn("e", F.lit(None).cast("array<double>"))
-        .withColumn("_n", F.lit(None).cast("double"))
-        .withColumn("buckets", F.lit(None).cast("array<bigint>"))
-        .withColumn(tombstones.TOMB_COL, F.lit(True))
-        .withColumn("_ubid", F.lit(batch_id).cast("long"))
-        .withColumn(
-            "_bucket",
-            F.pmod(
-                F.xxhash64(F.col("vec_id").cast("string")), F.lit(n_buckets)
-            ).cast("int"),
+    def build(_meta: dict, n: int, bid: int) -> DataFrame:
+        return (
+            ids.select(F.col(id_col).alias("vec_id"))
+            .distinct()
+            .withColumn("e", F.lit(None).cast("array<double>"))
+            .withColumn("_n", F.lit(None).cast("double"))
+            .withColumn("buckets", F.lit(None).cast("array<bigint>"))
+            .withColumn(tombstones.TOMB_COL, F.lit(True))
+            .withColumn("_ubid", F.lit(bid).cast("long"))
+            .withColumn(SPEC.bucket_col, SPEC.bucket_expr(n))
         )
+
+    segments.ingest(
+        SPEC, store_path, batch_id, VECTOR_STORE_BUCKETS, compact_every, build,
+        vector_store_compact,
     )
-    segments.commit_delta(rows, store_path, batch_id, bucket_col="_bucket")
-    if len(segments.live_deltas(store_path)) >= compact_every:
-        vector_store_compact(ids.sparkSession, store_path, n_buckets)
 
 
 def ann_topk_against_store(
@@ -459,16 +340,13 @@ def vector_store_bootstrap(
     plane_rows = v.orderBy("vec_id").limit(n_tables * ppt).collect()
     planes = [list(r["e"]) for r in plane_rows]  # bounded: n_planes x dim
     n_buckets = segments.sized_n_buckets(n_rows)
-    rows = _with_buckets(v, planes, ppt, n_tables).withColumn(
-        "_ubid", F.lit(-1).cast("long")
-    ).withColumn(
-        "_bucket",
-        F.pmod(F.xxhash64(F.col("vec_id").cast("string")), F.lit(n_buckets)).cast(
-            "int"
-        ),
+    rows = (
+        _with_buckets(v, planes, ppt, n_tables)
+        .withColumn("_ubid", F.lit(-1).cast("long"))
+        .withColumn(SPEC.bucket_col, SPEC.bucket_expr(n_buckets))
     )
     segments.bootstrap_base(
-        rows, store_path, "_bucket", n_buckets,
+        rows, store_path, SPEC.bucket_col, n_buckets,
         extra_meta={"planes_per_table": ppt, "planes": planes},
     )
 

@@ -11,10 +11,9 @@ window incremental but its state lives inside one query's checkpoint —
 it cannot be read by other consumers, joined, or survive a topology
 change. This store is the durable half: each micro-batch folds its
 events into additive per-(day, user_id) partials — (n, total_value) —
-ingested in O(batch) as an atomic delta on streaming/segments.py's
-commit/replay/crash contract (the gram store's exact layout; counts
-are sum-mergeable, so replay and out-of-order batches cannot corrupt
-them once the per-batch-id guard admits each batch exactly once).
+ingested in O(batch) as an atomic delta under streaming/segments.py's
+additive rule (sums are order-free, so the per-batch-id replay guard
+is all idempotency needs).
 Any rolling window — P7D, P30D, the reference's 90-day extraction
 fence — is then ONE filtered aggregation over the slim store, no
 event re-scan.
@@ -38,8 +37,6 @@ union (registered query ``incremental_window_counts``).
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -77,47 +74,24 @@ def _partial_counts(
     )
 
 
-def _bucket_expr(n_buckets: int):
-    return F.pmod(
-        F.xxhash64(F.col("user_id").cast("string")), F.lit(n_buckets)
-    ).cast("int")
+SPEC = segments.StoreSpec(
+    name="window",
+    key=("day", "user_id"),
+    values=("n", "total_value"),
+    merge=segments.additive,
+    sum_types=("long", "decimal(18,2)"),
+    bucket_expr=lambda n: F.pmod(
+        F.xxhash64(F.col("user_id").cast("string")), F.lit(n)
+    ).cast("int"),
+)
 
 
 def read_window_store(spark: SparkSession, store_path: str) -> DataFrame:
     """The store's current (day, user_id, n, total_value) view: meta's
-    base plus live deltas, sum-merged. Plain scan after a compaction
+    base plus live deltas, sum-merged; (day, user) cells netted to
+    n = 0 by delete partials are hidden. Plain scan after a compaction
     with no new deltas."""
-    meta = segments.read_meta(store_path)
-    deltas = sorted(segments.live_deltas(store_path, meta).items())
-    frames = []
-    if meta["base"]:
-        frames.append(
-            spark.read.parquet(os.path.join(store_path, meta["base"])).select(
-                "day", "user_id", "n", "total_value"
-            )
-        )
-    for _bid, path in deltas:
-        frames.append(
-            spark.read.parquet(path).select("day", "user_id", "n", "total_value")
-        )
-    if not frames:
-        raise FileNotFoundError(f"empty window store at {store_path}")
-    if not deltas:
-        return frames[0]  # compacted base only: plain scan
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    # negative delete partials (window_store_delete_batch) net a fully
-    # retracted (day, user) cell to n = 0 — hide it; the base never
-    # stores such rows (compaction drops them)
-    return (
-        out.groupBy("day", "user_id")
-        .agg(
-            F.sum("n").cast("long").alias("n"),
-            F.sum("total_value").cast("decimal(18,2)").alias("total_value"),
-        )
-        .where(F.col("n") > 0)
-    )
+    return segments.read_store(SPEC, spark, store_path)
 
 
 def window_store_update_batch(
@@ -131,23 +105,17 @@ def window_store_update_batch(
     n_buckets: int = WINDOW_STORE_BUCKETS,
 ) -> None:
     """Ingest one micro-batch's per-(day, user) partial counts as an
-    atomic delta — O(batch), the existing state is NOT read. Same
-    replay / crash / compaction contract as the sibling stores; sums
-    are additive, so the per-batch-id replay guard is the only thing
-    idempotency needs."""
-    os.makedirs(store_path, exist_ok=True)
-    if batch_id is None:
-        batch_id = segments.next_batch_id(store_path)
-    elif segments.already_ingested(store_path, batch_id):
-        return  # replayed micro-batch
-    meta = segments.read_meta(store_path)
-    n_buckets = segments.pin_n_buckets(store_path, meta, n_buckets)
-    partial = _partial_counts(batch, ts_col, user_col, value_col).withColumn(
-        "_bucket", _bucket_expr(n_buckets)
+    atomic delta — O(batch), the existing state is NOT read."""
+
+    def build(_meta: dict, n: int, _bid: int) -> DataFrame:
+        return _partial_counts(batch, ts_col, user_col, value_col).withColumn(
+            SPEC.bucket_col, SPEC.bucket_expr(n)
+        )
+
+    segments.ingest(
+        SPEC, store_path, batch_id, n_buckets, compact_every, build,
+        window_store_compact,
     )
-    segments.commit_delta(partial, store_path, batch_id, bucket_col="_bucket")
-    if len(segments.live_deltas(store_path)) >= compact_every:
-        window_store_compact(batch.sparkSession, store_path, n_buckets)
 
 
 def window_store_compact(
@@ -156,88 +124,9 @@ def window_store_compact(
     n_buckets: int = WINDOW_STORE_BUCKETS,
     rows_per_bucket: int = segments.ROWS_PER_BUCKET,
 ) -> None:
-    """Fold live deltas into a fresh user-bucketed base, committed by
-    one atomic meta replace — bucket-PARTIAL like the sibling stores
-    (sum-merge only the buckets the live deltas touch, hard-link the
-    rest), with r11 adaptive growth (power-of-2 full rewrite when the
-    store outgrows ~rows_per_bucket rows per bucket)."""
-    meta = segments.read_meta(store_path)
-    segments.sweep(store_path, meta)
-    deltas = segments.live_deltas(store_path, meta)
-    if not deltas:
-        return
-    n_buckets = segments.pin_n_buckets(store_path, meta, n_buckets)
-    grown = segments.grown_n_buckets(meta, deltas, n_buckets, rows_per_bucket)
-    new_base = segments.next_base_name(meta)
-    touched = (
-        segments.touched_buckets(deltas, "_bucket")
-        if grown == n_buckets
-        and meta["base"]
-        and meta.get("base_n_buckets") == n_buckets
-        else None
-    )
-    n_buckets = grown
-    wrote = True
-    if touched == []:  # only empty deltas live: carry the base verbatim
-        merged_tmp = os.path.join(store_path, f"_tmp-merge-{new_base}")
-        os.makedirs(merged_tmp, exist_ok=True)
-        segments.assemble_partial_base(
-            store_path, meta["base"], merged_tmp, new_base, "_bucket", touched
-        )
-    elif touched is not None and len(touched) < n_buckets:
-        frames = [
-            spark.read.parquet(os.path.join(store_path, meta["base"]))
-            .where(F.col("_bucket").isin(touched))  # partition-pruned
-            .select("day", "user_id", "n", "total_value")
-        ]
-        for _bid, path in sorted(deltas.items()):
-            frames.append(
-                spark.read.parquet(path).select(
-                    "day", "user_id", "n", "total_value"
-                )
-            )
-        merged = frames[0]
-        for f in frames[1:]:
-            merged = merged.unionByName(f)
-        merged = (
-            merged.groupBy("day", "user_id")
-            .agg(
-                F.sum("n").cast("long").alias("n"),
-                F.sum("total_value").cast("decimal(18,2)").alias("total_value"),
-            )
-            # netted-out cells (all events retracted) reclaim here
-            .where(F.col("n") > 0)
-            .withColumn("_bucket", _bucket_expr(n_buckets))
-        )
-        merged_tmp = os.path.join(store_path, f"_tmp-merge-{new_base}")
-        merged.repartition("_bucket").write.partitionBy("_bucket").mode(
-            "overwrite"
-        ).parquet(merged_tmp)
-        segments.assemble_partial_base(
-            store_path, meta["base"], merged_tmp, new_base, "_bucket", touched
-        )
-    else:
-        merged = read_window_store(spark, store_path).withColumn(
-            "_bucket", _bucket_expr(n_buckets)
-        )
-        # an all-empty history commits base=None (segments.write_base)
-        wrote = segments.write_base(merged, store_path, new_base, "_bucket")
-    segments.write_meta(
-        store_path,
-        {
-            **meta,  # preserve pinned properties
-            "base": new_base if wrote else None,
-            "consumed_through": max(deltas),
-            "n_buckets": n_buckets,
-            "base_n_buckets": n_buckets,
-            "base_rows": (
-                segments.base_row_count(spark, store_path, new_base)
-                if wrote
-                else 0
-            ),
-        },
-    )
-    segments.sweep(store_path, segments.read_meta(store_path))
+    """Fold live deltas into a new user-bucketed base
+    (``segments.compact``); netted-out cells are reclaimed."""
+    segments.compact(SPEC, spark, store_path, n_buckets, rows_per_bucket)
 
 
 def window_store_delete_batch(
@@ -249,41 +138,32 @@ def window_store_delete_batch(
     value_col: str = "value",
     compact_every: int = COMPACT_EVERY,
 ) -> None:
-    """Retract EVENTS from the windowed-count memory (r14 — the
-    additive half of right-to-erasure: until now an erased user's
-    events stayed in every recency report). The store is additive, so
-    retraction is a NEGATIVE partial: one atomic delta carrying the
-    retracted events' own (day, user) partials with n and total_value
-    negated. Sums commute, so no sequencing machinery is needed — the
-    delete lands correctly wherever the merge order puts it, under the
-    same per-batch-id replay guard as ingest. A (day, user) cell whose
-    events were all retracted nets to n = 0 and vanishes from every
-    read (``read_window_store``'s ``n > 0`` rule); the next compaction
-    physically drops it. The erasure request carries the events (a
+    """Retract EVENTS from the windowed-count memory (the additive half
+    of right-to-erasure): one atomic delta carrying the retracted
+    events' own (day, user) partials with n and total_value negated. A
+    cell whose events were all retracted nets to n = 0 and vanishes
+    from every read. The erasure request carries the events (a
     full-user wipe replays that user's event rows); contract: retract
     only previously-ingested events, each at most once. total_value
     negates through the same DECIMAL(18,2) casts the ingest partial
     uses, so retraction is bit-exact against the one-shot oracle."""
-    os.makedirs(store_path, exist_ok=True)
-    if batch_id is None:
-        batch_id = segments.next_batch_id(store_path)
-    elif segments.already_ingested(store_path, batch_id):
-        return  # replayed delete batch
-    meta = segments.read_meta(store_path)
-    n_buckets = segments.pin_n_buckets(store_path, meta, WINDOW_STORE_BUCKETS)
-    partial = (
-        _partial_counts(events, ts_col, user_col, value_col)
-        .select(
-            "day",
-            "user_id",
-            (-F.col("n")).cast("long").alias("n"),
-            (-F.col("total_value")).cast("decimal(18,2)").alias("total_value"),
+
+    def build(_meta: dict, n: int, _bid: int) -> DataFrame:
+        return (
+            _partial_counts(events, ts_col, user_col, value_col)
+            .select(
+                "day",
+                "user_id",
+                (-F.col("n")).cast("long").alias("n"),
+                (-F.col("total_value")).cast("decimal(18,2)").alias("total_value"),
+            )
+            .withColumn(SPEC.bucket_col, SPEC.bucket_expr(n))
         )
-        .withColumn("_bucket", _bucket_expr(n_buckets))
+
+    segments.ingest(
+        SPEC, store_path, batch_id, WINDOW_STORE_BUCKETS, compact_every, build,
+        window_store_compact,
     )
-    segments.commit_delta(partial, store_path, batch_id, bucket_col="_bucket")
-    if len(segments.live_deltas(store_path)) >= compact_every:
-        window_store_compact(events.sparkSession, store_path, n_buckets)
 
 
 def recency_report_from_store(
@@ -344,8 +224,8 @@ def window_store_bootstrap(
         eager=True
     )
     n_buckets = segments.sized_n_buckets(partial.count())
-    rows = partial.withColumn("_bucket", _bucket_expr(n_buckets))
-    segments.bootstrap_base(rows, store_path, "_bucket", n_buckets)
+    rows = partial.withColumn(SPEC.bucket_col, SPEC.bucket_expr(n_buckets))
+    segments.bootstrap_base(rows, store_path, SPEC.bucket_col, n_buckets)
 
 
 def stream_window_store(

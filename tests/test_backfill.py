@@ -8,7 +8,6 @@ import json
 import os
 import threading
 
-from pyspark.sql import functions as F
 
 
 def _corpus(spark):
@@ -63,97 +62,6 @@ def test_concurrent_ingest_state_equals_sequential(spark, tmp_path_factory):
         assert mp[key] == ms[key], key
     # no live deltas left on either: the compaction consumed both
     assert segments.live_deltas(par) == {} and segments.live_deltas(seq) == {}
-
-
-def test_forked_fold_state_equals_sequential(spark, tmp_path_factory):
-    """Flagship condense-then-fork (r15): condense, then commit the
-    fold CONCURRENTLY with the same batch's LSH ingest — the final
-    state of BOTH stores (verdicts, metas, live-delta sets) must equal
-    the sequential fold-then-ingest harness, including across the LSH
-    compaction (compact_every=2 fires mid-tour) and the cluster
-    compaction on the last fold."""
-    from hubspot_neo4j_pipeline_spark.streaming import segments
-    from hubspot_neo4j_pipeline_spark.streaming.backfill import run_concurrently
-    from hubspot_neo4j_pipeline_spark.streaming.cluster_store import (
-        cluster_store_commit_condensed,
-        cluster_store_condense_batch,
-        cluster_store_update_batch,
-        dedup_verdicts_from_store,
-    )
-    from hubspot_neo4j_pipeline_spark.streaming.lsh_store import (
-        _doc_rows,
-        lsh_store_update_batch,
-        neardup_pairs_against_store,
-    )
-
-    docs = _corpus(spark)
-
-    def tour(base: str, forked: bool):
-        lsh = base + "/lsh"
-        clusters = base + "/clusters"
-        for k in range(3):
-            batch = docs.where(f"doc_id % 3 = {k}")
-            rows = _doc_rows(batch, "doc_id", "text").localCheckpoint(
-                eager=True
-            )
-            pairs = neardup_pairs_against_store(batch, lsh, doc_rows=rows)
-            if forked:
-                pending = cluster_store_condense_batch(
-                    pairs, clusters, batch_id=k, compact_every=3
-                )
-                run_concurrently(
-                    lambda p=pending: cluster_store_commit_condensed(p),
-                    lambda b=batch, r=rows, i=k: lsh_store_update_batch(
-                        b, lsh, batch_id=i, compact_every=2, doc_rows=r
-                    ),
-                )
-            else:
-                cluster_store_update_batch(
-                    pairs, clusters, batch_id=k, compact_every=3
-                )
-                lsh_store_update_batch(
-                    batch, lsh, batch_id=k, compact_every=2, doc_rows=rows
-                )
-        return lsh, clusters
-
-    seq_lsh, seq_cl = tour(str(tmp_path_factory.mktemp("fold_seq")), False)
-    par_lsh, par_cl = tour(str(tmp_path_factory.mktemp("fold_par")), True)
-
-    verdicts = lambda cl: sorted(  # noqa: E731
-        (r["doc_id"], r["cluster_id"], r["keep"])
-        for r in dedup_verdicts_from_store(docs, cl).collect()
-    )
-    assert verdicts(par_cl) == verdicts(seq_cl)
-    for seq_p, par_p in ((seq_lsh, par_lsh), (seq_cl, par_cl)):
-        ms, mp = segments.read_meta(seq_p), segments.read_meta(par_p)
-        for key in ("base", "consumed_through", "n_buckets"):
-            assert mp[key] == ms[key], (key, seq_p)
-        assert sorted(segments.live_deltas(par_p)) == sorted(
-            segments.live_deltas(seq_p)
-        )
-
-
-def test_condense_replay_guard_noop(spark, tmp_path_factory):
-    """A replayed batch id must no-op at the CONDENSE step (the guard
-    moved there in the r15 split) — no second delta, identical state."""
-    from hubspot_neo4j_pipeline_spark.streaming import segments
-    from hubspot_neo4j_pipeline_spark.streaming.cluster_store import (
-        cluster_store_commit_condensed,
-        cluster_store_condense_batch,
-    )
-
-    store = str(tmp_path_factory.mktemp("fold_replay")) + "/clusters"
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3)], "id_a long, id_b long"
-    )
-    cluster_store_commit_condensed(
-        cluster_store_condense_batch(pairs, store, batch_id=0)
-    )
-    before = sorted(segments.live_deltas(store))
-    pending = cluster_store_condense_batch(pairs, store, batch_id=0)
-    assert pending.noop
-    cluster_store_commit_condensed(pending)  # must be a no-op too
-    assert sorted(segments.live_deltas(store)) == before
 
 
 def test_run_concurrently_propagates_failure(spark):

@@ -171,21 +171,36 @@ def test_driver_commit_fallback_on_misestimate(
 
 
 def test_driver_commit_fallback_on_write_failure(
-    spark, tmp_path_factory, monkeypatch
+    spark, tmp_path_factory, monkeypatch, caplog
 ):
     """A failure INSIDE the guarded driver path (write or manifest
     derivation — r15, r14 ADVICE: the manifest step used to sit
     outside the guard and strand the _tmp dir) must discard the tmp
-    and fall through to the Spark write."""
+    and fall through to the Spark write, logging one WARNING with the
+    exception class; the normal driver path logs nothing."""
+    import logging
+
     import pyarrow.parquet as pq
+
+    caplog.set_level(logging.WARNING, logger="hubspot_neo4j_pipeline_spark")
+    df, bucket_col = _delta_frames(spark)["hash"]
+    ok = str(tmp_path_factory.mktemp("wok"))
+    segments.commit_delta(df, ok, 0, bucket_col=bucket_col)
+    assert os.path.exists(
+        os.path.join(ok, "deltas", "b0", "part-00000-driver.parquet")
+    )
+    assert [r for r in caplog.records if r.name == "hubspot_neo4j_pipeline_spark"] == []
 
     def boom(*a, **kw):
         raise RuntimeError("simulated pyarrow failure")
 
     monkeypatch.setattr(pq, "write_table", boom)
-    df, bucket_col = _delta_frames(spark)["hash"]
     store = str(tmp_path_factory.mktemp("wfail"))
     segments.commit_delta(df, store, 0, bucket_col=bucket_col)
+    logged = [r for r in caplog.records if r.name == "hubspot_neo4j_pipeline_spark"]
+    assert len(logged) == 1
+    assert logged[0].levelno == logging.WARNING
+    assert "RuntimeError" in logged[0].getMessage()
     d = os.path.join(store, "deltas", "b0")
     assert os.path.isdir(d)
     assert not os.path.exists(os.path.join(d, "part-00000-driver.parquet"))

@@ -633,10 +633,10 @@ def test_gram_store_crash_recovery(spark, tmp_path_factory):
     import os
 
     from hubspot_neo4j_pipeline_spark.streaming.gram_store import (
-        _read_meta,
         gram_store_compact,
         gram_store_update_batch,
     )
+    from hubspot_neo4j_pipeline_spark.streaming.segments import read_meta
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
     store = str(tmp_path_factory.mktemp("gram_store_crash")) + "/grams"
@@ -660,10 +660,10 @@ def test_gram_store_crash_recovery(spark, tmp_path_factory):
     # compaction must converge to the same exact view
     gram_store_compact(spark, store, _crash_before_commit=True)
     assert os.path.isdir(os.path.join(store, "base-0"))
-    assert _read_meta(store)["base"] is None
+    assert read_meta(store)["base"] is None
     assert _gram_counts(spark, store) == after2
     gram_store_compact(spark, store)
-    meta = _read_meta(store)
+    meta = read_meta(store)
     assert meta["base"] == "base-0" and meta["consumed_through"] == 2
     assert _gram_counts(spark, store) == after2
 
