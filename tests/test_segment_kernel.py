@@ -38,7 +38,13 @@ def _hash(spark, store):
     read = lambda: sorted(  # noqa: E731
         tuple(r) for r in m.read_hash_store(spark, store).collect()
     )
-    return read, lambda: m.hash_store_compact(spark, store)
+    survivors = _docs(spark, [i for i in range(40) if i != 3]).unionByName(
+        _docs(spark, [100], "x")
+    )
+    want = sorted(
+        tuple(r) for r in m._partial_hashes(survivors, "doc_id", "text").collect()
+    )
+    return read, lambda: m.hash_store_compact(spark, store), want
 
 
 def _lsh(spark, store):
@@ -54,7 +60,14 @@ def _lsh(spark, store):
         (r.doc_id, tuple(r.shingles), tuple(r.sig))
         for r in m.read_lsh_store(spark, store).collect()
     )
-    return read, lambda: m.lsh_store_compact(spark, store)
+    survivors = _docs(spark, [i for i in range(40) if i != 3]).unionByName(
+        _docs(spark, [100], "x")
+    )
+    want = sorted(
+        (r.doc_id, tuple(r.shingles), tuple(r.sig))
+        for r in m._doc_rows(survivors, "doc_id", "text").collect()
+    )
+    return read, lambda: m.lsh_store_compact(spark, store), want
 
 
 def _cluster(spark, store):
@@ -75,7 +88,13 @@ def _cluster(spark, store):
     read = lambda: sorted(  # noqa: E731
         tuple(r) for r in m.read_cluster_assignments(spark, store).collect()
     )
-    return read, lambda: m.cluster_store_compact(spark, store)
+    # every pair (i, i + 1) is its own component labelled i
+    want = sorted(
+        [(i, i) for i in range(0, 60, 3) if i != 3]
+        + [(i + 1, i) for i in range(0, 60, 3)]
+        + [(200, 200), (201, 200)]
+    )
+    return read, lambda: m.cluster_store_compact(spark, store), want
 
 
 def _vector(spark, store):
@@ -90,14 +109,17 @@ def _vector(spark, store):
     m.vector_store_update_batch(vecs(range(1, 41)), store, 0, compact_every=99)
     m.vector_store_compact(spark, store)
     m.vector_store_update_batch(vecs([100]), store, 1, compact_every=99)
-    m.vector_store_delete_batch(
-        spark.createDataFrame([(3,)], "vec_id long"), store, 2, compact_every=99
-    )
     read = lambda: sorted(  # noqa: E731
         (r.vec_id, tuple(r.e), r._n, tuple(r.buckets))
         for r in m.read_vector_store(spark, store).collect()
     )
-    return read, lambda: m.vector_store_compact(spark, store)
+    # bucket arrays depend on the pinned planes: the oracle is the
+    # pre-delete view without the deleted vector
+    want = [r for r in read() if r[0] != 3]
+    m.vector_store_delete_batch(
+        spark.createDataFrame([(3,)], "vec_id long"), store, 2, compact_every=99
+    )
+    return read, lambda: m.vector_store_compact(spark, store), want
 
 
 def _gram(spark, store):
@@ -110,7 +132,13 @@ def _gram(spark, store):
     read = lambda: sorted(  # noqa: E731
         tuple(r) for r in m.read_gram_store(spark, store).collect()
     )
-    return read, lambda: m.gram_store_compact(spark, store)
+    survivors = _docs(spark, [i for i in range(40) if i != 3]).unionByName(
+        _docs(spark, [100], "x")
+    )
+    want = sorted(
+        tuple(r) for r in m._partial_counts(survivors, "doc_id", "text", None).collect()
+    )
+    return read, lambda: m.gram_store_compact(spark, store), want
 
 
 def _df(spark, store):
@@ -124,7 +152,18 @@ def _df(spark, store):
         sorted(tuple(r) for r in m.read_df_store(spark, store).collect()),
         m.corpus_doc_count(spark, store).collect()[0]["n_docs"],
     )
-    return read, lambda: m.df_store_compact(spark, store)
+    survivors = _docs(spark, [i for i in range(40) if i != 3]).unionByName(
+        _docs(spark, [100], "x")
+    )
+    want = (
+        sorted(
+            tuple(r)
+            for r in m._partial_df(survivors, "doc_id", "text").collect()
+            if r.term != m.DOC_COUNT_KEY
+        ),
+        40,
+    )
+    return read, lambda: m.df_store_compact(spark, store), want
 
 
 def _window(spark, store):
@@ -143,7 +182,9 @@ def _window(spark, store):
     read = lambda: sorted(  # noqa: E731
         tuple(r) for r in m.read_window_store(spark, store).collect()
     )
-    return read, lambda: m.window_store_compact(spark, store)
+    survivors = events([i for i in range(40) if i != 3] + [100])
+    want = sorted(tuple(r) for r in m._partial_counts(survivors).collect())
+    return read, lambda: m.window_store_compact(spark, store), want
 
 
 STORES = {
@@ -169,12 +210,12 @@ def _inodes(base: str) -> dict[str, int]:
 def test_partial_compaction_under_deletes(spark, tmp_path_factory, name):
     """A second compaction on an existing base takes the bucket-partial
     path (touched < n_buckets) while a tombstone / negative partial is
-    live: the visible state is unchanged by the fold, the new base
-    carries no ``_del`` column, and every untouched bucket dir is
-    hard-linked from the old base."""
+    live: the visible state equals the surviving inputs before and
+    after the fold, the new base carries no ``_del`` column, and every
+    untouched bucket dir is hard-linked from the old base."""
     setup, bucket_col = STORES[name]
     store = str(tmp_path_factory.mktemp(f"partial_{name}")) + "/store"
-    read, compact = setup(spark, store)
+    read, compact, want = setup(spark, store)
 
     meta = segments.read_meta(store)
     old_base = os.path.join(store, meta["base"])
@@ -184,6 +225,7 @@ def test_partial_compaction_under_deletes(spark, tmp_path_factory, name):
     assert touched and len(touched) < meta["n_buckets"]
     ino0 = _inodes(old_base)
     before = read()
+    assert before == want  # the live delete is already visible
 
     compact()
 
