@@ -825,9 +825,10 @@ def hamming_near_pairs(
         # grouped path below. Hot inputs engage the refinement
         # exactly as before; the kept pair set is identical across
         # modes by the pigeonhole contract (pinned by the
-        # refined-vs-plain equality tests).
-        max_df_row = sizes.agg(F.max("_cdf").alias("m")).first()
-        if max_df_row["m"] is not None and max_df_row["m"] > hot_chunk_df:
+        # refined-vs-plain equality tests). With no_cache the probe
+        # would run the whole signature plan once more, so that mode
+        # skips it and always takes the refined path.
+        if no_cache or (sizes.agg(F.max("_cdf")).first()[0] or 0) > hot_chunk_df:
             sized = chunks.join(sizes, ["chunk_id", "chunk"])
             cold = sized.where(F.col("_cdf") <= hot_chunk_df).select(
                 id_col,

@@ -63,7 +63,6 @@ def run_pipeline(
     nodes, edges = transform_all(feeds)
 
     node_changes: dict[str, DataFrame] = {}
-    stats_rows = []
     for label, incoming in nodes.items():
         cur_path = _node_dir(store, "nodes", label)
         incoming = tracked_cache(incoming)
@@ -93,7 +92,6 @@ def run_pipeline(
             history.write.mode("append").parquet(_node_dir(store, "history", label))
         changelog.write.mode("append").parquet(_node_dir(store, "changelog", label))
         node_changes[label] = changelog
-        stats_rows.append((label,))
 
     edges = tracked_cache(edges)
     edges_path = os.path.join(store, "edges")
@@ -115,18 +113,48 @@ def run_pipeline(
     )
     edge_changelog.write.mode("append").parquet(os.path.join(store, "edge_changelog"))
 
-    # Verify stage (main.py:117-187): per-label live/deleted counts.
-    stats = None
-    for label in nodes:
-        cur = spark.read.parquet(_node_dir(store, "nodes", label))
-        s = cur.agg(
-            F.sum(F.when(F.col("is_current") & ~F.col("is_deleted"), 1).otherwise(0)).alias(
-                "live"
-            ),
-            F.sum(F.when(F.col("is_deleted"), 1).otherwise(0)).alias("deleted"),
-        ).select(F.lit(label).alias("label"), "live", "deleted")
-        stats = s if stats is None else stats.unionByName(s)
-
     return PipelineResult(
-        node_changes=node_changes, edge_changelog=edge_changelog, stats=stats
+        node_changes=node_changes,
+        edge_changelog=edge_changelog,
+        stats=_verify_stats(spark, store, list(nodes)),
     )
+
+
+_VERIFY_SCHEMA = "is_current boolean, is_deleted boolean"
+
+
+def _verify_stats(spark: SparkSession, store: str, labels: list[str]) -> DataFrame:
+    """Verify stage (main.py:117-187): per-label live/deleted counts of
+    the current tables on disk, one row per label in ``labels`` order.
+
+    One aggregate over the union of all labels: a shuffle job plus a
+    result job, where a per-label aggregate costs a schema-inference
+    job and a shuffle job per label. The explicit two-column schema
+    skips the inference. Each label's sums only see that label's rows,
+    so a label whose table is empty gets ``null`` counts, as a global
+    aggregate over that table alone would."""
+    rows = None
+    for i, label in enumerate(labels):
+        cur = spark.read.schema(_VERIFY_SCHEMA).parquet(_node_dir(store, "nodes", label))
+        cur = cur.select(F.lit(i).alias("_label"), "is_current", "is_deleted")
+        rows = cur if rows is None else rows.unionByName(cur)
+
+    def count(i: int, cond):
+        return F.sum(F.when(F.col("_label") == i, F.when(cond, 1).otherwise(0)))
+
+    live = F.col("is_current") & ~F.col("is_deleted")
+    sums = rows.agg(
+        *[count(i, live).alias(f"live{i}") for i in range(len(labels))],
+        *[count(i, F.col("is_deleted")).alias(f"deleted{i}") for i in range(len(labels))],
+    )
+    per_label = F.array(
+        *[
+            F.struct(
+                F.lit(label).alias("label"),
+                F.col(f"live{i}").alias("live"),
+                F.col(f"deleted{i}").alias("deleted"),
+            )
+            for i, label in enumerate(labels)
+        ]
+    )
+    return sums.select(F.inline(per_label))

@@ -11,6 +11,27 @@ runs and a real multi-executor cluster:
 - ``nanosAsLong`` because the synthetic events table stores
   TIMESTAMP(NANOS), which Spark's parquet reader refuses otherwise
   (sources/tpch.py converts the long back to a timestamp column).
+
+Driver JVM flags sit in ``spark.driver.defaultJavaOptions``, not
+``extraJavaOptions``. Spark puts the default options first and a
+caller's ``extraJavaOptions`` after them, so a caller adding its own
+flags (perfbench/run.py adds a tmpdir) composes with the engine's
+instead of replacing them, and a caller's later ``-XX:`` flag of the
+same name still wins.
+
+JIT compile budget, ``-XX:CICompilerCount=2`` (one C1 + one C2
+thread; HotSpot's default is 3 at 4 cores and 15 at 32). A batch run
+starts a fresh JVM and runs many small plans, so most of its CPU goes
+to compiling cold driver code (Catalyst, Janino), not to running it.
+Measured on a 4-core host, crm day-0 load (perfbench seed 5,
+local[4], CPU-s by JVM thread, tools/jvm_cpu.py): C2 37.5, C1 7.8,
+task threads 11.6, py4j planning threads 11.5 of 83.8 CPU-s in 30.4 s
+of wall. With the budget the load took 66.4 CPU-s (seeds 11/12:
+75.9 -> 63.2, 81.5 -> 69.1). One C2 thread still compiles the hottest methods
+first, so compiled executor loops keep C2 speed: a warm 400M-row
+range -> xxhash64 -> group-by took 4.3-4.5 s by default and 4.0-4.4 s
+with the budget. C1 only (``-XX:TieredStopAtLevel=1``) cut the load to
+45 CPU-s but made that hot loop take 52-58 s, so it was rejected.
 """
 
 from __future__ import annotations
@@ -96,8 +117,12 @@ def get_spark(
         # default OOMs under 32 concurrent tasks + cached frames.
         .config("spark.driver.memory", "16g")
         # JVM unified-logging warnings (gc,alloc) print to STDOUT and
-        # would corrupt single-JSON-line protocols (bench.py).
-        .config("spark.driver.extraJavaOptions", "-Xlog:disable")
+        # would corrupt single-JSON-line protocols (bench.py). The
+        # compile budget is explained in the module docstring.
+        .config(
+            "spark.driver.defaultJavaOptions",
+            "-Xlog:disable -XX:CICompilerCount=2",
+        )
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

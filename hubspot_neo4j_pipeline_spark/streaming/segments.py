@@ -32,8 +32,9 @@ Replay guard and crash contract:
     its checkpoint_dir live and die together.
 
 Lifecycle:
-  * ``ingest`` runs the replay guard, ``pin_n_buckets``, the store's
-    row builder, ``commit_delta`` and the compaction trigger (every
+  * ``ingest`` runs the replay guard, the store's row builder, one
+    meta write for the bucket count and the builder's pins,
+    ``commit_delta`` and the compaction trigger (every
     ``compact_every`` live deltas). A delete is an ingest whose builder
     emits tombstones or negated partials.
   * ``visible_frames`` / ``read_store`` merge the base and the live
@@ -524,7 +525,8 @@ def pin_value(store_path: str, meta: dict, key: str, value) -> None:
     where silently keeping the old value would corrupt semantics
     instead of just layout (r10 ADVICE: a store whose min-owner ids
     switch from long to string mid-life silently flips min() from
-    numeric to lexicographic)."""
+    numeric to lexicographic). Called from an ``ingest`` builder,
+    which writes the pinned meta once the builder returns."""
     if meta.get(key) is not None:
         if meta[key] != value:
             raise ValueError(
@@ -533,7 +535,6 @@ def pin_value(store_path: str, meta: dict, key: str, value) -> None:
             )
         return
     meta[key] = value
-    write_meta(store_path, meta)
 
 
 # Scale-adaptive bucketing (r11, r10 VERDICT task 5). A store's bucket
@@ -901,8 +902,15 @@ def ingest(
     elif already_ingested(store_path, batch_id):
         return  # replayed batch
     meta = read_meta(store_path)
-    n_buckets = pin_n_buckets(store_path, meta, n_buckets)
+    on_disk = dict(meta)
+    meta["n_buckets"] = n_buckets = meta.get("n_buckets") or n_buckets
     delta = build(meta, n_buckets, batch_id)
+    if meta != on_disk:
+        # the bucket count and the builder's pins in ONE write: two
+        # concurrent first ingests then write identical dicts, where a
+        # write per pin let one writer's later pin land between the
+        # other's write and its read-back (write_meta)
+        write_meta(store_path, meta)
     commit_delta(
         delta, store_path, batch_id, bucket_col=spec.bucket_col,
         est_bytes=est_bytes,

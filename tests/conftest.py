@@ -230,3 +230,18 @@ def make_crm_feeds(spark):
 @pytest.fixture(scope="session")
 def crm_feeds(spark):
     return make_crm_feeds(spark)
+
+
+def count_jobs(spark, fn):
+    """Run ``fn()`` under a fresh job group; return (result, Spark jobs
+    it started), counted through the status tracker."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count_jobs")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

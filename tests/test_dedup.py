@@ -14,6 +14,8 @@ from hubspot_neo4j_pipeline_spark.operators.dedup import (
     simhash,
     simhash_near_pairs,
 )
+from hubspot_neo4j_pipeline_spark.operators.caching import release_caches
+from tests.conftest import count_jobs
 
 BASE = "the quick brown fox jumps over the lazy dog again and again until dawn breaks over the hill"
 NEAR = BASE + " tonight"  # one appended word → shingle Jaccard ≈ 0.93
@@ -167,6 +169,31 @@ def test_simhash_refined_equals_unrefined(spark, sf_dir):
             ).collect()
         }
         assert refined == base, f"refined(cap={cap}) diverged"
+
+
+def test_simhash_no_cache_skips_max_df_probe(spark, sf_dir):
+    """With no_cache=True the hot-chunk gate's max-df probe would run
+    the whole uncached signature plan once more just to pick a path, so
+    that mode skips it and always refines: building the frame runs no
+    job, and the pairs equal the probed (cached) mode's."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        "doc_id", "text"
+    )
+
+    def pairs(no_cache):
+        df, build_jobs = count_jobs(
+            spark,
+            lambda: simhash_near_pairs(
+                docs, "doc_id", "text", hot_chunk_df=10**6, no_cache=no_cache
+            ),
+        )
+        return {(r.id_a, r.id_b, r.hamming) for r in df.collect()}, build_jobs
+
+    probed, probed_jobs = pairs(no_cache=False)
+    release_caches()
+    refined, refined_jobs = pairs(no_cache=True)
+    assert probed_jobs > 0 and refined_jobs == 0
+    assert refined == probed and probed
 
 
 def test_duplicated_spans_hand_computed(spark):

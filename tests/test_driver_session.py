@@ -9,6 +9,7 @@ results still match DuckDB exactly."""
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
@@ -103,3 +104,40 @@ def test_get_spark_detects_config_drift():
         [sys.executable, "-c", DRIFT_SCRIPT], capture_output=True, text=True, timeout=300
     )
     assert "DRIFT_GUARDED" in res.stdout, f"stdout:\n{res.stdout}\nstderr:\n{res.stderr[-2000:]}"
+
+
+JVM_OPTIONS_SCRIPT = r"""
+import sys
+sys.path.insert(0, sys.argv[1])
+from hubspot_neo4j_pipeline_spark.session import get_spark
+
+spark = get_spark(cpus=2, extra_conf={"spark.driver.extraJavaOptions": "-Dhnps.probe=1"})
+jvm = spark.sparkContext._jvm
+mgmt = jvm.java.lang.management.ManagementFactory
+hotspot = mgmt.getPlatformMXBean(
+    jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+)
+print("CICompilerCount=" + hotspot.getVMOption("CICompilerCount").getValue())
+print("hnps.probe=" + str(jvm.java.lang.System.getProperty("hnps.probe")))
+print("args=" + " ".join(mgmt.getRuntimeMXBean().getInputArguments()))
+"""
+
+
+def test_engine_jvm_options_compose_with_caller_options():
+    """The engine's driver JVM flags (compile budget, -Xlog:disable)
+    sit in spark.driver.defaultJavaOptions, so a caller's own
+    spark.driver.extraJavaOptions adds to them instead of replacing
+    them."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    res = subprocess.run(
+        [sys.executable, "-c", JVM_OPTIONS_SCRIPT, repo],
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    out = dict(
+        line.split("=", 1) for line in res.stdout.splitlines() if "=" in line
+    )
+    assert out.get("CICompilerCount") == "2", f"stdout:\n{res.stdout}\nstderr:\n{res.stderr[-2000:]}"
+    assert out["hnps.probe"] == "1"
+    assert "-Xlog:disable" in out["args"].split()

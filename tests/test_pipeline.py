@@ -19,7 +19,7 @@ from hubspot_neo4j_pipeline_spark.plans.temporal_reporting import (
     get_relationship_change_statistics,
     get_temporal_statistics,
 )
-from tests.conftest import make_crm_feeds
+from tests.conftest import count_jobs, make_crm_feeds
 
 
 def _modified_feeds(spark):
@@ -102,6 +102,41 @@ def test_modified_run_detects_changes(spark, store):
     }
     assert e_log[("OWNED_BY", "c1", "u2")] == "added"
     assert e_log[("OWNED_BY", "c1", "u1")] == "removed"
+
+
+@pytest.fixture(scope="module")
+def empty_label_run(spark, tmp_path_factory):
+    """Day-0 load of a feed whose engagements are empty, so the
+    HUBSPOT_Activity table is written with no rows. Returns the result,
+    its collected stats and the Spark jobs of that first collect (a
+    second collect would reuse the finished shuffle stages)."""
+    feeds = make_crm_feeds(spark)
+    feeds["engagements"] = feeds["engagements"].limit(0)
+    store = str(tmp_path_factory.mktemp("empty_label_store"))
+    res = run_pipeline(spark, feeds, store, now="2024-03-01 00:00:00")
+    rows, jobs = count_jobs(spark, res.stats.collect)
+    return res, rows, jobs
+
+
+def test_verify_stats_keep_empty_label(empty_label_run):
+    """Verify stats: one row per node label in load order; a label
+    whose table is empty still gets its row, with null counts."""
+    res, rows, _ = empty_label_run
+    assert [r["label"] for r in rows] == list(res.node_changes)
+    got = {r["label"]: (r["live"], r["deleted"]) for r in rows}
+    assert got["HUBSPOT_Activity"] == (None, None)
+    assert got["HUBSPOT_Contact"] == (2, 0)
+    assert got["HUBSPOT_Deal"] == (2, 0)
+    assert res.stats.schema.simpleString() == (
+        "struct<label:string,live:bigint,deleted:bigint>"
+    )
+
+
+def test_verify_stats_run_in_two_jobs(empty_label_run):
+    """All labels' counts come from one aggregate: a shuffle job plus
+    a result job, not a schema-inference and a shuffle job per label."""
+    _, _, jobs = empty_label_run
+    assert jobs <= 2
 
 
 def test_temporal_queries_over_store(spark, store):

@@ -259,3 +259,28 @@ def test_write_meta_failure_leaves_no_tmp(tmp_path_factory):
     with open(os.path.join(store, segments.META)) as fh:
         assert json.load(fh) == good
     assert not [n for n in os.listdir(store) if n.startswith("meta.json.tmp-")]
+
+
+def test_first_ingest_pins_meta_in_one_write(spark, tmp_path, monkeypatch):
+    """Concurrent first ingests into one store (streaming/backfill.py)
+    must write identical meta dicts. With a write per pin, one writer's
+    gram_k write could land between the other's bucket-count write and
+    its read-back; the bucket count and the builder's pins now go in
+    one write, and a later ingest with the same pins writes nothing."""
+    from hubspot_neo4j_pipeline_spark.streaming import gram_store as m
+
+    written = []
+    real = segments.write_meta
+
+    def record(path, meta):
+        written.append(dict(meta))
+        real(path, meta)
+
+    monkeypatch.setattr(segments, "write_meta", record)
+    store = str(tmp_path / "grams")
+    m.gram_store_update_batch(_docs(spark, range(4)), store, 0, k=8, compact_every=99)
+    assert written == [
+        {"base": None, "consumed_through": -1, "n_buckets": m.GRAM_STORE_BUCKETS, "gram_k": 8}
+    ]
+    m.gram_store_update_batch(_docs(spark, range(4, 8)), store, 1, k=8, compact_every=99)
+    assert len(written) == 1

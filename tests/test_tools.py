@@ -219,3 +219,72 @@ def test_store_stats_shapes(spark, tmp_path_factory):
     assert st["live_delta_ids"] == []
     assert st["next_compaction_bucket_fraction"] == 0.0
     assert st["pending_bucket_growth"] is False
+
+
+def test_jvm_cpu_thread_classes():
+    from jvm_cpu import thread_class
+
+    assert thread_class("C2 CompilerThre") == "c2"
+    assert thread_class("C1 CompilerThre") == "c1"
+    assert thread_class("Executor task l") == "tasks"
+    assert thread_class("Thread-7") == "planning"
+    assert thread_class("GC Thread#3") == "gc"
+    assert thread_class("G1 Conc#0") == "gc"
+    assert thread_class("VM Thread") == "other"
+    assert thread_class("python3") == "other"
+
+
+def test_jvm_cpu_snapshot_of_own_process():
+    """One snapshot of this process lists every live thread; over a
+    region the per-class seconds add up to the process total."""
+    import threading
+    import time
+
+    from jvm_cpu import by_class, jvm_cpu, snapshot, thread_class
+
+    pid = os.getpid()
+    snap = snapshot(pid)
+    tid = threading.get_native_id()
+    assert tid in snap["threads"] and snap["total"] > 0
+    with open(f"/proc/{pid}/task/{tid}/comm") as fh:
+        cls = thread_class(fh.read().rstrip("\n"))
+
+    with jvm_cpu(pid) as region:
+        end = time.thread_time() + 0.3
+        while time.thread_time() < end:
+            pass
+    sec = region.seconds
+    assert sec[cls] > 0.2
+    assert abs(sum(v for k, v in sec.items() if k != "total") - sec["total"]) < 0.05
+    assert by_class(snapshot(pid))["total"] >= sec["total"]
+
+
+def test_jvm_cpu_counts_threads_that_end_inside_the_region(monkeypatch):
+    """A thread that starts and ends inside the region (HotSpot's
+    dynamic compiler threads) is counted in its class from its last
+    sample, not lumped into ``exited``."""
+    import time
+
+    import jvm_cpu
+
+    snaps = {
+        "before": {"threads": {1: ("other", 1.0)}, "total": 1.0},
+        "during": {"threads": {1: ("other", 1.5), 2: ("c2", 3.0)}, "total": 4.5},
+        "after": {"threads": {1: ("other", 2.0)}, "total": 5.2},
+    }
+    phase, calls = ["before"], [0]
+
+    def fake_snapshot(_pid):
+        snap = snaps[phase[0]]
+        phase[0] = "after" if phase[0] == "after" else "during"
+        calls[0] += 1
+        return snap
+
+    monkeypatch.setattr(jvm_cpu, "snapshot", fake_snapshot)
+    with jvm_cpu.jvm_cpu(0) as region:
+        deadline = time.monotonic() + 30
+        while calls[0] < 2 and time.monotonic() < deadline:
+            time.sleep(0.05)  # until the sampler has read "during"
+        phase[0] = "after"
+    sec = region.seconds
+    assert (sec["c2"], sec["other"], sec["exited"], sec["total"]) == (3.0, 1.0, 0.2, 4.2)
