@@ -59,6 +59,38 @@ def with_temporal_fields(df: DataFrame, now: str) -> DataFrame:
     )
 
 
+def per_label_counts(tables: dict[str, DataFrame], **conds: Column) -> DataFrame:
+    """Rows ``(label, *conds)`` in ``tables`` order: per table, how many
+    of its rows satisfy each condition.
+
+    One aggregate over the union of all tables: a shuffle job plus a
+    result job, where an aggregate per table costs a job (or two) per
+    table. Each table's sums only see that table's rows, so an empty
+    table gets ``null`` counts, as a global aggregate over that table
+    alone would."""
+    rows = None
+    for i, df in enumerate(tables.values()):
+        part = df.select(F.lit(i).alias("_label"), *[c.alias(n) for n, c in conds.items()])
+        rows = part if rows is None else rows.unionByName(part)
+
+    def count(i: int, name: str) -> Column:
+        return F.sum(
+            F.when(F.col("_label") == i, F.when(F.col(name), 1).otherwise(0))
+        ).alias(f"_{i}_{name}")
+
+    sums = rows.agg(*[count(i, name) for i in range(len(tables)) for name in conds])
+    per_label = F.array(
+        *[
+            F.struct(
+                F.lit(label).alias("label"),
+                *[F.col(f"_{i}_{name}").alias(name) for name in conds],
+            )
+            for i, label in enumerate(tables)
+        ]
+    )
+    return sums.select(F.inline(per_label))
+
+
 def classify_changes(current: DataFrame, incoming: DataFrame, key: str) -> DataFrame:
     """T2/J4: full-outer compare → (key, change_type, new_hash, old_hash).
 

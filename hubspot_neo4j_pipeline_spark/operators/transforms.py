@@ -8,11 +8,27 @@ table:
 
     rel_type, from_type, from_id, to_type, to_id, from_email, properties
 
-``from_email`` is populated only for email-matched edges (PERFORMED);
-``resolve_email_edges`` turns those into id-keyed edges via a broadcast
-join on the contact dimension — the Spark restatement of the in-memory
-dict probe at graph_transformer.py:501-506 and the Cypher email MATCH
-at loaders/temporal_loader.py:388-394.
+One scan per feed. The reference emits all of a record's relationships
+while it visits that record (graph_transformer.py:131-138); here each
+feed's edges come from ONE projection over that feed: every edge rule
+is an array of edge structs (``_edge``) -- a property-gated edge is
+``when(cond, struct)`` (``_if``), an association fan-out is
+``transform(associations.x, ...)`` (``_each``) -- and ``_edges_of``
+concatenates them, drops the gated-out nulls and ``inline``s the rest.
+The email events' PERFORMED, FOR_CAMPAIGN and CLICKED_URL edges come
+from one pass over the filtered events. A rule per ``select`` +
+``unionByName`` instead re-reads and re-parses the feed once per
+relationship type: 20 JSON scans and 18 union branches for the 7 feeds,
+each its own codegen stage and task.
+
+``from_email`` is set only on email-matched edges (PERFORMED, and
+SUBMITTED_BY before resolution): the email of the edge's contact end,
+whose id is left null. ``resolve_email_edges`` fills those ids with ONE
+broadcast left join of the whole edge union on the contact dimension
+and drops the email edges that match no contact -- the Spark
+restatement of the in-memory dict probe at graph_transformer.py:501-506
+and the Cypher email MATCH at loaders/temporal_loader.py:388-394.
+Id-keyed edges pass through the join unmatched and unchanged.
 
 Reference null conventions preserved exactly: missing string → '',
 unparseable numeric → 0/0.0, bool from 'true' string compare.
@@ -59,20 +75,30 @@ def _p_raw(name: str) -> Column:
     return F.col("properties").getItem(name)
 
 
+def _present(c: Column) -> Column:
+    return c.isNotNull() & (c != "")
+
+
 def _edge(
     rel_type: str,
-    from_type: str,
+    from_type: str | Column,
     from_id: Column,
-    to_type: str,
+    to_type: str | Column,
     to_id: Column,
     from_email: Column | None = None,
     properties: Column | None = None,
-) -> list[Column]:
-    return [
+) -> Column:
+    """One edge as a struct with the EDGE_COLUMNS fields; node types are
+    literals or, for one pass over several node kinds, columns."""
+
+    def node_type(t: str | Column) -> Column:
+        return F.lit(t) if isinstance(t, str) else t
+
+    return F.struct(
         F.lit(rel_type).alias("rel_type"),
-        F.lit(from_type).alias("from_type"),
+        node_type(from_type).alias("from_type"),
         from_id.cast("string").alias("from_id"),
-        F.lit(to_type).alias("to_type"),
+        node_type(to_type).alias("to_type"),
         to_id.cast("string").alias("to_id"),
         (from_email if from_email is not None else F.lit(None).cast("string")).alias(
             "from_email"
@@ -82,7 +108,25 @@ def _edge(
             if properties is not None
             else F.lit(None).cast("map<string,string>")
         ).alias("properties"),
-    ]
+    )
+
+
+def _if(cond: Column, edge: Column) -> Column:
+    """A property-gated edge: a one-element array whose element is null
+    when ``cond`` does not hold."""
+    return F.array(F.when(cond, edge))
+
+
+def _each(assoc: str, edge) -> Column:
+    """One edge per element of the association array ``assoc`` (built by
+    ``edge(element)``); none when the array is null."""
+    return F.coalesce(F.transform(assoc, edge), F.array())
+
+
+def _edges_of(df: DataFrame, *rules: Column) -> DataFrame:
+    """All edges of a feed in one projection: the rules' edge arrays
+    concatenated, gated-out nulls dropped, one row per edge."""
+    return df.select(F.inline(F.array_compact(F.concat(*rules))))
 
 
 def empty_edges(spark) -> DataFrame:
@@ -158,63 +202,42 @@ def transform_contacts(contacts: DataFrame) -> tuple[DataFrame, DataFrame]:
         property_hash(*[F.col(c) for c in node.columns if c != "last_modified"]),
     )
 
-    owned_by = contacts.where(
-        _p_raw("hubspot_owner_id").isNotNull() & (_p_raw("hubspot_owner_id") != "")
-    ).select(
-        *_edge(
-            "OWNED_BY",
-            "HUBSPOT_Contact",
-            F.col("id"),
-            "HUBSPOT_User",
-            _p_raw("hubspot_owner_id"),
-        )
-    )
-    works_at = contacts.where(
-        _p_raw("associatedcompanyid").isNotNull() & (_p_raw("associatedcompanyid") != "")
-    ).select(
-        *_edge(
-            "WORKS_AT",
-            "HUBSPOT_Contact",
-            F.col("id"),
-            "HUBSPOT_Company",
-            _p_raw("associatedcompanyid"),
-        )
-    )
-    assoc_deals = (
-        contacts.where(F.col("associations.deals").isNotNull())
-        .select("id", F.explode("associations.deals").alias("deal"))
-        .select(
-            *_edge(
-                "ASSOCIATED_WITH",
+    cid = F.col("id")
+    owner = _p_raw("hubspot_owner_id")
+    company = _p_raw("associatedcompanyid")
+    last_url = _p_raw("hs_analytics_last_url")
+    edges = _edges_of(
+        contacts,
+        _if(_present(owner), _edge("OWNED_BY", "HUBSPOT_Contact", cid, "HUBSPOT_User", owner)),
+        _if(
+            _present(company),
+            _edge("WORKS_AT", "HUBSPOT_Contact", cid, "HUBSPOT_Company", company),
+        ),
+        _each(
+            "associations.deals",
+            lambda d: _edge("ASSOCIATED_WITH", "HUBSPOT_Contact", cid, "HUBSPOT_Deal", d["id"]),
+        ),
+        _if(
+            _present(last_url),
+            _edge(
+                "VISITED",
                 "HUBSPOT_Contact",
-                F.col("id"),
-                "HUBSPOT_Deal",
-                F.col("deal.id"),
-            )
-        )
-    )
-    visited = contacts.where(
-        _p_raw("hs_analytics_last_url").isNotNull()
-        & (_p_raw("hs_analytics_last_url") != "")
-    ).select(
-        *_edge(
-            "VISITED",
-            "HUBSPOT_Contact",
-            F.col("id"),
-            "HUBSPOT_WebPage",
-            _p_raw("hs_analytics_last_url"),
-            properties=F.map_from_arrays(
-                F.array(F.lit("timestamp"), F.lit("source")),
-                F.array(
-                    parse_date_lenient(
-                        _p_raw("hs_analytics_last_visit_timestamp")
-                    ).cast("string"),
-                    F.coalesce(_p_raw("hs_analytics_source"), F.lit("direct")),
+                cid,
+                "HUBSPOT_WebPage",
+                last_url,
+                properties=F.map_from_arrays(
+                    F.array(F.lit("timestamp"), F.lit("source")),
+                    F.array(
+                        parse_date_lenient(
+                            _p_raw("hs_analytics_last_visit_timestamp")
+                        ).cast("string"),
+                        F.coalesce(_p_raw("hs_analytics_source"), F.lit("direct")),
+                    ),
                 ),
             ),
-        )
+        ),
     )
-    return node, union_edges(owned_by, works_at, assoc_deals, visited)
+    return node, edges
 
 
 # -- P2: companies (graph_transformer.py:182-222) ---------------------------
@@ -240,18 +263,15 @@ def transform_companies(companies: DataFrame) -> tuple[DataFrame, DataFrame]:
         "snapshot_hash",
         property_hash(*[F.col(c) for c in node.columns if c != "last_modified"]),
     )
-    owned_by = companies.where(
-        _p_raw("hubspot_owner_id").isNotNull() & (_p_raw("hubspot_owner_id") != "")
-    ).select(
-        *_edge(
-            "OWNED_BY",
-            "HUBSPOT_Company",
-            F.col("id"),
-            "HUBSPOT_User",
-            _p_raw("hubspot_owner_id"),
-        )
+    owner = _p_raw("hubspot_owner_id")
+    edges = _edges_of(
+        companies,
+        _if(
+            _present(owner),
+            _edge("OWNED_BY", "HUBSPOT_Company", F.col("id"), "HUBSPOT_User", owner),
+        ),
     )
-    return node, owned_by
+    return node, edges
 
 
 # -- P3: deals + 3 edge types (graph_transformer.py:224-286) ----------------
@@ -277,44 +297,21 @@ def transform_deals(deals: DataFrame) -> tuple[DataFrame, DataFrame]:
         "snapshot_hash",
         property_hash(*[F.col(c) for c in node.columns if c != "last_modified"]),
     )
-    owned_by = deals.where(
-        _p_raw("hubspot_owner_id").isNotNull() & (_p_raw("hubspot_owner_id") != "")
-    ).select(
-        *_edge(
-            "OWNED_BY",
-            "HUBSPOT_Deal",
-            F.col("id"),
-            "HUBSPOT_User",
-            _p_raw("hubspot_owner_id"),
-        )
+    did = F.col("id")
+    owner = _p_raw("hubspot_owner_id")
+    edges = _edges_of(
+        deals,
+        _if(_present(owner), _edge("OWNED_BY", "HUBSPOT_Deal", did, "HUBSPOT_User", owner)),
+        _each(
+            "associations.companies",
+            lambda c: _edge("BELONGS_TO", "HUBSPOT_Deal", did, "HUBSPOT_Company", c["id"]),
+        ),
+        _each(
+            "associations.contacts",
+            lambda c: _edge("ASSOCIATED_WITH", "HUBSPOT_Contact", c["id"], "HUBSPOT_Deal", did),
+        ),
     )
-    belongs_to = (
-        deals.where(F.col("associations.companies").isNotNull())
-        .select("id", F.explode("associations.companies").alias("c"))
-        .select(
-            *_edge(
-                "BELONGS_TO",
-                "HUBSPOT_Deal",
-                F.col("id"),
-                "HUBSPOT_Company",
-                F.col("c.id"),
-            )
-        )
-    )
-    assoc_contacts = (
-        deals.where(F.col("associations.contacts").isNotNull())
-        .select("id", F.explode("associations.contacts").alias("c"))
-        .select(
-            *_edge(
-                "ASSOCIATED_WITH",
-                "HUBSPOT_Contact",
-                F.col("c.id"),
-                "HUBSPOT_Deal",
-                F.col("id"),
-            )
-        )
-    )
-    return node, union_edges(owned_by, belongs_to, assoc_contacts)
+    return node, edges
 
 
 # -- P5: engagements, type-dispatched (graph_transformer.py:288-368) --------
@@ -362,19 +359,17 @@ def transform_engagements(engagements: DataFrame) -> tuple[DataFrame, DataFrame]
         "snapshot_hash", property_hash(*[F.col(c) for c in node.columns])
     )
 
-    def _assoc_edges(field: str, rel: str, to_type: str) -> DataFrame:
-        return (
-            engagements.where(F.col(f"associations.{field}").isNotNull())
-            .select("id", F.explode(f"associations.{field}").alias("a"))
-            .select(
-                *_edge(rel, "HUBSPOT_Activity", F.col("id"), to_type, F.col("a.id"))
-            )
+    def assoc(field: str, rel: str, to_type: str) -> Column:
+        return _each(
+            f"associations.{field}",
+            lambda a: _edge(rel, "HUBSPOT_Activity", F.col("id"), to_type, a["id"]),
         )
 
-    edges = union_edges(
-        _assoc_edges("contacts", "INVOLVES", "HUBSPOT_Contact"),
-        _assoc_edges("companies", "INVOLVES", "HUBSPOT_Company"),
-        _assoc_edges("deals", "RELATED_TO", "HUBSPOT_Deal"),
+    edges = _edges_of(
+        engagements,
+        assoc("contacts", "INVOLVES", "HUBSPOT_Contact"),
+        assoc("companies", "INVOLVES", "HUBSPOT_Company"),
+        assoc("deals", "RELATED_TO", "HUBSPOT_Deal"),
     )
     return node, edges
 
@@ -402,21 +397,22 @@ def transform_email_events(
             F.coalesce(F.col("emailCampaignId"), F.lit("unknown")), F.col("url"),
         ),
     )
+    event_id = F.col("event_gen_id")
+    campaign_id = F.coalesce(F.col("emailCampaignId").cast("string"), F.lit("unknown"))
+    recipient_email = clean_email("recipient")
+    url = F.coalesce("url", F.lit(""))
     common = [
-        F.col("event_gen_id").alias("hubspot_id"),
+        event_id.alias("hubspot_id"),
         parse_date_lenient("created").alias("timestamp"),
-        F.coalesce(F.col("emailCampaignId").cast("string"), F.lit("unknown")).alias(
-            "campaign_id"
-        ),
-        clean_email("recipient").alias("recipient_email"),
+        campaign_id.alias("campaign_id"),
+        recipient_email.alias("recipient_email"),
         F.coalesce("deviceType", F.lit("")).alias("device_type"),
         F.coalesce(F.col("location.city"), F.lit("")).alias("location"),
         F.coalesce("userAgent", F.lit("")).alias("browser"),
     ]
-    opens = kept.where(etype == "OPEN").select(*common)
-    clicks = kept.where(etype == "CLICK").select(
-        *common, F.coalesce("url", F.lit("")).alias("clicked_url")
-    )
+    is_open = etype == "OPEN"
+    opens = kept.where(is_open).select(*common)
+    clicks = kept.where(etype == "CLICK").select(*common, url.alias("clicked_url"))
 
     campaigns = (
         events.where(
@@ -436,41 +432,27 @@ def transform_email_events(
         )
     )
 
-    def _event_edges(df: DataFrame, node_type: str) -> DataFrame:
-        performed = df.select(
-            *_edge(
+    # kept holds only OPEN and CLICK events
+    event_type = F.when(is_open, F.lit("HUBSPOT_EmailOpenEvent")).otherwise(
+        F.lit("HUBSPOT_EmailClickEvent")
+    )
+    edges = _edges_of(
+        kept,
+        F.array(
+            _edge(
                 "PERFORMED",
                 "HUBSPOT_Contact",
-                F.lit(None).cast("string"),
-                node_type,
-                F.col("hubspot_id"),
-                from_email=F.col("recipient_email"),
-            )
-        )
-        for_campaign = df.select(
-            *_edge(
-                "FOR_CAMPAIGN",
-                node_type,
-                F.col("hubspot_id"),
-                "HUBSPOT_EmailCampaign",
-                F.col("campaign_id"),
-            )
-        )
-        return performed.unionByName(for_campaign)
-
-    clicked_url = clicks.where(F.col("clicked_url") != "").select(
-        *_edge(
-            "CLICKED_URL",
-            "HUBSPOT_EmailClickEvent",
-            F.col("hubspot_id"),
-            "HUBSPOT_WebPage",
-            F.col("clicked_url"),
-        )
-    )
-    edges = union_edges(
-        _event_edges(opens, "HUBSPOT_EmailOpenEvent"),
-        _event_edges(clicks, "HUBSPOT_EmailClickEvent"),
-        clicked_url,
+                F.lit(None),
+                event_type,
+                event_id,
+                from_email=recipient_email,
+            ),
+            _edge("FOR_CAMPAIGN", event_type, event_id, "HUBSPOT_EmailCampaign", campaign_id),
+        ),
+        _if(
+            ~is_open & (url != ""),
+            _edge("CLICKED_URL", "HUBSPOT_EmailClickEvent", event_id, "HUBSPOT_WebPage", url),
+        ),
     )
     return opens, clicks, campaigns, edges
 
@@ -495,12 +477,9 @@ def derive_webpages(*url_cols: DataFrame) -> DataFrame:
 # -- P8: form submissions (graph_transformer.py:495-577) --------------------
 
 
-def transform_form_submissions(
-    submissions: DataFrame, contacts_node: DataFrame
-) -> tuple[DataFrame, DataFrame]:
-    """Form-submission nodes + SUBMITTED_BY (email-resolved via
-    broadcast join — the reference's in-memory dict probe, J1) and
-    ON_PAGE edges."""
+def _form_submissions(submissions: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Form-submission nodes + ON_PAGE edges and SUBMITTED_BY edges still
+    keyed by the submitter's email (contact id null)."""
     subs = submissions.withColumn(
         "email", F.coalesce(extract_email_from_values("values"), F.lit(""))
     ).withColumn(
@@ -520,35 +499,36 @@ def transform_form_submissions(
         F.coalesce("ip_address", F.lit("")).alias("ip_address"),
         "email",
     )
-    contact_emails = contacts_node.where(F.col("email") != "").select(
-        F.col("email").alias("contact_email"),
-        F.col("hubspot_id").alias("contact_id"),
-    )
-    submitted_by = (
-        subs.where(F.col("email") != "")
-        .join(F.broadcast(contact_emails), subs.email == contact_emails.contact_email)
-        .select(
-            *_edge(
+    sub_id, email, page_url = F.col("sub_id"), F.col("email"), F.col("page_url")
+    edges = _edges_of(
+        subs,
+        _if(
+            email != "",
+            _edge(
                 "SUBMITTED_BY",
                 "HUBSPOT_FormSubmission",
-                F.col("sub_id"),
+                sub_id,
                 "HUBSPOT_Contact",
-                F.col("contact_id"),
-            )
-        )
+                F.lit(None),
+                from_email=email,
+            ),
+        ),
+        _if(
+            _present(page_url),
+            _edge("ON_PAGE", "HUBSPOT_FormSubmission", sub_id, "HUBSPOT_WebPage", page_url),
+        ),
     )
-    on_page = subs.where(
-        F.col("page_url").isNotNull() & (F.col("page_url") != "")
-    ).select(
-        *_edge(
-            "ON_PAGE",
-            "HUBSPOT_FormSubmission",
-            F.col("sub_id"),
-            "HUBSPOT_WebPage",
-            F.col("page_url"),
-        )
-    )
-    return node, submitted_by.unionByName(on_page)
+    return node, edges
+
+
+def transform_form_submissions(
+    submissions: DataFrame, contacts_node: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """Form-submission nodes + SUBMITTED_BY (email-resolved via
+    broadcast join — the reference's in-memory dict probe, J1) and
+    ON_PAGE edges."""
+    node, edges = _form_submissions(submissions)
+    return node, resolve_email_edges(edges, contacts_node)
 
 
 # -- J1/J2: email-matched edge resolution -----------------------------------
@@ -557,38 +537,42 @@ def transform_form_submissions(
 def resolve_email_edges(
     edges: DataFrame, contacts_node: DataFrame, observation=None
 ) -> DataFrame:
-    """Resolve from_email-keyed edges to contact ids via broadcast
-    equi-join; unmatched email edges drop (reference: MATCH fails →
-    no edge). Id-keyed edges pass through untouched.
+    """Resolve from_email-keyed edges to contact ids via one broadcast
+    left join of all ``edges``: a matched edge gets the contact id on
+    its null end, an unmatched email edge drops (reference: MATCH fails
+    → no edge). Id-keyed edges (null from_email) match nothing and
+    pass through untouched.
 
     Pass a ``pyspark.sql.Observation`` to collect matched/unmatched
-    counters in the same job (A11 — the Spark-native form of the
-    reference's in-transform counters, graph_transformer.py:508-509).
+    counters over the email-keyed rows in the same job (A11 — the
+    Spark-native form of the reference's in-transform counters,
+    graph_transformer.py:508-509).
     """
-    by_id = edges.where(F.col("from_email").isNull())
-    by_email = edges.where(F.col("from_email").isNotNull())
     contact_emails = contacts_node.where(F.col("email") != "").select(
         F.col("email").alias("_ce"), F.col("hubspot_id").alias("_cid")
     )
-    joined = by_email.join(
-        F.broadcast(contact_emails), by_email.from_email == F.col("_ce"), "left"
+    joined = edges.join(
+        F.broadcast(contact_emails), edges.from_email == F.col("_ce"), "left"
     )
+    by_email = F.col("from_email").isNotNull()
+    matched = F.col("_cid").isNotNull()
     if observation is not None:
         joined = joined.observe(
             observation,
-            F.count(F.lit(1)).alias("email_edges_total"),
-            F.sum(F.when(F.col("_cid").isNotNull(), 1).otherwise(0)).alias(
+            F.count(F.when(by_email, 1)).alias("email_edges_total"),
+            F.sum(F.when(by_email, F.when(matched, 1).otherwise(0))).alias(
                 "email_edges_matched"
             ),
         )
-    resolved = (
-        joined.where(F.col("_cid").isNotNull())
-        .withColumn("from_id", F.col("_cid"))
-        .withColumn("from_email", F.lit(None).cast("string"))  # resolved → id-keyed
-        .drop("_ce", "_cid")
-        .select(*EDGE_COLUMNS)
+    return joined.where(~by_email | matched).select(
+        "rel_type",
+        "from_type",
+        F.coalesce("from_id", "_cid").alias("from_id"),
+        "to_type",
+        F.coalesce("to_id", "_cid").alias("to_id"),
+        F.lit(None).cast("string").alias("from_email"),  # resolved → id-keyed
+        "properties",
     )
-    return by_id.select(*EDGE_COLUMNS).unionByName(resolved)
 
 
 # -- Full pipeline ----------------------------------------------------------
@@ -597,14 +581,15 @@ def resolve_email_edges(
 def transform_all(feeds: dict[str, DataFrame]) -> tuple[dict[str, DataFrame], DataFrame]:
     """Whole bronze→silver stage (graph_transformer.py:32-62) as one
     declarative plan: 11 node tables + unified edge table with
-    email-matched edges resolved."""
+    email-matched edges resolved. The edge plan reads each feed once
+    and the contact feed once more, for the single resolve join."""
     users = transform_users(feeds["users"])
     contacts, c_edges = transform_contacts(feeds["contacts"])
     companies, co_edges = transform_companies(feeds["companies"])
     deals, d_edges = transform_deals(feeds["deals"])
     activities, a_edges = transform_engagements(feeds["engagements"])
     opens, clicks, campaigns, e_edges = transform_email_events(feeds["email_events"])
-    forms, f_edges = transform_form_submissions(feeds["form_submissions"], contacts)
+    forms, f_edges = _form_submissions(feeds["form_submissions"])
 
     webpages = derive_webpages(
         feeds["contacts"]

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.caching import tracked_cache
-from .operators.scd2 import diff_edges, scd2_merge, with_temporal_fields
+from .operators.scd2 import diff_edges, per_label_counts, scd2_merge, with_temporal_fields
 from .operators.transforms import transform_all
 from .sources.feeds import FEED_SCHEMAS, read_feed
 
@@ -125,36 +125,16 @@ _VERIFY_SCHEMA = "is_current boolean, is_deleted boolean"
 
 def _verify_stats(spark: SparkSession, store: str, labels: list[str]) -> DataFrame:
     """Verify stage (main.py:117-187): per-label live/deleted counts of
-    the current tables on disk, one row per label in ``labels`` order.
-
-    One aggregate over the union of all labels: a shuffle job plus a
-    result job, where a per-label aggregate costs a schema-inference
-    job and a shuffle job per label. The explicit two-column schema
-    skips the inference. Each label's sums only see that label's rows,
-    so a label whose table is empty gets ``null`` counts, as a global
-    aggregate over that table alone would."""
-    rows = None
-    for i, label in enumerate(labels):
-        cur = spark.read.schema(_VERIFY_SCHEMA).parquet(_node_dir(store, "nodes", label))
-        cur = cur.select(F.lit(i).alias("_label"), "is_current", "is_deleted")
-        rows = cur if rows is None else rows.unionByName(cur)
-
-    def count(i: int, cond):
-        return F.sum(F.when(F.col("_label") == i, F.when(cond, 1).otherwise(0)))
-
-    live = F.col("is_current") & ~F.col("is_deleted")
-    sums = rows.agg(
-        *[count(i, live).alias(f"live{i}") for i in range(len(labels))],
-        *[count(i, F.col("is_deleted")).alias(f"deleted{i}") for i in range(len(labels))],
+    the current tables on disk, one row per label in ``labels`` order,
+    from one aggregate over all labels (``per_label_counts``). The
+    explicit two-column schema skips a schema-inference job per label.
+    A label whose table is empty gets ``null`` counts."""
+    current = {
+        label: spark.read.schema(_VERIFY_SCHEMA).parquet(_node_dir(store, "nodes", label))
+        for label in labels
+    }
+    return per_label_counts(
+        current,
+        live=F.col("is_current") & ~F.col("is_deleted"),
+        deleted=F.col("is_deleted"),
     )
-    per_label = F.array(
-        *[
-            F.struct(
-                F.lit(label).alias("label"),
-                F.col(f"live{i}").alias("live"),
-                F.col(f"deleted{i}").alias("deleted"),
-            )
-            for i, label in enumerate(labels)
-        ]
-    )
-    return sums.select(F.inline(per_label))

@@ -128,31 +128,39 @@ def deals_by_owner(g: GraphTables, owner_name: str) -> DataFrame:
 
 
 def _ownership_counts(g: GraphTables, users: DataFrame) -> DataFrame:
-    """Per-owner distinct entity counts — pre-aggregated per entity
-    table then broadcast-joined (no OPTIONAL MATCH fan-out; identical
-    to the reference's count(DISTINCT) results)."""
+    """Per-owner distinct entity counts (the reference's
+    count(DISTINCT)) from one distinct over the OWNED_BY edges and one
+    per-owner aggregate of label-conditioned counts, broadcast-joined to
+    the owners (no OPTIONAL MATCH fan-out)."""
+    labels = [
+        ("HUBSPOT_Contact", "contacts_owned"),
+        ("HUBSPOT_Company", "companies_owned"),
+        ("HUBSPOT_Deal", "deals_owned"),
+    ]
+    per_owner = (
+        g.e("OWNED_BY")
+        .where(F.col("from_id").isNotNull())
+        .select("to_id", "from_type", "from_id")
+        .distinct()
+        .groupBy("to_id")
+        .agg(
+            *[
+                F.count(F.when(F.col("from_type") == label, 1)).alias(alias)
+                for label, alias in labels
+            ]
+        )
+    )
     out = users.select(
         "hubspot_id",
         F.col("email").alias("owner_email"),
         name_concat("first_name", "last_name").alias("owner_name"),
         "active",
     )
-    for label, alias in [
-        ("HUBSPOT_Contact", "contacts_owned"),
-        ("HUBSPOT_Company", "companies_owned"),
-        ("HUBSPOT_Deal", "deals_owned"),
-    ]:
-        per_owner = (
-            g.e("OWNED_BY")
-            .where(F.col("from_type") == label)
-            .groupBy(F.col("to_id"))
-            .agg(F.countDistinct("from_id").alias(alias))
-        )
-        out = out.join(
-            F.broadcast(per_owner), out.hubspot_id == per_owner.to_id, "left"
-        ).drop("to_id")
-        out = out.withColumn(alias, F.coalesce(alias, F.lit(0)))
-    return out
+    return out.join(
+        F.broadcast(per_owner), out.hubspot_id == per_owner.to_id, "left"
+    ).select(
+        *out.columns, *[F.coalesce(alias, F.lit(0)).alias(alias) for _, alias in labels]
+    )
 
 
 def owner_summary(g: GraphTables, owner_name: str) -> DataFrame:
@@ -652,53 +660,63 @@ def contacts_without_company(g: GraphTables) -> DataFrame:
 
 def conversion_funnel(g: GraphTables, days: int = 30, now: str | None = None) -> DataFrame:
     """Ref README.md:314-336: per-stage distinct contact counts +
-    conversion rate (deterministic floor-rate)."""
-    contacts = g.n("HUBSPOT_Contact").select(F.col("hubspot_id").alias("cid"))
-    opens = g.e("PERFORMED").join(
-        g.n("HUBSPOT_EmailOpenEvent").select(F.col("hubspot_id").alias("to_id")),
-        "to_id",
-        "left_semi",
-    ).select(F.col("from_id").alias("cid"))
-    clicks = g.e("PERFORMED").join(
-        g.n("HUBSPOT_EmailClickEvent").select(F.col("hubspot_id").alias("to_id")),
-        "to_id",
-        "left_semi",
-    ).select(F.col("from_id").alias("cid"))
-    subs = g.e("SUBMITTED_BY").select(F.col("to_id").alias("cid"))
+    conversion rate (deterministic floor-rate; 0.0 with no contacts).
 
-    total = contacts.agg(F.countDistinct("cid").alias("total_contacts"))
-    n_open = opens.agg(F.countDistinct("cid").alias("opened"))
-    n_click = clicks.agg(F.countDistinct("cid").alias("clicked"))
-    n_sub = subs.agg(F.countDistinct("cid").alias("submitted"))
-    out = total.join(F.broadcast(n_open)).join(F.broadcast(n_click)).join(
-        F.broadcast(n_sub)
+    One distinct over (stage, contact) rows, then one global aggregate
+    of stage-conditioned counts."""
+    performed = g.e("PERFORMED").select("to_id", F.col("from_id").alias("cid"))
+
+    def performed_on(label: str) -> DataFrame:
+        events = g.n(label).select(F.col("hubspot_id").alias("to_id"))
+        return performed.join(events, "to_id", "left_semi").select("cid")
+
+    stages = [
+        ("total_contacts", g.n("HUBSPOT_Contact").select(F.col("hubspot_id").alias("cid"))),
+        ("opened", performed_on("HUBSPOT_EmailOpenEvent")),
+        ("clicked", performed_on("HUBSPOT_EmailClickEvent")),
+        ("submitted", g.e("SUBMITTED_BY").select(F.col("to_id").alias("cid"))),
+    ]
+    tagged = None
+    for i, (_, ids) in enumerate(stages):
+        part = ids.select(F.lit(i).alias("_stage"), "cid")
+        tagged = part if tagged is None else tagged.unionByName(part)
+    out = tagged.distinct().agg(
+        *[
+            F.count(F.when(F.col("_stage") == i, F.col("cid"))).alias(name)
+            for i, (name, _) in enumerate(stages)
+        ]
     )
-    rate = (
-        F.floor(F.col("submitted") * 1000000.0 / F.col("total_contacts")) / 10000.0
-    )
+    rate = F.when(
+        F.col("total_contacts") > 0,
+        F.floor(F.col("submitted") * 1000000.0 / F.col("total_contacts")) / 10000.0,
+    ).otherwise(F.lit(0.0))
     return out.withColumn("conversion_rate_pct", rate)
 
 
 def campaign_performance(g: GraphTables) -> DataFrame:
-    """Ref README.md:348-355: per-campaign opens/clicks + CTR."""
-    opens = (
+    """Ref README.md:348-355: per-campaign opens/clicks + CTR, from one
+    aggregate over opens ∪ clicks."""
+    opened = F.col("_open")
+    events = (
         g.n("HUBSPOT_EmailOpenEvent")
-        .groupBy("campaign_id")
-        .agg(F.count("*").alias("opens"), F.min("timestamp").alias("first_open"),
-             F.max("timestamp").alias("last_open"))
+        .select("campaign_id", "timestamp", F.lit(True).alias("_open"))
+        .unionByName(
+            g.n("HUBSPOT_EmailClickEvent").select(
+                "campaign_id", "timestamp", F.lit(False).alias("_open")
+            )
+        )
     )
-    clicks = (
-        g.n("HUBSPOT_EmailClickEvent")
-        .groupBy("campaign_id")
-        .agg(F.count("*").alias("clicks"))
+    stats = events.groupBy("campaign_id").agg(
+        F.count(F.when(opened, 1)).alias("opens"),
+        F.min(F.when(opened, F.col("timestamp"))).alias("first_open"),
+        F.max(F.when(opened, F.col("timestamp"))).alias("last_open"),
+        F.count(F.when(~opened, 1)).alias("clicks"),
     )
     campaigns = g.n("HUBSPOT_EmailCampaign").select(
         F.col("hubspot_id").alias("campaign_id"), F.col("name").alias("campaign_name")
     )
-    joined = (
-        campaigns.join(opens, "campaign_id", "left")
-        .join(clicks, "campaign_id", "left")
-        .fillna(0, subset=["opens", "clicks"])
+    joined = campaigns.join(stats, "campaign_id", "left").fillna(
+        0, subset=["opens", "clicks"]
     )
     ctr = F.when(
         F.col("opens") > 0,

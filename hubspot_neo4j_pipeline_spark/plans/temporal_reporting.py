@@ -13,6 +13,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..operators.scd2 import per_label_counts
+
 
 @dataclass
 class TemporalStore:
@@ -182,29 +184,27 @@ def get_entity_lifecycle(
 
 def get_temporal_statistics(store: TemporalStore) -> DataFrame:
     """Ref query_temporal.py:282-325: per-label current/deleted/history
-    counts — one aggregate per table, unioned (A10)."""
-    parts = []
-    for label, cur in store.current.items():
-        hist = store.history.get(label)
-        stats = cur.agg(
-            F.sum(
-                F.when(F.col("is_current") & ~F.col("is_deleted"), 1).otherwise(0)
-            ).alias("current_count"),
-            F.sum(F.when(F.col("is_deleted"), 1).otherwise(0)).alias("deleted_count"),
-        ).select(
-            F.lit(label).alias("entity_type"), "current_count", "deleted_count"
+    counts (A10). Current and deleted counts come from one aggregate
+    over all current tables, history counts from one over all history
+    tables (``per_label_counts``, shared with the pipeline's verify
+    stage). An empty current table gets null counts; a label without
+    history rows gets history_count 0."""
+    stats = per_label_counts(
+        store.current,
+        current_count=F.col("is_current") & ~F.col("is_deleted"),
+        deleted_count=F.col("is_deleted"),
+    ).withColumnRenamed("label", "entity_type")
+    history = {label: store.history[label] for label in store.current if label in store.history}
+    if history:
+        counts = per_label_counts(history, history_count=F.lit(True))
+        stats = stats.join(
+            F.broadcast(counts.withColumnRenamed("label", "entity_type")),
+            "entity_type",
+            "left",
         )
-        if hist is not None:
-            h = hist.agg(F.count("*").alias("history_count")).select(
-                F.lit(label).alias("entity_type"), "history_count"
-            )
-            stats = stats.join(h, "entity_type", "left")
-        else:
-            stats = stats.withColumn("history_count", F.lit(0).cast("long"))
-        parts.append(
-            stats.select("entity_type", "current_count", "deleted_count", "history_count")
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.orderBy("entity_type")
+        history_count = F.coalesce("history_count", F.lit(0).cast("long"))
+    else:
+        history_count = F.lit(0).cast("long")
+    return stats.select(
+        "entity_type", "current_count", "deleted_count", history_count.alias("history_count")
+    ).orderBy("entity_type")

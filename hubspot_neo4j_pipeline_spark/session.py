@@ -32,6 +32,25 @@ first, so compiled executor loops keep C2 speed: a warm 400M-row
 range -> xxhash64 -> group-by took 4.3-4.5 s by default and 4.0-4.4 s
 with the budget. C1 only (``-XX:TieredStopAtLevel=1``) cut the load to
 45 CPU-s but made that hot loop take 52-58 s, so it was rejected.
+
+DataFrame debugging off, ``spark.python.sql.dataFrameDebugging.enabled
+=false``. With it on (PySpark 4's default) every wrapped
+``functions.*`` call and ``Column`` method records its Python call site
+for error messages: five py4j round trips (getActiveSession, isDefined,
+get, set, clear of the JVM's current origin), a walk of the Python
+stack and a retried ``import ipykernel`` (failed imports are not
+cached). Building the crm day-0 load's transform plan (perfbench seed
+5 feeds, local[4], tools/py4j_calls.py) made 7,244 py4j calls, 4,830 of
+them (966 x 5) for this capture; with it off, 2,414. ``transform_all``
+went from 2.5 s of wall and 5.3 CPU-s (JVM 4.4, Python 0.9) to 1.7 s
+and 4.2 CPU-s cold, and from 1.2-1.3 s to 0.7-0.8 s warm. What is
+lost: the DataFrame call-site fragment ("== DataFrame == ... was called
+from file:line") of an error; the error keeps its condition and
+message. PySpark caches the setting per process on first use
+(``pyspark.errors.utils.is_debugging_enabled``) and caches ``False``
+if a Column is built before any session exists, so with the default
+the capture was on or off depending on import order.
+It is a static conf: it goes on the builder.
 """
 
 from __future__ import annotations
@@ -155,6 +174,8 @@ def get_spark(
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.maxResultSize", "4g")
+        # no per-Column call-site capture (module docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -141,3 +141,51 @@ def test_engine_jvm_options_compose_with_caller_options():
     assert out.get("CICompilerCount") == "2", f"stdout:\n{res.stdout}\nstderr:\n{res.stderr[-2000:]}"
     assert out["hnps.probe"] == "1"
     assert "-Xlog:disable" in out["args"].split()
+
+
+DEBUGGING_SCRIPT = r"""
+import sys
+sys.path.insert(0, sys.argv[1])
+sys.path.insert(0, sys.argv[1] + "/tools")
+from pyspark.errors import PySparkException
+from pyspark.errors.utils import is_debugging_enabled
+from pyspark.sql import functions as F
+
+from hubspot_neo4j_pipeline_spark.session import get_spark
+from py4j_calls import py4j_calls
+
+spark = get_spark(cpus=2)
+print("conf=" + spark.conf.get("spark.python.sql.dataFrameDebugging.enabled"))
+print("debugging=" + str(is_debugging_enabled()))
+with py4j_calls() as calls:
+    bad = F.lit("x").cast("int")
+print("origin_calls=" + str(calls.counts.get("set", 0) + calls.counts.get("clear", 0)))
+try:
+    spark.range(1).select(bad).collect()
+except PySparkException as exc:
+    print("condition=" + str(exc.getCondition()))
+    print("has_message=" + str("'x'" in str(exc)))
+"""
+
+
+def test_engine_session_skips_dataframe_origin_capture():
+    """The engine's sessions run with DataFrame debugging off: no
+    per-Column call-site capture (no JVM origin set/clear round trips),
+    while a failing query still raises its error condition. Runs in a
+    subprocess because PySpark caches is_debugging_enabled() per
+    process."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    res = subprocess.run(
+        [sys.executable, "-c", DEBUGGING_SCRIPT, repo],
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    out = dict(
+        line.split("=", 1) for line in res.stdout.splitlines() if "=" in line
+    )
+    assert out.get("conf") == "false", f"stdout:\n{res.stdout}\nstderr:\n{res.stderr[-2000:]}"
+    assert out["debugging"] == "False"
+    assert out["origin_calls"] == "0"
+    assert out["condition"] == "CAST_INVALID_INPUT"
+    assert out["has_message"] == "True"

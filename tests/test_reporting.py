@@ -29,6 +29,7 @@ from hubspot_neo4j_pipeline_spark.plans.reporting import (
     recent_email_activity,
     recent_form_submissions,
 )
+from hubspot_neo4j_pipeline_spark.plans.temporal_reporting import get_temporal_statistics
 
 
 @pytest.fixture(scope="module")
@@ -147,3 +148,105 @@ def test_user_ownership_portfolio(g):
     assert len(cw) == 1 and cw[0]["owner_name"] == "Olivia Owner"
     cow = get_companies_with_owners(g).collect()
     assert len(cow) == 1 and cow[0]["company_name"] == "Acme"
+
+
+# -- one aggregate per report: rows on an empty store, jobs per call ----------
+
+REPORT_SCHEMAS = {
+    "all_owners_summary": "struct<owner_email:string,owner_name:string,active:boolean,"
+    "contacts_owned:bigint,companies_owned:bigint,deals_owned:bigint>",
+    "conversion_funnel": "struct<total_contacts:bigint,opened:bigint,clicked:bigint,"
+    "submitted:bigint,conversion_rate_pct:double>",
+    "campaign_performance": "struct<campaign_id:string,campaign_name:string,opens:bigint,"
+    "first_open:timestamp,last_open:timestamp,clicks:bigint,click_rate_pct:double>",
+    "temporal_statistics": "struct<entity_type:string,current_count:bigint,"
+    "deleted_count:bigint,history_count:bigint>",
+}
+
+
+def _temporal_store(g, history: bool):
+    from hubspot_neo4j_pipeline_spark.operators.scd2 import with_temporal_fields
+    from hubspot_neo4j_pipeline_spark.plans.temporal_reporting import TemporalStore
+
+    current = {
+        label: with_temporal_fields(df, "2024-03-01 00:00:00")
+        for label, df in g.nodes.items()
+    }
+    # any SCD2-shaped rows do as closed-out versions: only counts are read
+    hist = {"HUBSPOT_Contact": current["HUBSPOT_Contact"]} if history else {}
+    return TemporalStore(current=current, history=hist, changelog={})
+
+
+def _reports(g):
+    return {
+        "all_owners_summary": lambda: all_owners_summary(g),
+        "conversion_funnel": lambda: conversion_funnel(g),
+        "campaign_performance": lambda: campaign_performance(g),
+        "temporal_statistics": lambda: get_temporal_statistics(
+            _temporal_store(g, history=True)
+        ),
+    }
+
+
+@pytest.fixture(scope="module")
+def empty_g(crm_feeds):
+    """A store whose feeds hold only the users: no contacts, companies,
+    deals, events or edges."""
+    feeds = {k: (df if k == "users" else df.limit(0)) for k, df in crm_feeds.items()}
+    nodes, edges = transform_all(feeds)
+    return GraphTables(nodes=nodes, edges=edges)
+
+
+def test_reports_on_empty_store(empty_g):
+    """Rows and schema of the one-aggregate reports when nothing is
+    owned, opened or submitted: zero counts (not nulls), a 0.0
+    conversion rate instead of a division by zero, and temporal stats
+    with null live/deleted counts and a 0 history count per label."""
+    got = {name: build() for name, build in _reports(empty_g).items()}
+    for name, df in got.items():
+        assert df.schema.simpleString() == REPORT_SCHEMAS[name], name
+    owners = [tuple(r) for r in got["all_owners_summary"].collect()]
+    assert sorted(owners) == [
+        ("old@corp.com", "Ora Old", False, 0, 0, 0),
+        ("owner@corp.com", "Olivia Owner", True, 0, 0, 0),
+    ]
+    assert [tuple(r) for r in got["conversion_funnel"].collect()] == [(0, 0, 0, 0, 0.0)]
+    assert got["campaign_performance"].collect() == []
+    stats = [tuple(r) for r in got["temporal_statistics"].collect()]
+    assert stats == [
+        (label, 2, 0, 0) if label == "HUBSPOT_User" else (label, None, None, 0)
+        for label in sorted(empty_g.nodes)
+    ]
+
+
+def test_report_rows_and_schema(g):
+    got = {name: build() for name, build in _reports(g).items()}
+    for name, df in got.items():
+        assert df.schema.simpleString() == REPORT_SCHEMAS[name], name
+    funnel = [tuple(r) for r in got["conversion_funnel"].collect()]
+    assert funnel == [(2, 1, 1, 1, 50.0)]
+    camp = got["campaign_performance"].collect()
+    assert [(r["campaign_id"], r["campaign_name"], r["opens"], r["clicks"],
+             r["click_rate_pct"]) for r in camp] == [("camp1", "Launch", 1, 1, 100.0)]
+    assert camp[0]["first_open"] == camp[0]["last_open"] is not None
+    stats = {r["entity_type"]: tuple(r)[1:] for r in got["temporal_statistics"].collect()}
+    assert [r for r in stats] == sorted(g.nodes)
+    assert stats["HUBSPOT_Contact"] == (2, 0, 2)
+    assert stats["HUBSPOT_WebPage"] == (3, 0, 0)
+
+
+def test_report_job_counts(spark, g):
+    """Spark jobs per call on the fixture graph (a fresh transform plan
+    under every report). With an aggregate per table these were 11,
+    19, 8 and 15."""
+    from tests.conftest import count_jobs
+
+    budget = {
+        "all_owners_summary": 7,
+        "conversion_funnel": 9,
+        "campaign_performance": 6,
+        "temporal_statistics": 6,
+    }
+    for name, build in _reports(g).items():
+        _, jobs = count_jobs(spark, lambda: build().collect())
+        assert jobs <= budget[name], (name, jobs)

@@ -288,3 +288,29 @@ def test_jvm_cpu_counts_threads_that_end_inside_the_region(monkeypatch):
         phase[0] = "after"
     sec = region.seconds
     assert (sec["c2"], sec["other"], sec["exited"], sec["total"]) == (3.0, 1.0, 0.2, 4.2)
+
+
+def test_py4j_calls_counts_round_trips_per_method(spark):
+    """Each JVM method call inside the block is counted once under its
+    method name; the wrapper is removed on exit, also after an error."""
+    import pytest
+    from py4j.java_gateway import JavaMember
+    from py4j_calls import py4j_calls
+
+    original = JavaMember.__call__
+    system = spark.sparkContext._jvm.java.lang.System
+    with py4j_calls() as calls:
+        for _ in range(3):
+            system.nanoTime()
+        system.getProperty("java.version")
+    assert JavaMember.__call__ is original
+    assert dict(calls.counts) == {"nanoTime": 3, "getProperty": 1}
+    assert calls.total == 4 and calls.seconds > 0
+    assert calls.top(1) == [("nanoTime", 3, calls.wall["nanoTime"])]
+    system.nanoTime()
+    assert calls.total == 4
+
+    with pytest.raises(ZeroDivisionError):
+        with py4j_calls():
+            1 / 0
+    assert JavaMember.__call__ is original

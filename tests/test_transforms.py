@@ -151,3 +151,157 @@ def test_resolve_email_edges_observation(feeds):
     metrics = obs.get
     assert metrics["email_edges_total"] == 2
     assert metrics["email_edges_matched"] == 2
+
+
+# -- pinned edge output + plan shape -----------------------------------------
+
+# the fixture feeds' resolved edge rows: (rel_type, from_type, from_id,
+# to_type, to_id, from_email, properties), sorted
+FIXTURE_EDGES = [
+    ("ASSOCIATED_WITH", "HUBSPOT_Contact", "c1", "HUBSPOT_Deal", "d1", None, None),
+    ("ASSOCIATED_WITH", "HUBSPOT_Contact", "c1", "HUBSPOT_Deal", "d1", None, None),
+    ("BELONGS_TO", "HUBSPOT_Deal", "d1", "HUBSPOT_Company", "co1", None, None),
+    ("CLICKED_URL", "HUBSPOT_EmailClickEvent", "email_event_2e4ce50b9fd9df31",
+     "HUBSPOT_WebPage", "https://www.site.com/landing", None, None),
+    ("FOR_CAMPAIGN", "HUBSPOT_EmailClickEvent", "email_event_2e4ce50b9fd9df31",
+     "HUBSPOT_EmailCampaign", "camp1", None, None),
+    ("FOR_CAMPAIGN", "HUBSPOT_EmailOpenEvent", "email_event_6700577f9a69aab5",
+     "HUBSPOT_EmailCampaign", "camp1", None, None),
+    ("INVOLVES", "HUBSPOT_Activity", "e1", "HUBSPOT_Contact", "c1", None, None),
+    ("ON_PAGE", "HUBSPOT_FormSubmission", "form_submission_c7e987a7e793b45d",
+     "HUBSPOT_WebPage", "https://www.site.com/contact", None, None),
+    ("ON_PAGE", "HUBSPOT_FormSubmission", "form_submission_c994e57ef646f9bc",
+     "HUBSPOT_WebPage", "https://www.site.com/contact", None, None),
+    ("OWNED_BY", "HUBSPOT_Company", "co1", "HUBSPOT_User", "u1", None, None),
+    ("OWNED_BY", "HUBSPOT_Contact", "c1", "HUBSPOT_User", "u1", None, None),
+    ("PERFORMED", "HUBSPOT_Contact", "c1", "HUBSPOT_EmailClickEvent",
+     "email_event_2e4ce50b9fd9df31", None, None),
+    ("PERFORMED", "HUBSPOT_Contact", "c1", "HUBSPOT_EmailOpenEvent",
+     "email_event_6700577f9a69aab5", None, None),
+    ("RELATED_TO", "HUBSPOT_Activity", "e2", "HUBSPOT_Deal", "d1", None, None),
+    ("SUBMITTED_BY", "HUBSPOT_FormSubmission", "form_submission_c7e987a7e793b45d",
+     "HUBSPOT_Contact", "c1", None, None),
+    ("VISITED", "HUBSPOT_Contact", "c1", "HUBSPOT_WebPage", "https://www.site.com/page",
+     None, {"timestamp": None, "source": "direct"}),
+    ("WORKS_AT", "HUBSPOT_Contact", "c1", "HUBSPOT_Company", "co1", None, None),
+]
+
+EDGE_SCHEMA_JSON = (
+    '{"fields":[{"metadata":{},"name":"rel_type","nullable":false,"type":"string"},'
+    '{"metadata":{},"name":"from_type","nullable":false,"type":"string"},'
+    '{"metadata":{},"name":"from_id","nullable":true,"type":"string"},'
+    '{"metadata":{},"name":"to_type","nullable":false,"type":"string"},'
+    '{"metadata":{},"name":"to_id","nullable":true,"type":"string"},'
+    '{"metadata":{},"name":"from_email","nullable":true,"type":"string"},'
+    '{"metadata":{},"name":"properties","nullable":true,"type":{"keyType":"string",'
+    '"type":"map","valueContainsNull":true,"valueType":"string"}}],"type":"struct"}'
+)
+
+
+def _sorted_edges(edges):
+    return sorted((tuple(r) for r in edges.collect()), key=repr)
+
+
+def _edge_digest(edges) -> tuple[int, str]:
+    import hashlib
+
+    rows = [repr(r) for r in _sorted_edges(edges)]
+    return len(rows), hashlib.sha256("\n".join(rows).encode()).hexdigest()
+
+
+def test_edge_rows_and_schema_pinned(feeds):
+    """The resolved edge table of the fixture feeds, row for row, and
+    its schema with nullability."""
+    _, edges = transform_all(feeds)
+    assert _sorted_edges(edges) == sorted(FIXTURE_EDGES, key=repr)
+    assert edges.schema.json() == EDGE_SCHEMA_JSON
+
+
+def _edge_case_feeds(spark, feeds):
+    """The fixture feeds plus rows that reach every edge rule's corner:
+    a second contact sharing c1's email (email-matched edges fan out
+    to both, per-record edges do not), an association array holding a
+    null element and a null id, a blank owner, and form submissions
+    without an email or a page."""
+    extra = {
+        "contacts": [
+            {"id": "c3", "properties": {"email": "john@example.com",
+                                        "hubspot_owner_id": "",
+                                        "hs_analytics_last_url": "https://www.site.com/p3",
+                                        "hs_analytics_source": "ADS",
+                                        "hs_analytics_last_visit_timestamp": "2024-01-05"},
+             "associations": {"deals": [None, {"id": None}, {"id": "d2"}]},
+             "created_at": None, "updated_at": None},
+        ],
+        "deals": [
+            {"id": "d3", "properties": {"hubspot_owner_id": "u2"},
+             "associations": {"companies": [], "contacts": [{"id": "c3"}, None]}},
+        ],
+        "engagements": [
+            {"id": "e3", "properties": {"hs_engagement_type": "TASK"},
+             "associations": {"contacts": [{"id": "c2"}], "companies": [{"id": "co1"}],
+                              "deals": [{"id": None}]}},
+        ],
+        "email_events": [
+            {"id": "ev5", "event_type": "CLICK", "recipient": "nobody@x.io",
+             "created": "1706832000001", "emailCampaignId": None,
+             "emailCampaignName": None, "subject": None, "deviceType": None,
+             "location": None, "userAgent": None, "url": None},
+        ],
+        "form_submissions": [
+            {"form_guid": "f2", "form_name": None, "submitted_at": 1706900002000,
+             "page_url": None, "page_title": None, "ip_address": None,
+             "values": [{"name": "email", "value": "john@example.com"}]},
+            {"form_guid": "f2", "form_name": None, "submitted_at": 1706900003000,
+             "page_url": "https://www.site.com/other", "page_title": None,
+             "ip_address": None, "values": None},
+        ],
+    }
+    out = dict(feeds)
+    for name, rows in extra.items():
+        out[name] = feeds[name].unionByName(spark.createDataFrame(rows, feeds[name].schema))
+    return out
+
+
+def test_edge_rows_pinned_on_edge_cases(spark, feeds):
+    _, edges = transform_all(_edge_case_feeds(spark, feeds))
+    assert _edge_digest(edges) == (
+        34,
+        "75ef06c5facfe8441c66b665e52dab3579752ccf5b437a4fa1b556243971e3aa",
+    )
+    assert edges.schema.json() == EDGE_SCHEMA_JSON
+
+
+def _feed_scans(df) -> dict[str, int]:
+    """File-scan leaves of ``df``'s optimized plan, counted per feed
+    directory name."""
+    import os
+
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    out: dict[str, int] = {}
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "LogicalRelation":
+            feed = os.path.basename(str(leaf.relation().location().rootPaths().apply(0)))
+            out[feed] = out.get(feed, 0) + 1
+    return out
+
+
+def test_edge_plan_scans_each_feed_once(spark, feeds, tmp_path):
+    """Every bronze feed that emits edges is read once by the edge
+    plan; contacts is read once more, as the email dimension of the
+    single resolve join. Users emit no edges."""
+    from hubspot_neo4j_pipeline_spark.pipeline import read_all_feeds
+
+    for name, df in feeds.items():
+        df.write.json(str(tmp_path / name))
+    _, edges = transform_all(read_all_feeds(spark, str(tmp_path)))
+    assert _feed_scans(edges) == {
+        "contacts": 2,
+        "companies": 1,
+        "deals": 1,
+        "engagements": 1,
+        "email_events": 1,
+        "form_submissions": 1,
+    }
+    assert _sorted_edges(edges) == sorted(FIXTURE_EDGES, key=repr)
