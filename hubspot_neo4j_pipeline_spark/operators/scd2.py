@@ -31,6 +31,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.cleaning import property_hash
+
 TEMPORAL_FIELDS = ("valid_from", "valid_to", "is_current", "is_deleted", "snapshot_hash")
 HASH_EXCLUDED_FIELDS = set(TEMPORAL_FIELDS) | {"last_modified"}
 
@@ -41,10 +43,10 @@ IMMUTABLE_EDGE_TYPES = frozenset(
 
 
 def snapshot_hash(df: DataFrame, extra_excluded: tuple[str, ...] = ()) -> Column:
-    """T1: canonical content hash over the frame's non-temporal columns."""
+    """T1: canonical content hash over the frame's non-temporal columns
+    (``property_hash``, the engine's one implementation of it)."""
     excluded = HASH_EXCLUDED_FIELDS | set(extra_excluded)
-    cols = sorted(c for c in df.columns if c not in excluded)
-    return F.sha2(F.to_json(F.struct(*[F.col(c).alias(c) for c in cols])), 256)
+    return property_hash(*[c for c in df.columns if c not in excluded])
 
 
 def with_temporal_fields(df: DataFrame, now: str) -> DataFrame:
@@ -170,7 +172,7 @@ def scd2_merge(
     inc_side = inc_stamped.select(
         F.col(key).alias("_k"),
         F.struct(*[F.col(c) for c in inc_stamped.columns]).alias("_inc"),
-        snapshot_hash(incoming).alias("_new_hash"),
+        F.col("snapshot_hash").alias("_new_hash"),
     )
     cur_side = live_cur.select(
         F.col(key).alias("_k"),

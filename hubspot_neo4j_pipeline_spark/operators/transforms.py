@@ -47,7 +47,6 @@ from ..functions.cleaning import (
     deterministic_event_id,
     extract_email_from_values,
     parse_date_lenient,
-    property_hash,
     safe_float,
     safe_int,
 )
@@ -119,8 +118,10 @@ def _if(cond: Column, edge: Column) -> Column:
 
 def _each(assoc: str, edge) -> Column:
     """One edge per element of the association array ``assoc`` (built by
-    ``edge(element)``); none when the array is null."""
-    return F.coalesce(F.transform(assoc, edge), F.array())
+    ``edge(element)``); none when the array is null. A null element or
+    one with a null ``id`` has no endpoint and emits no edge."""
+    linked = F.filter(assoc, lambda a: a["id"].isNotNull())
+    return F.coalesce(F.transform(linked, edge), F.array())
 
 
 def _edges_of(df: DataFrame, *rules: Column) -> DataFrame:
@@ -166,12 +167,7 @@ def transform_users(users: DataFrame) -> DataFrame:
         .otherwise(F.lit(""))
         .alias("teams"),
     )
-    return node.withColumn(
-        "snapshot_hash",
-        property_hash(
-            *[F.col(c) for c in node.columns if c not in ("last_modified",)]
-        ),
-    )
+    return node
 
 
 # -- P1: contacts + 4 edge types (graph_transformer.py:94-180) --------------
@@ -196,10 +192,6 @@ def transform_contacts(contacts: DataFrame) -> tuple[DataFrame, DataFrame]:
         _p("country").alias("country"),
         _p("city").alias("city"),
         _p("state").alias("state"),
-    )
-    node = node.withColumn(
-        "snapshot_hash",
-        property_hash(*[F.col(c) for c in node.columns if c != "last_modified"]),
     )
 
     cid = F.col("id")
@@ -259,10 +251,6 @@ def transform_companies(companies: DataFrame) -> tuple[DataFrame, DataFrame]:
         _p("city").alias("city"),
         _p("state").alias("state"),
     )
-    node = node.withColumn(
-        "snapshot_hash",
-        property_hash(*[F.col(c) for c in node.columns if c != "last_modified"]),
-    )
     owner = _p_raw("hubspot_owner_id")
     edges = _edges_of(
         companies,
@@ -292,10 +280,6 @@ def transform_deals(deals: DataFrame) -> tuple[DataFrame, DataFrame]:
             F.lower(F.coalesce(_p_raw("hs_is_closed_won"), F.lit("false"))) == "true"
         ).alias("is_won"),
         safe_float(_p_raw("hs_forecast_probability")).alias("probability"),
-    )
-    node = node.withColumn(
-        "snapshot_hash",
-        property_hash(*[F.col(c) for c in node.columns if c != "last_modified"]),
     )
     did = F.col("id")
     owner = _p_raw("hubspot_owner_id")
@@ -354,9 +338,6 @@ def transform_engagements(engagements: DataFrame) -> tuple[DataFrame, DataFrame]
         F.when(eng_type == "TASK", _p("hs_task_status"))
         .otherwise(F.lit(""))
         .alias("status"),
-    )
-    node = node.withColumn(
-        "snapshot_hash", property_hash(*[F.col(c) for c in node.columns])
     )
 
     def assoc(field: str, rel: str, to_type: str) -> Column:

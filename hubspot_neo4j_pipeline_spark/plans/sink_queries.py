@@ -551,9 +551,8 @@ def neo4j_dryrun_relationship_changes(spark: SparkSession, sf_dir: str) -> DataF
         "EXECUTED streaming exact-dedup round-trip (r9): two history "
         "micro-batches of documents are ingested into the persisted "
         "content-hash store (streaming/hash_store.py — LSM segment "
-        "layout, O(batch) atomic delta ingests — overlapped from a driver "
-        "thread pool, guide §2.6, then an explicit real compaction), "
-        "then the held-out batch "
+        "layout, O(batch) atomic delta ingest, compact_every=2 so the "
+        "query exercises a real compaction), then the held-out batch "
         "is scored against it. Verdicts must equal the pure-SQL "
         "min-id-per-identical-content rule over the FULL corpus "
         "restricted to the held-out docs — a store that dropped a "
@@ -566,10 +565,8 @@ def neo4j_dryrun_relationship_changes(spark: SparkSession, sf_dir: str) -> DataF
 def incremental_hash_dedup_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
-    from ..streaming.backfill import run_concurrently
     from ..streaming.hash_store import (
         dedup_batch_against_store,
-        hash_store_compact,
         hash_store_update_batch,
     )
 
@@ -578,21 +575,12 @@ def incremental_hash_dedup_verdicts(spark: SparkSession, sf_dir: str) -> DataFra
     shutil.rmtree(store, ignore_errors=True)  # deterministic rebuild per run
     history = docs.where("doc_id % 3 != 0")
     incoming = docs.where("doc_id % 3 = 0")
-    # r14 round-2 (guide §2.6): the two history ingests are independent
-    # delta commits by the LSM contract (no read of existing state;
-    # explicit ids), so they overlap from a driver thread pool; the
-    # compaction both used to trigger (compact_every=2) runs once,
-    # explicitly, after the pool joins — identical final store state:
-    # base(b0, b1), consumed_through=1.
-    run_concurrently(
-        lambda: hash_store_update_batch(
-            history.where("doc_id % 2 = 0"), store, batch_id=0, compact_every=99
-        ),
-        lambda: hash_store_update_batch(
-            history.where("doc_id % 2 = 1"), store, batch_id=1, compact_every=99
-        ),
+    hash_store_update_batch(
+        history.where("doc_id % 2 = 0"), store, batch_id=0, compact_every=2
     )
-    hash_store_compact(spark, store)
+    hash_store_update_batch(  # triggers the compaction: base(b0, b1)
+        history.where("doc_id % 2 = 1"), store, batch_id=1, compact_every=2
+    )
     return dedup_batch_against_store(incoming, store).select(
         "doc_id", "canonical_id", "is_duplicate"
     )
@@ -648,10 +636,8 @@ def incremental_hash_dedup_with_deletes(
 ) -> DataFrame:
     import shutil
 
-    from ..streaming.backfill import run_concurrently
     from ..streaming.hash_store import (
         dedup_batch_against_store,
-        hash_store_compact,
         hash_store_delete_batch,
         hash_store_update_batch,
     )
@@ -661,20 +647,14 @@ def incremental_hash_dedup_with_deletes(
         _scratch(spark, "incremental_hash_dedup_with_deletes", sf_dir), "hashes"
     )
     shutil.rmtree(store, ignore_errors=True)  # deterministic rebuild per run
-    # guide §2.6: independent history ingests overlap; the compaction
-    # runs once after the pool joins (state: base(b0,b1), consumed=1),
-    # THEN the delete lands as the live tombstone delta — exactly the
-    # sequential harness's store state, with the pending-tombstone
-    # read path still the one under test.
-    run_concurrently(
-        lambda: hash_store_update_batch(
-            docs.where("doc_id % 2 = 0"), store, batch_id=0, compact_every=99
-        ),
-        lambda: hash_store_update_batch(
-            docs.where("doc_id % 2 = 1"), store, batch_id=1, compact_every=99
-        ),
+    hash_store_update_batch(
+        docs.where("doc_id % 2 = 0"), store, batch_id=0, compact_every=2
     )
-    hash_store_compact(spark, store)
+    hash_store_update_batch(  # triggers the compaction: base(b0, b1)
+        docs.where("doc_id % 2 = 1"), store, batch_id=1, compact_every=2
+    )
+    # the delete lands after the compaction as the live tombstone
+    # delta, so the pending-tombstone read path is the one under test
     hash_store_delete_batch(
         docs.where("doc_id % 5 = 0"), store, batch_id=2, compact_every=99
     )
@@ -731,9 +711,8 @@ def incremental_hash_dedup_with_deletes(
         "oracle row — the store was pytest-verified only): two history "
         "micro-batches of documents ingest their sliding-5-gram counts "
         "into the persisted store (streaming/gram_store.py — LSM "
-        "segment layout, O(batch) atomic delta ingests — overlapped from "
-        "a driver thread pool, guide §2.6, then an explicit real "
-        "compaction), then the held-out "
+        "segment layout, O(batch) atomic delta ingest, compact_every=2 "
+        "so the query exercises a real compaction), then the held-out "
         "batch is scored via score_batch_against_store. The result "
         "must equal the one-shot duplicated_spans over the FULL corpus "
         "restricted to the held-out docs (doc_dup_spans semantics — "
@@ -747,9 +726,7 @@ def incremental_hash_dedup_with_deletes(
 def incremental_gram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
-    from ..streaming.backfill import run_concurrently
     from ..streaming.gram_store import (
-        gram_store_compact,
         gram_store_update_batch,
         score_batch_against_store,
     )
@@ -759,19 +736,12 @@ def incremental_gram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(store, ignore_errors=True)  # deterministic rebuild per run
     history = docs.where("doc_id % 3 != 0")
     incoming = docs.where("doc_id % 3 = 0")
-    # guide §2.6: the two history ingests are independent delta
-    # commits — overlap them; the compaction they used to trigger
-    # (compact_every=2) runs once after the pool joins. Same final
-    # store state as the sequential harness.
-    run_concurrently(
-        lambda: gram_store_update_batch(
-            history.where("doc_id % 2 = 0"), store, batch_id=0, compact_every=99
-        ),
-        lambda: gram_store_update_batch(
-            history.where("doc_id % 2 = 1"), store, batch_id=1, compact_every=99
-        ),
+    gram_store_update_batch(
+        history.where("doc_id % 2 = 0"), store, batch_id=0, compact_every=2
     )
-    gram_store_compact(spark, store)
+    gram_store_update_batch(  # triggers the compaction: base(b0, b1)
+        history.where("doc_id % 2 = 1"), store, batch_id=1, compact_every=2
+    )
     return score_batch_against_store(incoming, store)
 
 
@@ -791,9 +761,8 @@ _NEARDUP_DOC = (
     "half): two history micro-batches ingest their documents' MinHash "
     "signatures + shingle sets into the persisted store "
     "(streaming/lsh_store.py — LSM segment layout, O(batch) atomic "
-    "delta ingests — overlapped from a driver thread pool, guide "
-    "§2.6, then an explicit real compaction), then the held-out "
-    "batch is LSH-candidated and "
+    "delta ingest, compact_every=2 so the query exercises a real "
+    "compaction), then the held-out batch is LSH-candidated and "
     "Jaccard-verified against (history ∪ batch) WITHOUT rescanning "
     "any stored text. The pair path over the union signatures is "
     "lsh_pairs_from_signatures — the identical code the one-shot "
@@ -815,9 +784,7 @@ _NEARDUP_DOC = (
 def incremental_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
-    from ..streaming.backfill import run_concurrently
     from ..streaming.lsh_store import (
-        lsh_store_compact,
         lsh_store_update_batch,
         neardup_pairs_against_store,
     )
@@ -827,17 +794,12 @@ def incremental_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(store, ignore_errors=True)  # deterministic rebuild per run
     history = docs.where("doc_id % 3 != 0")
     incoming = docs.where("doc_id % 3 = 0")
-    # guide §2.6: independent history ingests overlap; the compaction
-    # runs once after the pool joins — same final store state.
-    run_concurrently(
-        lambda: lsh_store_update_batch(
-            history.where("doc_id % 2 = 0"), store, batch_id=0, compact_every=99
-        ),
-        lambda: lsh_store_update_batch(
-            history.where("doc_id % 2 = 1"), store, batch_id=1, compact_every=99
-        ),
+    lsh_store_update_batch(
+        history.where("doc_id % 2 = 0"), store, batch_id=0, compact_every=2
     )
-    lsh_store_compact(spark, store)
+    lsh_store_update_batch(  # triggers the compaction: base(b0, b1)
+        history.where("doc_id % 2 = 1"), store, batch_id=1, compact_every=2
+    )
     return neardup_pairs_against_store(incoming, store)
 
 
@@ -857,9 +819,7 @@ def incremental_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def incremental_neardup_pairs_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
-    from ..streaming.backfill import run_concurrently
     from ..streaming.lsh_store import (
-        lsh_store_compact,
         lsh_store_update_batch,
         neardup_pairs_against_store,
     )
@@ -871,17 +831,12 @@ def incremental_neardup_pairs_slice(spark: SparkSession, sf_dir: str) -> DataFra
     shutil.rmtree(store, ignore_errors=True)  # deterministic rebuild per run
     history = docs.where("doc_id % 3 != 0")
     incoming = docs.where("doc_id % 3 = 0")
-    # guide §2.6: independent history ingests overlap; the compaction
-    # runs once after the pool joins — same final store state.
-    run_concurrently(
-        lambda: lsh_store_update_batch(
-            history.where("doc_id % 2 = 0"), store, batch_id=0, compact_every=99
-        ),
-        lambda: lsh_store_update_batch(
-            history.where("doc_id % 2 = 1"), store, batch_id=1, compact_every=99
-        ),
+    lsh_store_update_batch(
+        history.where("doc_id % 2 = 0"), store, batch_id=0, compact_every=2
     )
-    lsh_store_compact(spark, store)
+    lsh_store_update_batch(  # triggers the compaction: base(b0, b1)
+        history.where("doc_id % 2 = 1"), store, batch_id=1, compact_every=2
+    )
     return neardup_pairs_against_store(incoming, store, band_slice=(8, 0))
 
 
@@ -1125,9 +1080,9 @@ def scd2_bootstrap_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "VERDICT task-7 streaming surface): events ingest their "
         "per-(day, user) additive partials into the persisted store "
         "(streaming/window_store.py — LSM segment layout, O(batch) "
-        "atomic delta ingests — b0/b1 overlapped from a driver thread "
-        "pool, guide §2.6, then an explicit real sum-merge compaction "
-        "AND a post-compaction live delta), then the reference's rolling-recency report "
+        "atomic delta ingest, compact_every=2 so the query exercises "
+        "a real sum-merge compaction AND a post-compaction live "
+        "delta), then the reference's rolling-recency report "
         "(README.md:224-246 P30D-style predicates, here at P7D for "
         "fixture discrimination) is computed from the STORE alone — "
         "no event re-scan. Must equal the same report over the raw "
@@ -1142,29 +1097,20 @@ def scd2_bootstrap_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def incremental_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
-    from ..streaming.backfill import run_concurrently
     from ..streaming.window_store import (
         recency_report_from_store,
-        window_store_compact,
         window_store_update_batch,
     )
 
     events = load_table(spark, sf_dir, "events")
     store = os.path.join(_scratch(spark, "incremental_window", sf_dir), "windows")
     shutil.rmtree(store, ignore_errors=True)  # deterministic rebuild per run
-    # guide §2.6: b0/b1 are independent delta commits — overlap them,
-    # then compact once (base(b0,b1), consumed=1); b2 lands AFTER the
-    # compaction so it stays the live delta the read must merge — the
-    # sequential harness's exact store state.
-    run_concurrently(
-        lambda: window_store_update_batch(
-            events.where("event_id % 3 = 0"), store, batch_id=0, compact_every=99
-        ),
-        lambda: window_store_update_batch(
-            events.where("event_id % 3 = 1"), store, batch_id=1, compact_every=99
-        ),
+    window_store_update_batch(
+        events.where("event_id % 3 = 0"), store, batch_id=0, compact_every=2
     )
-    window_store_compact(spark, store)
+    window_store_update_batch(  # triggers the compaction: base(b0, b1)
+        events.where("event_id % 3 = 1"), store, batch_id=1, compact_every=2
+    )
     window_store_update_batch(  # stays a live delta on the compacted base
         events.where("event_id % 3 = 2"), store, batch_id=2, compact_every=99
     )
@@ -1195,9 +1141,8 @@ def incremental_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "EXECUTED streaming-decontamination round-trip (r11): the "
         "eval split (doc_id % 29 = 0, standing in for a benchmark "
         "corpus) ingests its 8-gram hashes into the persisted gram "
-        "store in two micro-batches (overlapped from a driver thread "
-        "pool, guide §2.6, then an explicit real compaction), then "
-        "the TRAINING split is "
+        "store in two micro-batches (compact_every=2, so the query "
+        "exercises a real compaction), then the TRAINING split is "
         "screened via contamination_against_store — one equi-join "
         "against the slim stored gram set, no benchmark re-scan. Must "
         "equal the one-shot doc_decontaminate semantics over the same "
@@ -1210,10 +1155,8 @@ def incremental_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def incremental_decontam_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
-    from ..streaming.backfill import run_concurrently
     from ..streaming.gram_store import (
         contamination_against_store,
-        gram_store_compact,
         gram_store_update_batch,
     )
 
@@ -1222,17 +1165,12 @@ def incremental_decontam_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(store, ignore_errors=True)  # deterministic rebuild per run
     bench = docs.where("doc_id % 29 = 0")
     train = docs.where("doc_id % 29 != 0")
-    # guide §2.6: independent benchmark ingests overlap; the compaction
-    # runs once after the pool joins — same final store state.
-    run_concurrently(
-        lambda: gram_store_update_batch(
-            bench.where("doc_id % 2 = 0"), store, batch_id=0, k=8, compact_every=99
-        ),
-        lambda: gram_store_update_batch(
-            bench.where("doc_id % 2 = 1"), store, batch_id=1, k=8, compact_every=99
-        ),
+    gram_store_update_batch(
+        bench.where("doc_id % 2 = 0"), store, batch_id=0, k=8, compact_every=2
     )
-    gram_store_compact(spark, store)
+    gram_store_update_batch(  # triggers the compaction: base(b0, b1)
+        bench.where("doc_id % 2 = 1"), store, batch_id=1, k=8, compact_every=2
+    )
     return contamination_against_store(train, store, k=8)
 
 
@@ -1285,10 +1223,8 @@ def incremental_decontam_flags_with_deletes(
 ) -> DataFrame:
     import shutil
 
-    from ..streaming.backfill import run_concurrently
     from ..streaming.gram_store import (
         contamination_against_store,
-        gram_store_compact,
         gram_store_delete_batch,
         gram_store_update_batch,
     )
@@ -1300,19 +1236,14 @@ def incremental_decontam_flags_with_deletes(
     shutil.rmtree(store, ignore_errors=True)  # deterministic rebuild per run
     bench = docs.where("doc_id % 29 = 0")
     train = docs.where("doc_id % 29 != 0")
-    # guide §2.6: independent benchmark ingests overlap; the compaction
-    # runs once after the pool joins, THEN the erasure lands as the
-    # live negative-partial delta — the sequential harness's state,
-    # with the subtracting merge still the path under test.
-    run_concurrently(
-        lambda: gram_store_update_batch(
-            bench.where("doc_id % 2 = 0"), store, batch_id=0, k=8, compact_every=99
-        ),
-        lambda: gram_store_update_batch(
-            bench.where("doc_id % 2 = 1"), store, batch_id=1, k=8, compact_every=99
-        ),
+    gram_store_update_batch(
+        bench.where("doc_id % 2 = 0"), store, batch_id=0, k=8, compact_every=2
     )
-    gram_store_compact(spark, store)
+    gram_store_update_batch(  # triggers the compaction: base(b0, b1)
+        bench.where("doc_id % 2 = 1"), store, batch_id=1, k=8, compact_every=2
+    )
+    # the erasure lands after the compaction as the live
+    # negative-partial delta, so the subtracting merge is under test
     gram_store_delete_batch(  # eval-set refresh: erase half the bench
         bench.where("doc_id % 2 = 0"), store, batch_id=2, k=8, compact_every=99
     )
@@ -1632,9 +1563,8 @@ def incremental_dup_clusters_slice(spark: SparkSession, sf_dir: str) -> DataFram
         "their per-term distinct-document counts AND their document "
         "counts into the persisted vocabulary store "
         "(streaming/df_store.py — LSM segment layout, additive partials "
-        "in one atomic delta so df and n_docs can never tear; ingests "
-        "overlapped from a driver thread pool, guide §2.6, then an "
-        "explicit real compaction), "
+        "in one atomic delta so df and n_docs can never tear, "
+        "compact_every=2 so the query exercises a real compaction), "
         "then the held-out batch's top-3 TF-IDF terms are scored with "
         "df/n_docs covering (history ∪ batch) — the store semi-join-"
         "pruned to the batch's vocabulary, NO corpus re-scan. Must "
@@ -1649,9 +1579,7 @@ def incremental_dup_clusters_slice(spark: SparkSession, sf_dir: str) -> DataFram
 def incremental_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
-    from ..streaming.backfill import run_concurrently
     from ..streaming.df_store import (
-        df_store_compact,
         df_store_update_batch,
         tfidf_batch_against_store,
     )
@@ -1661,15 +1589,10 @@ def incremental_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(store, ignore_errors=True)  # deterministic rebuild per run
     history = docs.where("doc_id % 3 != 0")
     incoming = docs.where("doc_id % 3 = 0")
-    # guide §2.6: independent history ingests overlap; the compaction
-    # runs once after the pool joins — same final store state.
-    run_concurrently(
-        lambda: df_store_update_batch(
-            history.where("doc_id % 2 = 0"), store, batch_id=0, compact_every=99
-        ),
-        lambda: df_store_update_batch(
-            history.where("doc_id % 2 = 1"), store, batch_id=1, compact_every=99
-        ),
+    df_store_update_batch(
+        history.where("doc_id % 2 = 0"), store, batch_id=0, compact_every=2
     )
-    df_store_compact(spark, store)
+    df_store_update_batch(  # triggers the compaction: base(b0, b1)
+        history.where("doc_id % 2 = 1"), store, batch_id=1, compact_every=2
+    )
     return tfidf_batch_against_store(incoming, store)

@@ -1606,18 +1606,17 @@ def dedup_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         .transform(tracked_cache)
     )
     # materialize the shared shingle cache once, then fill the two
-    # arms' INDEPENDENT pair caches from two driver threads (r15,
-    # guide §2.6). Without the sequencing, the final plan's broadcast
-    # subtrees (nb, nboth) and the main job (na) race to build the
-    # same caches concurrently and recompute partitions the other
-    # thread already stored (measured: duplicated cache fills, full
-    # query slower than the sum of its stages). The roll-up below
-    # then reads warm caches; results are unchanged — the caches live
-    # and die inside this query (tracked_cache lifecycle).
-    from ..streaming.backfill import run_concurrently
-
+    # arms' pair caches one after the other (r15). Without the
+    # sequencing, the final plan's broadcast subtrees (nb, nboth) and
+    # the main job (na) race to build the same caches concurrently and
+    # recompute partitions the other already stored (measured:
+    # duplicated cache fills, full query slower than the sum of its
+    # stages). The roll-up below then reads warm caches; results are
+    # unchanged — the caches live and die inside this query
+    # (tracked_cache lifecycle).
     shingled.count()
-    run_concurrently(lambda: sp.count(), lambda: mh.count())
+    sp.count()
+    mh.count()
     na = sp.agg(F.count("*").alias("n_shingle_pairs"))
     nb = mh.agg(F.count("*").alias("n_minhash_pairs"))
     nboth = sp.join(mh, ["id_a", "id_b"]).agg(F.count("*").alias("n_both"))
@@ -1741,12 +1740,11 @@ def dedup_method_agreement_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("id_a", "id_b")
         .transform(tracked_cache)
     )
-    # same two-thread arm materialization as the full query (r15,
-    # guide §2.6) — see dedup_method_agreement for the measurement
-    from ..streaming.backfill import run_concurrently
-
+    # same cache fills as the full query (r15) — see
+    # dedup_method_agreement for the measurement
     shingled.count()
-    run_concurrently(lambda: sp.count(), lambda: mh.count())
+    sp.count()
+    mh.count()
     na = sp.agg(F.count("*").alias("n_shingle_pairs"))
     nb = mh.agg(F.count("*").alias("n_minhash_pairs"))
     nboth = sp.join(mh, ["id_a", "id_b"]).agg(F.count("*").alias("n_both"))

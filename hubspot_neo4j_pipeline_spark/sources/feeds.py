@@ -166,10 +166,12 @@ def read_feed(
     if path.endswith((".parquet", ".pq")) or "parquet" in path:
         df = spark.read.schema(schema).parquet(path)
     elif keep_corrupt:
-        from pyspark.sql.types import StringType
-
+        # a new StructType: .add would append to the shared FEED_SCHEMAS entry
+        with_corrupt = T.StructType(
+            [*schema.fields, T.StructField("_corrupt_record", T.StringType())]
+        )
         df = (
-            spark.read.schema(schema.add("_corrupt_record", StringType()))
+            spark.read.schema(with_corrupt)
             .option("mode", "PERMISSIVE")
             .option("columnNameOfCorruptRecord", "_corrupt_record")
             .json(path)

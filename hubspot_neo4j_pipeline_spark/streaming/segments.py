@@ -6,7 +6,7 @@ shared by the seven streaming stores. Each store module supplies a
 Layout::
 
     store/
-      meta.json        atomic commit pointer (per-writer tmp + os.replace):
+      meta.json        atomic commit pointer (tmp file + os.replace):
                        {"base": "base-<n>"|null, "consumed_through": k,
                         "n_buckets", "base_n_buckets", "base_rows",
                         plus the store's pinned properties}
@@ -30,6 +30,12 @@ Replay guard and crash contract:
     id > consumed_through;
   * batch ids are scoped to one streaming checkpoint, so a store and
     its checkpoint_dir live and die together.
+
+Writer contract: one writer per store at a time, and a compaction
+never overlaps an ingest. ``foreachBatch`` and the pipeline's day run
+both hand a store one micro-batch at a time from one driver thread;
+nothing in this module locks, so a second concurrent writer is a
+caller error.
 
 Lifecycle:
   * ``ingest`` runs the replay guard, the store's row builder, one
@@ -100,30 +106,9 @@ def read_meta(store_path: str) -> dict:
 def write_meta(store_path: str, meta: dict) -> None:
     """Atomic commit: tmp file + os.replace — readers see the old or
     the new pointer, never a torn one. This replace is the ONLY
-    mutation that changes what a reader resolves.
-
-    The tmp name is unique per writer (pid + thread id): concurrent
-    INDEPENDENT ingests (streaming/backfill.py, guide §2.6) may pin
-    identical meta values from two driver threads at once, and a
-    shared tmp name would let one writer os.replace the file out from
-    under the other mid-commit (measured: FileNotFoundError under a
-    2-thread backfill). Unique tmps make every replace self-contained;
-    last writer wins, and concurrent pinners write identical dicts by
-    construction (pin values derive from store params and batch
-    schema, not from wall order).
-
-    ``CHECK_CONVERGENT_META`` (r15, r14 VERDICT hardening): the
-    identical-dicts convention above is load-bearing — a future store
-    pinning batch-DEPENDENT meta through a concurrent backfill would
-    corrupt silently. With the flag on (tests), the committed pointer
-    is read back and must equal the dict this writer just wrote; any
-    divergent concurrent pinner trips the assertion in one of the two
-    writers."""
-    import threading
-
-    tmp = os.path.join(
-        store_path, f"{META}.tmp-{os.getpid()}-{threading.get_ident()}"
-    )
+    mutation that changes what a reader resolves. The tmp is
+    ``meta.json.tmp-<pid>``; ``sweep`` removes one a crash left."""
+    tmp = os.path.join(store_path, f"{META}.tmp-{os.getpid()}")
     try:
         with open(tmp, "w") as fh:
             json.dump(meta, fh)
@@ -133,20 +118,6 @@ def write_meta(store_path: str, meta: dict) -> None:
         # a failed dump or replace it is this writer's own leftover
         if os.path.exists(tmp):
             os.remove(tmp)
-    if CHECK_CONVERGENT_META:
-        committed = read_meta(store_path)
-        assert committed == json.loads(json.dumps(meta)), (
-            "non-convergent concurrent write_meta: committed "
-            f"{committed!r} != written {meta!r} — concurrent pinners "
-            "must write identical dicts (streaming/backfill.py)"
-        )
-
-
-# Debug assertion for the concurrent-pinner convention in write_meta —
-# off in production (an extra read per commit), switched on by the
-# test suite (tests/conftest.py) so every store tour the tests run
-# verifies the convention end-to-end.
-CHECK_CONVERGENT_META = False
 
 
 def committed_deltas(store_path: str) -> dict[int, str]:
@@ -176,32 +147,21 @@ def live_deltas(store_path: str, meta: dict | None = None) -> dict[int, str]:
 def sweep(store_path: str, meta: dict) -> None:
     """Remove leftovers a crash between commit and cleanup can strand:
     consumed deltas, base dirs meta doesn't point to, orphan _tmp
-    ingest dirs. Nothing here is reader-resolvable, but sweep must NOT
-    run concurrently with an in-flight ingest of the same store (the
-    documented no-compaction-during-ingest discipline,
-    streaming/backfill.py): it would tear a mid-write ``_tmp-`` dir.
-    Meta tmp files are additionally pid-guarded below, so even a
-    misplaced concurrent sweep cannot yank a live writer's tmp out
-    from under its os.replace (r15, r14 ADVICE)."""
+    ingest dirs and ``meta.json.tmp-*`` files. Nothing here is
+    reader-resolvable. Under the writer contract (module docstring)
+    no ingest or meta write of the same store is in flight while
+    sweep runs, so every leftover is fair game, this process's own
+    included."""
     for bid, path in committed_deltas(store_path).items():
         if bid <= meta["consumed_through"]:
             shutil.rmtree(path, ignore_errors=True)
-    own_prefix = f"{META}.tmp-{os.getpid()}-"
     for name in os.listdir(store_path):
         full = os.path.join(store_path, name)
         if name.startswith("base-") and name != (meta["base"] or ""):
             shutil.rmtree(full, ignore_errors=True)
         elif name.startswith("_tmp-"):
             shutil.rmtree(full, ignore_errors=True)
-        elif name.startswith(META + ".tmp") and not name.startswith(
-            own_prefix
-        ):
-            # a crash between write_meta's dump and replace strands a
-            # per-writer tmp file (never reader-resolvable). The name
-            # encodes the writer's pid: tmps of THIS process are
-            # skipped — they may belong to an in-flight write_meta on
-            # another driver thread; a dead process's tmps (different
-            # pid) are always fair game.
+        elif name.startswith(META + ".tmp"):
             try:
                 os.remove(full)
             except OSError:
@@ -906,10 +866,8 @@ def ingest(
     meta["n_buckets"] = n_buckets = meta.get("n_buckets") or n_buckets
     delta = build(meta, n_buckets, batch_id)
     if meta != on_disk:
-        # the bucket count and the builder's pins in ONE write: two
-        # concurrent first ingests then write identical dicts, where a
-        # write per pin let one writer's later pin land between the
-        # other's write and its read-back (write_meta)
+        # the bucket count and the builder's pins in ONE write: a
+        # first ingest's pins land together or not at all
         write_meta(store_path, meta)
     commit_delta(
         delta, store_path, batch_id, bucket_col=spec.bucket_col,

@@ -9,14 +9,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = "/root/testdata/sf0.001"
 
-# Every store tour the suite runs doubles as a check of the
-# concurrent-pinner convention (write_meta read-back assertion —
-# streaming/segments.py, r15): identical dicts from concurrent
-# writers, or the suite fails loudly instead of corrupting silently.
-from hubspot_neo4j_pipeline_spark.streaming import segments as _segments  # noqa: E402
-
-_segments.CHECK_CONVERGENT_META = True
-
 
 @pytest.fixture(scope="session")
 def spark():

@@ -73,3 +73,12 @@ def test_read_feed_quarantines_corrupt_records(spark, tmp_path):
         assert len(ok) == 1 and ok[0]["id"] == "c9"
     finally:
         df.unpersist()
+
+
+def test_read_feed_keep_corrupt_leaves_feed_schema_alone(spark, tmp_path):
+    p = tmp_path / "contacts.jsonl"
+    p.write_text(json.dumps({"id": "c9"}) + "\n")
+    before = FEED_SCHEMAS["contacts"].fieldNames()
+    df = read_feed(spark, str(p), "contacts", keep_corrupt=True)
+    assert "_corrupt_record" in df.columns
+    assert FEED_SCHEMAS["contacts"].fieldNames() == before

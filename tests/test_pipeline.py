@@ -104,6 +104,45 @@ def test_modified_run_detects_changes(spark, store):
     assert e_log[("OWNED_BY", "c1", "u1")] == "removed"
 
 
+def _node_hash_digest(spark, store) -> tuple[int, str]:
+    """Row count and sha256 of the sorted (label, hubspot_id,
+    snapshot_hash) rows of every stored ``nodes/`` table."""
+    import hashlib
+    import os
+
+    rows = []
+    for label in sorted(os.listdir(os.path.join(store, "nodes"))):
+        path = os.path.join(store, "nodes", label)
+        rows += [
+            f"{label}|{r['hubspot_id']}|{r['snapshot_hash']}"
+            for r in spark.read.parquet(path).select("hubspot_id", "snapshot_hash").collect()
+        ]
+    rows.sort()
+    return len(rows), hashlib.sha256("\n".join(rows).encode()).hexdigest()
+
+
+def test_stored_snapshot_hashes_pinned(spark, tmp_path):
+    """The content hash stored with every node row, pinned on day 0 and
+    after a second run in which one contact (c1) changed owner."""
+    store = str(tmp_path / "graph")
+    run_pipeline(spark, make_crm_feeds(spark), store, now="2024-03-01 00:00:00")
+    assert _node_hash_digest(spark, store) == (
+        17,
+        "916836ec881ed6b57619bb3e21d388efa42aa0b96221f7a8474fbfc63d0a119e",
+    )
+    feeds = make_crm_feeds(spark)
+    feeds["contacts"] = feeds["contacts"].where("id != 'c1'").unionByName(
+        _modified_feeds(spark)["contacts"].where("id = 'c1'")
+    )
+    res = run_pipeline(spark, feeds, store, now="2024-03-02 00:00:00")
+    log = res.node_changes["HUBSPOT_Contact"].collect()
+    assert [(r["hubspot_id"], r["change_type"]) for r in log] == [("c1", "updated")]
+    assert _node_hash_digest(spark, store) == (
+        17,
+        "32993be66ee4c70877c58de22c2b5de54ebdfb43abd905e33b9a4d88637c5140",
+    )
+
+
 @pytest.fixture(scope="module")
 def empty_label_run(spark, tmp_path_factory):
     """Day-0 load of a feed whose engagements are empty, so the

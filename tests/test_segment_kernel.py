@@ -6,6 +6,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import threading
 
 import pyarrow.parquet as pq
 import pytest
@@ -261,12 +262,27 @@ def test_write_meta_failure_leaves_no_tmp(tmp_path_factory):
     assert not [n for n in os.listdir(store) if n.startswith("meta.json.tmp-")]
 
 
+def test_sweep_removes_stranded_meta_tmps(tmp_path):
+    """A crash between write_meta's dump and its replace strands a
+    ``meta.json.tmp-<pid>`` file (older writers added a thread id).
+    sweep removes every such file, this process's own included, and
+    leaves the committed meta.json."""
+    store = str(tmp_path)
+    meta = {"base": None, "consumed_through": -1, "n_buckets": 32}
+    segments.write_meta(store, meta)
+    own = os.getpid()
+    for tag in (own, f"{own}-{threading.get_ident()}", 999999999):
+        with open(os.path.join(store, f"meta.json.tmp-{tag}"), "w") as fh:
+            fh.write("{")
+    segments.sweep(store, meta)
+    assert sorted(os.listdir(store)) == [segments.META]
+    assert segments.read_meta(store) == meta
+
+
 def test_first_ingest_pins_meta_in_one_write(spark, tmp_path, monkeypatch):
-    """Concurrent first ingests into one store (streaming/backfill.py)
-    must write identical meta dicts. With a write per pin, one writer's
-    gram_k write could land between the other's bucket-count write and
-    its read-back; the bucket count and the builder's pins now go in
-    one write, and a later ingest with the same pins writes nothing."""
+    """A first ingest commits the bucket count and the builder's pins
+    (here gram_k) in one meta write, and a later ingest with the same
+    pins writes nothing."""
     from hubspot_neo4j_pipeline_spark.streaming import gram_store as m
 
     written = []

@@ -266,10 +266,20 @@ def _edge_case_feeds(spark, feeds):
 def test_edge_rows_pinned_on_edge_cases(spark, feeds):
     _, edges = transform_all(_edge_case_feeds(spark, feeds))
     assert _edge_digest(edges) == (
-        34,
-        "75ef06c5facfe8441c66b665e52dab3579752ccf5b437a4fa1b556243971e3aa",
+        30,
+        "df4be5755d1a0140d00d3a46e4298a7139be98dc8dc46a29da5364fa146f2d7d",
     )
     assert edges.schema.json() == EDGE_SCHEMA_JSON
+
+
+def test_edges_have_both_endpoints(spark, feeds):
+    """Association arrays holding a null element or a null id emit no
+    edge: every edge has a from_id and a to_id."""
+    import pyspark.sql.functions as F
+
+    _, edges = transform_all(_edge_case_feeds(spark, feeds))
+    dangling = edges.where(F.col("from_id").isNull() | F.col("to_id").isNull())
+    assert dangling.collect() == []
 
 
 def _feed_scans(df) -> dict[str, int]:
