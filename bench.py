@@ -19,6 +19,24 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+SIDECAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_LAST.json")
+
+
+def write_sidecar(line: str, only: set[str], path: str = SIDECAR) -> bool:
+    """Copy the printed line to ``BENCH_LAST.json`` (r15, r14 VERDICT
+    item 8): a file the size of the line can never be tail-truncated
+    the way a captured stdout tail can. Only a full-registry run writes
+    it: the file is tracked and holds the last full bench, so a
+    ``SPARK_GRAFT_BENCH_ONLY`` run leaves it alone. Best-effort (a
+    read-only checkout must not fail the bench); True iff written."""
+    if only:
+        return False
+    try:
+        with open(path, "w") as fh:
+            fh.write(line + "\n")
+    except OSError:
+        return False
+    return True
 
 
 def main() -> None:
@@ -100,18 +118,7 @@ def main() -> None:
         }
     )
     print(line)
-    # sidecar copy of the SAME line (r15, r14 VERDICT item 8): the r14
-    # driver lost its round-over-round comparison because a 2000-char
-    # capture tail truncated the printed JSON mid-stream; a file the
-    # size of the line itself can never be tail-truncated. Printed
-    # contract and measurement unchanged; best-effort (a read-only
-    # checkout must not fail the bench).
-    try:
-        here = os.path.dirname(os.path.abspath(__file__))
-        with open(os.path.join(here, "BENCH_LAST.json"), "w") as fh:
-            fh.write(line + "\n")
-    except OSError:
-        pass
+    write_sidecar(line, only)
 
 
 if __name__ == "__main__":

@@ -32,6 +32,7 @@ from .operators.caching import tracked_cache
 from .operators.scd2 import diff_edges, per_label_counts, scd2_merge, with_temporal_fields
 from .operators.transforms import transform_all
 from .sources.feeds import FEED_SCHEMAS, read_feed
+from .streaming.segments import read_parquet
 
 
 @dataclass
@@ -67,7 +68,7 @@ def run_pipeline(
         cur_path = _node_dir(store, "nodes", label)
         incoming = tracked_cache(incoming)
         if os.path.exists(cur_path):
-            current = spark.read.parquet(cur_path)
+            current = read_parquet(spark, cur_path)
             # all three outputs are written below -> run the merge join ONCE
             res = scd2_merge(
                 current, incoming, key="hubspot_id", now=now, materialize=True
@@ -96,7 +97,9 @@ def run_pipeline(
     edges = tracked_cache(edges)
     edges_path = os.path.join(store, "edges")
     if os.path.exists(edges_path):
-        current_edges = spark.read.parquet(edges_path)
+        current_edges = read_parquet(
+            spark, edges_path, partitions={"rel_type": "string"}
+        )
         eres = diff_edges(current_edges, edges, now=now)
         # lineage cut before overwrite — see node-loop comment
         new_edges = eres.edges.localCheckpoint(eager=True)

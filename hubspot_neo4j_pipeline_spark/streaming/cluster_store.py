@@ -75,7 +75,7 @@ model.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import segments, tombstones
@@ -348,11 +348,12 @@ def dedup_verdicts_from_store(
     cluster with NO keeper — a consumer computing a keeplist from the
     store after deletes would drop every survivor. With the flag set,
     the keeper is re-elected READ-side as the min LIVE member per
-    surviving cluster: one aggregation over the slim assignment table,
-    no stored-label mutation (labels stay opaque ids; the store is
-    untouched). Clusters whose canonical is still live elect the same
-    keeper as the default rule, so the flag only changes answers for
-    erased-canonical clusters."""
+    surviving cluster: a window over the slim assignment table, so the
+    store is scanned and joined once either way, and no stored-label
+    mutation (labels stay opaque ids; the store is untouched). Clusters
+    whose canonical is still live elect the same keeper as the default
+    rule, so the flag only changes answers for erased-canonical
+    clusters."""
     spark = docs.sparkSession
     ids = docs.select(F.col(id_col).alias("doc_id"))
     try:
@@ -365,26 +366,22 @@ def dedup_verdicts_from_store(
             F.col("doc_id").alias("cluster_id"),
             F.lit(True).alias("keep"),
         )
-    joined = ids.join(assign, "doc_id", "left")
     cluster = F.coalesce("comp", F.col("doc_id"))
     if not reelect_keepers:
-        return joined.select(
+        return ids.join(assign, "doc_id", "left").select(
             "doc_id",
             cluster.alias("cluster_id"),
             (F.col("doc_id") == cluster).alias("keep"),
         )
-    keepers = assign.groupBy("comp").agg(F.min("doc_id").alias("_keeper"))
-    return (
-        joined.join(keepers, "comp", "left")
-        .select(
-            "doc_id",
-            cluster.alias("cluster_id"),
-            # a doc outside the store is its own singleton keeper;
-            # inside, the min live member of its cluster keeps
-            (F.col("doc_id") == F.coalesce("_keeper", F.col("doc_id"))).alias(
-                "keep"
-            ),
-        )
+    keepers = assign.withColumn(
+        "_keeper", F.min("doc_id").over(Window.partitionBy("comp"))
+    )
+    return ids.join(keepers, "doc_id", "left").select(
+        "doc_id",
+        cluster.alias("cluster_id"),
+        # a doc outside the store is its own singleton keeper;
+        # inside, the min live member of its cluster keeps
+        (F.col("doc_id") == F.coalesce("_keeper", F.col("doc_id"))).alias("keep"),
     )
 
 

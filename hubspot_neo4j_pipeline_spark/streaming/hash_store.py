@@ -29,7 +29,7 @@ batch ``exact_dedup`` operator is its oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import segments, tombstones
@@ -161,8 +161,11 @@ def dedup_batch_against_store(
     min id across history and batch; a row is a duplicate iff some
     smaller id carries identical content — exactly
     ``operators/dedup.exact_dedup`` over (history ∪ batch) restricted
-    to the batch's rows. Scale: one hash groupBy over the batch plus
-    one equi-join against the slim store — never touches stored text.
+    to the batch's rows. A row whose ``text_col`` is null has no
+    content hash and is dropped, as ``exact_dedup`` drops it. Scale:
+    one scan of the batch (the within-batch owner is a window over the
+    hash) plus one equi-join against the slim store — never touches
+    stored text.
     """
     spark = batch.sparkSession
     hashed = batch.withColumn("content_hash", F.sha2(F.col(text_col), 256))
@@ -187,10 +190,10 @@ def dedup_batch_against_store(
     # even before ingest (same pre-ingest contract as the gram store's
     # score_batch_against_store); min on the id's NATIVE type, same as
     # the store's owners
-    batch_min = hashed.groupBy("content_hash").agg(
-        F.min(F.col(id_col)).alias("_batch_owner")
+    joined = hashed.where(F.col("content_hash").isNotNull()).withColumn(
+        "_batch_owner",
+        F.min(F.col(id_col)).over(Window.partitionBy("content_hash")),
     )
-    joined = hashed.join(batch_min, "content_hash")
     if store is not None:
         joined = joined.join(store, "content_hash", "left")
     else:

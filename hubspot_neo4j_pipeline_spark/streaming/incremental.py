@@ -88,12 +88,16 @@ def read_current(spark, store_path: str) -> DataFrame | None:
     frame_rows: list[int | None] = []
     if meta["base"]:
         frames.append(
-            spark.read.parquet(os.path.join(store_path, meta["base"]))
+            segments.read_parquet(
+                spark,
+                os.path.join(store_path, meta["base"]),
+                partitions={"_bucket": "int"},
+            )
         )
         frame_rows.append(meta.get("base_rows"))
     for _bid, path in sorted(segments.live_deltas(store_path, meta).items()):
         frames.append(
-            spark.read.parquet(path).where(F.col("_kind") == "current")
+            segments.read_parquet(spark, path).where(F.col("_kind") == "current")
         )
         m = segments.delta_manifest(path)
         frame_rows.append(None if m is None else m.get("rows"))
@@ -170,10 +174,10 @@ def read_history(spark, store_path: str) -> DataFrame | None:
     frames = []
     segs = _history_segments(store_path, meta)
     if segs:
-        frames.append(spark.read.parquet(*segs))
+        frames.append(segments.read_parquet(spark, *segs))
     for _bid, path in sorted(segments.live_deltas(store_path, meta).items()):
         frames.append(
-            spark.read.parquet(path).where(F.col("_kind") == "closed")
+            segments.read_parquet(spark, path).where(F.col("_kind") == "closed")
         )
     if not frames:
         return None
@@ -331,7 +335,9 @@ def scd2_store_compact(
     n_buckets = segments.pin_n_buckets(store_path, meta, n_buckets)
     closed = []
     for _bid, path in sorted(deltas.items()):
-        closed.append(spark.read.parquet(path).where(F.col("_kind") == "closed"))
+        closed.append(
+            segments.read_parquet(spark, path).where(F.col("_kind") == "closed")
+        )
     closed_all = closed[0]
     for f in closed[1:]:
         closed_all = closed_all.unionByName(f)
@@ -366,13 +372,15 @@ def scd2_store_compact(
         )
     elif touched is not None and len(touched) < n_buckets:
         frames = [
-            spark.read.parquet(os.path.join(store_path, meta["base"])).where(
-                F.col("_bucket").isin(touched)  # partition-pruned
-            )
+            segments.read_parquet(
+                spark,
+                os.path.join(store_path, meta["base"]),
+                partitions={"_bucket": "int"},
+            ).where(F.col("_bucket").isin(touched))  # partition-pruned
         ]
         for _bid, path in sorted(deltas.items()):
             frames.append(
-                spark.read.parquet(path).where(F.col("_kind") == "current")
+                segments.read_parquet(spark, path).where(F.col("_kind") == "current")
             )
         allrows = frames[0]
         for f in frames[1:]:
@@ -420,7 +428,7 @@ def scd2_store_compact(
     seg_rows = closed_all.drop(*_META_COLS)
     new_floor = meta.get("history_floor", -1)
     if fold:
-        seg_rows = spark.read.parquet(*old_segs).unionByName(
+        seg_rows = segments.read_parquet(spark, *old_segs).unionByName(
             seg_rows, allowMissingColumns=True
         )
         new_floor = hi

@@ -44,7 +44,15 @@ Lifecycle:
     ``compact_every`` live deltas). A delete is an ingest whose builder
     emits tombstones or negated partials.
   * ``visible_frames`` / ``read_store`` merge the base and the live
-    deltas under the spec's rule.
+    deltas under the spec's rule. Building a read schedules no Spark
+    job before the caller's action: meta, manifests and row counts
+    are driver file reads, and every segment opens through
+    ``read_parquet``, whose schema comes from the first data file's
+    parquet footer, read on the driver with pyarrow — Spark's
+    row-metadata JSON for a Spark-written file, the Arrow schema for a
+    driver-committed delta — plus the bucket column as an int
+    partition. A bare ``spark.read.parquet(path)`` would start a
+    schema-inference job per segment.
   * ``compact`` sweeps, grows the bucket count when the store has
     outgrown it (power-of-2, ROWS_PER_BUCKET rows per bucket, always a
     full rewrite), picks the touched buckets from the delta manifests,
@@ -223,7 +231,7 @@ def _manifest_counts(df, tmp: str, bucket_col: str) -> tuple[list[int], int]:
             )
         return sorted(touched), rows
     per_bucket = (
-        df.sparkSession.read.parquet(tmp).groupBy(bucket_col).count().collect()
+        read_parquet(df.sparkSession, tmp).groupBy(bucket_col).count().collect()
     )
     return sorted(r[0] for r in per_bucket), int(sum(r[1] for r in per_bucket))
 
@@ -561,6 +569,72 @@ def base_row_count(spark, store_path: str, base_name: str) -> int:
     return total
 
 
+SPARK_ROW_METADATA = "org.apache.spark.sql.parquet.row.metadata"
+INFER_NTZ = "spark.sql.parquet.inferTimestampNTZ.enabled"
+
+
+def _first_data_file(path: str) -> str | None:
+    """The first parquet data file under ``path`` in sorted walk order,
+    skipping the names Spark's file index hides (``_``/``.`` prefixes,
+    except ``k=v`` partition dirs); None when there is none."""
+
+    def hidden(name: str) -> bool:
+        return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not hidden(d))
+        for name in sorted(files):
+            if name.endswith(".parquet") and not hidden(name):
+                return os.path.join(root, name)
+    return None
+
+
+def _footer_schema(path: str, infer_ntz: bool):
+    """The Spark schema of one parquet file, from its footer on the
+    driver: the Spark row-metadata JSON of a Spark-written file (what
+    Spark's own non-merging inference reads), else the file's Arrow
+    schema (a driver-committed delta), where a timestamp without a zone
+    is TIMESTAMP_NTZ iff ``infer_ntz``, as in Spark's parquet
+    inference (``spark.sql.parquet.inferTimestampNTZ.enabled``)."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+    from pyspark.sql.types import StructType
+
+    arrow = pq.read_schema(path)
+    spark_json = (arrow.metadata or {}).get(SPARK_ROW_METADATA.encode())
+    if spark_json is not None:
+        return StructType.fromJson(json.loads(spark_json))
+    return from_arrow_schema(arrow, prefer_timestamp_ntz=infer_ntz)
+
+
+def read_parquet(
+    spark: SparkSession, *paths: str, partitions: dict[str, str] | None = None
+) -> DataFrame:
+    """``spark.read.parquet(*paths)`` for parquet the engine wrote,
+    without Spark's schema-inference job: the schema is the first data
+    file's footer (``_footer_schema``) plus the hive partition columns
+    ``partitions`` names (column -> type), appended in order as Spark's
+    inference appends them. All files under ``paths`` share that
+    schema, as every engine writer guarantees. A path set with no data
+    file takes the plain read, so it raises what that read raises."""
+    first = next(filter(None, map(_first_data_file, paths)), None)
+    if first is None:
+        return spark.read.parquet(*paths)
+    from pyspark.sql.types import DataType, StructField, StructType
+
+    infer_ntz = spark.conf.get(INFER_NTZ, "true").lower() == "true"
+    schema = StructType(
+        [
+            *_footer_schema(first, infer_ntz).fields,
+            *(
+                StructField(c, DataType.fromDDL(t))
+                for c, t in (partitions or {}).items()
+            ),
+        ]
+    )
+    return spark.read.schema(schema).parquet(*paths)
+
+
 def write_base(df, store_path: str, base_name: str, bucket_col: str) -> bool:
     """Write a compacted base generation, hive-partitioned by
     ``bucket_col``. Returns False — with the destination REMOVED —
@@ -749,14 +823,18 @@ def visible_frames(
         deltas = live_deltas(store_path, meta)
     segs: list[Segment] = []
     if meta["base"]:
-        f = spark.read.parquet(os.path.join(store_path, meta["base"]))
+        f = read_parquet(
+            spark,
+            os.path.join(store_path, meta["base"]),
+            partitions={spec.bucket_col: "int"},
+        )
         if buckets is not None:
             f = f.where(F.col(spec.bucket_col).isin(buckets))
         segs.append(Segment(meta["consumed_through"], f, meta.get("base_rows"), True))
     for bid, path in sorted(deltas.items()):
         m = delta_manifest(path)
         rows = None if m is None else m.get("rows")
-        segs.append(Segment(bid, spark.read.parquet(path), rows, False))
+        segs.append(Segment(bid, read_parquet(spark, path), rows, False))
     return segs
 
 

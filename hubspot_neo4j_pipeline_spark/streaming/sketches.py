@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ..operators.sketches import cms_grid, cms_merge
 from .incremental import run_foreach_batch
+from .segments import read_parquet
 
 
 def cms_update_batch(
@@ -58,7 +59,7 @@ def cms_update_batch(
     partial = cms_grid(batch_docs)
     last = None
     if os.path.exists(store_path):
-        existing = spark.read.parquet(store_path)
+        existing = read_parquet(spark, store_path)
         if "last_batch_id" in existing.columns:
             last = existing.agg(F.max("last_batch_id")).collect()[0][0]
         if batch_id is not None and last is not None and batch_id <= last:
@@ -108,7 +109,7 @@ def kmv_update_batch(
     spark = batch_docs.sparkSession
     partial = kmv_kmin(batch_docs, k)
     if os.path.exists(store_path):
-        existing = spark.read.parquet(store_path)
+        existing = read_parquet(spark, store_path)
         merged = kmv_merge(k, existing, partial)
     else:
         merged = partial

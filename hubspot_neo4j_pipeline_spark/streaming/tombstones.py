@@ -34,11 +34,11 @@ Mechanism — one extra delta kind on the unchanged segment layer:
   at the same moment they would have been rewritten anyway.
 
 Cost: zero on stores with no pending deletes — readers check the live
-delta schemas (``has_tombstones``, a footer-metadata check on frames
-they already opened) and keep the exact pre-r13 plan when none carry
-``_del``. With pending deletes, the extra work is one aggregate over
-the (usually tiny) tombstone rows plus one equi-join on the store key
-— the same shuffle key the merge already uses.
+delta schemas (``has_tombstones``, a lookup in the footer schemas of
+frames they already opened) and keep the exact pre-r13 plan when none
+carry ``_del``. With pending deletes, the extra work is one aggregate
+over the (usually tiny) tombstone rows plus one equi-join on the store
+key — the same shuffle key the merge already uses.
 
 Semantic notes (documented, not hidden): deleting a doc removes ITS
 rows. In the hash store the tombstone is keyed by content hash (the
@@ -61,8 +61,10 @@ SEQ_COL = "_sbid"
 
 
 def has_tombstones(frames: list[DataFrame]) -> bool:
-    """True iff any frame carries the tombstone column. Frames are
-    already-opened parquet reads, so this is a schema lookup, not I/O."""
+    """True iff any frame carries the tombstone column. The frames come
+    from ``segments.read_parquet``, whose schema is read from a parquet
+    footer on the driver when the frame is opened, so this is a lookup
+    in that schema: no file I/O and no Spark job."""
     return any(TOMB_COL in f.columns for f in frames)
 
 

@@ -314,3 +314,19 @@ def test_py4j_calls_counts_round_trips_per_method(spark):
         with py4j_calls():
             1 / 0
     assert JavaMember.__call__ is original
+
+
+def test_bench_sidecar_only_on_full_registry_run(tmp_path):
+    """``BENCH_LAST.json`` holds the last full-registry bench: a run
+    restricted by ``SPARK_GRAFT_BENCH_ONLY`` prints its line and leaves
+    the file as it was."""
+    import bench
+
+    path = tmp_path / "BENCH_LAST.json"
+    path.write_text("full\n")
+    assert not bench.write_sidecar('{"n_queries": 1}', {"q1"}, str(path))
+    assert path.read_text() == "full\n"
+    assert bench.write_sidecar('{"n_queries": 154}', set(), str(path))
+    assert path.read_text() == '{"n_queries": 154}\n'
+    # a read-only checkout does not fail the bench
+    assert not bench.write_sidecar("x", set(), str(tmp_path / "no" / "f.json"))
