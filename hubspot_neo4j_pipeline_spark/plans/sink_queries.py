@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ..operators.sinks import upsert_nodes, write_training_shards
 from ..sources.tpch import load_table
+from ..streaming.segments import read_parquet
 from .registry import register
 
 _SCRATCH = "/tmp/spark_graft_sinks"
@@ -169,7 +170,8 @@ def shard_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         path,
         partition_cols=("source", "shard_id"),
     )
-    back = spark.read.parquet(path).where(F.col("shard_id") == 3)
+    parts = {"source": "string", "shard_id": "int"}
+    back = read_parquet(spark, path, partitions=parts).where(F.col("shard_id") == 3)
     return back.groupBy("source").agg(
         F.count("*").alias("n_docs"),
         F.sum("n_chars").cast("long").alias("total_chars"),
@@ -207,7 +209,7 @@ def upsert_idempotency_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _scratch(spark, "upsert_idempotency_roundtrip", sf_dir)
     upsert_nodes(feed, path, key="c_custkey")
     upsert_nodes(feed, path, key="c_custkey")  # idempotent re-upsert
-    back = spark.read.parquet(path)
+    back = read_parquet(spark, path)
     return back.groupBy("c_mktsegment").agg(
         F.count("*").alias("n_nodes"),
         F.countDistinct("c_custkey").alias("n_keys"),

@@ -80,7 +80,6 @@ from pyspark.sql import functions as F
 
 from . import segments, tombstones
 
-CLUSTER_STORE_BUCKETS = 32
 COMPACT_EVERY = 8
 
 
@@ -111,7 +110,7 @@ def cluster_store_update_batch(
     id_a: str = "id_a",
     id_b: str = "id_b",
     compact_every: int = COMPACT_EVERY,
-    n_buckets: int = CLUSTER_STORE_BUCKETS,
+    n_buckets: int = segments.START_N_BUCKETS,
     driver_cc_max_edges: int = 200_000,
 ) -> None:
     """Fold one micro-batch of near-dup PAIRS into the assignment
@@ -135,8 +134,8 @@ def cluster_store_update_batch(
         ).withColumn(SPEC.bucket_col, SPEC.bucket_expr(n))
 
     segments.ingest(
-        SPEC, store_path, batch_id, n_buckets, compact_every, build,
-        cluster_store_compact,
+        SPEC, store_path, batch_id, compact_every, build, cluster_store_compact,
+        n_buckets=n_buckets,
     )
 
 
@@ -286,7 +285,7 @@ def _relabel_delta(
 def cluster_store_compact(
     spark: SparkSession,
     store_path: str,
-    n_buckets: int = CLUSTER_STORE_BUCKETS,
+    n_buckets: int = segments.START_N_BUCKETS,
     rows_per_bucket: int = segments.ROWS_PER_BUCKET,
 ) -> None:
     """Fold live deltas into a new doc-bucketed base
@@ -322,8 +321,7 @@ def cluster_store_delete_batch(
         )
 
     segments.ingest(
-        SPEC, store_path, batch_id, CLUSTER_STORE_BUCKETS, compact_every, build,
-        cluster_store_compact,
+        SPEC, store_path, batch_id, compact_every, build, cluster_store_compact
     )
 
 

@@ -45,7 +45,6 @@ from pyspark.sql import functions as F
 
 from . import segments
 
-DF_STORE_BUCKETS = 32
 COMPACT_EVERY = 8
 MIN_TERM_LEN = 3  # doc_tfidf_top_terms' token rule
 # Reserved term key carrying the ingested-document count. A real token
@@ -135,7 +134,7 @@ def df_store_update_batch(
     id_col: str = "doc_id",
     text_col: str = "text",
     compact_every: int = COMPACT_EVERY,
-    n_buckets: int = DF_STORE_BUCKETS,
+    n_buckets: int = segments.START_N_BUCKETS,
 ) -> None:
     """Ingest one micro-batch's (term, df) partials + doc count as an
     atomic delta — O(batch), the existing state is NOT read."""
@@ -146,15 +145,15 @@ def df_store_update_batch(
         )
 
     segments.ingest(
-        SPEC, store_path, batch_id, n_buckets, compact_every, build,
-        df_store_compact,
+        SPEC, store_path, batch_id, compact_every, build, df_store_compact,
+        n_buckets=n_buckets,
     )
 
 
 def df_store_compact(
     spark: SparkSession,
     store_path: str,
-    n_buckets: int = DF_STORE_BUCKETS,
+    n_buckets: int = segments.START_N_BUCKETS,
     rows_per_bucket: int = segments.ROWS_PER_BUCKET,
 ) -> None:
     """Fold live deltas into a new term-bucketed base
@@ -189,8 +188,7 @@ def df_store_delete_batch(
         )
 
     segments.ingest(
-        SPEC, store_path, batch_id, DF_STORE_BUCKETS, compact_every, build,
-        df_store_compact,
+        SPEC, store_path, batch_id, compact_every, build, df_store_compact
     )
 
 

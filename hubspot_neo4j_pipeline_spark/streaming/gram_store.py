@@ -35,7 +35,6 @@ from pyspark.sql import functions as F
 
 from . import segments
 
-GRAM_STORE_BUCKETS = 32
 COMPACT_EVERY = 8
 
 
@@ -92,7 +91,7 @@ def gram_store_update_batch(
     text_col: str = "text",
     k: int | None = None,
     compact_every: int = COMPACT_EVERY,
-    n_buckets: int = GRAM_STORE_BUCKETS,
+    n_buckets: int = segments.START_N_BUCKETS,
 ) -> None:
     """Ingest one micro-batch's sliding-gram counts: write the batch's
     partial (h, n) counts as a new delta segment (O(batch) — the
@@ -107,15 +106,15 @@ def gram_store_update_batch(
         )
 
     segments.ingest(
-        SPEC, store_path, batch_id, n_buckets, compact_every, build,
-        gram_store_compact,
+        SPEC, store_path, batch_id, compact_every, build, gram_store_compact,
+        n_buckets=n_buckets,
     )
 
 
 def gram_store_compact(
     spark: SparkSession,
     store_path: str,
-    n_buckets: int = GRAM_STORE_BUCKETS,
+    n_buckets: int = segments.START_N_BUCKETS,
     _crash_before_commit: bool = False,
     rows_per_bucket: int = segments.ROWS_PER_BUCKET,
 ) -> None:
@@ -159,8 +158,7 @@ def gram_store_delete_batch(
         )
 
     segments.ingest(
-        SPEC, store_path, batch_id, GRAM_STORE_BUCKETS, compact_every, build,
-        gram_store_compact,
+        SPEC, store_path, batch_id, compact_every, build, gram_store_compact
     )
 
 

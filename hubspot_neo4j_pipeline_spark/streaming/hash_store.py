@@ -34,7 +34,6 @@ from pyspark.sql import functions as F
 
 from . import segments, tombstones
 
-HASH_STORE_BUCKETS = 32
 COMPACT_EVERY = 8
 
 
@@ -75,7 +74,7 @@ def hash_store_update_batch(
     id_col: str = "doc_id",
     text_col: str = "text",
     compact_every: int = COMPACT_EVERY,
-    n_buckets: int = HASH_STORE_BUCKETS,
+    n_buckets: int = segments.START_N_BUCKETS,
 ) -> None:
     """Ingest one micro-batch's (hash, min id) rows as an atomic delta
     segment — O(batch), the existing state is NOT read. min is
@@ -102,15 +101,15 @@ def hash_store_update_batch(
         )
 
     segments.ingest(
-        SPEC, store_path, batch_id, n_buckets, compact_every, build,
-        hash_store_compact,
+        SPEC, store_path, batch_id, compact_every, build, hash_store_compact,
+        n_buckets=n_buckets,
     )
 
 
 def hash_store_compact(
     spark: SparkSession,
     store_path: str,
-    n_buckets: int = HASH_STORE_BUCKETS,
+    n_buckets: int = segments.START_N_BUCKETS,
     rows_per_bucket: int = segments.ROWS_PER_BUCKET,
 ) -> None:
     """Fold live deltas into a new hash-bucketed base
@@ -144,8 +143,7 @@ def hash_store_delete_batch(
         )
 
     segments.ingest(
-        SPEC, store_path, batch_id, HASH_STORE_BUCKETS, compact_every, build,
-        hash_store_compact,
+        SPEC, store_path, batch_id, compact_every, build, hash_store_compact
     )
 
 

@@ -41,7 +41,6 @@ def stream_dedup(
 
 
 SCD2_COMPACT_EVERY = 8
-SCD2_STORE_BUCKETS = 32
 _META_COLS = ("_kind", "_ubid", "_bucket")
 
 
@@ -201,7 +200,7 @@ def upsert_batch(
     now: str,
     batch_id: int | None = None,
     compact_every: int = SCD2_COMPACT_EVERY,
-    n_buckets: int = SCD2_STORE_BUCKETS,
+    n_buckets: int = segments.START_N_BUCKETS,
 ) -> None:
     """Merge one (partial) snapshot batch into the SCD2 store:
     new keys insert; changed keys close the old version into history
@@ -314,7 +313,7 @@ def upsert_batch(
 def scd2_store_compact(
     spark,
     store_path: str,
-    n_buckets: int = SCD2_STORE_BUCKETS,
+    n_buckets: int = segments.START_N_BUCKETS,
     rows_per_bucket: int = segments.ROWS_PER_BUCKET,
 ) -> None:
     """Fold live deltas into a fresh key-bucketed current base and
@@ -362,15 +361,17 @@ def scd2_store_compact(
         and meta.get("base_n_buckets") == n_buckets
         else None
     )
-    n_buckets = grown
+    before, n_buckets = n_buckets, grown
     wrote = True
     if touched == []:  # only empty deltas live: carry the base verbatim
+        path = "carry"
         merged_tmp = os.path.join(store_path, f"_tmp-merge-{new_base}")
         os.makedirs(merged_tmp, exist_ok=True)
         segments.assemble_partial_base(
             store_path, meta["base"], merged_tmp, new_base, "_bucket", touched
         )
     elif touched is not None and len(touched) < n_buckets:
+        path = "partial"
         frames = [
             segments.read_parquet(
                 spark,
@@ -404,6 +405,7 @@ def scd2_store_compact(
             store_path, meta["base"], merged_tmp, new_base, "_bucket", touched
         )
     else:
+        path = "full"
         cur = read_current(spark, store_path)
         merged = (
             cur.withColumn("_kind", F.lit("current"))
@@ -462,6 +464,7 @@ def scd2_store_compact(
         },
     )
     _scd2_sweep(store_path, _scd2_meta(store_path))
+    segments.log_compaction(store_path, path, before, n_buckets)
 
 
 def scd2_store_bootstrap(
@@ -557,17 +560,3 @@ def stream_into_store(
         upsert_batch(batch, store_path, key, now, batch_id=batch_id)
 
     run_foreach_batch(stream_df, _sink, checkpoint_dir, timeout_sec)
-
-
-# The exact-substring gram-count store (r8) lives in its own module
-# since the r9 incremental rewrite (delta segments + compaction, no
-# full-store rewrite per batch); names re-exported for callers that
-# import them from here.
-from .gram_store import (  # noqa: E402,F401
-    gram_store_compact,
-    gram_store_last_batch_id,
-    gram_store_update_batch,
-    read_gram_store,
-    score_batch_against_store,
-    stream_gram_store,
-)

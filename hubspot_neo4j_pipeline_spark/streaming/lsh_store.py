@@ -45,7 +45,6 @@ from pyspark.sql import functions as F
 
 from . import segments, tombstones
 
-LSH_STORE_BUCKETS = 32
 COMPACT_EVERY = 8
 
 
@@ -108,7 +107,7 @@ def lsh_store_update_batch(
     id_col: str = "doc_id",
     text_col: str = "text",
     compact_every: int = COMPACT_EVERY,
-    n_buckets: int = LSH_STORE_BUCKETS,
+    n_buckets: int = segments.START_N_BUCKETS,
     doc_rows: DataFrame | None = None,
 ) -> None:
     """Ingest one micro-batch's (doc_id, shingles, sig) rows as an
@@ -121,15 +120,15 @@ def lsh_store_update_batch(
         )
 
     segments.ingest(
-        SPEC, store_path, batch_id, n_buckets, compact_every, build,
-        lsh_store_compact,
+        SPEC, store_path, batch_id, compact_every, build, lsh_store_compact,
+        n_buckets=n_buckets,
     )
 
 
 def lsh_store_compact(
     spark: SparkSession,
     store_path: str,
-    n_buckets: int = LSH_STORE_BUCKETS,
+    n_buckets: int = segments.START_N_BUCKETS,
     rows_per_bucket: int = segments.ROWS_PER_BUCKET,
 ) -> None:
     """Fold live deltas into a new doc-bucketed base
@@ -163,8 +162,7 @@ def lsh_store_delete_batch(
         )
 
     segments.ingest(
-        SPEC, store_path, batch_id, LSH_STORE_BUCKETS, compact_every, build,
-        lsh_store_compact,
+        SPEC, store_path, batch_id, compact_every, build, lsh_store_compact
     )
 
 

@@ -12,7 +12,9 @@ Layout::
                         plus the store's pinned properties}
       base-<n>/<bucket_col>=K/
                        the compacted view, hive-partitioned by the
-                       spec's bucket expression
+                       spec's bucket expression: one bucket (K=0)
+                       until compaction grows it (``compact``); a
+                       ``*_bootstrap`` load starts at ``sized_n_buckets``
       deltas/b<id>/    one directory per ingested batch, written to a
                        _tmp dir and os.rename'd into place (the rename
                        IS the commit), with a _delta_manifest.json of
@@ -39,7 +41,8 @@ caller error.
 
 Lifecycle:
   * ``ingest`` runs the replay guard, the store's row builder, one
-    meta write for the bucket count and the builder's pins,
+    meta write for the bucket count (START_N_BUCKETS on a fresh store,
+    else the pinned count) and the builder's pins,
     ``commit_delta`` and the compaction trigger (every
     ``compact_every`` live deltas). A delete is an ingest whose builder
     emits tombstones or negated partials.
@@ -54,13 +57,17 @@ Lifecycle:
     partition. A bare ``spark.read.parquet(path)`` would start a
     schema-inference job per segment.
   * ``compact`` sweeps, grows the bucket count when the store has
-    outgrown it (power-of-2, ROWS_PER_BUCKET rows per bucket, always a
-    full rewrite), picks the touched buckets from the delta manifests,
-    and then carries the base over (only empty deltas live), merges
-    the touched partitions and hard-links the rest (partial), or
-    rewrites the whole base (full). One meta replace commits it; a
-    final sweep removes what it superseded. Compaction reclaims:
-    tombstones and netted-out rows never reach the new base.
+    outgrown it (doubling from the pinned count until at most
+    ROWS_PER_BUCKET rows per bucket, always a full rewrite), picks the
+    touched buckets from the delta manifests, and then carries the
+    base over (only empty deltas live), merges the touched partitions
+    and hard-links the rest (partial), or rewrites the whole base
+    (full). A store still at one bucket takes the carry or the full
+    path; partial needs two or more. One meta replace commits it; a
+    final sweep removes what it superseded; one INFO record on the
+    ``hubspot_neo4j_pipeline_spark`` logger names the path and the
+    bucket count before and after. Compaction reclaims: tombstones and
+    netted-out rows never reach the new base.
 
 Merge rules (``StoreSpec.merge``):
   * ``min_owner`` — min(value) per key, order-free. Deletes are
@@ -78,9 +85,10 @@ Merge rules (``StoreSpec.merge``):
     ((day, user_id) -> n, total_value).
 
 The SCD2 store (streaming/incremental.py) uses the primitives here
-(meta, ``commit_delta``, manifests, ``sweep``) but keeps its own
-compaction: it folds current and history segments with SCD2 row
-semantics, which none of the three rules express.
+(meta, ``commit_delta``, manifests, the bucket start and growth rule,
+``sweep``, ``log_compaction``) but keeps its own compaction: it folds
+current and history segments with SCD2 row semantics, which none of
+the three rules express.
 """
 
 from __future__ import annotations
@@ -505,21 +513,17 @@ def pin_value(store_path: str, meta: dict, key: str, value) -> None:
     meta[key] = value
 
 
-# Scale-adaptive bucketing (r11, r10 VERDICT task 5). A store's bucket
-# count is still pinned for LAYOUT consistency (every live delta and
-# the base must share one bucketing for partial carry-over), but it is
-# no longer pinned for LIFE: at compaction time — the one moment the
-# whole visible state is rewritten into a single new generation — the
-# count may GROW (power-of-2 steps) when the store has outgrown it.
-# Sizing rule: keep ~ROWS_PER_BUCKET rows per bucket in the compacted
-# base, so per-bucket partition work stays bounded as the store grows
-# 10-1000x; without growth, production batch sizes eventually touch
-# every bucket and partial compaction degrades to the full rewrite.
-# Growth always takes the full-rewrite path (the manifests' bucket ids
-# are meaningless under the new modulus) and commits the new count in
-# the same atomic meta replace as the new base — deltas written after
-# it pick the grown count up from meta via pin_n_buckets.
+# Scale-adaptive bucketing. The bucket count is pinned in meta for
+# LAYOUT consistency (every live delta and the base share one bucketing
+# for partial carry-over), not for LIFE: a fresh store starts at
+# START_N_BUCKETS, so a small store is one bucket file, and compaction
+# doubles the count while the store holds more than ROWS_PER_BUCKET
+# rows per bucket. Growth is a full rewrite (manifest bucket ids mean
+# nothing under a new modulus), committed in the new base's meta
+# replace; later deltas read the grown count from meta. A store created
+# under another count keeps it.
 ROWS_PER_BUCKET = 2_000_000
+START_N_BUCKETS = 1
 
 
 def grown_n_buckets(
@@ -764,7 +768,9 @@ def bootstrap_base(
 def sized_n_buckets(n_rows: int, floor: int = 32) -> int:
     """Bucket count for a bulk load of ``n_rows`` store rows — the
     compaction growth rule applied up front (power-of-2, ~
-    ROWS_PER_BUCKET rows per bucket, never below the default floor)."""
+    ROWS_PER_BUCKET rows per bucket). A bulk load starts a store
+    expected to be large, so unlike a streamed store (START_N_BUCKETS)
+    it never goes below ``floor``."""
     n = floor
     while n_rows > n * ROWS_PER_BUCKET:
         n *= 2
@@ -921,14 +927,15 @@ def ingest(
     spec: StoreSpec,
     store_path: str,
     batch_id: int | None,
-    n_buckets: int,
     compact_every: int,
     build: Callable[[dict, int, int], DataFrame],
     compact: Callable[[SparkSession, str, int], None],
+    n_buckets: int = START_N_BUCKETS,
     est_bytes: int | None = None,
 ) -> None:
     """Commit one batch as an atomic delta: the replay guard (a
-    replayed id returns), the bucket-count pin, ``build(meta,
+    replayed id returns), the bucket-count pin (``n_buckets`` on a
+    fresh store, the pinned count after), ``build(meta,
     n_buckets, batch_id)`` for the delta rows (already carrying the
     bucket column; store-specific pins go in there), ``commit_delta``,
     and ``compact(spark, store_path, n_buckets)`` once
@@ -1003,7 +1010,9 @@ def compact(
         else None
     )
     wrote = True
+    path = "full"
     if touched is not None and len(touched) < grown:
+        path = "partial" if touched else "carry"
         merged_tmp = os.path.join(store_path, f"_tmp-merge-{new_base}")
         if touched:
             segs = visible_frames(spec, spark, store_path, meta, deltas, touched)
@@ -1031,3 +1040,9 @@ def compact(
     }
     write_meta(store_path, new_meta)
     sweep(store_path, new_meta)
+    log_compaction(store_path, path, n_buckets, grown)
+
+
+def log_compaction(store_path: str, path: str, before: int, after: int) -> None:
+    """One INFO record per committed compaction: carry, partial or full."""
+    _log.info("compacted %s: %s, buckets %d -> %d", store_path, path, before, after)

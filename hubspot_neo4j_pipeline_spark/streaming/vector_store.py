@@ -49,7 +49,6 @@ from pyspark.sql import functions as F
 
 from . import segments, tombstones
 
-VECTOR_STORE_BUCKETS = 32
 COMPACT_EVERY = 8
 N_TABLES = 8
 
@@ -148,7 +147,7 @@ def vector_store_update_batch(
     vec_col: str = "embedding",
     n_tables: int = N_TABLES,
     compact_every: int = COMPACT_EVERY,
-    n_buckets: int = VECTOR_STORE_BUCKETS,
+    n_buckets: int = segments.START_N_BUCKETS,
 ) -> None:
     """Ingest one micro-batch's (vec_id, e, norm, LSH buckets) rows as
     an atomic delta — O(batch). First ingest pins the plane set
@@ -191,8 +190,8 @@ def vector_store_update_batch(
         )
 
     segments.ingest(
-        SPEC, store_path, batch_id, n_buckets, compact_every, build,
-        vector_store_compact,
+        SPEC, store_path, batch_id, compact_every, build, vector_store_compact,
+        n_buckets=n_buckets,
         est_bytes=None if v_est is None else v_est * 4,
     )
 
@@ -207,7 +206,7 @@ def read_vector_store(spark: SparkSession, store_path: str) -> DataFrame:
 def vector_store_compact(
     spark: SparkSession,
     store_path: str,
-    n_buckets: int = VECTOR_STORE_BUCKETS,
+    n_buckets: int = segments.START_N_BUCKETS,
     rows_per_bucket: int = segments.ROWS_PER_BUCKET,
 ) -> None:
     """Fold live deltas into a new id-bucketed base
@@ -242,8 +241,7 @@ def vector_store_delete_batch(
         )
 
     segments.ingest(
-        SPEC, store_path, batch_id, VECTOR_STORE_BUCKETS, compact_every, build,
-        vector_store_compact,
+        SPEC, store_path, batch_id, compact_every, build, vector_store_compact
     )
 
 

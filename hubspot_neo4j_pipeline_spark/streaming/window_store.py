@@ -43,7 +43,6 @@ from pyspark.sql import functions as F
 
 from . import segments
 
-WINDOW_STORE_BUCKETS = 32
 COMPACT_EVERY = 8
 
 
@@ -102,7 +101,7 @@ def window_store_update_batch(
     user_col: str = "user_id",
     value_col: str = "value",
     compact_every: int = COMPACT_EVERY,
-    n_buckets: int = WINDOW_STORE_BUCKETS,
+    n_buckets: int = segments.START_N_BUCKETS,
 ) -> None:
     """Ingest one micro-batch's per-(day, user) partial counts as an
     atomic delta — O(batch), the existing state is NOT read."""
@@ -113,15 +112,15 @@ def window_store_update_batch(
         )
 
     segments.ingest(
-        SPEC, store_path, batch_id, n_buckets, compact_every, build,
-        window_store_compact,
+        SPEC, store_path, batch_id, compact_every, build, window_store_compact,
+        n_buckets=n_buckets,
     )
 
 
 def window_store_compact(
     spark: SparkSession,
     store_path: str,
-    n_buckets: int = WINDOW_STORE_BUCKETS,
+    n_buckets: int = segments.START_N_BUCKETS,
     rows_per_bucket: int = segments.ROWS_PER_BUCKET,
 ) -> None:
     """Fold live deltas into a new user-bucketed base
@@ -161,8 +160,7 @@ def window_store_delete_batch(
         )
 
     segments.ingest(
-        SPEC, store_path, batch_id, WINDOW_STORE_BUCKETS, compact_every, build,
-        window_store_compact,
+        SPEC, store_path, batch_id, compact_every, build, window_store_compact
     )
 
 

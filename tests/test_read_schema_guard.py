@@ -1,11 +1,14 @@
-"""Every read of engine-written parquet in the stores and the pipeline
-goes through ``segments.read_parquet``, which takes the schema from a
-footer on the driver. A bare ``spark.read.parquet(path)`` starts a
-schema-inference job before the caller's action; this walks the AST of
-``streaming/`` and ``pipeline.py`` and fails on one. A read that gives
-its schema (``spark.read.schema(s).parquet(path)``) stays allowed, and
-so does the plain read inside ``read_parquet``, its fallback for a
-path with no data file."""
+"""Every read of engine-written parquet in the package goes through
+``segments.read_parquet``, which takes the schema from a footer on the
+driver. A bare ``spark.read.parquet(path)`` starts a schema-inference
+job before the caller's action; this walks the AST of every module of
+the package and fails on one. A read that gives its schema
+(``spark.read.schema(s).parquet(path)``) stays allowed, and so do two
+plain reads: the one inside ``read_parquet``, its fallback for a path
+with no data file, and ``sources/tpch.load_table``, which reads the
+input tables. Those are not engine-written: their timestamps may be
+nanosecond columns that ``load_table`` converts after Spark's own
+inference."""
 from __future__ import annotations
 
 import ast
@@ -13,16 +16,20 @@ import os
 
 import hubspot_neo4j_pipeline_spark as pkg
 
-ALLOWED_FUNCTION = ("streaming/segments.py", "read_parquet")
+ALLOWED_FUNCTIONS = {
+    ("streaming/segments.py", "read_parquet"),
+    ("sources/tpch.py", "load_table"),
+}
 
 
 def _modules():
     root = os.path.dirname(pkg.__file__)
-    yield "pipeline.py", os.path.join(root, "pipeline.py")
-    stream = os.path.join(root, "streaming")
-    for name in sorted(os.listdir(stream)):
-        if name.endswith(".py"):
-            yield f"streaming/{name}", os.path.join(stream, name)
+    for dirpath, dirs, files in os.walk(root):
+        dirs.sort()
+        for name in sorted(files):
+            if name.endswith(".py"):
+                path = os.path.join(dirpath, name)
+                yield os.path.relpath(path, root).replace(os.sep, "/"), path
 
 
 def _schemaless_reads(tree: ast.AST, rel: str) -> list[int]:
@@ -32,7 +39,7 @@ def _schemaless_reads(tree: ast.AST, rel: str) -> list[int]:
     for node in ast.walk(tree):
         if (
             isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
-            and (rel, node.name) == ALLOWED_FUNCTION
+            and (rel, node.name) in ALLOWED_FUNCTIONS
         ):
             allowed |= {id(n) for n in ast.walk(node)}
     return [
@@ -58,11 +65,22 @@ def test_guard_flags_schemaless_reads():
     }
     for src, n in cases.items():
         assert len(_schemaless_reads(ast.parse(src), "x.py")) == n, src
-    src = "def read_parquet(spark, p):\n    return spark.read.parquet(p)"
-    assert _schemaless_reads(ast.parse(src), ALLOWED_FUNCTION[0]) == []
+    for rel, fn in ALLOWED_FUNCTIONS:
+        src = f"def {fn}(spark, p):\n    return spark.read.parquet(p)"
+        assert _schemaless_reads(ast.parse(src), rel) == []
 
 
-def test_store_and_pipeline_reads_give_a_schema():
+def test_guard_walks_every_module():
+    rels = {rel for rel, _path in _modules()}
+    assert {
+        "pipeline.py",
+        "plans/sink_queries.py",
+        "sources/tpch.py",
+        "streaming/segments.py",
+    } <= rels
+
+
+def test_package_reads_give_a_schema():
     found = {}
     for rel, path in _modules():
         with open(path) as fh:

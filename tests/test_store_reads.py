@@ -120,7 +120,7 @@ def stores(spark, tmp_path_factory):
     root = tmp_path_factory.mktemp("reads")
     out = {}
     for name, (setup, bucket_col) in sorted(STORES.items()):
-        setup(spark, str(root / name))
+        setup(spark, str(root / name), 32)
         out[name] = (str(root / name), bucket_col)
     _scd2(spark, str(root / "scd2"))
     out["scd2"] = (str(root / "scd2"), "_bucket")

@@ -910,7 +910,7 @@ def test_partial_compaction_links_untouched_buckets(spark, tmp_path_factory):
         "doc_id", "text"
     )
     store = str(tmp_path_factory.mktemp("gram_partial")) + "/store"
-    gram_store_update_batch(docs, store, batch_id=0)
+    gram_store_update_batch(docs, store, batch_id=0, n_buckets=32)
     gram_store_compact(spark, store)
     meta0 = segments.read_meta(store)
     assert meta0["base"] == "base-0" and meta0["base_n_buckets"] == 32
@@ -987,7 +987,7 @@ def test_hash_store_partial_compaction_links_untouched_buckets(
         "doc_id", "text"
     )
     store = str(tmp_path_factory.mktemp("hash_partial")) + "/store"
-    hash_store_update_batch(docs, store, batch_id=0)
+    hash_store_update_batch(docs, store, batch_id=0, n_buckets=32)
     hash_store_compact(spark, store)
     base0 = os.path.join(store, segments.read_meta(store)["base"])
 
@@ -1057,7 +1057,9 @@ def test_scd2_store_partial_compaction_links_untouched_buckets(
     small = spark.createDataFrame([(7, "CHANGED"), (9001, "new")], schema)
 
     store = str(tmp_path_factory.mktemp("scd2_partial")) + "/store"
-    upsert_batch(big, store, key="k", now="2024-01-01 00:00:00", batch_id=0)
+    upsert_batch(
+        big, store, key="k", now="2024-01-01 00:00:00", batch_id=0, n_buckets=32
+    )
     scd2_store_compact(spark, store)
     base0 = os.path.join(store, segments.read_meta(store)["base"])
 
