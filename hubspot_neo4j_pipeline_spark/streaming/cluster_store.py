@@ -75,6 +75,8 @@ model.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -123,7 +125,7 @@ def cluster_store_update_batch(
     upstream plan feeding ``pairs`` executes exactly once. min-merge
     makes even a replay-guard bypass harmless."""
 
-    def build(meta: dict, n: int, _bid: int) -> DataFrame:
+    def build(meta: dict, _bid: int) -> DataFrame:
         # ids must stay one orderable type store-wide: min(comp) is
         # numeric for numeric ids, lexicographic for strings — mixed
         # ingest would unionByName-coerce and silently flip the order
@@ -131,7 +133,7 @@ def cluster_store_update_batch(
         segments.pin_value(store_path, meta, "id_type", id_type)
         return _relabel_delta(
             pairs, store_path, id_a, id_b, id_type, driver_cc_max_edges
-        ).withColumn(SPEC.bucket_col, SPEC.bucket_expr(n))
+        )
 
     segments.ingest(
         SPEC, store_path, batch_id, compact_every, build, cluster_store_compact,
@@ -282,16 +284,10 @@ def _relabel_delta(
     return delta
 
 
-def cluster_store_compact(
-    spark: SparkSession,
-    store_path: str,
-    n_buckets: int = segments.START_N_BUCKETS,
-    rows_per_bucket: int = segments.ROWS_PER_BUCKET,
-) -> None:
-    """Fold live deltas into a new doc-bucketed base
-    (``segments.compact``). The merge rule is min(comp) per doc_id, so
-    compaction order and replayed deltas cannot corrupt assignments."""
-    segments.compact(SPEC, spark, store_path, n_buckets, rows_per_bucket)
+# Fold live deltas into a new doc-bucketed base. The merge rule is
+# min(comp) per doc_id, so compaction order and replayed deltas cannot
+# corrupt assignments.
+cluster_store_compact = functools.partial(segments.compact, SPEC)
 
 
 def cluster_store_delete_batch(
@@ -312,12 +308,11 @@ def cluster_store_delete_batch(
     SURVIVORS re-elect read-side via
     ``dedup_verdicts_from_store(..., reelect_keepers=True)``."""
 
-    def build(_meta: dict, n: int, _bid: int) -> DataFrame:
+    def build(_meta: dict, _bid: int) -> DataFrame:
         return (
             ids.select(F.col(id_col).alias("doc_id"))
             .distinct()
             .withColumn(tombstones.TOMB_COL, F.lit(True))
-            .withColumn(SPEC.bucket_col, SPEC.bucket_expr(n))
         )
 
     segments.ingest(
@@ -404,10 +399,11 @@ def stream_dedup_clusters(
     yields the identical pair set, so the replay completes the cluster
     fold it crashed before. checkpoint_dir lives and dies with BOTH
     store paths (segments.py lifecycle contract)."""
-    from .incremental import run_foreach_batch
-    from .lsh_store import lsh_store_update_batch, neardup_pairs_against_store
-
-    from .lsh_store import _doc_rows
+    from .lsh_store import (
+        _doc_rows,
+        lsh_store_update_batch,
+        neardup_pairs_against_store,
+    )
 
     def _sink(batch: DataFrame, batch_id: int) -> None:
         if segments.already_ingested(cluster_store_path, batch_id):
@@ -428,7 +424,7 @@ def stream_dedup_clusters(
             pairs, cluster_store_path, batch_id, compact_every=compact_every
         )
 
-    run_foreach_batch(stream_df, _sink, checkpoint_dir, timeout_sec)
+    segments.run_foreach_batch(stream_df, _sink, checkpoint_dir, timeout_sec)
 
 
 def cluster_store_bootstrap(
@@ -439,21 +435,19 @@ def cluster_store_bootstrap(
 ) -> None:
     """Day-0 bulk load: one-shot distributed CC over the existing
     corpus' full pair set (the initial clustering a production dedup
-    runs ONCE in batch), written directly as the first compacted base;
+    runs ONCE in batch), written directly as the first compacted base
+    (``segments.bootstrap``, sized by the distinct pair endpoints);
     incremental pair batches then maintain it. Equivalent state to
     folding the same pairs through update_batch, pinned by test."""
     from ..operators.graph import connected_components
 
-    id_type = dict(pairs.dtypes)[id_a]
     labels = connected_components(pairs, src=id_a, dst=id_b).select(
         F.col("id").alias("doc_id"), "comp"
     )
     n_rows = pairs.select(id_a).unionByName(
         pairs.select(F.col(id_b).alias(id_a))
     ).distinct().count()
-    n_buckets = segments.sized_n_buckets(n_rows)
-    rows = labels.withColumn(SPEC.bucket_col, SPEC.bucket_expr(n_buckets))
-    segments.bootstrap_base(
-        rows, store_path, SPEC.bucket_col, n_buckets,
-        extra_meta={"id_type": id_type},
+    segments.bootstrap(
+        SPEC, store_path, labels, n_rows,
+        extra_meta={"id_type": dict(pairs.dtypes)[id_a]},
     )

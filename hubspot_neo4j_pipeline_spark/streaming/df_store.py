@@ -40,6 +40,8 @@ TF-IDF operator as ground truth.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -139,10 +141,8 @@ def df_store_update_batch(
     """Ingest one micro-batch's (term, df) partials + doc count as an
     atomic delta — O(batch), the existing state is NOT read."""
 
-    def build(_meta: dict, n: int, _bid: int) -> DataFrame:
-        return _partial_df(batch, id_col, text_col).withColumn(
-            SPEC.bucket_col, SPEC.bucket_expr(n)
-        )
+    def build(_meta: dict, _bid: int) -> DataFrame:
+        return _partial_df(batch, id_col, text_col)
 
     segments.ingest(
         SPEC, store_path, batch_id, compact_every, build, df_store_compact,
@@ -150,16 +150,10 @@ def df_store_update_batch(
     )
 
 
-def df_store_compact(
-    spark: SparkSession,
-    store_path: str,
-    n_buckets: int = segments.START_N_BUCKETS,
-    rows_per_bucket: int = segments.ROWS_PER_BUCKET,
-) -> None:
-    """Fold live deltas into a new term-bucketed base
-    (``segments.compact``). The reserved doc-count row sum-merges like
-    any term; it only nets to 0 when every doc was retracted."""
-    segments.compact(SPEC, spark, store_path, n_buckets, rows_per_bucket)
+# Fold live deltas into a new term-bucketed base. The reserved doc-count
+# row sum-merges like any term; it only nets to 0 when every doc was
+# retracted.
+df_store_compact = functools.partial(segments.compact, SPEC)
 
 
 def df_store_delete_batch(
@@ -180,11 +174,10 @@ def df_store_delete_batch(
     token rule. Contract: delete only previously-ingested docs, each
     at most once."""
 
-    def build(_meta: dict, n: int, _bid: int) -> DataFrame:
+    def build(_meta: dict, _bid: int) -> DataFrame:
         return (
             _partial_df(deleted_docs, id_col, text_col)
             .select("term", (-F.col("df")).cast("long").alias("df"))
-            .withColumn(SPEC.bucket_col, SPEC.bucket_expr(n))
         )
 
     segments.ingest(
@@ -264,26 +257,8 @@ def tfidf_batch_against_store(
     )
 
 
-def stream_df_store(
-    stream_df: DataFrame,
-    store_path: str,
-    checkpoint_dir: str,
-    timeout_sec: int = 120,
-    compact_every: int = COMPACT_EVERY,
-) -> None:
-    """foreachBatch driver: maintain the vocabulary store as documents
-    stream in. store_path and checkpoint_dir live and die together
-    (segments.py lifecycle contract)."""
-    from .incremental import run_foreach_batch
-
-    run_foreach_batch(
-        stream_df,
-        lambda batch, batch_id: df_store_update_batch(
-            batch, store_path, batch_id, compact_every=compact_every
-        ),
-        checkpoint_dir,
-        timeout_sec,
-    )
+# foreachBatch driver: maintain the vocabulary store as documents stream in.
+stream_df_store = segments.streamer(df_store_update_batch)
 
 
 def df_store_bootstrap(
@@ -292,14 +267,12 @@ def df_store_bootstrap(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> None:
-    """Day-0 bulk load: the whole existing corpus' (term, df) totals
-    plus its doc count written directly as the first compacted base.
-    Bucket count sized by the corpus' document count (vocabulary row
-    count is sublinear in documents, so this over-provisions — the
-    safe direction). Equivalent state to update-then-compact, pinned
-    by test."""
-    n_buckets = segments.sized_n_buckets(corpus.count())
-    rows = _partial_df(corpus, id_col, text_col).withColumn(
-        SPEC.bucket_col, SPEC.bucket_expr(n_buckets)
+    """Day-0 bulk load (``segments.bootstrap``): the whole existing
+    corpus' (term, df) totals plus its doc count as the first
+    compacted base. Bucket count sized by the corpus' document count
+    (vocabulary row count is sublinear in documents, so this
+    over-provisions — the safe direction). Equivalent state to
+    update-then-compact, pinned by test."""
+    segments.bootstrap(
+        SPEC, store_path, _partial_df(corpus, id_col, text_col), corpus.count()
     )
-    segments.bootstrap_base(rows, store_path, SPEC.bucket_col, n_buckets)

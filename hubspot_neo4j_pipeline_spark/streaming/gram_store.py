@@ -30,6 +30,8 @@ one-shot batch operator (operators/dedup.py:202) as its oracle.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -99,11 +101,9 @@ def gram_store_update_batch(
     deltas have accumulated. Without a ``batch_id`` the next free id
     is assigned."""
 
-    def build(meta: dict, n: int, _bid: int) -> DataFrame:
+    def build(meta: dict, _bid: int) -> DataFrame:
         _gram_k_pin(store_path, meta, k)
-        return _partial_counts(batch_docs, id_col, text_col, k).withColumn(
-            SPEC.bucket_col, SPEC.bucket_expr(n)
-        )
+        return _partial_counts(batch_docs, id_col, text_col, k)
 
     segments.ingest(
         SPEC, store_path, batch_id, compact_every, build, gram_store_compact,
@@ -111,22 +111,9 @@ def gram_store_update_batch(
     )
 
 
-def gram_store_compact(
-    spark: SparkSession,
-    store_path: str,
-    n_buckets: int = segments.START_N_BUCKETS,
-    _crash_before_commit: bool = False,
-    rows_per_bucket: int = segments.ROWS_PER_BUCKET,
-) -> None:
-    """Fold every live delta into a new bucket-partitioned base
-    (``segments.compact``); netted-out grams are reclaimed.
-    ``_crash_before_commit`` is a test hook: do all the work but skip
-    the commit, simulating a crash after the new base is written —
-    recovery must leave reads exact and the next compaction must
-    converge to the same state."""
-    segments.compact(
-        SPEC, spark, store_path, n_buckets, rows_per_bucket, _crash_before_commit
-    )
+# Fold every live delta into a new bucket-partitioned base; netted-out
+# grams are reclaimed.
+gram_store_compact = functools.partial(segments.compact, SPEC)
 
 
 def gram_store_delete_batch(
@@ -149,12 +136,11 @@ def gram_store_delete_batch(
     documents previously ingested, each at most once; the gram size
     pin guarantees the negated counts use the store's own k."""
 
-    def build(meta: dict, n: int, _bid: int) -> DataFrame:
+    def build(meta: dict, _bid: int) -> DataFrame:
         _gram_k_pin(store_path, meta, k)
         return (
             _partial_counts(deleted_docs, id_col, text_col, k)
             .select("h", (-F.col("n")).cast("long").alias("n"))
-            .withColumn(SPEC.bucket_col, SPEC.bucket_expr(n))
         )
 
     segments.ingest(
@@ -202,26 +188,9 @@ def score_batch_against_store(
     )
 
 
-def stream_gram_store(
-    stream_df: DataFrame,
-    store_path: str,
-    checkpoint_dir: str,
-    timeout_sec: int = 120,
-    compact_every: int = COMPACT_EVERY,
-) -> None:
-    """foreachBatch driver: maintain the exact gram-count store as
-    documents stream in. store_path and checkpoint_dir live and die
-    together (see module docstring)."""
-    from .incremental import run_foreach_batch  # deferred: avoids import cycle
-
-    run_foreach_batch(
-        stream_df,
-        lambda batch, batch_id: gram_store_update_batch(
-            batch, store_path, batch_id, compact_every=compact_every
-        ),
-        checkpoint_dir,
-        timeout_sec,
-    )
+# foreachBatch driver: maintain the exact gram-count store as documents
+# stream in.
+stream_gram_store = segments.streamer(gram_store_update_batch)
 
 
 def gram_store_bootstrap(
@@ -231,25 +200,21 @@ def gram_store_bootstrap(
     text_col: str = "text",
     k: int | None = None,
 ) -> None:
-    """Day-0 bulk load (r12): the whole existing corpus' (h, n) gram
-    counts written directly as the first compacted base. Unlike the
-    document-keyed stores, the store's row count (distinct grams) is
-    a large MULTIPLE of the document count, so sizing by documents
-    would under-provision — the aggregated partial is checkpointed
-    once and its exact row count drives sized_n_buckets. The gram
-    size pins exactly as update_batch would pin it (a mismatched-k
-    later ingest still fails loudly). Streaming ingest continues on
-    top (batch ids start at 0). Equivalent state to
-    update-then-compact, pinned by test."""
+    """Day-0 bulk load (``segments.bootstrap``): the whole existing
+    corpus' (h, n) gram counts as the first compacted base. Unlike the
+    document-keyed stores, the store's row count (distinct grams) is a
+    large MULTIPLE of the document count, so sizing by documents would
+    under-provision — the aggregated partial is checkpointed once and
+    its exact row count sizes the base. The gram size pins exactly as
+    update_batch would pin it (a mismatched-k later ingest still fails
+    loudly). Equivalent state to update-then-compact, pinned by test."""
     from ..operators.dedup import DEFAULT_SHINGLE
 
     partial = _partial_counts(corpus, id_col, text_col, k).localCheckpoint(
         eager=True
     )
-    n_buckets = segments.sized_n_buckets(partial.count())
-    rows = partial.withColumn(SPEC.bucket_col, SPEC.bucket_expr(n_buckets))
-    segments.bootstrap_base(
-        rows, store_path, SPEC.bucket_col, n_buckets,
+    segments.bootstrap(
+        SPEC, store_path, partial, partial.count(),
         extra_meta={"gram_k": k or DEFAULT_SHINGLE},
     )
 

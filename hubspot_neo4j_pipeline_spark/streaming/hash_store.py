@@ -29,6 +29,8 @@ batch ``exact_dedup`` operator is its oracle.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -80,7 +82,7 @@ def hash_store_update_batch(
     segment — O(batch), the existing state is NOT read. min is
     idempotent, so even a replay-guard bypass cannot corrupt owners."""
 
-    def build(meta: dict, n: int, _bid: int) -> DataFrame:
+    def build(meta: dict, _bid: int) -> DataFrame:
         # the owner id keeps its NATIVE type (see _partial_hashes), so
         # the store's min() is numeric for numeric ids and
         # lexicographic for string ids — sound per store, corrupt if
@@ -96,9 +98,7 @@ def hash_store_update_batch(
             except FileNotFoundError:
                 pass  # empty store: the batch's type becomes the pin below
         segments.pin_value(store_path, meta, "id_type", dict(batch.dtypes)[id_col])
-        return _partial_hashes(batch, id_col, text_col).withColumn(
-            SPEC.bucket_col, SPEC.bucket_expr(n)
-        )
+        return _partial_hashes(batch, id_col, text_col)
 
     segments.ingest(
         SPEC, store_path, batch_id, compact_every, build, hash_store_compact,
@@ -106,15 +106,9 @@ def hash_store_update_batch(
     )
 
 
-def hash_store_compact(
-    spark: SparkSession,
-    store_path: str,
-    n_buckets: int = segments.START_N_BUCKETS,
-    rows_per_bucket: int = segments.ROWS_PER_BUCKET,
-) -> None:
-    """Fold live deltas into a new hash-bucketed base
-    (``segments.compact``); tombstoned hashes are reclaimed."""
-    segments.compact(SPEC, spark, store_path, n_buckets, rows_per_bucket)
+# Fold live deltas into a new hash-bucketed base; tombstoned hashes are
+# reclaimed.
+hash_store_compact = functools.partial(segments.compact, SPEC)
 
 
 def hash_store_delete_batch(
@@ -134,12 +128,11 @@ def hash_store_delete_batch(
     documents (their text), so the tombstone keys are computed, never
     looked up."""
 
-    def build(_meta: dict, n: int, _bid: int) -> DataFrame:
+    def build(_meta: dict, _bid: int) -> DataFrame:
         return (
             batch.select(F.sha2(F.col(text_col), 256).alias("content_hash"))
             .distinct()
             .withColumn(tombstones.TOMB_COL, F.lit(True))
-            .withColumn(SPEC.bucket_col, SPEC.bucket_expr(n))
         )
 
     segments.ingest(
@@ -215,43 +208,18 @@ def hash_store_bootstrap(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> None:
-    """Day-0 bulk load (r12, completing the r11 lsh/cluster/df trio):
-    the whole existing corpus' (content_hash, min owner id) rows
-    written directly as the first compacted base — one partitioned
-    write, no per-batch delta bytes. Bucket count sized by the corpus'
-    document count (distinct hashes <= documents, so this
-    over-provisions — the safe direction). The id dtype pins exactly
-    as update_batch would pin it. Streaming ingest continues on top
-    (batch ids start at 0 — segments.bootstrap_base records
-    consumed_through=-1). Equivalent state to update-then-compact,
-    pinned by test."""
-    n_buckets = segments.sized_n_buckets(corpus.count())
-    rows = _partial_hashes(corpus, id_col, text_col).withColumn(
-        SPEC.bucket_col, SPEC.bucket_expr(n_buckets)
-    )
-    segments.bootstrap_base(
-        rows, store_path, SPEC.bucket_col, n_buckets,
+    """Day-0 bulk load (``segments.bootstrap``): the whole existing
+    corpus' (content_hash, min owner id) rows as the first compacted
+    base. Bucket count sized by the corpus' document count (distinct
+    hashes <= documents, so this over-provisions — the safe
+    direction). The id dtype pins exactly as update_batch would pin
+    it. Equivalent state to update-then-compact, pinned by test."""
+    segments.bootstrap(
+        SPEC, store_path, _partial_hashes(corpus, id_col, text_col), corpus.count(),
         extra_meta={"id_type": dict(corpus.dtypes)[id_col]},
     )
 
 
-def stream_hash_store(
-    stream_df: DataFrame,
-    store_path: str,
-    checkpoint_dir: str,
-    timeout_sec: int = 120,
-    compact_every: int = COMPACT_EVERY,
-) -> None:
-    """foreachBatch driver: maintain the exact content-hash store as
-    documents stream in. store_path and checkpoint_dir live and die
-    together (segments.py lifecycle contract)."""
-    from .incremental import run_foreach_batch
-
-    run_foreach_batch(
-        stream_df,
-        lambda batch, batch_id: hash_store_update_batch(
-            batch, store_path, batch_id, compact_every=compact_every
-        ),
-        checkpoint_dir,
-        timeout_sec,
-    )
+# foreachBatch driver: maintain the exact content-hash store as documents
+# stream in.
+stream_hash_store = segments.streamer(hash_store_update_batch)

@@ -13,13 +13,14 @@ content-hash dedup over an unbounded stream with bounded state
 
 from __future__ import annotations
 
+import datetime
 import os
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.scd2 import snapshot_hash, with_temporal_fields
-from . import segments
+from . import segments, tombstones
 
 
 def stream_dedup(
@@ -58,111 +59,126 @@ def _scd2_meta(store_path: str) -> dict:
     return m
 
 
-def read_current(spark, store_path: str) -> DataFrame | None:
-    """The store's CURRENT table: meta's base plus every live delta's
-    'current' rows, latest writer per key wins (a key upserted in
-    deltas 5 and 9 resolves to 9's row — 5's version was closed into
-    history by batch 9). None if the store is empty. After a
-    compaction with no new deltas this is a plain scan of the base.
+def _current(
+    spec: segments.StoreSpec, segs: list[segments.Segment]
+) -> DataFrame:
+    """The current family's merge, for reads and compactions alike:
+    the base plus every live delta's 'current' rows, latest writer per
+    key wins (a key upserted in deltas 5 and 9 resolves to 9's row —
+    5's version was closed into history by batch 9), stamped
+    ``_kind='current'`` and ``_ubid`` = the newest segment's id.
 
-    r14 (guide §2.4): the merge is ``tombstones.latest_writer_union``
-    — the same shuffle-free merge-on-read the lsh/vector stores
-    adopted in r13 — instead of a per-row window. The window's
-    Exchange + two Sorts over the WHOLE store ran on every
-    ``upsert_batch`` (which reads current to classify changes) and on
-    every consumer read; the per-frame rule replaces it with broadcast
-    anti-joins against the (micro-batch-sized) newer frames' key
-    sets. Soundness is the store's own contract: the base is unique
-    per key (compaction folds through the window / bootstrap
-    dropDuplicates), each delta's current rows are unique per key
-    (``incoming.dropDuplicates([key])``), and frame order IS ``_ubid``
-    order (live delta ids > consumed_through >= any base row's _ubid;
-    bootstrap rows carry _ubid=-1) — so per-frame shading equals the
-    per-row window, pinned by test_read_current_equals_window_merge.
-    Manifest/meta row counts gate the broadcast exactly as in the
-    lsh/vector stores: an oversized or unknown newer frame falls back
-    to the window merge inside latest_writer_union."""
-    meta = _scd2_meta(store_path)
-    frames = []
-    frame_rows: list[int | None] = []
-    if meta["base"]:
-        frames.append(
-            segments.read_parquet(
-                spark,
-                os.path.join(store_path, meta["base"]),
-                partitions={"_bucket": "int"},
-            )
-        )
-        frame_rows.append(meta.get("base_rows"))
-    for _bid, path in sorted(segments.live_deltas(store_path, meta).items()):
-        frames.append(
-            segments.read_parquet(spark, path).where(F.col("_kind") == "current")
-        )
-        m = segments.delta_manifest(path)
-        frame_rows.append(None if m is None else m.get("rows"))
-    if not frames:
-        return None
-    from . import tombstones
-
-    merged = tombstones.latest_writer_union(frames, meta["key"], frame_rows)
-    # column order of the window merge was the old->new union's
-    # (first frame's columns, later-only columns appended); the
-    # newest-first union inside latest_writer_union would otherwise
-    # lead with the newest delta's order
-    ordered: list[str] = []
-    for f in frames:
-        for c in f.columns:
-            if c not in ordered:
-                ordered.append(c)
+    ``tombstones.latest_writer_union`` merges per frame with broadcast
+    anti-joins (no per-row window over the store). That equals the
+    per-row window on ``_ubid`` because every frame is unique per key
+    (compaction folds through this merge, bootstrap and each delta
+    through ``dropDuplicates([key])``) and frame order IS ``_ubid``
+    order (bootstrap rows carry -1) — pinned by
+    test_read_current_equals_window_merge. Columns keep the old->new
+    union's order (first frame's columns, later-only ones appended)."""
+    frames = [
+        s.frame if s.is_base else s.frame.where(F.col("_kind") == "current")
+        for s in segs
+    ]
+    merged = tombstones.latest_writer_union(
+        frames, spec.key[0], [s.rows for s in segs]
+    )
+    ordered = dict.fromkeys(c for f in frames for c in f.columns)
     return merged.select(
-        [c for c in ordered if c not in _META_COLS and c != "_rn"]
+        *[c for c in ordered if c not in _META_COLS],
+        F.lit("current").alias("_kind"),
+        F.lit(segs[-1].seq).cast("long").alias("_ubid"),
     )
 
 
 def _history_segments(store_path: str, meta: dict) -> list[str]:
     """COMMITTED history segments only: ``seg-<id>`` with
     history_floor <= id <= consumed_through. A crash between the
-    segment rename and the meta replace in ``scd2_store_compact``
-    leaves a ``seg-<hi>`` whose closed rows still also live in the
-    uncompacted deltas — resolving it would double-count them (r9
-    ADVICE), so visibility is gated on the meta pointer, exactly like
-    delta visibility. The floor makes FOLDED-away segments (their rows
-    rewritten into a newer segment) invisible the instant the fold's
+    segment rename and the meta replace of a compaction leaves a
+    ``seg-<hi>`` whose closed rows still also live in the uncompacted
+    deltas — resolving it would double-count them, so visibility is
+    gated on the meta pointer, exactly like delta visibility. The
+    floor makes FOLDED-away segments invisible the instant the fold's
     meta commits, before any file is deleted."""
-    hist = os.path.join(store_path, "history")
-    if not os.path.isdir(hist):
-        return []
+    hist = os.path.join(store_path, segments.HISTORY)
     floor = meta.get("history_floor", -1)
-    out = []
-    for name in os.listdir(hist):
-        if name.startswith("seg-") and name[4:].isdigit():
-            if floor <= int(name[4:]) <= meta["consumed_through"]:
-                out.append(os.path.join(hist, name))
-    return sorted(out)
+    return sorted(
+        os.path.join(hist, n)
+        for n in (os.listdir(hist) if os.path.isdir(hist) else ())
+        if n.startswith("seg-")
+        and n[4:].isdigit()
+        and floor <= int(n[4:]) <= meta["consumed_through"]
+    )
 
 
-def _scd2_sweep(store_path: str, meta: dict) -> None:
-    """segments.sweep plus the history-dir strandings it can't know
-    about: orphan ``_tmpseg-*`` writer dirs (any id — a crashed
-    compaction's tmp dir is only ever retried under the SAME high-water
-    mark, so ids the mark moved past would leak forever, r9 ADVICE) and
-    uncommitted ``seg-<id>`` with id > consumed_through (invisible to
-    readers via ``_history_segments``; their rows are still in the live
-    deltas and will be re-folded by the next compaction)."""
-    import shutil
+def _closed(
+    spark, seg_paths: list[str], deltas: dict[int, str]
+) -> DataFrame | None:
+    """Closed versions: the history segments ``seg_paths`` plus the
+    deltas' 'closed' rows, meta columns dropped; None if neither."""
+    frames = [segments.read_parquet(spark, *seg_paths)] if seg_paths else []
+    frames += [
+        segments.read_parquet(spark, p).where(F.col("_kind") == "closed")
+        for _bid, p in sorted(deltas.items())
+    ]
+    if not frames:
+        return None
+    out = frames[0]
+    for f in frames[1:]:
+        out = out.unionByName(f, allowMissingColumns=True)
+    return out.drop(*_META_COLS)
 
-    segments.sweep(store_path, meta)
-    hist = os.path.join(store_path, "history")
-    if not os.path.isdir(hist):
-        return
-    floor = meta.get("history_floor", -1)
-    for name in os.listdir(hist):
-        full = os.path.join(hist, name)
-        if name.startswith("_tmpseg-"):
-            shutil.rmtree(full, ignore_errors=True)
-        elif name.startswith("seg-") and name[4:].isdigit():
-            if not (floor <= int(name[4:]) <= meta["consumed_through"]):
-                shutil.rmtree(full, ignore_errors=True)
+
+def _commit_history(
+    spark, store_path: str, meta: dict, deltas: dict[int, str], hi: int
+) -> dict:
+    """The store's side family (``segments.compact``): the live
+    deltas' closed rows become ``history/seg-<hi>``, named by the
+    compaction's high-water mark so an uncommitted one stays invisible
+    (``_history_segments``) and a later sweep reclaims it. A
+    compaction that closed nothing writes no segment.
+
+    History FOLD: segments otherwise accumulate one per compaction
+    forever. When SCD2_HISTORY_FOLD_AT (read at call time) or more are
+    live, this segment absorbs ALL committed older ones and
+    history_floor rises to hi — readers switch from the old segments
+    to the folded one at the meta replace (never both: floor <= id <=
+    consumed_through can't span them), and the post-commit sweep
+    deletes the superseded files. A crash anywhere leaves the old
+    state fully readable."""
+    old = _history_segments(store_path, meta)
+    fold = len(old) >= SCD2_HISTORY_FOLD_AT
+    hist = os.path.join(store_path, segments.HISTORY)
+    tmp = os.path.join(hist, f"_tmpseg-{hi}")
+    _closed(spark, old if fold else [], deltas).write.mode("overwrite").parquet(tmp)
+    if fold or segments.base_row_count(hist, f"_tmpseg-{hi}"):
+        os.rename(tmp, os.path.join(hist, f"seg-{hi}"))
+    return {"history_floor": hi if fold else meta.get("history_floor", -1)}
+
+
+def _spec(key: str | None) -> segments.StoreSpec:
+    """The SCD2 current family keyed by ``key`` (meta's pinned key),
+    with the closed-version history as its side family."""
+    return segments.StoreSpec(
+        name="scd2",
+        key=(key,),
+        values=(),
+        merge=_current,
+        bucket_expr=lambda n: F.pmod(
+            F.xxhash64(F.col(key).cast("string")), F.lit(n)
+        ).cast("int"),
+        side_family=_commit_history,
+    )
+
+
+def read_current(spark, store_path: str) -> DataFrame | None:
+    """The store's CURRENT table (``_current`` without its meta
+    columns). None if the store is empty. After a compaction with no
+    new deltas this is a plain scan of the base."""
+    meta = _scd2_meta(store_path)
+    spec = _spec(meta["key"])
+    segs = segments.visible_frames(spec, spark, store_path, meta)
+    return _current(spec, segs).drop(*_META_COLS) if segs else None
 
 
 def read_history(spark, store_path: str) -> DataFrame | None:
@@ -170,27 +186,8 @@ def read_history(spark, store_path: str) -> DataFrame | None:
     meta's consumed_through — see ``_history_segments``) plus the live
     deltas' 'closed' rows. None if nothing has ever been closed."""
     meta = _scd2_meta(store_path)
-    frames = []
     segs = _history_segments(store_path, meta)
-    if segs:
-        frames.append(segments.read_parquet(spark, *segs))
-    for _bid, path in sorted(segments.live_deltas(store_path, meta).items()):
-        frames.append(
-            segments.read_parquet(spark, path).where(F.col("_kind") == "closed")
-        )
-    if not frames:
-        return None
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f, allowMissingColumns=True)
-    out = out.drop(*_META_COLS)
-    return out
-
-
-def _scd2_bucket(key: str, n_buckets: int):
-    return F.pmod(F.xxhash64(F.col(key).cast("string")), F.lit(n_buckets)).cast(
-        "int"
-    )
+    return _closed(spark, segs, segments.live_deltas(store_path, meta))
 
 
 def upsert_batch(
@@ -206,108 +203,81 @@ def upsert_batch(
     new keys insert; changed keys close the old version into history
     and insert a fresh current row; unchanged keys no-op. No deletes.
 
-    r9 layout: the r8 version REWROTE the full current table every
-    micro-batch (read all → union → overwrite + localCheckpoint) —
-    O(entities) I/O per batch, the same scale disease the r8 judge
-    flagged on the gram store. The store now uses the shared LSM
-    segment layer (streaming/segments.py): each batch atomically
-    commits ONE delta holding only its own touched rows — the fresh
-    current versions (kind='current') and the closed old versions
-    (kind='closed') together, so current-update and history-append
-    cannot be torn apart by a crash — and ``read_current`` resolves
-    base + deltas with latest-writer-wins per key. Compaction every
-    ``compact_every`` deltas folds current rows into a bucketed base
-    and moves closed rows into an idempotently-named history segment.
-    Per-batch cost is O(batch + changed), not O(store).
+    One ``segments.ingest``: each batch atomically commits ONE delta
+    holding only its own touched rows — the fresh current versions
+    (kind='current') and the closed old versions (kind='closed')
+    together, so current-update and history-append cannot be torn
+    apart by a crash. Compaction every ``compact_every`` deltas
+    (``scd2_store_compact``) folds them into the base and a history
+    segment. Per-batch cost is O(batch + changed), not O(store). The
+    key is pinned in meta at first ingest; a batch keyed otherwise
+    raises ValueError.
 
     Replay: exact per-batch-id guard when ``batch_id`` is given (the
     streaming path); ad-hoc calls without one get the next free id —
     and are ALSO naturally idempotent, because re-merging an already-
     applied snapshot classifies every key unchanged.
     """
-    spark = batch.sparkSession
-    os.makedirs(store_path, exist_ok=True)
-    if batch_id is None:
-        batch_id = segments.next_batch_id(store_path)
-    elif segments.already_ingested(store_path, batch_id):
-        return  # replayed micro-batch
-    meta = _scd2_meta(store_path)
-    if meta["key"] is None:
-        meta["key"] = key
-        segments.write_meta(store_path, meta)
-    elif meta["key"] != key:
-        raise ValueError(
-            f"store {store_path} is keyed by {meta['key']!r}, got {key!r}"
+
+    def build(meta: dict, bid: int) -> DataFrame:
+        segments.pin_value(store_path, meta, "key", key)
+        meta.setdefault("history_floor", -1)
+        ubid = F.lit(bid).cast("long")
+        incoming = batch.dropDuplicates([key])
+        current = read_current(batch.sparkSession, store_path)
+        if current is None:
+            return (
+                with_temporal_fields(incoming, now)
+                .withColumn("_kind", F.lit("current"))
+                .withColumn("_ubid", ubid)
+            )
+        # ONE wide classify join: live joins incoming once (old columns
+        # aliased _o_*), the slim batch-bounded result is lazily
+        # checkpointed, and BOTH the fresh rows (incoming side, reusing
+        # _new_hash as snapshot_hash — bit-identical expression) and
+        # the closing rows (old side) project out of it.
+        inc_hashed = incoming.withColumn("_new_hash", snapshot_hash(incoming))
+        live = current.where(F.col("is_current") & ~F.col("is_deleted"))
+        lcols = live.columns
+        old_pref = live.select([F.col(c).alias(f"_o_{c}") for c in lcols])
+        j = inc_hashed.join(
+            old_pref, inc_hashed[key] == F.col(f"_o_{key}"), "left"
+        ).localCheckpoint(eager=False)
+        is_new = F.col(f"_o_{key}").isNull()
+        # NULL-hash live rows (no store writes these, but the old
+        # changed_keys rule counted a null _old_hash as changed) stay
+        # classified as updated
+        is_upd = ~is_new & (
+            F.col("_o_snapshot_hash").isNull()
+            | (F.col("_new_hash") != F.col("_o_snapshot_hash"))
         )
-    n_buckets = segments.pin_n_buckets(store_path, meta, n_buckets)
-    incoming = batch.dropDuplicates([key])
-    current = read_current(spark, store_path)
-    if current is None:
-        delta = (
-            with_temporal_fields(incoming, now)
+        fresh = (
+            j.where(is_new | is_upd)
+            .select(*incoming.columns, F.col("_new_hash").alias("snapshot_hash"))
+            .withColumn("valid_from", F.lit(now).cast("timestamp"))
+            .withColumn("valid_to", F.lit(None).cast("timestamp"))
+            .withColumn("is_current", F.lit(True))
+            .withColumn("is_deleted", F.lit(False))
             .withColumn("_kind", F.lit("current"))
-            .withColumn("_ubid", F.lit(batch_id).cast("long"))
-            .withColumn("_bucket", _scd2_bucket(key, n_buckets))
         )
-        segments.commit_delta(delta, store_path, batch_id, bucket_col="_bucket")
-        return
-    # r14 (guide §2.4/§7.2): ONE wide classify join replaces the old
-    # three-join shape (classify join -> changed_keys, then a fresh
-    # semi-join on incoming AND a closing semi-join on live). The old
-    # delta plan duplicated the classify subtree — incoming hash +
-    # store read + join — under both union branches, so every upsert
-    # executed the store read three times and sha2'd the batch twice.
-    # Now: live joins incoming once (old columns aliased _o_*), the
-    # slim batch-bounded result is lazily checkpointed, and BOTH the
-    # fresh rows (incoming side, reusing the already-computed
-    # _new_hash as snapshot_hash — bit-identical expression) and the
-    # closing rows (old side) project out of that one materialization.
-    inc_hashed = incoming.withColumn("_new_hash", snapshot_hash(incoming))
-    live = current.where(F.col("is_current") & ~F.col("is_deleted"))
-    lcols = live.columns
-    old_pref = live.select([F.col(c).alias(f"_o_{c}") for c in lcols])
-    j = inc_hashed.join(
-        old_pref, inc_hashed[key] == F.col(f"_o_{key}"), "left"
-    ).localCheckpoint(eager=False)
-    is_new = F.col(f"_o_{key}").isNull()
-    # NULL-hash live rows (no store writes these, but the old
-    # changed_keys rule counted a null _old_hash as changed) stay
-    # classified as updated — exact parity with the three-join shape
-    is_upd = ~is_new & (
-        F.col(f"_o_snapshot_hash").isNull()
-        | (F.col("_new_hash") != F.col(f"_o_snapshot_hash"))
+        closing = (
+            j.where(is_upd)
+            .select([F.col(f"_o_{c}").alias(c) for c in lcols])
+            .withColumn("valid_to", F.lit(now).cast("timestamp"))
+            .withColumn("is_current", F.lit(False))
+            .withColumn("_kind", F.lit("closed"))
+        )
+        # localCheckpoint BEFORE the commit: the delta plan reads the
+        # store's own live segments (via read_current), and writing a
+        # new segment while lazily scanning the old ones risks
+        # read-own-write anomalies on retried tasks
+        delta = fresh.unionByName(closing).withColumn("_ubid", ubid)
+        return delta.localCheckpoint(eager=True)
+
+    segments.ingest(
+        _spec(key), store_path, batch_id, compact_every, build,
+        scd2_store_compact, n_buckets=n_buckets,
     )
-    fresh = (
-        j.where(is_new | is_upd)
-        .select(*incoming.columns, F.col("_new_hash").alias("snapshot_hash"))
-        .withColumn("valid_from", F.lit(now).cast("timestamp"))
-        .withColumn("valid_to", F.lit(None).cast("timestamp"))
-        .withColumn("is_current", F.lit(True))
-        .withColumn("is_deleted", F.lit(False))
-        .withColumn("_kind", F.lit("current"))
-    )
-    closing = (
-        j.where(is_upd)
-        .select([F.col(f"_o_{c}").alias(c) for c in lcols])
-        .withColumn("valid_to", F.lit(now).cast("timestamp"))
-        .withColumn("is_current", F.lit(False))
-        .withColumn("_kind", F.lit("closed"))
-    )
-    delta = (
-        fresh.unionByName(closing)
-        .withColumn("_ubid", F.lit(batch_id).cast("long"))
-        .withColumn("_bucket", _scd2_bucket(key, n_buckets))
-    )
-    # localCheckpoint BEFORE the commit: the delta plan reads the
-    # store's own live segments (via read_current), and writing a new
-    # segment while lazily scanning the old ones risks read-own-write
-    # anomalies on retried tasks
-    segments.commit_delta(
-        delta.localCheckpoint(eager=True), store_path, batch_id,
-        bucket_col="_bucket",
-    )
-    if len(segments.live_deltas(store_path)) >= compact_every:
-        scd2_store_compact(spark, store_path)
 
 
 def scd2_store_compact(
@@ -315,156 +285,16 @@ def scd2_store_compact(
     store_path: str,
     n_buckets: int = segments.START_N_BUCKETS,
     rows_per_bucket: int = segments.ROWS_PER_BUCKET,
+    crash_before_commit: bool = False,
 ) -> None:
-    """Fold live deltas into a fresh key-bucketed current base and
-    move their closed rows into an idempotently-named history segment,
-    committed by one atomic meta replace (identical crash contract to
-    gram_store_compact — every step before the replace is invisible
-    and garbage-collectable: the history segment is named by the
-    consumed-delta high-water mark and readers resolve only segments
-    with id <= consumed_through, so even the renamed-but-uncommitted
-    ``seg-<hi>`` of a crash between the rename and the meta replace
-    stays invisible and is swept on retry)."""
-    meta = _scd2_meta(store_path)
-    _scd2_sweep(store_path, meta)
-    deltas = segments.live_deltas(store_path, meta)
-    if not deltas:
-        return
-    hi = max(deltas)
-    n_buckets = segments.pin_n_buckets(store_path, meta, n_buckets)
-    closed = []
-    for _bid, path in sorted(deltas.items()):
-        closed.append(
-            segments.read_parquet(spark, path).where(F.col("_kind") == "closed")
-        )
-    closed_all = closed[0]
-    for f in closed[1:]:
-        closed_all = closed_all.unionByName(f)
-    new_base = segments.next_base_name(meta)
-    # bucket-PARTIAL current fold (r10, same contract as the gram/hash
-    # stores): only keys in buckets the live deltas touch can change,
-    # so the latest-writer-wins window runs over (touched base
-    # partitions ∪ delta current rows) and every untouched _bucket=K
-    # dir hard-links into the new base — O(touched + deltas), not
-    # O(store). Untouched rows keep their old _ubid, which stays
-    # smaller than any future delta's id, so read_current's
-    # latest-writer window is unaffected. Falls back to the full
-    # rewrite for manifest-less deltas or a base built under a
-    # different (or unrecorded) bucketing.
-    # r11: the bucket count grows (power-of-2, full-rewrite path) when
-    # the store outgrows ~rows_per_bucket current rows per bucket
-    grown = segments.grown_n_buckets(meta, deltas, n_buckets, rows_per_bucket)
-    touched = (
-        segments.touched_buckets(deltas, "_bucket")
-        if grown == n_buckets
-        and meta["base"]
-        and meta.get("base_n_buckets") == n_buckets
-        else None
+    """``segments.compact`` of the store's current family under its
+    pinned key: live deltas fold into a key-bucketed current base and
+    their closed rows into ``history/seg-<hi>`` (``_commit_history``),
+    committed by one atomic meta replace."""
+    segments.compact(
+        _spec(_scd2_meta(store_path)["key"]), spark, store_path, n_buckets,
+        rows_per_bucket, crash_before_commit,
     )
-    before, n_buckets = n_buckets, grown
-    wrote = True
-    if touched == []:  # only empty deltas live: carry the base verbatim
-        path = "carry"
-        merged_tmp = os.path.join(store_path, f"_tmp-merge-{new_base}")
-        os.makedirs(merged_tmp, exist_ok=True)
-        segments.assemble_partial_base(
-            store_path, meta["base"], merged_tmp, new_base, "_bucket", touched
-        )
-    elif touched is not None and len(touched) < n_buckets:
-        path = "partial"
-        frames = [
-            segments.read_parquet(
-                spark,
-                os.path.join(store_path, meta["base"]),
-                partitions={"_bucket": "int"},
-            ).where(F.col("_bucket").isin(touched))  # partition-pruned
-        ]
-        for _bid, path in sorted(deltas.items()):
-            frames.append(
-                segments.read_parquet(spark, path).where(F.col("_kind") == "current")
-            )
-        allrows = frames[0]
-        for f in frames[1:]:
-            allrows = allrows.unionByName(f, allowMissingColumns=True)
-        w = Window.partitionBy(meta["key"]).orderBy(F.col("_ubid").desc())
-        cur_touched = (
-            allrows.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn", *_META_COLS)
-        )
-        merged = (
-            cur_touched.withColumn("_kind", F.lit("current"))
-            .withColumn("_ubid", F.lit(hi).cast("long"))
-            .withColumn("_bucket", _scd2_bucket(meta["key"], n_buckets))
-        )
-        merged_tmp = os.path.join(store_path, f"_tmp-merge-{new_base}")
-        merged.repartition("_bucket").write.partitionBy("_bucket").mode(
-            "overwrite"
-        ).parquet(merged_tmp)
-        segments.assemble_partial_base(
-            store_path, meta["base"], merged_tmp, new_base, "_bucket", touched
-        )
-    else:
-        path = "full"
-        cur = read_current(spark, store_path)
-        merged = (
-            cur.withColumn("_kind", F.lit("current"))
-            .withColumn("_ubid", F.lit(hi).cast("long"))
-            .withColumn("_bucket", _scd2_bucket(meta["key"], n_buckets))
-        )
-        # an all-empty history commits base=None (segments.write_base)
-        wrote = segments.write_base(merged, store_path, new_base, "_bucket")
-    hist_dir = os.path.join(store_path, "history")
-    os.makedirs(hist_dir, exist_ok=True)
-    # history FOLD (r10): segments otherwise accumulate one per
-    # compaction forever. When more than SCD2_HISTORY_FOLD_AT are
-    # live, this compaction's segment absorbs ALL committed older
-    # ones and the meta's history_floor rises to hi — readers switch
-    # from the old segments to the folded one at the meta replace
-    # (never both: floor <= id <= consumed_through can't span them),
-    # and the superseded files are deleted only by the post-commit
-    # sweep. Amortized O(history / fold_at) per compaction; a crash
-    # anywhere leaves the old state fully readable.
-    old_segs = _history_segments(store_path, meta)
-    fold = len(old_segs) >= SCD2_HISTORY_FOLD_AT
-    seg_rows = closed_all.drop(*_META_COLS)
-    new_floor = meta.get("history_floor", -1)
-    if fold:
-        seg_rows = segments.read_parquet(spark, *old_segs).unionByName(
-            seg_rows, allowMissingColumns=True
-        )
-        new_floor = hi
-    tmp = os.path.join(hist_dir, f"_tmpseg-{hi}")
-    if os.path.exists(tmp):
-        import shutil
-
-        shutil.rmtree(tmp)
-    seg_rows.write.mode("overwrite").parquet(tmp)
-    seg = os.path.join(hist_dir, f"seg-{hi}")
-    if os.path.exists(seg):  # crashed retry already placed it
-        import shutil
-
-        shutil.rmtree(seg)
-    os.rename(tmp, seg)
-    segments.write_meta(
-        store_path,
-        {
-            **meta,  # preserve pinned properties
-            "base": new_base if wrote else None,
-            "consumed_through": hi,
-            "key": meta["key"],
-            "n_buckets": n_buckets,
-            "base_n_buckets": n_buckets,
-            "base_rows": (
-                segments.base_row_count(spark, store_path, new_base)
-                if wrote
-                else 0
-            ),
-            "history_floor": new_floor,
-        },
-    )
-    _scd2_sweep(store_path, _scd2_meta(store_path))
-    segments.log_compaction(store_path, path, before, n_buckets)
 
 
 def scd2_store_bootstrap(
@@ -472,91 +302,42 @@ def scd2_store_bootstrap(
     store_path: str,
     key: str,
     now: str,
-    n_buckets: int | None = None,
 ) -> None:
     """Day-0 temporal BACKFILL (r12): stamp an existing full snapshot
     with fresh version-1 temporal fields (valid_from=now, open
     valid_to, is_current, snapshot_hash) and write it directly as the
-    store's first compacted current base — one partitioned write, no
+    store's first compacted current base (``segments.bootstrap``) — no
     per-batch delta bytes, no history (nothing has ever changed). This
     is the reference's one-time temporal initialization
     (scripts/initialize_temporal_data.py:71-165 — batched SET of
     valid_from/valid_to/is_current/is_deleted plus a per-node
     snapshot_hash over existing nodes) done as ONE bucketed write
     instead of 100-row Cypher loops. Streaming upserts continue on top
-    (batch ids start at 0 — segments.bootstrap_base records
-    consumed_through=-1); bootstrap rows carry _ubid=-1 so a key
-    re-upserted by batch 0 wins the latest-writer window. Equivalent
+    (batch ids start at 0); bootstrap rows carry _ubid=-1 so a key
+    re-upserted by batch 0 wins the latest-writer merge. Equivalent
     state to upsert-then-compact, pinned by test."""
     incoming = snapshot.dropDuplicates([key])
-    if n_buckets is None:
-        n_buckets = segments.sized_n_buckets(incoming.count())
     rows = (
         with_temporal_fields(incoming, now)
         .withColumn("_kind", F.lit("current"))
         .withColumn("_ubid", F.lit(-1).cast("long"))
-        .withColumn("_bucket", _scd2_bucket(key, n_buckets))
     )
-    segments.bootstrap_base(
-        rows, store_path, "_bucket", n_buckets,
+    segments.bootstrap(
+        _spec(key), store_path, rows, incoming.count(),
         extra_meta={"key": key, "history_floor": -1},
     )
 
 
-def run_foreach_batch(
-    stream_df: DataFrame,
-    sink,
-    checkpoint_dir: str,
-    timeout_sec: int = 120,
+def _upsert_at_batch_minute(
+    batch: DataFrame, store_path: str, batch_id: int, key: str
 ) -> None:
-    """Shared foreachBatch driver (SCD2 upserts, sketch maintainers):
-    availableNow trigger, then await completion.
-
-    awaitTermination's boolean result is CHECKED: on timeout the query
-    is stopped and a TimeoutError raised — returning silently would
-    hand the caller a store missing the tail micro-batches while an
-    orphaned query keeps mutating it in the background.
-
-    On shutdown (success or timeout) the library's AMBIENT tracked
-    caches are released: foreachBatch sinks run on Spark's stream
-    execution thread, so any tracked_cache they issue cannot belong
-    to a cached_session scope the CALLING thread holds open (scopes
-    are thread-local, r9 ADVICE) and would otherwise accumulate until
-    someone called release_caches by hand (r10 ADVICE).
-    """
-    from ..operators.caching import release_caches
-
-    q = (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    """``stream_into_store``'s per-batch update: ``now`` is a
+    deterministic epoch + ``batch_id`` minutes, for tests."""
+    now = datetime.datetime(2024, 1, 1) + datetime.timedelta(minutes=batch_id)
+    upsert_batch(
+        batch, store_path, key, now.strftime("%Y-%m-%d %H:%M:%S"), batch_id=batch_id
     )
-    try:
-        finished = q.awaitTermination(timeout_sec)
-        if not finished:
-            q.stop()
-            raise TimeoutError(
-                f"streaming query did not drain within {timeout_sec}s; "
-                "stopped — the store may be missing tail micro-batches"
-            )
-    finally:
-        release_caches()
 
 
-def stream_into_store(
-    stream_df: DataFrame,
-    store_path: str,
-    key: str,
-    checkpoint_dir: str,
-    timeout_sec: int = 120,
-) -> None:
-    """foreachBatch driver: each micro-batch upserts into the SCD2
-    store; batch_id stamps `now` deterministically for tests."""
-
-    def _sink(batch: DataFrame, batch_id: int) -> None:
-        # deterministic per-batch timestamp (epoch + batch_id minutes)
-        now = f"2024-01-01 00:{batch_id:02d}:00"
-        upsert_batch(batch, store_path, key, now, batch_id=batch_id)
-
-    run_foreach_batch(stream_df, _sink, checkpoint_dir, timeout_sec)
+# foreachBatch driver: each micro-batch upserts into the SCD2 store
+stream_into_store = segments.streamer(_upsert_at_batch_minute)

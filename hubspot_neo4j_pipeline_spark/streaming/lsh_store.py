@@ -40,6 +40,8 @@ its DuckDB oracle) as the ground truth.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -113,11 +115,8 @@ def lsh_store_update_batch(
     """Ingest one micro-batch's (doc_id, shingles, sig) rows as an
     atomic delta — O(batch), the existing state is NOT read."""
 
-    def build(_meta: dict, n: int, bid: int) -> DataFrame:
-        rows = doc_rows if doc_rows is not None else _doc_rows(batch, id_col, text_col)
-        return rows.withColumn("_ubid", F.lit(bid).cast("long")).withColumn(
-            SPEC.bucket_col, SPEC.bucket_expr(n)
-        )
+    def build(_meta: dict, _bid: int) -> DataFrame:
+        return doc_rows if doc_rows is not None else _doc_rows(batch, id_col, text_col)
 
     segments.ingest(
         SPEC, store_path, batch_id, compact_every, build, lsh_store_compact,
@@ -125,15 +124,9 @@ def lsh_store_update_batch(
     )
 
 
-def lsh_store_compact(
-    spark: SparkSession,
-    store_path: str,
-    n_buckets: int = segments.START_N_BUCKETS,
-    rows_per_bucket: int = segments.ROWS_PER_BUCKET,
-) -> None:
-    """Fold live deltas into a new doc-bucketed base
-    (``segments.compact``); tombstoned docs are reclaimed."""
-    segments.compact(SPEC, spark, store_path, n_buckets, rows_per_bucket)
+# Fold live deltas into a new doc-bucketed base; tombstoned docs are
+# reclaimed.
+lsh_store_compact = functools.partial(segments.compact, SPEC)
 
 
 def lsh_store_delete_batch(
@@ -150,15 +143,13 @@ def lsh_store_delete_batch(
     pairing) and a later re-ingest resurrects. Payload columns ride as
     typed nulls so every reader sees one schema."""
 
-    def build(_meta: dict, n: int, bid: int) -> DataFrame:
+    def build(_meta: dict, _bid: int) -> DataFrame:
         return (
             ids.select(F.col(id_col).alias("doc_id"))
             .distinct()
             .withColumn("shingles", F.lit(None).cast("array<string>"))
             .withColumn("sig", F.lit(None).cast("array<bigint>"))
             .withColumn(tombstones.TOMB_COL, F.lit(True))
-            .withColumn("_ubid", F.lit(bid).cast("long"))
-            .withColumn(SPEC.bucket_col, SPEC.bucket_expr(n))
         )
 
     segments.ingest(
@@ -266,26 +257,8 @@ def neardup_pairs_against_store(
     return verified_jaccard_pairs(candidates, sigs, "doc_id", threshold)
 
 
-def stream_lsh_store(
-    stream_df: DataFrame,
-    store_path: str,
-    checkpoint_dir: str,
-    timeout_sec: int = 120,
-    compact_every: int = COMPACT_EVERY,
-) -> None:
-    """foreachBatch driver: maintain the signature store as documents
-    stream in. store_path and checkpoint_dir live and die together
-    (segments.py lifecycle contract)."""
-    from .incremental import run_foreach_batch
-
-    run_foreach_batch(
-        stream_df,
-        lambda batch, batch_id: lsh_store_update_batch(
-            batch, store_path, batch_id, compact_every=compact_every
-        ),
-        checkpoint_dir,
-        timeout_sec,
-    )
+# foreachBatch driver: maintain the signature store as documents stream in.
+stream_lsh_store = segments.streamer(lsh_store_update_batch)
 
 
 def lsh_store_bootstrap(
@@ -294,21 +267,12 @@ def lsh_store_bootstrap(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> None:
-    """Day-0 bulk load: the whole existing corpus' signature rows
-    written directly as the first compacted base (one partitioned
-    write — no per-batch delta bytes), bucket count sized up front by
-    the compaction growth rule so production-scale loads start with a
-    sane layout instead of growing into one. Streaming ingest then
-    continues on top — batch ids start at 0 (a fresh Structured
-    Streaming checkpoint's first id; segments.bootstrap_base records
-    consumed_through=-1 so it is NOT treated as replayed), and the
-    bootstrap rows carry _ubid=-1 so a doc re-ingested by batch 0
-    still wins the latest-writer window. Equivalent state to
+    """Day-0 bulk load (``segments.bootstrap``): the whole existing
+    corpus' signature rows as the first compacted base, bucket count
+    sized up front from the document count so production-scale loads
+    start with a sane layout instead of growing into one. Streaming
+    ingest then continues on top from batch id 0. Equivalent state to
     update-then-compact, pinned by test."""
-    n_buckets = segments.sized_n_buckets(corpus.count())
-    rows = (
-        _doc_rows(corpus, id_col, text_col)
-        .withColumn("_ubid", F.lit(-1).cast("long"))
-        .withColumn(SPEC.bucket_col, SPEC.bucket_expr(n_buckets))
+    segments.bootstrap(
+        SPEC, store_path, _doc_rows(corpus, id_col, text_col), corpus.count()
     )
-    segments.bootstrap_base(rows, store_path, SPEC.bucket_col, n_buckets)

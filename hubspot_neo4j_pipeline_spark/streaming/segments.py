@@ -1,7 +1,8 @@
-"""The LSM segment-store kernel: one ingest / delete / compact / read
-lifecycle on plain parquet (no table-format jar available offline),
-shared by the seven streaming stores. Each store module supplies a
-``StoreSpec`` plus its own row builders and scoring functions.
+"""The LSM segment-store kernel: one ingest / delete / compact /
+bulk-load / stream lifecycle on plain parquet (no table-format jar
+available offline), shared by the seven streaming stores and the SCD2
+store. Each store module supplies a ``StoreSpec`` plus its own row
+builders and scoring or read functions.
 
 Layout::
 
@@ -14,11 +15,17 @@ Layout::
                        the compacted view, hive-partitioned by the
                        spec's bucket expression: one bucket (K=0)
                        until compaction grows it (``compact``); a
-                       ``*_bootstrap`` load starts at ``sized_n_buckets``
+                       ``bootstrap`` load starts at BOOTSTRAP_MIN_BUCKETS
+                       or more
       deltas/b<id>/    one directory per ingested batch, written to a
                        _tmp dir and os.rename'd into place (the rename
                        IS the commit), with a _delta_manifest.json of
                        the buckets it touches and its row count
+      history/seg-<id>/
+                       a ``side_family`` segment (SCD2 closed versions),
+                       one per compaction that closed something, named
+                       by its consumed_through and visible iff meta's
+                       history_floor <= id <= consumed_through
 
 Replay guard and crash contract:
   * a batch id is applied iff ``deltas/b<id>`` exists or
@@ -27,7 +34,7 @@ Replay guard and crash contract:
   * every mutation before the meta.json os.replace is invisible to
     readers and garbage-collectable (``sweep``): an orphan ``_tmp-``
     dir, a ``base-<n+1>`` meta does not point to, consumed deltas a
-    crash left behind;
+    crash left behind, a history segment outside the visible range;
   * readers resolve ONLY meta's base plus deltas with
     id > consumed_through;
   * batch ids are scoped to one streaming checkpoint, so a store and
@@ -63,11 +70,15 @@ Lifecycle:
     base over (only empty deltas live), merges the touched partitions
     and hard-links the rest (partial), or rewrites the whole base
     (full). A store still at one bucket takes the carry or the full
-    path; partial needs two or more. One meta replace commits it; a
-    final sweep removes what it superseded; one INFO record on the
+    path; partial needs two or more. The spec's ``side_family`` step,
+    if any, runs next; one meta replace commits both; a final sweep
+    removes what it superseded; one INFO record on the
     ``hubspot_neo4j_pipeline_spark`` logger names the path and the
     bucket count before and after. Compaction reclaims: tombstones and
     netted-out rows never reach the new base.
+  * ``bootstrap`` bulk-loads a store's rows as its first base, sized
+    from the row count the store passes; ``streamer`` turns a store's
+    per-batch update into its ``foreachBatch`` driver.
 
 Merge rules (``StoreSpec.merge``):
   * ``min_owner`` — min(value) per key, order-free. Deletes are
@@ -83,12 +94,20 @@ Merge rules (``StoreSpec.merge``):
     hidden and reclaimed, and deletes commit negated partials. gram
     (h -> n, bucket column ``bucket``), df (term -> df), window
     ((day, user_id) -> n, total_value).
+  * the SCD2 store (streaming/incremental.py) passes its own merge:
+    latest writer per key over the base and the deltas'
+    ``_kind == 'current'`` rows, the one rule of its reads and its
+    compactions.
 
-The SCD2 store (streaming/incremental.py) uses the primitives here
-(meta, ``commit_delta``, manifests, the bucket start and growth rule,
-``sweep``, ``log_compaction``) but keeps its own compaction: it folds
-current and history segments with SCD2 row semantics, which none of
-the three rules express.
+The SCD2 store has two segment families. The current family is a spec
+on this lifecycle like any other. The closed versions are its side
+family: ``StoreSpec.side_family`` writes ``history/seg-<hi>`` (folding
+older segments at ``SCD2_HISTORY_FOLD_AT``) after the base and before
+the meta replace, and returns the meta keys to commit
+(``history_floor``). ``sweep`` removes stranded history segments
+itself rather than through a second hook: their visibility is a meta
+rule sweep already reads, and sweep runs at both ends of every
+compaction anyway.
 """
 
 from __future__ import annotations
@@ -107,6 +126,7 @@ from . import tombstones
 
 META = "meta.json"
 DELTAS = "deltas"
+HISTORY = "history"
 
 _log = logging.getLogger("hubspot_neo4j_pipeline_spark")
 
@@ -163,11 +183,13 @@ def live_deltas(store_path: str, meta: dict | None = None) -> dict[int, str]:
 def sweep(store_path: str, meta: dict) -> None:
     """Remove leftovers a crash between commit and cleanup can strand:
     consumed deltas, base dirs meta doesn't point to, orphan _tmp
-    ingest dirs and ``meta.json.tmp-*`` files. Nothing here is
-    reader-resolvable. Under the writer contract (module docstring)
-    no ingest or meta write of the same store is in flight while
-    sweep runs, so every leftover is fair game, this process's own
-    included."""
+    ingest dirs, ``meta.json.tmp-*`` files, and in ``history/`` the
+    orphan ``_tmpseg-*`` dirs and every ``seg-<id>`` outside
+    history_floor <= id <= consumed_through (uncommitted or folded
+    away). Nothing here is reader-resolvable. Under the writer
+    contract (module docstring) no ingest or meta write of the same
+    store is in flight while sweep runs, so every leftover is fair
+    game, this process's own included."""
     for bid, path in committed_deltas(store_path).items():
         if bid <= meta["consumed_through"]:
             shutil.rmtree(path, ignore_errors=True)
@@ -182,6 +204,16 @@ def sweep(store_path: str, meta: dict) -> None:
                 os.remove(full)
             except OSError:
                 pass
+    hist = os.path.join(store_path, HISTORY)
+    floor = meta.get("history_floor", -1)
+    for name in os.listdir(hist) if os.path.isdir(hist) else ():
+        seg = name[4:]
+        if name.startswith("_tmpseg-") or (
+            name.startswith("seg-")
+            and seg.isdigit()
+            and not floor <= int(seg) <= meta["consumed_through"]
+        ):
+            shutil.rmtree(os.path.join(hist, name), ignore_errors=True)
 
 
 def already_ingested(store_path: str, batch_id: int) -> bool:
@@ -554,15 +586,14 @@ def grown_n_buckets(
     return grown
 
 
-def base_row_count(spark, store_path: str, base_name: str) -> int:
+def base_row_count(store_path: str, base_name: str) -> int:
     """Row count of a committed base — parquet-footer metadata only,
     read driver-side with pyarrow (r12: the previous Spark count was
     footer-cheap too but scheduled a whole job per compaction; the
     store lives on a local filesystem by the segments contract —
     os.rename IS the commit — so the driver can read the footers
     directly). Recorded in meta as ``base_rows`` for the next
-    compaction's sizing decision. ``spark`` is unused, kept for call
-    symmetry with the store modules."""
+    compaction's sizing decision."""
     import pyarrow.parquet as pq
 
     total = 0
@@ -725,20 +756,14 @@ def bootstrap_base(
     n_buckets: int,
     extra_meta: dict | None = None,
 ) -> None:
-    """Day-0 BULK LOAD: write ``df`` (already in the store's row
-    shape, carrying ``bucket_col``) directly as the first compacted
-    base — one partitioned write plus one atomic meta commit: the
-    right path for loading an existing corpus into a store before
-    streaming starts. Refuses on a non-empty store (bootstrap is not
-    an upsert).
-
-    The commit records ``consumed_through: -1`` (r12, ADVICE fix):
-    the base carries the bootstrapped data and no deltas exist to
-    resurrect, so -1 is safe — and anything else silently DROPS the
-    first streamed micro-batch, because Structured Streaming batch
-    ids start at 0 on a fresh checkpoint and the replay guard treats
-    id <= consumed_through as already applied. Pinned by
-    test_bootstrap_then_stream_batch_zero."""
+    """Write ``df`` (the store's row shape, carrying ``bucket_col``)
+    as the first compacted base — one partitioned write plus one
+    atomic meta commit. Refuses on a non-empty store (bootstrap is not
+    an upsert) and on a 0-row frame. The commit records
+    ``consumed_through: -1``: Structured Streaming batch ids start at 0
+    on a fresh checkpoint, and anything higher would make the replay
+    guard DROP the first streamed micro-batch
+    (test_bootstrap_then_stream_batch_zero)."""
     meta = read_meta(store_path)
     if meta["base"] or committed_deltas(store_path):
         raise ValueError(
@@ -760,21 +785,38 @@ def bootstrap_base(
             "consumed_through": -1,
             "n_buckets": n_buckets,
             "base_n_buckets": n_buckets,
-            "base_rows": base_row_count(df.sparkSession, store_path, base),
+            "base_rows": base_row_count(store_path, base),
         },
     )
 
 
-def sized_n_buckets(n_rows: int, floor: int = 32) -> int:
-    """Bucket count for a bulk load of ``n_rows`` store rows — the
-    compaction growth rule applied up front (power-of-2, ~
-    ROWS_PER_BUCKET rows per bucket). A bulk load starts a store
-    expected to be large, so unlike a streamed store (START_N_BUCKETS)
-    it never goes below ``floor``."""
-    n = floor
-    while n_rows > n * ROWS_PER_BUCKET:
-        n *= 2
-    return n
+# A bulk load starts a store expected to be large, so unlike a streamed
+# store (START_N_BUCKETS) its bucket count never goes below this.
+BOOTSTRAP_MIN_BUCKETS = 32
+
+
+def bootstrap(
+    spec: "StoreSpec",
+    store_path: str,
+    rows: DataFrame,
+    n_rows: int,
+    extra_meta: dict | None = None,
+) -> None:
+    """Day-0 BULK LOAD: ``rows`` (the store's row shape, without the
+    bucket column) as the first compacted base of an empty store, the
+    right path for loading an existing corpus before streaming starts.
+    The bucket count is the compaction growth rule applied up front to
+    the ``n_rows`` the store counts (power of 2, ~ROWS_PER_BUCKET rows
+    per bucket, at least BOOTSTRAP_MIN_BUCKETS). Latest-writer rows get
+    ``_ubid = -1``, so a key re-ingested by streamed batch 0 wins.
+    ``extra_meta`` pins what the store's first ingest would pin."""
+    n_buckets = BOOTSTRAP_MIN_BUCKETS
+    while n_rows > n_buckets * ROWS_PER_BUCKET:
+        n_buckets *= 2
+    bootstrap_base(
+        _laid_out(spec, rows, -1, n_buckets), store_path, spec.bucket_col,
+        n_buckets, extra_meta,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -788,7 +830,9 @@ class StoreSpec:
     ``latest_writer``, ``additive`` (module docstring) — and its bucket
     layout. ``sum_types`` gives an additive store's per-value cast
     after summing; the first value is the one whose ``> 0`` decides
-    visibility."""
+    visibility. ``side_family(spark, store_path, meta, deltas, hi)``,
+    if set, writes a second segment family during ``compact`` and
+    returns the meta keys to commit with it (module docstring)."""
 
     name: str
     key: tuple[str, ...]
@@ -797,6 +841,7 @@ class StoreSpec:
     bucket_expr: Callable[[int], Column]
     bucket_col: str = "_bucket"
     sum_types: tuple[str, ...] = ()
+    side_family: Callable[..., dict] | None = None
 
     @property
     def columns(self) -> list[str]:
@@ -928,19 +973,19 @@ def ingest(
     store_path: str,
     batch_id: int | None,
     compact_every: int,
-    build: Callable[[dict, int, int], DataFrame],
+    build: Callable[[dict, int], DataFrame],
     compact: Callable[[SparkSession, str, int], None],
     n_buckets: int = START_N_BUCKETS,
     est_bytes: int | None = None,
 ) -> None:
     """Commit one batch as an atomic delta: the replay guard (a
     replayed id returns), the bucket-count pin (``n_buckets`` on a
-    fresh store, the pinned count after), ``build(meta,
-    n_buckets, batch_id)`` for the delta rows (already carrying the
-    bucket column; store-specific pins go in there), ``commit_delta``,
-    and ``compact(spark, store_path, n_buckets)`` once
-    ``compact_every`` deltas are live. Without ``batch_id`` the next
-    free id is used. ``est_bytes`` is passed to commit_delta."""
+    fresh store, the pinned count after), ``build(meta, batch_id)`` for
+    the delta rows (store-specific pins go in there; ``_laid_out`` adds
+    the layout columns), ``commit_delta``, and ``compact(spark,
+    store_path, n_buckets)`` once ``compact_every`` deltas are live.
+    Without ``batch_id`` the next free id is used. ``est_bytes`` is
+    passed to commit_delta."""
     os.makedirs(store_path, exist_ok=True)
     if batch_id is None:
         batch_id = next_batch_id(store_path)
@@ -949,7 +994,7 @@ def ingest(
     meta = read_meta(store_path)
     on_disk = dict(meta)
     meta["n_buckets"] = n_buckets = meta.get("n_buckets") or n_buckets
-    delta = build(meta, n_buckets, batch_id)
+    delta = _laid_out(spec, build(meta, batch_id), batch_id, n_buckets)
     if meta != on_disk:
         # the bucket count and the builder's pins in ONE write: a
         # first ingest's pins land together or not at all
@@ -962,22 +1007,30 @@ def ingest(
         compact(delta.sparkSession, store_path, n_buckets)
 
 
+def _laid_out(
+    spec: StoreSpec, rows: DataFrame, seq: int, n_buckets: int
+) -> DataFrame:
+    """``rows`` in the store's segment layout: latest-writer rows carry
+    the batch that wrote them (``_ubid`` = ``seq``: the ingested batch,
+    the compaction's newest delta, -1 for a bulk load), and every row
+    its bucket column."""
+    if spec.merge is latest_writer:
+        rows = rows.withColumn("_ubid", F.lit(seq).cast("long"))
+    return rows.withColumn(spec.bucket_col, spec.bucket_expr(n_buckets))
+
+
 def _folded(
     spec: StoreSpec, segs: list[Segment], hi: int, n_buckets: int
 ) -> DataFrame | None:
     merged = spec.merge(spec, segs)
-    if merged is None:
-        return None
-    if spec.merge is latest_writer:  # rows carry the batch that wrote them
-        merged = merged.withColumn("_ubid", F.lit(hi).cast("long"))
-    return merged.withColumn(spec.bucket_col, spec.bucket_expr(n_buckets))
+    return None if merged is None else _laid_out(spec, merged, hi, n_buckets)
 
 
 def compact(
     spec: StoreSpec,
     spark: SparkSession,
     store_path: str,
-    n_buckets: int,
+    n_buckets: int = START_N_BUCKETS,
     rows_per_bucket: int = ROWS_PER_BUCKET,
     crash_before_commit: bool = False,
 ) -> None:
@@ -988,8 +1041,8 @@ def compact(
     manifest-less deltas or a first compaction take the full rewrite,
     so correctness never depends on the manifests. An all-empty history
     commits ``base: None`` (``write_base``). ``crash_before_commit``
-    (tests) does all the work but skips the commit, as a crash after
-    the new base is written would."""
+    (tests) does all the work, side family included, but skips the
+    commit, as a crash after the new base is written would."""
     if not os.path.isdir(store_path):
         return
     meta = read_meta(store_path)
@@ -1028,6 +1081,9 @@ def compact(
         segs = visible_frames(spec, spark, store_path, meta, deltas)
         merged = _folded(spec, segs, hi, grown)
         wrote = merged is not None and write_base(merged, store_path, new_base, bcol)
+    side = {}
+    if spec.side_family is not None:
+        side = spec.side_family(spark, store_path, meta, deltas, hi)
     if crash_before_commit:
         return
     new_meta = {
@@ -1036,7 +1092,8 @@ def compact(
         "consumed_through": hi,
         "n_buckets": grown,
         "base_n_buckets": grown,
-        "base_rows": base_row_count(spark, store_path, new_base) if wrote else 0,
+        "base_rows": base_row_count(store_path, new_base) if wrote else 0,
+        **side,
     }
     write_meta(store_path, new_meta)
     sweep(store_path, new_meta)
@@ -1046,3 +1103,60 @@ def compact(
 def log_compaction(store_path: str, path: str, before: int, after: int) -> None:
     """One INFO record per committed compaction: carry, partial or full."""
     _log.info("compacted %s: %s, buckets %d -> %d", store_path, path, before, after)
+
+
+def run_foreach_batch(
+    stream_df: DataFrame,
+    sink,
+    checkpoint_dir: str,
+    timeout_sec: int = 120,
+) -> None:
+    """The foreachBatch driver: availableNow trigger, then await
+    completion. On timeout the query is stopped and a TimeoutError
+    raised — returning silently would hand the caller a store missing
+    the tail micro-batches while an orphaned query keeps mutating it.
+    On shutdown the AMBIENT tracked caches are released: sinks run on
+    Spark's stream execution thread, so a tracked_cache they issue
+    cannot belong to a cached_session scope of the calling thread
+    (scopes are thread-local) and would otherwise accumulate."""
+    from ..operators.caching import release_caches
+
+    q = (
+        stream_df.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        finished = q.awaitTermination(timeout_sec)
+        if not finished:
+            q.stop()
+            raise TimeoutError(
+                f"streaming query did not drain within {timeout_sec}s; "
+                "stopped — the store may be missing tail micro-batches"
+            )
+    finally:
+        release_caches()
+
+
+def streamer(update: Callable[..., None]) -> Callable[..., None]:
+    """A store's foreachBatch driver, ``stream(stream_df, store_path,
+    checkpoint_dir, timeout_sec=120, **kw)``: every micro-batch goes to
+    ``update(batch, store_path, batch_id, **kw)``. store_path and
+    checkpoint_dir live and die together (replay guard, above)."""
+
+    def stream(
+        stream_df: DataFrame,
+        store_path: str,
+        checkpoint_dir: str,
+        timeout_sec: int = 120,
+        **kw,
+    ) -> None:
+        run_foreach_batch(
+            stream_df,
+            lambda batch, batch_id: update(batch, store_path, batch_id, **kw),
+            checkpoint_dir,
+            timeout_sec,
+        )
+
+    return stream

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.sketches import cms_grid, cms_merge
-from .incremental import run_foreach_batch
+from . import segments
 from .segments import read_parquet
 
 
@@ -78,21 +78,9 @@ def cms_update_batch(
     ).localCheckpoint(eager=True).write.mode("overwrite").parquet(store_path)
 
 
-def stream_cms_into_store(
-    stream_df: DataFrame,
-    store_path: str,
-    checkpoint_dir: str,
-    timeout_sec: int = 120,
-) -> None:
-    """foreachBatch driver: maintain the corpus CMS grid incrementally
-    as documents stream in. store_path and checkpoint_dir must live
-    and die together (see cms_update_batch's lifecycle contract)."""
-    run_foreach_batch(
-        stream_df,
-        lambda batch, batch_id: cms_update_batch(batch, store_path, batch_id),
-        checkpoint_dir,
-        timeout_sec,
-    )
+# foreachBatch driver: maintain the corpus CMS grid incrementally as
+# documents stream in (see cms_update_batch's lifecycle contract).
+stream_cms_into_store = segments.streamer(cms_update_batch)
 
 
 def kmv_update_batch(
@@ -116,19 +104,13 @@ def kmv_update_batch(
     merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(store_path)
 
 
-def stream_kmv_into_store(
-    stream_df: DataFrame,
-    store_path: str,
-    checkpoint_dir: str,
-    timeout_sec: int = 120,
-    k: int | None = None,
+def _kmv_sink(
+    batch_docs: DataFrame, store_path: str, _batch_id: int, k: int | None = None
 ) -> None:
-    """foreachBatch driver: maintain the corpus cardinality sketch
-    incrementally — the state is <= k hash values however much text
-    has streamed past."""
-    run_foreach_batch(
-        stream_df,
-        lambda batch, batch_id: kmv_update_batch(batch, store_path, k),
-        checkpoint_dir,
-        timeout_sec,
-    )
+    kmv_update_batch(batch_docs, store_path, k)
+
+
+# foreachBatch driver: maintain the corpus cardinality sketch
+# incrementally — the state is <= k hash values however much text has
+# streamed past.
+stream_kmv_into_store = segments.streamer(_kmv_sink)

@@ -44,6 +44,8 @@ cross-engine ground truth (registered query ``incremental_ann_topk``).
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -167,7 +169,7 @@ def vector_store_update_batch(
     # dominates a row, so the margin is generous).
     v_est = segments.plan_size_estimate(v)
 
-    def build(meta: dict, n: int, bid: int) -> DataFrame:
+    def build(meta: dict, _bid: int) -> DataFrame:
         rows_v = v
         planes, ppt = _pinned_planes(meta)
         if planes is None:
@@ -185,8 +187,6 @@ def vector_store_update_batch(
             segments.pin_value(store_path, meta, "planes", planes)
         return (
             _with_buckets(rows_v, planes, ppt, n_tables)
-            .withColumn("_ubid", F.lit(bid).cast("long"))
-            .withColumn(SPEC.bucket_col, SPEC.bucket_expr(n))
         )
 
     segments.ingest(
@@ -203,17 +203,10 @@ def read_vector_store(spark: SparkSession, store_path: str) -> DataFrame:
     return segments.read_store(SPEC, spark, store_path)
 
 
-def vector_store_compact(
-    spark: SparkSession,
-    store_path: str,
-    n_buckets: int = segments.START_N_BUCKETS,
-    rows_per_bucket: int = segments.ROWS_PER_BUCKET,
-) -> None:
-    """Fold live deltas into a new id-bucketed base
-    (``segments.compact``). LSH buckets are payload and carry over
-    verbatim (they depend only on the pinned planes, never on the
-    layout)."""
-    segments.compact(SPEC, spark, store_path, n_buckets, rows_per_bucket)
+# Fold live deltas into a new id-bucketed base. LSH buckets are payload
+# and carry over verbatim (they depend only on the pinned planes, never
+# on the layout).
+vector_store_compact = functools.partial(segments.compact, SPEC)
 
 
 def vector_store_delete_batch(
@@ -228,7 +221,7 @@ def vector_store_delete_batch(
     ``ann_topk_against_store`` (it reads the tombstone-filtered store
     view) and a later re-ingest resurrects."""
 
-    def build(_meta: dict, n: int, bid: int) -> DataFrame:
+    def build(_meta: dict, _bid: int) -> DataFrame:
         return (
             ids.select(F.col(id_col).alias("vec_id"))
             .distinct()
@@ -236,8 +229,6 @@ def vector_store_delete_batch(
             .withColumn("_n", F.lit(None).cast("double"))
             .withColumn("buckets", F.lit(None).cast("array<bigint>"))
             .withColumn(tombstones.TOMB_COL, F.lit(True))
-            .withColumn("_ubid", F.lit(bid).cast("long"))
-            .withColumn(SPEC.bucket_col, SPEC.bucket_expr(n))
         )
 
     segments.ingest(
@@ -337,29 +328,11 @@ def vector_store_bootstrap(
     ppt = auto_planes_per_table(n_rows)
     plane_rows = v.orderBy("vec_id").limit(n_tables * ppt).collect()
     planes = [list(r["e"]) for r in plane_rows]  # bounded: n_planes x dim
-    n_buckets = segments.sized_n_buckets(n_rows)
-    rows = (
-        _with_buckets(v, planes, ppt, n_tables)
-        .withColumn("_ubid", F.lit(-1).cast("long"))
-        .withColumn(SPEC.bucket_col, SPEC.bucket_expr(n_buckets))
-    )
-    segments.bootstrap_base(
-        rows, store_path, SPEC.bucket_col, n_buckets,
+    segments.bootstrap(
+        SPEC, store_path, _with_buckets(v, planes, ppt, n_tables), n_rows,
         extra_meta={"planes_per_table": ppt, "planes": planes},
     )
 
 
-def stream_vector_store(
-    stream_df: DataFrame,
-    store_path: str,
-    checkpoint_dir: str,
-    timeout_sec: int = 120,
-) -> None:
-    """foreachBatch driver: each micro-batch ingests its vectors
-    (same shape as the sibling stores' drivers)."""
-    from .incremental import run_foreach_batch
-
-    def _sink(batch: DataFrame, batch_id: int) -> None:
-        vector_store_update_batch(batch, store_path, batch_id=batch_id)
-
-    run_foreach_batch(stream_df, _sink, checkpoint_dir, timeout_sec)
+# foreachBatch driver: each micro-batch ingests its vectors.
+stream_vector_store = segments.streamer(vector_store_update_batch)

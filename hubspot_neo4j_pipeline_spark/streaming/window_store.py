@@ -38,6 +38,8 @@ union (registered query ``incremental_window_counts``).
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -106,10 +108,8 @@ def window_store_update_batch(
     """Ingest one micro-batch's per-(day, user) partial counts as an
     atomic delta — O(batch), the existing state is NOT read."""
 
-    def build(_meta: dict, n: int, _bid: int) -> DataFrame:
-        return _partial_counts(batch, ts_col, user_col, value_col).withColumn(
-            SPEC.bucket_col, SPEC.bucket_expr(n)
-        )
+    def build(_meta: dict, _bid: int) -> DataFrame:
+        return _partial_counts(batch, ts_col, user_col, value_col)
 
     segments.ingest(
         SPEC, store_path, batch_id, compact_every, build, window_store_compact,
@@ -117,15 +117,9 @@ def window_store_update_batch(
     )
 
 
-def window_store_compact(
-    spark: SparkSession,
-    store_path: str,
-    n_buckets: int = segments.START_N_BUCKETS,
-    rows_per_bucket: int = segments.ROWS_PER_BUCKET,
-) -> None:
-    """Fold live deltas into a new user-bucketed base
-    (``segments.compact``); netted-out cells are reclaimed."""
-    segments.compact(SPEC, spark, store_path, n_buckets, rows_per_bucket)
+# Fold live deltas into a new user-bucketed base; netted-out cells are
+# reclaimed.
+window_store_compact = functools.partial(segments.compact, SPEC)
 
 
 def window_store_delete_batch(
@@ -147,7 +141,7 @@ def window_store_delete_batch(
     negates through the same DECIMAL(18,2) casts the ingest partial
     uses, so retraction is bit-exact against the one-shot oracle."""
 
-    def build(_meta: dict, n: int, _bid: int) -> DataFrame:
+    def build(_meta: dict, _bid: int) -> DataFrame:
         return (
             _partial_counts(events, ts_col, user_col, value_col)
             .select(
@@ -156,7 +150,6 @@ def window_store_delete_batch(
                 (-F.col("n")).cast("long").alias("n"),
                 (-F.col("total_value")).cast("decimal(18,2)").alias("total_value"),
             )
-            .withColumn(SPEC.bucket_col, SPEC.bucket_expr(n))
         )
 
     segments.ingest(
@@ -209,34 +202,19 @@ def window_store_bootstrap(
     user_col: str = "user_id",
     value_col: str = "value",
 ) -> None:
-    """Day-0 bulk load (r12): the whole existing event history's
-    per-(day, user) partials written directly as the first compacted
+    """Day-0 bulk load (``segments.bootstrap``): the whole existing
+    event history's per-(day, user) partials as the first compacted
     base — the one-time backfill a production deployment runs before
     pointing the event stream at the store. The aggregated partial is
     checkpointed once so its exact row count (active user-days, far
-    fewer than events) drives sized_n_buckets instead of the raw
-    event count over-provisioning. Streaming ingest continues on top
-    (batch ids start at 0). Equivalent state to update-then-compact,
-    pinned by test."""
+    fewer than events) sizes the base. Equivalent state to
+    update-then-compact, pinned by test."""
     partial = _partial_counts(events, ts_col, user_col, value_col).localCheckpoint(
         eager=True
     )
-    n_buckets = segments.sized_n_buckets(partial.count())
-    rows = partial.withColumn(SPEC.bucket_col, SPEC.bucket_expr(n_buckets))
-    segments.bootstrap_base(rows, store_path, SPEC.bucket_col, n_buckets)
+    segments.bootstrap(SPEC, store_path, partial, partial.count())
 
 
-def stream_window_store(
-    stream_df: DataFrame,
-    store_path: str,
-    checkpoint_dir: str,
-    timeout_sec: int = 120,
-) -> None:
-    """foreachBatch driver: each micro-batch folds its per-(day, user)
-    partials into the store (same shape as stream_gram_store)."""
-    from .incremental import run_foreach_batch
-
-    def _sink(batch: DataFrame, batch_id: int) -> None:
-        window_store_update_batch(batch, store_path, batch_id=batch_id)
-
-    run_foreach_batch(stream_df, _sink, checkpoint_dir, timeout_sec)
+# foreachBatch driver: each micro-batch folds its per-(day, user) partials
+# into the store.
+stream_window_store = segments.streamer(window_store_update_batch)

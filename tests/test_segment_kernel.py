@@ -538,3 +538,128 @@ def test_first_ingest_pins_meta_in_one_write(spark, tmp_path, monkeypatch):
     ]
     m.gram_store_update_batch(_docs(spark, range(4, 8)), store, 1, k=8, compact_every=99)
     assert len(written) == 1
+
+
+# ---------------------------------------------------------------------------
+# The SCD2 store on the kernel: its compaction reaches the kernel's
+# crash hook, and its stream driver stamps a valid time for any batch id.
+
+SCD2_SCHEMA = "k long, v string"
+# (n_buckets, batch 1's rows, the retried compaction's logged path)
+SCD2_PATHS = {
+    "carry": (32, [(i, f"v{i}") for i in range(40)], "carry, buckets 32 -> 32"),
+    "partial": (32, [(7, "CHANGED"), (100, "new")], "partial, buckets 32 -> 32"),
+    "full": (1, [(7, "CHANGED"), (100, "new")], "full, buckets 1 -> 1"),
+}
+
+
+def _scd2_two_batches(spark, store, n_buckets, batch1):
+    from hubspot_neo4j_pipeline_spark.streaming.incremental import (
+        scd2_store_compact,
+        upsert_batch,
+    )
+
+    upsert_batch(
+        spark.createDataFrame([(i, f"v{i}") for i in range(40)], SCD2_SCHEMA),
+        store, key="k", now="2024-01-01 00:00:00", batch_id=0, n_buckets=n_buckets,
+    )
+    scd2_store_compact(spark, store)
+    upsert_batch(
+        spark.createDataFrame(batch1, SCD2_SCHEMA),
+        store, key="k", now="2024-01-01 00:01:00", batch_id=1,
+    )
+
+
+def _scd2_views(spark, store):
+    from hubspot_neo4j_pipeline_spark.streaming.incremental import (
+        read_current,
+        read_history,
+    )
+
+    return [
+        [] if f is None else sorted(tuple(r) for r in f.collect())
+        for f in (read_current(spark, store), read_history(spark, store))
+    ]
+
+
+@pytest.mark.parametrize("path", sorted(SCD2_PATHS))
+def test_scd2_crash_before_commit_on_every_path(spark, tmp_path, caplog, path):
+    """A compaction that does all its work, history segment included,
+    and crashes before the meta replace leaves both views as they
+    were: the new base and ``seg-<hi>`` stay unresolved. Compacting
+    again takes the same path and reads cell-equal to a twin that
+    never crashed."""
+    from hubspot_neo4j_pipeline_spark.streaming.incremental import (
+        _history_segments,
+        scd2_store_compact,
+    )
+
+    n_buckets, batch1, logged = SCD2_PATHS[path]
+    store, twin = str(tmp_path / "store"), str(tmp_path / "twin")
+    for p in (store, twin):
+        _scd2_two_batches(spark, p, n_buckets, batch1)
+    before = _scd2_views(spark, store)
+    meta = segments.read_meta(store)
+
+    scd2_store_compact(spark, store, crash_before_commit=True)
+    assert segments.read_meta(store) == meta
+    assert os.path.isdir(os.path.join(store, "history", "seg-1")) == (path != "carry")
+    assert not [
+        p for p in _history_segments(store, segments.read_meta(store))
+        if p.endswith("seg-1")
+    ]
+    assert _scd2_views(spark, store) == before
+
+    caplog.set_level(logging.INFO, logger=LOGGER)
+    scd2_store_compact(spark, store)
+    assert _compaction_logs(caplog) == [f"compacted {store}: {logged}"]
+    scd2_store_compact(spark, twin)
+    assert segments.read_meta(store)["consumed_through"] == 1
+    assert _scd2_views(spark, store) == _scd2_views(spark, twin) == before
+    assert sorted(os.listdir(os.path.join(store, "history"))) == sorted(
+        os.listdir(os.path.join(twin, "history"))
+    )
+
+
+def test_scd2_first_upsert_compacts_at_compact_every_one(spark, tmp_path):
+    """An upsert into an empty store runs the compaction trigger like
+    any other ingest: with ``compact_every=1`` batch 0 commits a base
+    and leaves no live delta."""
+    from hubspot_neo4j_pipeline_spark.streaming.incremental import upsert_batch
+
+    store = str(tmp_path / "scd2")
+    upsert_batch(
+        spark.createDataFrame([(1, "a"), (2, "b")], SCD2_SCHEMA),
+        store, key="k", now="2024-01-01 00:00:00", batch_id=0, compact_every=1,
+    )
+    meta = segments.read_meta(store)
+    assert (meta["base"], meta["consumed_through"], meta["base_rows"]) == ("base-0", 0, 2)
+    assert segments.live_deltas(store, meta) == {}
+    current, history = _scd2_views(spark, store)
+    assert [r[:2] for r in current] == [(1, "a"), (2, "b")] and history == []
+
+
+def test_stream_into_store_stamps_minutes_past_the_hour(spark, tmp_path):
+    """``stream_into_store`` stamps micro-batch ``i`` at epoch + i
+    minutes; batch 60 is 01:00, not an invalid 00:60."""
+    from pyspark.sql import functions as F
+
+    from hubspot_neo4j_pipeline_spark.streaming.incremental import (
+        _upsert_at_batch_minute,
+        read_current,
+    )
+
+    store = str(tmp_path / "scd2")
+    for bid in (0, 59, 60, 61):
+        _upsert_at_batch_minute(
+            spark.createDataFrame([(bid, "v")], SCD2_SCHEMA), store, bid, key="k"
+        )
+    got = read_current(spark, store).select(
+        "k", F.date_format("valid_from", "yyyy-MM-dd HH:mm").alias("t")
+    )
+    assert sorted(tuple(r) for r in got.collect()) == [
+        (0, "2024-01-01 00:00"),
+        (59, "2024-01-01 00:59"),
+        (60, "2024-01-01 01:00"),
+        (61, "2024-01-01 01:01"),
+    ]

@@ -658,7 +658,7 @@ def test_gram_store_crash_recovery(spark, tmp_path_factory):
     # crash 2: compaction wrote base-0 but never committed meta —
     # the orphan base must not be resolvable, and re-running the
     # compaction must converge to the same exact view
-    gram_store_compact(spark, store, _crash_before_commit=True)
+    gram_store_compact(spark, store, crash_before_commit=True)
     assert os.path.isdir(os.path.join(store, "base-0"))
     assert read_meta(store)["base"] is None
     assert _gram_counts(spark, store) == after2
@@ -1350,7 +1350,7 @@ def test_bucket_count_grows_at_compaction(spark, tmp_path_factory):
     # simulated crash: all work done, commit skipped — reads unchanged
     # (base + live deltas, i.e. docs ∪ small, exactly as before the
     # crashed attempt)
-    gram_store_compact(spark, store, rows_per_bucket=rpb, _crash_before_commit=True)
+    gram_store_compact(spark, store, rows_per_bucket=rpb, crash_before_commit=True)
     assert sorted(
         (r["h"], r["n"]) for r in read_gram_store(spark, store).collect()
     ) == want2
