@@ -50,7 +50,9 @@ Lifecycle:
   * ``ingest`` runs the replay guard, the store's row builder, one
     meta write for the bucket count (START_N_BUCKETS on a fresh store,
     else the pinned count) and the builder's pins,
-    ``commit_delta`` and the compaction trigger (every
+    ``commit_delta`` (through the engine's parquet sink,
+    ``operators.sinks.write_parquet``, which writes a small delta from
+    the driver) and the compaction trigger (every
     ``compact_every`` live deltas). A delete is an ingest whose builder
     emits tombstones or negated partials.
   * ``visible_frames`` / ``read_store`` merge the base and the live
@@ -122,6 +124,7 @@ from typing import Callable, NamedTuple
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.sinks import write_parquet
 from . import tombstones
 
 META = "meta.json"
@@ -276,84 +279,12 @@ def _manifest_counts(df, tmp: str, bucket_col: str) -> tuple[list[int], int]:
     return sorted(r[0] for r in per_bucket), int(sum(r[1] for r in per_bucket))
 
 
-# Driver-side delta commit (r14 round-2, the round-1 "not yet
-# optimized" #1; guide §5 — the driver can own driver-bounded work).
-# A micro-batch delta is typically a few thousand slim rows, but the
-# Spark write job still pays write-task launch + the Hadoop committer
-# (_temporary dirs, per-task + job commit renames) + the manifest's
-# re-read of the written files — measured ~0.1-0.3 s of fixed cost per
-# commit at sf0.1 against a 0.5-0.7 s total. When the PLANNER estimates
-# the delta small, the driver collects it as one Arrow table (same
-# single plan execution the write job pays), writes one parquet file
-# with pyarrow, and derives the manifest from the in-memory table —
-# zero extra I/O. Gates, conservative in both directions:
-#   * planner estimate (optimizedPlan().stats().sizeInBytes) must be
-#     under DRIVER_COMMIT_MAX_EST — estimates on these post-aggregate
-#     plans measured within ~5x of actual Arrow bytes, and an eagerly
-#     checkpointed input (the SCD2 upsert path) reports "unknown"
-#     (huge), so bulk and unknown-size deltas keep the distributed
-#     write;
-#   * the collected table's ACTUAL bytes must be under
-#     DRIVER_COMMIT_MAX_ACTUAL or the Spark path re-executes (rare
-#     misestimate; correctness never depends on the gate).
-# Byte compatibility is pinned by test_driver_commit_parity: for every
-# store's delta shape (strings/longs/decimals/timestamps/bool/arrays)
-# the pyarrow-written file reads back through spark.read.parquet with
-# identical dtypes and rows as a Spark-written one.
-DRIVER_COMMIT_MAX_EST = 16 * 1024 * 1024
-DRIVER_COMMIT_MAX_ACTUAL = 128 * 1024 * 1024
-
-
-def plan_size_estimate(df) -> int | None:
-    """Catalyst's optimized-plan output-size estimate in bytes, or
-    None when the API is unavailable. An UNKNOWN size (LogicalRDD
-    inputs — checkpoints, driver frames) surfaces as a huge number, so
-    comparing against a small threshold naturally fails the gate. Used
-    by stores whose final delta plan joins a driver frame (the vector
-    store's pinned-planes row): they estimate on the parquet-rooted
-    subplan BEFORE that join and pass ``est_bytes`` to commit_delta."""
-    try:
-        return int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
-        return None
-
-
-def _try_driver_table(df, est_bytes: int | None = None):
-    """The delta as a pyarrow table IF the planner (or the caller's
-    ``est_bytes`` override) thinks it is small, else None. Any failure
-    (stats API drift, Arrow conversion of an exotic type, result-size
-    cap) falls back to the Spark write and logs one WARNING naming the
-    exception class."""
-    try:
-        est = est_bytes if est_bytes is not None else plan_size_estimate(df)
-        if est is None or est > DRIVER_COMMIT_MAX_EST:
-            return None
-        # NOTE: toArrow() materializes the full delta on the driver
-        # BEFORE the actual-size check below, so a pathological
-        # underestimate (<16 MB estimate on a genuinely large delta)
-        # is bounded only by spark.driver.maxResultSize (default 1 GB)
-        # until the 128 MB cap rejects it post-collect. MAX_EST is
-        # sized ~8x under MAX_ACTUAL precisely so the observed ~5x
-        # estimate error keeps est*5 under the cap; a maxResultSize
-        # abort lands in this except and falls back to the
-        # distributed write (fallback pinned by
-        # test_driver_commit_fallback_on_misestimate).
-        tbl = df.toArrow()
-        if tbl.nbytes > DRIVER_COMMIT_MAX_ACTUAL:
-            return None
-        return tbl
-    except Exception as exc:
-        _log_driver_fallback(exc)
-        return None
-
-
-def _log_driver_fallback(exc: Exception) -> None:
-    _log.warning(
-        "driver delta commit failed (%s); falling back to the Spark write",
-        type(exc).__name__,
-    )
+# Delta commit: the write goes through the engine's one parquet sink,
+# ``operators.sinks.write_parquet``, which commits a small delta from
+# the driver (one pyarrow file, no write job) and a large or
+# unknown-size one with the Spark writer, and logs which and why. The
+# manifest is read back from the written file either way
+# (``_manifest_counts``), so both paths commit the same manifest.
 
 
 def commit_delta(
@@ -364,72 +295,28 @@ def commit_delta(
     est_bytes: int | None = None,
 ) -> None:
     """Write ``df`` as delta segment b<batch_id>: parquet into a _tmp
-    dir, then one atomic os.rename. A crashed previous attempt's _tmp
-    is cleared first (it was never reader-visible).
-
-    Small deltas (planner-estimated — see _try_driver_table) execute
-    the plan ONCE into a driver Arrow table and commit as a single
-    pyarrow-written file, skipping the write job's committer overhead
-    and the manifest re-read; large or unknown-size deltas take the
-    distributed write exactly as before. ``est_bytes`` lets a caller
-    whose final plan hides its size behind a driver-frame join supply
-    the estimate itself (see plan_size_estimate).
+    dir (``write_parquet``), then one atomic os.rename. A crashed
+    previous attempt's _tmp is cleared first (it was never
+    reader-visible). ``est_bytes`` lets a caller whose final plan hides
+    its size behind a driver-frame join supply the size estimate itself
+    (``sinks.plan_size_estimate``).
 
     ``bucket_col`` (r10, bucket-partial compaction): name of an
     integer bucket column carried by ``df``. When given, the distinct
-    bucket ids present in the batch are collected from the
-    just-written tmp parquet (a slim re-read, never a recompute of the
-    batch plan) — or straight from the driver table on the small-delta
-    path — into a ``_delta_manifest.json`` INSIDE the delta dir —
-    written before the rename, so the manifest commits atomically with
-    the data. Compactions use the union of live manifests to merge
+    bucket ids present in the batch and its row count are read from
+    the just-written tmp parquet (a slim re-read, never a recompute of
+    the batch plan) into a ``_delta_manifest.json`` INSIDE the delta
+    dir — written before the rename, so the manifest commits atomically
+    with the data. Compactions use the union of live manifests to merge
     only touched buckets and carry the rest of the base over by
     hard-link (``untouched_partitions`` / ``link_tree``)."""
     os.makedirs(os.path.join(store_path, DELTAS), exist_ok=True)
     tmp = os.path.join(store_path, f"_tmp-b{batch_id}")
     if os.path.exists(tmp):
         shutil.rmtree(tmp)
-    manifest: tuple[list[int], int] | None = None
-    wrote_driver = False
-    tbl = _try_driver_table(df, est_bytes)
-    if tbl is not None:
-        # the whole driver path — write AND manifest derivation — is
-        # guarded (r15, r14 ADVICE): an Arrow-compute failure in the
-        # manifest used to abort the commit with a stranded _tmp dir
-        # instead of falling back like every other driver-path failure
-        try:
-            import pyarrow.compute as pc
-            import pyarrow.parquet as pq
-
-            os.makedirs(tmp)
-            pq.write_table(
-                tbl, os.path.join(tmp, "part-00000-driver.parquet"),
-                compression="zstd",
-            )
-            if bucket_col is not None:
-                manifest = (
-                    sorted(
-                        int(v)
-                        for v in pc.unique(tbl.column(bucket_col)).to_pylist()
-                        if v is not None
-                    ),
-                    tbl.num_rows,
-                )
-            wrote_driver = True
-        except Exception as exc:
-            _log_driver_fallback(exc)
-            shutil.rmtree(tmp, ignore_errors=True)
-            manifest = None
-    if not wrote_driver:
-        df.write.mode("overwrite").parquet(tmp)
-        if bucket_col is not None:
-            # one slim pass over the just-written parquet gives BOTH
-            # the touched-bucket list (partial compaction) and the
-            # delta's row count (r11: scale-adaptive bucket sizing) —
-            # see _manifest_counts for the small-delta driver shortcut
-            manifest = _manifest_counts(df, tmp, bucket_col)
-    if manifest is not None:
-        touched, rows = manifest
+    write_parquet(df, tmp, "overwrite", est_bytes=est_bytes)
+    if bucket_col is not None:
+        touched, rows = _manifest_counts(df, tmp, bucket_col)
         with open(os.path.join(tmp, MANIFEST), "w") as fh:
             json.dump(
                 {"bucket_col": bucket_col, "touched": touched, "rows": rows},
@@ -609,13 +496,16 @@ INFER_NTZ = "spark.sql.parquet.inferTimestampNTZ.enabled"
 
 
 def _first_data_file(path: str) -> str | None:
-    """The first parquet data file under ``path`` in sorted walk order,
-    skipping the names Spark's file index hides (``_``/``.`` prefixes,
-    except ``k=v`` partition dirs); None when there is none."""
+    """``path`` itself if it is a file, else the first parquet data file
+    under it in sorted walk order, skipping the names Spark's file index
+    hides (``_``/``.`` prefixes, except ``k=v`` partition dirs); None
+    when there is none."""
 
     def hidden(name: str) -> bool:
         return name.startswith(".") or (name.startswith("_") and "=" not in name)
 
+    if os.path.isfile(path):
+        return path
     for root, dirs, files in os.walk(path):
         dirs[:] = sorted(d for d in dirs if not hidden(d))
         for name in sorted(files):

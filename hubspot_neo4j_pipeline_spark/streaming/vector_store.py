@@ -49,6 +49,7 @@ import functools
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.sinks import plan_size_estimate
 from . import segments, tombstones
 
 COMPACT_EVERY = 8
@@ -167,7 +168,7 @@ def vector_store_update_batch(
     # the parquet-rooted subplan BEFORE that join instead; x4 covers
     # the added buckets/norm/meta columns (the vector payload
     # dominates a row, so the margin is generous).
-    v_est = segments.plan_size_estimate(v)
+    v_est = plan_size_estimate(v)
 
     def build(meta: dict, _bid: int) -> DataFrame:
         rows_v = v

@@ -11,6 +11,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from hubspot_neo4j_pipeline_spark.operators import sinks
 from hubspot_neo4j_pipeline_spark.streaming import segments
 
 
@@ -117,7 +118,7 @@ def test_driver_commit_parity(spark, tmp_path_factory, shape, monkeypatch):
     ), "small delta should take the driver path"
 
     spk = str(tmp_path_factory.mktemp(f"spk_{shape}"))
-    monkeypatch.setattr(segments, "_try_driver_table", lambda df, est=None: None)
+    monkeypatch.setattr(sinks, "_try_driver_table", lambda df, est=None: None)
     segments.commit_delta(df, spk, 0, bucket_col=bucket_col)
     spk_dir = os.path.join(spk, "deltas", "b0")
     assert not os.path.exists(os.path.join(spk_dir, "part-00000-driver.parquet"))
@@ -141,7 +142,7 @@ def test_driver_commit_respects_estimate_gate(spark, tmp_path_factory, monkeypat
     write (the gate, not the collect, is what protects the driver at
     bulk scale)."""
     df, bucket_col = _delta_frames(spark)["hash"]
-    monkeypatch.setattr(segments, "DRIVER_COMMIT_MAX_EST", 0)
+    monkeypatch.setattr(sinks, "DRIVER_COMMIT_MAX_EST", 0)
     store = str(tmp_path_factory.mktemp("gate"))
     segments.commit_delta(df, store, 0, bucket_col=bucket_col)
     d = os.path.join(store, "deltas", "b0")
@@ -159,7 +160,7 @@ def test_driver_commit_fallback_on_misestimate(
     stranded _tmp dir."""
     df, bucket_col = _delta_frames(spark)["hash"]
     # force "actual over cap" for ANY delta: every collect is rejected
-    monkeypatch.setattr(segments, "DRIVER_COMMIT_MAX_ACTUAL", 0)
+    monkeypatch.setattr(sinks, "DRIVER_COMMIT_MAX_ACTUAL", 0)
     store = str(tmp_path_factory.mktemp("misest"))
     segments.commit_delta(df, store, 0, bucket_col=bucket_col)
     d = os.path.join(store, "deltas", "b0")

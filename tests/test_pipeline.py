@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from hubspot_neo4j_pipeline_spark.pipeline import run_pipeline
+from hubspot_neo4j_pipeline_spark.pipeline import read_all_feeds, run_pipeline
 from hubspot_neo4j_pipeline_spark.plans.temporal_reporting import (
     TemporalStore,
     compare_entity_versions,
@@ -244,3 +244,133 @@ def test_remaining_temporal_queries(spark, store):
     }
     rel_hist = get_entity_relationship_history(ts, "c1").collect()
     assert len(rel_hist) >= 3
+
+
+# -- the write sink: driver path vs Spark path -------------------------------
+
+_TABLES = ("nodes", "changelog", "history", "edges", "edges_immutable", "edge_changelog")
+
+
+def _store_tables(spark, store) -> dict[str, tuple]:
+    """Every table of the store as (column names and types, sorted
+    canonical rows), keyed by its directory; the edge tables per
+    ``rel_type``. A directory with no data file reads as None."""
+    import json
+    import os
+
+    from hubspot_neo4j_pipeline_spark.streaming.segments import _first_data_file
+
+    out: dict[str, tuple] = {}
+    for top in _TABLES:
+        root = os.path.join(store, top)
+        if not os.path.isdir(root):
+            continue
+        labelled = top in ("nodes", "changelog", "history")
+        for name in sorted(os.listdir(root)) if labelled else [""]:
+            path = os.path.join(root, name)
+            table = "/".join(filter(None, [top, name]))
+            if _first_data_file(path) is None:
+                out[table] = None
+                continue
+            df = spark.read.parquet(path)
+            by = "rel_type" if "rel_type" in df.columns else None
+            if by is None:
+                out[table] = (df.dtypes, [])
+            for r in df.collect():
+                key = f"{table}/rel_type={r[by]}" if by else table
+                rows = out.setdefault(key, (df.dtypes, []))[1]
+                rows.append(json.dumps(r.asDict(recursive=True), sort_keys=True, default=str))
+    return {k: v if v is None else (v[0], sorted(v[1])) for k, v in out.items()}
+
+
+def _on_disk(spark, feeds, path):
+    """``feeds`` written as JSON-lines feed files and read back through
+    ``read_all_feeds``, as a real run reads them: file scans the sink
+    can size (the in-memory fixture frames are RDD-rooted, so their
+    size is unknown and every write would take the Spark path)."""
+    import os
+
+    for name, df in feeds.items():
+        df.write.json(os.path.join(path, name))
+    return read_all_feeds(spark, path)
+
+
+def _day_runs(spark, store, feeds_dir):
+    """Day 0 on the fixture feeds with no engagements (an empty
+    HUBSPOT_Activity table), then day 1 on the modified feeds (c1
+    changes owner, c2 is dropped, c5 is new; engagements are back)."""
+    day0 = make_crm_feeds(spark)
+    day0["engagements"] = day0["engagements"].limit(0)
+    days = [(day0, "2024-03-01 00:00:00"), (_modified_feeds(spark), "2024-03-02 00:00:00")]
+    for day, (feeds, now) in enumerate(days):
+        feeds = _on_disk(spark, feeds, f"{feeds_dir}/day{day}")
+        run_pipeline(spark, feeds, store, now=now).stats.collect()
+
+
+def _sink_records(caplog) -> list[str]:
+    return [
+        r.getMessage()
+        for r in caplog.records
+        if r.name == "hubspot_neo4j_pipeline_spark" and "parquet write" in r.getMessage()
+    ]
+
+
+def test_driver_and_spark_paths_write_the_same_store(spark, tmp_path, monkeypatch, caplog):
+    """Day 0 then day 1 through the sink's driver path and with the
+    gate forced to the Spark path: every table (nodes incl. a table
+    written empty on day 0, changelog, history, edges per rel_type incl.
+    the map-typed ``properties``, edges_immutable, edge_changelog) reads
+    back with the same column names and types and the same rows. On
+    day 0 every write of the fixture takes the driver path."""
+    import logging
+
+    from hubspot_neo4j_pipeline_spark.operators import sinks
+
+    caplog.set_level(logging.INFO, logger="hubspot_neo4j_pipeline_spark")
+    driver = str(tmp_path / "driver")
+    _day_runs(spark, driver, str(tmp_path / "feeds_d"))
+    day0 = _sink_records(caplog)[:13]
+    assert all(m.endswith(": driver") for m in day0), day0
+
+    monkeypatch.setattr(sinks, "DRIVER_COMMIT_MAX_EST", -1)
+    caplog.clear()
+    distributed = str(tmp_path / "spark")
+    _day_runs(spark, distributed, str(tmp_path / "feeds_s"))
+    assert all(": spark (estimate" in m for m in _sink_records(caplog))
+
+    got, want = _store_tables(spark, driver), _store_tables(spark, distributed)
+    assert got.keys() == want.keys()
+    for key in want:
+        assert got[key] == want[key], key
+    assert "map<string,string>" in dict(want["edges/rel_type=OWNED_BY"][0]).values()
+    assert want["history/HUBSPOT_Contact"] is not None
+    # empty on day 0, merged with day 1's engagements
+    assert want["changelog/HUBSPOT_Activity"][1] != []
+
+
+def test_day0_load_jobs_pinned(spark, tmp_path):
+    """The fixture's day-0 load plus its verify stats run 21 Spark jobs:
+    the collects of the ten node plans and of the cached edge plan's
+    three outputs (with their shuffle and broadcast stages) and two for
+    the stats. No write job, no changelog job."""
+    feeds = _on_disk(spark, make_crm_feeds(spark), str(tmp_path / "feeds"))
+
+    def load():
+        res = run_pipeline(spark, feeds, str(tmp_path / "g"), now="2024-03-01 00:00:00")
+        return res.stats.collect()
+
+    _, jobs = count_jobs(spark, load)
+    assert jobs == 21
+
+
+def test_identical_rerun_compiles_nothing(spark, tmp_path):
+    """The codegen cache holds a whole run: a second identical day-0
+    load in the same session compiles no new class."""
+    metric = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    feeds = _on_disk(spark, make_crm_feeds(spark), str(tmp_path / "feeds"))
+    for i in range(2):
+        before = metric.METRIC_COMPILATION_TIME().getCount()
+        run_pipeline(spark, feeds, str(tmp_path / f"g{i}"), now="2024-03-01 00:00:00")\
+            .stats.collect()
+        compiled = metric.METRIC_COMPILATION_TIME().getCount() - before
+    assert compiled == 0

@@ -11,6 +11,7 @@ from decimal import Decimal
 import pytest
 from pyspark.errors import AnalysisException
 
+from hubspot_neo4j_pipeline_spark.operators import sinks
 from hubspot_neo4j_pipeline_spark.streaming import (
     cluster_store,
     hash_store,
@@ -140,7 +141,7 @@ def _recommit(spark, delta_dir, dest, driver, monkeypatch):
     the driver (pyarrow) writer or by the Spark writer."""
     frame = spark.read.parquet(delta_dir)
     if not driver:
-        monkeypatch.setattr(segments, "_try_driver_table", lambda df, est=None: None)
+        monkeypatch.setattr(sinks, "_try_driver_table", lambda df, est=None: None)
     segments.commit_delta(frame, dest, 0)
     monkeypatch.undo()
     out = os.path.join(dest, "deltas", "b0")

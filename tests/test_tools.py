@@ -193,6 +193,32 @@ def test_gate_fingerprint_reacts_to_engine_changes(tmp_path, monkeypatch):
     assert rec[art.name] == fp0
 
 
+def test_gate_record_skips_artifacts_outside_the_checkout(tmp_path, monkeypatch):
+    """``verify_queries.py --json PATH`` records PATH; a PATH outside
+    the checkout (the directory holding the fingerprint store) must
+    leave the store untouched, while one inside is still recorded."""
+    import tools.gatefresh as gf
+
+    repo = tmp_path / "checkout"
+    repo.mkdir()
+    store = repo / "GATE_FINGERPRINTS.json"
+    monkeypatch.setattr(gf, "STORE", str(store))
+    outside = tmp_path / "scratch" / "CORRECTNESS_LOCAL_r999.json"
+    outside.parent.mkdir()
+    outside.write_text("{}")
+    gf.record([str(outside)])
+    assert not store.exists()
+
+    store.write_text('{"KEPT.json": "abc"}\n')
+    inside = repo / "CORRECTNESS_LOCAL_r998.json"
+    inside.write_text("{}")
+    gf.record([str(outside), str(inside)])
+    assert json.loads(store.read_text()) == {
+        "KEPT.json": "abc",
+        inside.name: gf.engine_fingerprint(),
+    }
+
+
 def test_store_stats_shapes(spark, tmp_path_factory):
     """store_stats (r11 ops surface) reads meta + manifests only and
     reports the next compaction's touched-bucket fraction."""

@@ -13,7 +13,7 @@ Mechanism:
 * ``repo_fingerprint()`` — engine + ``tests/``: what the pytest gate
   ran on.
 * ``record(paths)`` — writes each artifact's engine fingerprint into
-  ``GATE_FINGERPRINTS.json``. The artifact writers
+  ``GATE_FINGERPRINTS.json``, for artifacts inside the checkout only. The artifact writers
   (tools/verify_queries.py --json, tools/scale_probe.py --json) call
   it automatically; hand-written artifacts (BENCH_LOCAL_*) are
   recorded via the CLI: ``python tools/gatefresh.py record FILE...``.
@@ -86,6 +86,18 @@ def repo_fingerprint() -> str:
 
 
 def record(paths: list[str]) -> None:
+    """Pin the current engine fingerprint for each artifact in
+    ``paths`` that lies under the directory holding ``STORE`` (the
+    checkout); an artifact written elsewhere (an ad-hoc
+    ``verify_queries.py --json /tmp/x.json``) is not the repo's and is
+    skipped, leaving the tracked store untouched."""
+    root = os.path.dirname(os.path.realpath(STORE))
+    paths = [
+        p for p in paths
+        if os.path.commonpath([root, os.path.realpath(p)]) == root
+    ]
+    if not paths:
+        return
     store: dict[str, str] = {}
     if os.path.exists(STORE):
         with open(STORE) as fh:
